@@ -11,7 +11,7 @@ DataFrame pipelines:
 - ``sources``    input parsers (FAQ CSV/JSON-export/CSV-export, synonyms,
                  synthetic web_pages corpus) -> canonical DataFrames
 - ``operators``  the KG pipeline stages (term dictionary, mention linking,
-                 hierarchy optimiser, triples, dedup, ANN, analyzer)
+                 hierarchy optimiser, triples, crawl dedup, analyzer)
 - ``plans``      stage runner with lineage + checkpoint/resume
 - ``streaming``  incremental (Trigger.AvailableNow-style) wrappers
 """

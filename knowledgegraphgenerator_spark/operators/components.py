@@ -159,25 +159,6 @@ def keep_best_per_cluster(
     )
 
 
-def canonicalize_terms(
-    terms: DataFrame,
-    pairs: DataFrame,
-    term_col: str = "term",
-    id_col: str = "term_id",
-) -> DataFrame:
-    """Merge surface-form variants: CC labels over variant pairs →
-    (term, canonical_term_id). Terms without any pair map to themselves."""
-    labels = connected_components(pairs)
-    return (
-        terms.join(labels, terms[id_col] == labels["id"], "left")
-        .select(
-            term_col,
-            F.col(id_col),
-            F.coalesce("component", F.col(id_col)).alias("canonical_id"),
-        )
-    )
-
-
 def ancestor_closure(
     edges: DataFrame, max_depth: int = 25, assume_distinct: bool = False
 ) -> DataFrame:

@@ -1,4 +1,4 @@
-"""Deduplication operators for training-data pipelines.
+"""Deduplication operators for the crawl loop.
 
 All pure DataFrame ops (JVM-side, no Python in the hot path):
 
@@ -7,8 +7,10 @@ All pure DataFrame ops (JVM-side, no Python in the hot path):
   * minhash_signatures   k universal-hash minima over xxhash64 shingles
   * lsh_candidate_pairs  band-bucket equi-join
   * verify_jaccard       integer-exact Jaccard verify on candidates
-  * simhash64            weighted bitwise majority over token hashes
-  * near_dedup           the full MinHash-LSH → verify → keep-min chain
+  * crawl_dedup          exact dedup, then the MinHash-LSH → verify →
+                         keep-min chain over the survivors
+  * admit_batch*         drop a new batch's near duplicates of the admitted
+                         corpus (text or stored sketches)
 
 Scale notes (the reason this layout): shingling+minhash are narrow maps;
 the only shuffles are the signature groupBy and the band join. The band
@@ -445,80 +447,6 @@ def verify_jaccard_cooccur(
         )
         .select("id_a", "id_b", "inter", "union_n")
     )
-
-
-def simhash64(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """64-bit SimHash: weighted per-bit majority over xxhash64(token).
-
-    r6 shape (output identical): per-bit contributions are linear in
-    the token weight, so the per-(id, token) weighting groupBy, the
-    64-way bit crossJoin, and the stacked (id, bit) → id aggregations
-    all collapse into ONE groupBy(id) with 64 ``sum(±1)`` agg
-    expressions over the raw token stream — one map-side-combined
-    shuffle instead of three, no row explosion (guide §2.3)."""
-    toks = (
-        df.select(
-            F.col(id_col), F.explode(F.split(text_col, r"\s+")).alias("tok")
-        )
-        .where(F.col("tok") != "")
-        .withColumn("h", F.xxhash64("tok"))
-    )
-    per_bit = toks.groupBy(id_col).agg(
-        *[
-            F.sum(
-                F.when(F.expr(f"(h >> {b}) & 1") == 1, F.lit(1)).otherwise(
-                    F.lit(-1)
-                )
-            ).alias(f"s{b}")
-            for b in range(64)
-        ]
-    )
-    simhash = None
-    for b in range(64):
-        # shiftleft(1L, 63) wraps to Long.MIN exactly as the historical
-        # bit-exploded sum did — a python literal 1 << 63 would not fit
-        term = F.when(
-            F.col(f"s{b}") > 0, F.expr(f"shiftleft(1L, {b})")
-        ).otherwise(F.lit(0).cast("long"))
-        simhash = term if simhash is None else simhash + term
-    return per_bit.select(id_col, simhash.alias("simhash"))
-
-
-def near_dedup(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    shingle_n: int = 3,
-    k: int = 16,
-    rows_per_band: int = 2,
-    threshold_num: int = 8,
-    threshold_den: int = 10,
-    persist: bool = True,
-) -> DataFrame:
-    """Full near-dup chain → df minus non-canonical members.
-
-    Canonical = min id within each verified duplicate pair's star; full
-    transitive closure (connected components) lives in
-    operators/components.py — pairwise-min is the cheap 1-hop
-    approximation appropriate for one dedup sweep.
-
-    r6: the shingle set is persisted (it feeds BOTH the signature path
-    and the Jaccard verify — unpersisted, the split+explode+distinct
-    ran twice per action) and signatures ride the wide single-shuffle
-    path (guide §2.4). Spark's cache manager dedups the persist by
-    plan, so repeated calls reuse one entry rather than accumulating.
-    """
-    sh = token_shingles(df, text_col, id_col, shingle_n)
-    if persist:
-        sh = sh.persist()
-    wide = minhash_wide(sh, id_col, k)
-    pairs = lsh_candidate_pairs_from_wide(
-        wide, id_col, rows_per_band, k, max_bucket=1000,
-        compat=(threshold_num, threshold_den),
-    )
-    dups = verify_jaccard(pairs, sh, id_col, threshold_num, threshold_den)
-    drop = dups.select(F.col("id_b").alias(id_col)).distinct()
-    return df.join(drop, id_col, "anti")
 
 
 def crawl_dedup(

@@ -197,9 +197,10 @@ def optimise_graph(
          collapsed remainder in path order — Optmiser.py:8-19,44-54).
 
     Shuffle budget: 1 corpus aggregation + 1 corpus join-back (strategy
-    left to AQE) vs the naive two passes of each.
+    left to AQE) vs the naive two passes of each. Both read ``onto``, so
+    a caller whose ``onto`` is expensive to recompute (the linker's
+    Python pass) persists it and owns its release.
     """
-    onto = onto.persist()
     w = _with_path(onto)
     scoped = w if primaries is None else w.join(primaries, "doc_id", "semi")
 

@@ -60,11 +60,17 @@ def link_terms(
     id_col: str = "doc_id",
     raw_col: str = "question",
     norm_col: str = "norm_text",
+    cleanup: list | None = None,
 ) -> DataFrame:
     """(doc_id, question, norm_text) -> (doc_id, question, terms, tags).
 
     Reference: GramBasedGenerator.generate_graph per-question loop,
     /root/reference/strategy/NGramStrategy.py:60-108.
+
+    ``cleanup``: as for :func:`link_terms_blocked` — the dictionary
+    broadcast outlives the returned (lazy) DataFrame, so a caller that
+    passes a list gets the release callable appended and invokes it
+    after its terminal action.
     """
     spark = df.sparkSession
     payload = (
@@ -74,6 +80,8 @@ def link_terms(
         dictionary.stop_tokens,
     )
     bc = spark.sparkContext.broadcast(payload)
+    if cleanup is not None:
+        cleanup.append(lambda: bc.destroy(blocking=True))
 
     src = df.select(
         F.col(id_col).alias("doc_id"),
@@ -205,8 +213,8 @@ def link_terms_blocked(
         match_tokens_udf(F.col(norm_col)).alias("ltoks"),
     ).persist()
     if cleanup is not None:
-        cleanup.append(lambda: docs.unpersist())
-        cleanup.append(lambda: bc_stop.destroy())
+        cleanup.append(lambda: docs.unpersist(blocking=True))
+        cleanup.append(lambda: bc_stop.destroy(blocking=True))
 
     # per-doc DISTINCT block keys: every lemma token + every adjacent pair
     doc_keys = doc_block_keys(docs)

@@ -37,7 +37,9 @@ class KGResult:
     def close(self) -> None:
         """Release caches/broadcasts the pipeline holds for its result
         DataFrames (ADVICE r3 #2). Call after the terminal action; the
-        DataFrames stay valid (unpersist only drops the cache)."""
+        DataFrames stay valid (unpersist only drops the cache). Every
+        release blocks until its blocks are gone, so no removal work
+        outlives this call and overlaps the next build."""
         for fn in self._cleanup:
             fn()
         self._cleanup.clear()
@@ -172,7 +174,7 @@ def run_pipeline(
     # cache them too or the chunker pass re-runs per action.
     cleanup: list = []
     normalized = normalized.persist()
-    cleanup.append(lambda: normalized.unpersist())
+    cleanup.append(lambda: normalized.unpersist(blocking=True))
     features = phrases.extract_doc_features(
         normalized, stops, id_col="doc_id", text_col="norm_text"
     ).persist()
@@ -204,8 +206,8 @@ def run_pipeline(
     if use_blocked:
         # blocked linking reads features/counted through the frames —
         # their caches are released by KGResult.close(), not here
-        cleanup.append(lambda: features.unpersist())
-        cleanup.append(lambda: counted.unpersist())
+        cleanup.append(lambda: features.unpersist(blocking=True))
+        cleanup.append(lambda: counted.unpersist(blocking=True))
         onto = linking_ops.link_terms_blocked(
             normalized, frames, stops,
             id_col="doc_id", raw_col="question", norm_col="norm_text",
@@ -234,10 +236,14 @@ def run_pipeline(
         onto = linking_ops.link_terms(
             normalized, dictionary,
             id_col="doc_id", raw_col="question", norm_col="norm_text",
+            cleanup=cleanup,
         )
-    # persisted: triples reads the ontology from three plan branches
-    onto = hierarchy.optimise_graph(onto, primaries).persist()
-    cleanup.append(lambda: onto.unpersist())
+    # persisted: the optimiser reads the linked ontology twice, and
+    # triples reads the optimised one from three plan branches
+    linked = onto.persist()
+    cleanup.append(lambda: linked.unpersist(blocking=True))
+    onto = hierarchy.optimise_graph(linked, primaries).persist()
+    cleanup.append(lambda: onto.unpersist(blocking=True))
     trip = triples.build_triples(onto, synonyms=synonyms, altq=altq)
     return KGResult(
         ontology=onto,

@@ -370,11 +370,16 @@ def run_resumable_pipeline(
         )
         use_blocked = len(probe_rows) > broadcast_term_limit
 
+    # the linker's broadcast/caches and the persisted linked ontology
+    # (the optimiser reads it twice) live until the ontology stage has
+    # committed; later stages read the committed parquet
+    cleanup: list = []
     if use_blocked:
         def link(n):
             return linking.link_terms_blocked(
                 n, frames, stops,
                 id_col="doc_id", raw_col="question", norm_col="norm_text",
+                cleanup=cleanup,
             )
     else:
         if probe_rows is not None:
@@ -386,14 +391,20 @@ def run_resumable_pipeline(
 
         def link(n):
             return linking.link_terms(
-                n, dictionary, "doc_id", "question", "norm_text"
+                n, dictionary, "doc_id", "question", "norm_text",
+                cleanup=cleanup,
             )
 
-    ontology = runner.run_stage(
-        "ontology",
-        lambda n: hierarchy.optimise_graph(link(n)),
-        input_df=normalized,
-    )
+    def optimise(n):
+        linked = link(n).persist()
+        cleanup.append(linked.unpersist)
+        return hierarchy.optimise_graph(linked)
+
+    try:
+        ontology = runner.run_stage("ontology", optimise, input_df=normalized)
+    finally:
+        for fn in cleanup:
+            fn()
     return runner.run_stage(
         "triples",
         lambda o: triples.build_triples(o),

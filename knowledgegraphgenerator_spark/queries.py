@@ -15,14 +15,8 @@ Coverage map to SURVEY.md §2 (reference file:line cited per query):
   A4/O1-O3           doc_terms_ranked (window top-k ordering)
   G3/A.10            path_edges
   J5/G1              path_prefix_antijoin
-  J2/J3 joins        top_orders_per_cust, region_supplier_counts
-  left_anti          cust_no_orders
-  S7 window state    last_signup_propagation, sessionize
-  windowed agg       hourly_event_counts
-  TPC-H-style agg    pricing_summary
   dedup (rebuild)    dedup_exact, minhash_signatures, lsh_candidate_pairs,
                      jaccard_pairs, simhash16
-  similarity         embedding_topk (brute-force cosine top-k)
   text analysis      lang_id_heuristic, quality_score, token_stats,
                      token_stats_bpe, winnow_fingerprint,
                      doc_length_quantiles (exact type-7 percentiles)
@@ -37,9 +31,7 @@ Coverage map to SURVEY.md §2 (reference file:line cited per query):
                      neardup_components (the same chain → connected
                      components; recursive-CTE min-label oracle);
                      dup_ngram_fraction (cross-doc duplicated-span
-                     diagnostic, integer per-mille);
-                     BENCH_EXTRA: minhash_scale / simhash64_scale /
-                     winnow_scale (bench-only — values engine-specific)
+                     diagnostic, integer per-mille)
   KG pipeline        kg_triples, kg_triples_blocked, kg_ontology — FULL
                      DuckDB oracles (oracles_kg.py: the whole pipeline
                      incl. recursive-CTE masked matching and the G1/G2
@@ -731,107 +723,6 @@ def q_dup_span_removal_hot(spark, sf_dir):
     )
 
 
-def q_minhash_scale(spark, sf_dir):
-    """Bench-only: the xxhash64 minhash operator itself (k=16), no
-    dense-id parity window (values are engine-specific -> no oracle)."""
-    from knowledgegraphgenerator_spark.operators.dedup import (
-        minhash_signatures as minhash_op,
-        token_shingles,
-    )
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return minhash_op(token_shingles(docs, "text", "doc_id", 3), "doc_id", 16)
-
-
-def q_simhash64_scale(spark, sf_dir):
-    """Bench-only: 64-bit xxhash64 SimHash operator (JVM-only plan)."""
-    from knowledgegraphgenerator_spark.operators.dedup import simhash64
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return simhash64(docs, "text", "doc_id")
-
-
-def q_winnow_scale(spark, sf_dir):
-    """Bench-only: rolling 4-gram fingerprint from xxhash64 token ids —
-    the winnow operator without the dense-id dictionary sort the oracle
-    variant pays for DuckDB integer parity."""
-    toks = _tokens(spark, sf_dir)
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    seq = toks.withColumn("tid", F.pmod(F.xxhash64("term"), F.lit(FP_MOD)))
-    grams = (
-        seq.withColumn("t1", F.lead("tid", 1).over(w))
-        .withColumn("t2", F.lead("tid", 2).over(w))
-        .withColumn("t3", F.lead("tid", 3).over(w))
-        .where(F.col("t3").isNotNull())
-        .withColumn(
-            "h",
-            (((F.col("tid") * 31 + F.col("t1")) % FP_MOD * 31
-              + F.col("t2")) % FP_MOD * 31 + F.col("t3")) % FP_MOD,
-        )
-    )
-    return grams.groupBy("doc_id").agg(
-        F.min("h").alias("fingerprint"),
-        F.countDistinct("h").alias("n_shingles"),
-    )
-
-
-def q_embedding_topk(spark, sf_dir):
-    """Brute-force cosine top-3 neighbors for query vectors (vec_id < 10).
-
-    JVM-side posexplode + hash-agg dot products — no Python in the loop;
-    the IVF/LSH-bucketed scale path lives in operators/similarity.py.
-    """
-    e = (
-        _t(spark, sf_dir, "embeddings")
-        .select(
-            "vec_id",
-            F.posexplode(F.col("embedding").cast("array<double>"))
-            .alias("pos", "v"),
-        )
-    )
-    norms = e.groupBy("vec_id").agg(
-        F.sqrt(F.sum(F.col("v") * F.col("v"))).alias("nrm")
-    )
-    q = e.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), "pos", F.col("v").alias("qv")
-    )
-    dots = (
-        q.join(e, "pos")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum(F.col("qv") * F.col("v")).alias("dot"))
-    )
-    qn = norms.select(F.col("vec_id").alias("query_id"), F.col("nrm").alias("qn"))
-    sims = (
-        dots.join(qn, "query_id")
-        .join(norms, "vec_id")
-        .withColumn("sim", F.col("dot") / (F.col("qn") * F.col("nrm")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        sims.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .where(F.col("rnk") <= 3)
-        .select("query_id", "rnk", F.col("vec_id").alias("neighbor_id"))
-    )
-
-
-def q_embedding_topk_ivf(spark, sf_dir):
-    """The IVF operator (operators/similarity.py:ivf_topk) driven with
-    n_probe == n_cells: every cell is probed, so the candidate set is
-    exhaustive and the output EXACTLY equals brute force regardless of
-    centroid placement — which lets the approximate-path CODE (centroid
-    training, cell assignment, probed join) share embedding_topk's
-    brute-force oracle value-for-value. The recall/speed trade-off with
-    n_probe < n_cells is unit-tested (test_dedup_similarity)."""
-    from knowledgegraphgenerator_spark.operators.similarity import ivf_topk
-
-    vecs = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    queries = vecs.where(F.col("vec_id") < 10)
-    return ivf_topk(
-        vecs, queries, "vec_id", "embedding", k=3, n_cells=8, n_probe=8
-    ).select("query_id", "rnk", "neighbor_id")
-
-
 def q_lang_id_heuristic(spark, sf_dir):
     """Stop-word-ratio language gate (rebuild text-analysis op)."""
     toks = _tokens(spark, sf_dir)
@@ -1051,134 +942,6 @@ def q_winnow_fingerprint(spark, sf_dir):
     )
 
 
-def q_pricing_summary(spark, sf_dir):
-    """TPC-H-Q1-style aggregation in exact integer cents."""
-    l = _t(spark, sf_dir, "lineitem").where(
-        F.col("l_shipdate") <= F.to_timestamp(F.lit("1998-09-01"))
-    )
-    prepared = l.select(
-        "l_returnflag", "l_linestatus",
-        F.round("l_quantity").cast("long").alias("qty"),
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
-        F.round(F.col("l_discount") * 100).cast("long").alias("disc_pct"),
-        F.round(F.col("l_tax") * 100).cast("long").alias("tax_pct"),
-    )
-    return prepared.groupBy("l_returnflag", "l_linestatus").agg(
-        F.sum("qty").alias("sum_qty"),
-        F.sum("cents").alias("sum_base_cents"),
-        F.sum(F.col("cents") * (100 - F.col("disc_pct"))).alias("sum_disc_x100"),
-        F.sum(
-            F.col("cents") * (100 - F.col("disc_pct")) * (100 + F.col("tax_pct"))
-        ).alias("sum_charge_x10000"),
-        F.count(F.lit(1)).alias("count_order"),
-    )
-
-
-def q_top_orders_per_cust(spark, sf_dir):
-    """Join + per-group top-k window (O3/A10 pattern)."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.desc("o_totalprice"), F.asc("o_orderkey")
-    )
-    top = (
-        o.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .where(F.col("rnk") <= 3)
-    )
-    return top.join(c, top.o_custkey == c.c_custkey).select(
-        "c_custkey", "c_name", "rnk", "o_orderkey",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("price_cents"),
-    )
-
-
-def q_cust_no_orders(spark, sf_dir):
-    """left_anti join family (A3/J5 pattern)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    return c.join(
-        o, c.c_custkey == o.o_custkey, "left_anti"
-    ).select("c_custkey", "c_name")
-
-
-def q_region_supplier_counts(spark, sf_dir):
-    """Multi-way broadcast join + aggregation."""
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
-    return (
-        s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy("r_name")
-        .agg(
-            F.count(F.lit(1)).alias("n_suppliers"),
-            F.sum(F.round(F.col("s_acctbal") * 100).cast("long"))
-            .alias("acctbal_cents"),
-        )
-    )
-
-
-def q_last_signup_propagation(spark, sf_dir):
-    """S7 prev-primary propagation pattern: last non-null carried forward
-    (CSVExportParser.py:43-76 re-expressed as a window)."""
-    e = _t(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return e.select(
-        "event_id", "user_id",
-        F.last(
-            F.when(F.col("event_type") == "signup", F.col("event_id")),
-            ignorenulls=True,
-        ).over(w).alias("last_signup_event"),
-    )
-
-
-def q_hourly_event_counts(spark, sf_dir):
-    """Tumbling-window aggregation (streaming-shaped, batch-executed)."""
-    e = _t(spark, sf_dir, "events")
-    return (
-        e.select(
-            F.unix_timestamp(F.date_trunc("hour", "ts")).alias("hour_epoch"),
-            "event_type",
-        )
-        .groupBy("hour_epoch", "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-def q_sessionize(spark, sf_dir):
-    """Gap-based sessionization (30 min) via window cumsum."""
-    e = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    wc = (
-        Window.partitionBy("user_id")
-        .orderBy("ts_epoch", "event_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    with_gap = e.select(
-        "user_id", "event_id",
-        F.unix_timestamp("ts").alias("ts_epoch"),
-        F.lag(F.unix_timestamp("ts")).over(w).alias("prev_epoch"),
-    ).withColumn(
-        "new_sess",
-        F.when(
-            F.col("prev_epoch").isNull()
-            | (F.col("ts_epoch") - F.col("prev_epoch") > 1800),
-            1,
-        ).otherwise(0),
-    )
-    sess = with_gap.withColumn(
-        "session_id", F.sum("new_sess").over(wc).cast("long")
-    )
-    return sess.groupBy("user_id", "session_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.min("ts_epoch").alias("start_epoch"),
-        F.max("ts_epoch").alias("end_epoch"),
-    )
-
-
 def q_tfidf_top_terms(spark, sf_dir):
     """TF-IDF term scoring (north_star: 'TF-IDF/RAKE term scoring per
     partition') — top-5 terms per doc by tf·ln(N/df)."""
@@ -1301,26 +1064,6 @@ def q_salted_term_stats(spark, sf_dir):
         n_salts=16,
     )
     return out.where(F.col("cnt") > 50).select("term", "cnt", "n_docs")
-
-
-def q_parts_rollup(spark, sf_dir):
-    """Grouping-sets family (SURVEY.md §2.4 'absent in reference,
-    built-in if needed'): ROLLUP over (brand, type) with subtotal rows."""
-    p = _t(spark, sf_dir, "part")
-    return (
-        p.rollup("p_brand", "p_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_parts"),
-            F.sum(F.col("p_size").cast("long")).alias("sum_size"),
-        )
-        # subtotal NULLs -> explicit sentinel: keeps the cross-engine
-        # value comparison free of NULL-ordering semantics
-        .select(
-            F.coalesce("p_brand", F.lit("(all)")).alias("brand"),
-            F.coalesce("p_type", F.lit("(all)")).alias("ptype"),
-            "n_parts", "sum_size",
-        )
-    )
 
 
 def q_kg_triples(spark, sf_dir):
@@ -1569,20 +1312,6 @@ def q_doc_length_quantiles(spark, sf_dir):
     )
 
 
-def q_quantiles_scale(spark, sf_dir):
-    """Bench-only: the 100 TB path for doc_length_quantiles —
-    ``approx_percentile`` (mergeable quantile sketch, combines in
-    partial aggregates, no per-group sort). Approximate values →
-    no cross-engine oracle; the exact twin above is the oracled one."""
-    d = _t(spark, sf_dir, "documents")
-    return d.groupBy("lang").agg(
-        F.expr(
-            "approx_percentile(n_chars, array(0.5D, 0.9D, 0.99D), 10000)"
-        ).alias("pcts"),
-        F.count(F.lit(1)).alias("n_docs"),
-    )
-
-
 def q_kg_pagerank(spark, sf_dir):
     """KG consumer query #3: entity importance by PageRank over the
     narrower_than graph (child → parent, so mass accumulates at
@@ -1681,28 +1410,6 @@ def q_domain_mixture_rebalance(spark, sf_dir):
     return domain_mixture_rebalance(
         docs, id_col="doc_id", domain_col="source", budget_permille=500
     ).select("doc_id", "source", "lang")
-
-
-def q_training_shards(spark, sf_dir):
-    """Training-shard materialization summary: deterministic MINSTD
-    shard assignment (8 shards) + concat-and-chunk sequence packing
-    (budget 256 tokens; a doc's pack is the fixed window containing its
-    first token), aggregated to per-(shard, pack) doc and token counts.
-    Operators: shards.assign_shards / shards.pack_sequences — one
-    shuffle on the shard key, the per-shard layout window IS the shard
-    file order. Oracle mirrors the scramble (explicit pmod) and the
-    cumsum window exactly."""
-    from knowledgegraphgenerator_spark.operators.shards import (
-        assign_shards,
-        pack_sequences,
-    )
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    packed = pack_sequences(assign_shards(docs, 8), 256)
-    return packed.groupBy("shard", "pack_id").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tokens").alias("n_tokens"),
-    )
 
 
 def q_latest_crawl(spark, sf_dir):
@@ -2292,42 +1999,10 @@ def q_anchor_text_profile(spark, sf_dir):
 
 
 # Registry ORDER is deliberate: the driver gate reports exactly the
-# FIRST 50 registry entries, so the first 50 slots carry every query
-# that is new or changed this round, and the tail ROTATES (VERDICT r4
-# "What's wrong" #2 / ADVICE r4 #4) so the union of consecutive
-# CORRECTNESS_r{N} reports covers every registered name. Round-5
-# rotation: the six TPC-H-ish tail queries of r4 (hourly_event_counts,
-# parts_rollup, pricing_summary, top_orders_per_cust, cust_no_orders,
-# region_supplier_counts) move INTO the first 50; twelve stable queries
-# with green driver rows in r02-r04 (kg_ontology, trigram_count,
-# dict_merge_priority, simhash16, canonical_urls, quality_score,
-# token_stats, token_stats_bpe, winnow_fingerprint, lang_id_heuristic,
-# pii_scrub, repetition_signals, domain_cap) move to the tail to make
-# room for the four NEW round-5 queries (kg_pagerank_served,
-# benchmark_overlap, domain_mixture_rebalance, training_shards), which
-# take first-50 slots. Late-round-5 additions: latest_crawl,
-# neardup_keep_best, crawl_delta, host_link_graph, and host_pagerank
-# are NEW and take first-50 slots; jaccard_pairs, embedding_topk,
-# minhash_signatures, sessionize, and path_prefix_antijoin (green
-# driver rows r02-r04) rotate to the tail. Final round-5 additions:
-# bm25_topk, anchor_text_profile, host_hits, and bpe_merge_pairs are
-# NEW and take first-50 slots; stratified_sample, chunk_by_tokens,
-# doc_length_quantiles, and salted_term_stats (green driver rows
-# r03-r04) rotate to the tail; bm25_served (store-then-serve off
-# bucketed postings/doclen catalog tables) and bm25_incremental
-# (append-vs-rebuild store maintenance) are NEW in first-50 slots and
-# doc_path_coverage / last_signup_propagation (green r02-r04) rotate
-# to the tail. Post-round-5 additions: lm_doc_score (CCNet bigram-LM
-# quality scoring), line_dedup (RefinedWeb in-doc line dedup), and
-# host_hits_served (HITS off the bucketed edge store) are NEW and take
-# first-50 slots; term_count_threshold, bigram_count, and
-# substring_dedup (green driver rows in EVERY round r01-r04) rotate to
-# the tail, as does doc_terms_ranked to make room for lm_heldout_score
-# (held-out train/score split exercising the unseen-event smoothing
-# path) and path_edges for lm_ppl_buckets (the CCNet head/middle/tail
-# tier split).
-# The FULL registry — all entries, count-asserted — is certified every
-# round by scripts/full_gate.py (CORRECTNESS_LOCAL_r{N}.json).
+# FIRST 50 registry entries, so the head carries the queries most likely
+# to change and the tail holds long-green ones.
+# The FULL registry — all entries, count-asserted — is certified by
+# scripts/full_gate.py.
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "lm_doc_score": q_lm_doc_score,
     "lm_heldout_score": q_lm_heldout_score,
@@ -2338,12 +2013,10 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "dedup_exact": q_dedup_exact,
     "lsh_candidate_pairs": q_lsh_candidate_pairs,
     "crawl_delta": q_crawl_delta,
-    "embedding_topk_ivf": q_embedding_topk_ivf,
     "latest_crawl": q_latest_crawl,
     "neardup_keep_best": q_neardup_keep_best,
     "benchmark_overlap": q_benchmark_overlap,
     "domain_mixture_rebalance": q_domain_mixture_rebalance,
-    "training_shards": q_training_shards,
     "domain_cap_salted": q_domain_cap_salted,
     "bm25_topk": q_bm25_topk,
     "bm25_served": q_bm25_served,
@@ -2355,12 +2028,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "rake_keywords": q_rake_keywords,
     "term_cooccurrence": q_term_cooccurrence,
     "host_link_graph": q_host_link_graph,
-    "hourly_event_counts": q_hourly_event_counts,
-    "parts_rollup": q_parts_rollup,
-    "pricing_summary": q_pricing_summary,
-    "top_orders_per_cust": q_top_orders_per_cust,
-    "cust_no_orders": q_cust_no_orders,
-    "region_supplier_counts": q_region_supplier_counts,
     "neardup_pairs_scale": q_neardup_pairs_scale,
     "neardup_components": q_neardup_components,
     "dup_ngram_fraction": q_dup_ngram_fraction,
@@ -2383,7 +2050,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # queries with green driver rows in r02-r04; certified by
     # scripts/full_gate.py every round
     "doc_path_coverage": q_doc_path_coverage,
-    "last_signup_propagation": q_last_signup_propagation,
     "stratified_sample": q_stratified_sample,
     "chunk_by_tokens": q_chunk_by_tokens,
     "doc_length_quantiles": q_doc_length_quantiles,
@@ -2402,26 +2068,13 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "token_stats_bpe": q_token_stats_bpe,
     "winnow_fingerprint": q_winnow_fingerprint,
     "jaccard_pairs": q_jaccard_pairs,
-    "embedding_topk": q_embedding_topk,
     "minhash_signatures": q_minhash_signatures,
-    "sessionize": q_sessionize,
     "path_prefix_antijoin": q_path_prefix_antijoin,
     "term_count_threshold": q_term_count_threshold,
     "bigram_count": q_bigram_count,
     "substring_dedup": q_substring_dedup,
     "doc_terms_ranked": q_doc_terms_ranked,
     "path_edges": q_path_edges,
-}
-
-# Bench-only callables (timed by bench.py, not driver-gated): the raw
-# sketch operators whose output values are hash-engine-specific, so a
-# DuckDB value oracle is impossible by construction. Their DECISION-level
-# composition (neardup_pairs_scale) IS oracle-gated above.
-BENCH_EXTRA: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "minhash_scale": q_minhash_scale,
-    "simhash64_scale": q_simhash64_scale,
-    "winnow_scale": q_winnow_scale,
-    "quantiles_scale": q_quantiles_scale,
 }
 
 
@@ -2569,27 +2222,6 @@ ORACLES: dict[str, str] = {
         " GROUP BY doc_id, bit) "
         "SELECT doc_id, CAST(sum(CASE WHEN s > 0 THEN (1 << bit)"
         " ELSE 0 END) AS BIGINT) AS simhash FROM persig GROUP BY doc_id"
-    ),
-    "embedding_topk": (
-        "WITH e AS (SELECT vec_id,"
-        " unnest(generate_series(1, len(embedding))) AS pos,"
-        " CAST(unnest(embedding) AS DOUBLE) AS v FROM embeddings), "
-        "norms AS (SELECT vec_id, sqrt(sum(v * v)) AS nrm FROM e"
-        " GROUP BY vec_id), "
-        "q AS (SELECT vec_id AS query_id, pos, v AS qv FROM e"
-        " WHERE vec_id < 10), "
-        "dots AS (SELECT query_id, e.vec_id, sum(qv * v) AS dot "
-        "FROM q JOIN e USING (pos) WHERE e.vec_id <> q.query_id "
-        "GROUP BY query_id, e.vec_id), "
-        "sims AS (SELECT query_id, d.vec_id,"
-        " dot / (qn.nrm * nn.nrm) AS sim "
-        "FROM dots d JOIN norms qn ON d.query_id = qn.vec_id "
-        "JOIN norms nn ON d.vec_id = nn.vec_id), "
-        "ranked AS (SELECT query_id, vec_id, CAST(row_number() OVER "
-        "(PARTITION BY query_id ORDER BY sim DESC, vec_id ASC) AS BIGINT)"
-        " AS rnk FROM sims) "
-        "SELECT query_id, rnk, vec_id AS neighbor_id FROM ranked"
-        " WHERE rnk <= 3"
     ),
     "lang_id_heuristic": (
         f"WITH toks AS ({_TOKENS_SQL}), "
@@ -2769,13 +2401,6 @@ ORACLES: dict[str, str] = {
         f"CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs "
         f"FROM ({_TOKENS_SQL}) GROUP BY term HAVING count(*) > 50"
     ),
-    "parts_rollup": (
-        "SELECT coalesce(p_brand, '(all)') AS brand,"
-        " coalesce(p_type, '(all)') AS ptype,"
-        " CAST(count(*) AS BIGINT) AS n_parts, "
-        "CAST(sum(p_size) AS BIGINT) AS sum_size "
-        "FROM part GROUP BY ROLLUP (p_brand, p_type)"
-    ),
     "token_stats_bpe": (
         "SELECT doc_id, "
         "CAST(len(string_split_regex(text, '\\s+')) AS BIGINT) AS ws_tokens, "
@@ -2833,68 +2458,6 @@ ORACLES: dict[str, str] = {
         "SELECT doc_id, rnk, phrase, round(score, 4) AS score FROM ranked"
         " WHERE rnk <= 3"
     ),
-    "pricing_summary": (
-        "WITH prepared AS (SELECT l_returnflag, l_linestatus, "
-        "CAST(round(l_quantity) AS BIGINT) AS qty, "
-        "CAST(round(l_extendedprice * 100) AS BIGINT) AS cents, "
-        "CAST(round(l_discount * 100) AS BIGINT) AS disc_pct, "
-        "CAST(round(l_tax * 100) AS BIGINT) AS tax_pct "
-        "FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-01') "
-        "SELECT l_returnflag, l_linestatus, "
-        "CAST(sum(qty) AS BIGINT) AS sum_qty, "
-        "CAST(sum(cents) AS BIGINT) AS sum_base_cents, "
-        "CAST(sum(cents * (100 - disc_pct)) AS BIGINT) AS sum_disc_x100, "
-        "CAST(sum(cents * (100 - disc_pct) * (100 + tax_pct)) AS BIGINT)"
-        " AS sum_charge_x10000, "
-        "CAST(count(*) AS BIGINT) AS count_order "
-        "FROM prepared GROUP BY l_returnflag, l_linestatus"
-    ),
-    "top_orders_per_cust": (
-        "WITH top AS (SELECT *, CAST(row_number() OVER (PARTITION BY o_custkey"
-        " ORDER BY o_totalprice DESC, o_orderkey ASC) AS BIGINT) AS rnk"
-        " FROM orders) "
-        "SELECT c_custkey, c_name, rnk, o_orderkey, "
-        "CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents "
-        "FROM top JOIN customer ON top.o_custkey = customer.c_custkey "
-        "WHERE rnk <= 3"
-    ),
-    "cust_no_orders": (
-        "SELECT c_custkey, c_name FROM customer WHERE NOT EXISTS "
-        "(SELECT 1 FROM orders WHERE o_custkey = c_custkey)"
-    ),
-    "region_supplier_counts": (
-        "SELECT r_name, CAST(count(*) AS BIGINT) AS n_suppliers, "
-        "CAST(sum(CAST(round(s_acctbal * 100) AS BIGINT)) AS BIGINT)"
-        " AS acctbal_cents "
-        "FROM supplier JOIN nation ON s_nationkey = n_nationkey "
-        "JOIN region ON n_regionkey = r_regionkey GROUP BY r_name"
-    ),
-    "last_signup_propagation": (
-        "SELECT event_id, user_id, "
-        "last_value(CASE WHEN event_type = 'signup' THEN event_id END"
-        " IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY ts, event_id"
-        " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
-        " AS last_signup_event FROM events"
-    ),
-    "hourly_event_counts": (
-        "SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS hour_epoch,"
-        " event_type, CAST(count(*) AS BIGINT) AS n "
-        "FROM events GROUP BY 1, 2"
-    ),
-    "sessionize": (
-        "WITH g AS (SELECT user_id, event_id,"
-        " CAST(floor(epoch(ts)) AS BIGINT) AS ts_epoch, "
-        "CAST(floor(epoch(lag(ts) OVER (PARTITION BY user_id ORDER BY ts,"
-        " event_id))) AS BIGINT) AS prev_epoch FROM events), "
-        "s AS (SELECT *, CASE WHEN prev_epoch IS NULL OR ts_epoch -"
-        " prev_epoch > 1800 THEN 1 ELSE 0 END AS new_sess FROM g), "
-        "t AS (SELECT *, CAST(sum(new_sess) OVER (PARTITION BY user_id"
-        " ORDER BY ts_epoch, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND"
-        " CURRENT ROW) AS BIGINT) AS session_id FROM s) "
-        "SELECT user_id, session_id, CAST(count(*) AS BIGINT) AS n_events, "
-        "min(ts_epoch) AS start_epoch, max(ts_epoch) AS end_epoch "
-        "FROM t GROUP BY user_id, session_id"
-    ),
 }
 
 # kg_triples / kg_ontology: the FULL pipeline (normalize → chunker →
@@ -2911,8 +2474,6 @@ from knowledgegraphgenerator_spark.oracles_kg import (  # noqa: E402
     kg_triples_oracle_sql,
     kg_two_hop_oracle_sql,
 )
-
-ORACLES["embedding_topk_ivf"] = ORACLES["embedding_topk"]
 ORACLES["kg_triples"] = kg_triples_oracle_sql()
 ORACLES["kg_triples_blocked"] = kg_triples_oracle_sql()
 ORACLES["kg_triples_auto"] = kg_triples_oracle_sql()
@@ -2961,22 +2522,6 @@ ORACLES["domain_mixture_rebalance"] = (
     "SELECT doc_id, source, lang FROM documents JOIN r USING (source)"
     " WHERE ((((doc_id % 1000000007) + 1000000007) % 1000000007)"
     " * 48271) % 1000 < rate"
-)
-ORACLES["training_shards"] = (
-    "WITH t AS (SELECT doc_id,"
-    " ((((doc_id % 1000000007) + 1000000007) % 1000000007) * 48271)"
-    " % 8 AS shard,"
-    " len(list_filter(string_split(text, ' '), x -> x <> ''))"
-    " AS n_tokens FROM documents), "
-    "p AS (SELECT shard, doc_id, n_tokens,"
-    " sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id"
-    " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens"
-    " AS start_offset FROM t WHERE n_tokens > 0) "
-    "SELECT CAST(shard AS BIGINT) AS shard,"
-    " CAST(start_offset // 256 AS BIGINT) AS pack_id,"
-    " CAST(count(*) AS BIGINT) AS n_docs,"
-    " CAST(sum(n_tokens) AS BIGINT) AS n_tokens"
-    " FROM p GROUP BY shard, start_offset // 256"
 )
 ORACLES["doc_path_coverage"] = kg_path_coverage_oracle_sql()
 ORACLES["docs_at_root"] = kg_docs_at_root_oracle_sql()

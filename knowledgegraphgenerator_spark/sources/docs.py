@@ -10,10 +10,9 @@ with PyPDF2 (/root/reference/synonym_generator/syn_gen_with_docs.py:13-53)
     stdlib ``zipfile`` ON THE EXECUTOR from the in-memory bytes (no temp
     files, no subprocess), text members decoded directly;
   * PDF text extraction needs a PDF parser that is NOT in this
-    environment — like the multimodal codec (operators/multimodal.py),
-    the decode step is a clearly-marked stub: ``pypdf`` is used when
-    importable, otherwise ``deterministic_fake`` yields a stable
-    placeholder for plumbing tests and anything else raises
+    environment, so the decode step is a clearly-marked stub: ``pypdf``
+    is used when importable, otherwise ``deterministic_fake`` yields a
+    stable placeholder for plumbing tests and anything else raises
     NotImplementedError. The Spark-side plumbing (schema, batching,
     member fan-out) is real and tested.
 
@@ -38,8 +37,7 @@ _TEXT_SUFFIXES = (".txt", ".text", ".md", ".csv")
 def extract_pdf_text(data: bytes, deterministic_fake: bool = False) -> str:
     """PDF bytes -> text. Real path uses pypdf when importable; the
     sandbox ships no PDF parser, so ``deterministic_fake`` provides a
-    stable stand-in for plumbing tests (disclosed stub, same policy as
-    operators/multimodal.py)."""
+    stable stand-in for plumbing tests (disclosed stub)."""
     try:
         from pypdf import PdfReader  # type: ignore[import-not-found]
 

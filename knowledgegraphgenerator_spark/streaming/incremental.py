@@ -130,7 +130,8 @@ def incremental_kg_triples(
         F.col("text").alias("question"),
         normalize_text_udf(F.col("text"), F.col("lang")).alias("norm_text"),
     )
-    onto = link_terms(normalized, dictionary)
+    cleanup: list = []
+    onto = link_terms(normalized, dictionary, cleanup=cleanup)
     trips = ontology_triples(onto, row_local_dedup=True)
     q = (
         trips.writeStream.format("parquet")
@@ -139,7 +140,11 @@ def incremental_kg_triples(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
+    try:
+        q.awaitTermination()
+    finally:
+        for fn in cleanup:
+            fn()
 
 
 def incremental_kg_triples_blocked(
@@ -711,250 +716,3 @@ def incremental_kg_triples_auto(
     )
     return "broadcast"
 
-
-def stateful_sessionize_stream(
-    spark: SparkSession,
-    source_dir: str,
-    checkpoint_dir: str,
-    gap_seconds: int = 1800,
-):
-    """Custom stateful streaming operator: gap-based sessionization via
-    ``applyInPandasWithState`` (per-key user state). Emits a row per
-    CLOSED session (idle gap > ``gap_seconds`` observed in-stream); the
-    trailing open session stays in the state store and closes on a later
-    run — exactly the semantics an AvailableNow catch-up job wants, with
-    the checkpoint carrying state across runs. (ProcessingTimeTimeout is
-    deliberately not used: under Trigger.AvailableNow it keeps the query
-    servicing timeout batches instead of terminating.)
-
-    This is the streaming twin of queries.q_sessionize — the batch SQL
-    and the stateful operator implement the same session semantics.
-    Returns the started query (memory sink 'sessions', update mode).
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        LongType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("ts", TimestampType()),
-            StructField("user_id", LongType()),
-        ]
-    )
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("session_start", LongType()),
-            StructField("session_end", LongType()),
-            StructField("n_events", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("start", LongType()),
-            StructField("last", LongType()),
-            StructField("n", LongType()),
-        ]
-    )
-
-    def update(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        (user_id,) = key
-        epochs: list[int] = []
-        for pdf in pdfs:
-            epochs.extend(
-                int(t.timestamp()) for t in pdf["ts"] if t is not None
-            )
-        closed: list[tuple[int, int, int, int]] = []
-        epochs.sort()
-        if state.exists:
-            start, last, n = state.get
-        else:
-            start, last, n = None, None, 0
-        for e in epochs:
-            if start is None:
-                start, last, n = e, e, 1
-            elif e - last > gap_seconds:
-                closed.append((user_id, start, last, n))
-                start, last, n = e, e, 1
-            else:
-                last, n = e, n + 1
-        if start is not None:
-            state.update((start, last, n))
-        yield pd.DataFrame(
-            closed,
-            columns=["user_id", "session_start", "session_end", "n_events"],
-        )
-
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    sessions = stream.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    return (
-        sessions.writeStream.format("memory")
-        .queryName("sessions")
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stateful_sessionize_tws(
-    spark: SparkSession,
-    source_dir: str,
-    checkpoint_dir: str,
-    gap_seconds: int = 1800,
-    query_name: str = "sessions_tws",
-):
-    """Spark-4 successor-API twin of ``stateful_sessionize_stream``:
-    the same gap-sessionization semantics expressed with
-    ``transformWithStateInPandas`` (StatefulProcessor + ValueState,
-    RocksDB state store). Differentially tested equal to the
-    applyInPandasWithState formulation (tests/test_streaming_stateful).
-
-    transformWithState requires the RocksDB state store provider; the
-    config is set per-query via the session (Spark scopes the provider
-    to the stream's checkpoint), so batch workloads are unaffected.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-    from pyspark.sql.types import (
-        LongType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("ts", TimestampType()),
-            StructField("user_id", LongType()),
-        ]
-    )
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("session_start", LongType()),
-            StructField("session_end", LongType()),
-            StructField("n_events", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("start", LongType()),
-            StructField("last", LongType()),
-            StructField("n", LongType()),
-        ]
-    )
-
-    class SessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("sess", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            (user_id,) = key
-            epochs: list[int] = []
-            for pdf in rows:
-                epochs.extend(
-                    int(t.timestamp()) for t in pdf["ts"] if t is not None
-                )
-            epochs.sort()
-            closed: list[tuple[int, int, int, int]] = []
-            existing = self._state.get() if self._state.exists() else None
-            if existing is not None:
-                start, last, n = existing
-            else:
-                start, last, n = None, None, 0
-            for e in epochs:
-                if start is None:
-                    start, last, n = e, e, 1
-                elif e - last > gap_seconds:
-                    closed.append((int(user_id), start, last, n))
-                    start, last, n = e, e, 1
-                else:
-                    last, n = e, n + 1
-            if start is not None:
-                self._state.update((start, last, n))
-            yield pd.DataFrame(
-                closed,
-                columns=["user_id", "session_start",
-                         "session_end", "n_events"],
-            )
-
-        def close(self) -> None:
-            pass
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    sessions = stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=SessionProcessor(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )
-    return (
-        sessions.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def windowed_event_counts_stream(
-    spark: SparkSession,
-    source_dir: str,
-    checkpoint_dir: str,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-):
-    """Watermarked tumbling-window counts — the streaming twin of
-    queries.q_hourly_event_counts; returns the started query writing to
-    an in-memory sink named 'event_counts'."""
-    schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("ts", TimestampType()),
-            StructField("user_id", LongType()),
-            StructField("event_type", StringType()),
-        ]
-    )
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            "event_type", "n",
-        )
-    )
-    return (
-        agg.writeStream.format("memory")
-        .queryName("event_counts")
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

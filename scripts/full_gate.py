@@ -1,10 +1,8 @@
 #!/usr/bin/env python
-"""Full-registry correctness gate (round-4, VERDICT r3 "What's wrong"
-#1): the round-3 driver report contained exactly 50 rows for a 52-entry
-registry, silently skipping the tail. This script is the local
-certification that covers EVERY ``queries()`` entry — it fails loudly on
-any count mismatch and emits one row per registered query in the
-driver's CORRECTNESS format.
+"""Full-registry correctness gate: the local certification that covers
+EVERY ``queries()`` entry (68 of them). It fails loudly on any count
+mismatch and emits one row per registered query in the CORRECTNESS
+report format.
 
 Usage:
     python scripts/full_gate.py [--sf /root/testdata/sf0.01] \
@@ -28,10 +26,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+# the only table the registry's oracles read
+TABLES = ("documents",)
 
 
 def _canon(v):

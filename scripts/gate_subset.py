@@ -8,7 +8,7 @@ equivalent in seconds instead of re-running the whole registry.
 
 Usage:
     python scripts/gate_subset.py --sf /root/testdata/sf0.01 \
-        jaccard_pairs lsh_candidate_pairs
+        dedup_chain neardup_pairs_scale
 """
 
 from __future__ import annotations

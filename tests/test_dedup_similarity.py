@@ -1,11 +1,11 @@
-"""Dedup + similarity operator tests (small, deterministic inputs)."""
+"""Dedup operator tests (small, deterministic inputs)."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from knowledgegraphgenerator_spark.operators import dedup, similarity
+from knowledgegraphgenerator_spark.operators import dedup
 
 
 @pytest.fixture(scope="module")
@@ -44,58 +44,6 @@ def test_minhash_lsh_finds_exact_dup(docs):
     pairs = dedup.lsh_candidate_pairs(sigs, "doc_id", rows_per_band=2)
     got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
     assert (1, 2) in got  # identical docs always collide in every band
-
-
-def test_near_dedup_end_to_end(docs):
-    kept = dedup.near_dedup(docs, "text", "doc_id", shingle_n=3, k=8,
-                            threshold_num=9, threshold_den=10)
-    ids = {r["doc_id"] for r in kept.collect()}
-    assert 1 in ids and 2 not in ids  # exact dup dropped, min id kept
-    assert {4, 5} <= ids
-
-
-def test_simhash_identical_docs_equal_hash(docs):
-    out = {r["doc_id"]: r["simhash"] for r in
-           dedup.simhash64(docs, "text", "doc_id").collect()}
-    assert out[1] == out[2]
-    # near-dup hamming distance small, unrelated pair larger
-    def ham(a, b):
-        return bin((a ^ b) & ((1 << 64) - 1)).count("1")
-    assert ham(out[1], out[3]) <= ham(out[1], out[4])
-
-
-@pytest.fixture(scope="module")
-def vectors(spark):
-    import math
-    rows = []
-    for i in range(24):
-        angle = (i % 8) / 8.0 * math.pi
-        vec = [math.cos(angle), math.sin(angle), float(i % 3), 1.0]
-        rows.append((i, vec))
-    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-
-def test_brute_force_topk_self_similarity(vectors):
-    queries = vectors.where("vec_id < 3")
-    out = similarity.brute_force_topk(vectors, queries, k=3)
-    rows = out.collect()
-    assert len(rows) == 9
-    by_q = {}
-    for r in rows:
-        by_q.setdefault(r["query_id"], []).append(r)
-    # rank-1 neighbor of q0 shares its direction (i % 8 == 0, i % 3 pattern)
-    top = sorted(by_q[0], key=lambda r: r["rnk"])[0]
-    assert top["sim"] > 0.9
-
-
-def test_ivf_topk_recall_vs_brute_force(vectors):
-    queries = vectors.where("vec_id < 3")
-    exact = similarity.brute_force_topk(vectors, queries, k=3)
-    approx = similarity.ivf_topk(vectors, queries, k=3, n_cells=4, n_probe=4)
-    # with n_probe == n_cells the IVF search is exhaustive -> same result
-    e = {(r["query_id"], r["rnk"], r["neighbor_id"]) for r in exact.collect()}
-    a = {(r["query_id"], r["rnk"], r["neighbor_id"]) for r in approx.collect()}
-    assert e == a
 
 
 def test_incremental_neardup_asymmetric(spark):

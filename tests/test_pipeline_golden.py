@@ -71,3 +71,28 @@ def test_dictionary_crosses_thresholds(spark, golden):
     assert sizes["phrases"] >= 4
     assert sizes["unigrams"] >= 4
     assert sizes["verbs"] >= 5
+
+
+def test_builds_release_caches_and_broadcasts(spark, monkeypatch):
+    """A long-lived driver can run builds forever: once a build's
+    terminal action is done, ``close()`` releases every cache and
+    broadcast the build created."""
+    sc = spark.sparkContext
+    created = []
+    real_broadcast = sc.broadcast
+
+    def recording_broadcast(value):
+        bc = real_broadcast(value)
+        created.append(bc)
+        return bc
+
+    monkeypatch.setattr(sc, "broadcast", recording_broadcast)
+    persistent = sc._jsc.sc().getPersistentRDDs
+    baseline = persistent().size()
+    for _ in range(3):
+        result = run_pipeline(_corpus_df(spark, 4))
+        result.triples.collect()
+        result.close()
+        assert persistent().size() == baseline
+    assert created
+    assert not any(bc._jbroadcast.isValid() for bc in created)

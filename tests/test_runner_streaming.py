@@ -364,48 +364,6 @@ def test_signature_store_family_guard(spark, tmp_path):
         _check_signature_store_family(spark, store2)
 
 
-def test_multimodal_vectorized_decode_matches_scalar():
-    """The NumPy decode must be value-identical to the scalar Horner
-    reference for every payload shape (empty, shorter than one lane
-    round, ragged lanes, past the 4096-byte cap)."""
-    import random
-
-    from knowledgegraphgenerator_spark.operators.multimodal import (
-        _fake_decode,
-        _fake_decode_np,
-    )
-
-    rng = random.Random(3)
-    payloads = [None, b"", b"\x00", b"\xff" * 7, b"\x1f" * 8]
-    payloads += [
-        bytes(rng.randrange(256) for _ in range(n))
-        for n in (1, 5, 9, 63, 64, 100, 4095, 4096, 5000)
-    ]
-    for p in payloads:
-        assert _fake_decode_np(p) == _fake_decode(p), (
-            p if p is None else len(p)
-        )
-
-
-def test_multimodal_fake_decode(spark):
-    from knowledgegraphgenerator_spark.operators.multimodal import (
-        decode_and_featurize,
-    )
-
-    rows = [(i, bytes([i % 251] * (100 + i))) for i in range(20)]
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    out = decode_and_featurize(df, deterministic_fake=True,
-                               max_batch_bytes=512)
-    got = {r["doc_id"]: r for r in out.collect()}
-    assert len(got) == 20
-    assert all(len(r["features"]) == 8 for r in got.values())
-    # determinism across partitionings
-    out2 = decode_and_featurize(df.repartition(7), deterministic_fake=True)
-    got2 = {r["doc_id"]: r for r in out2.collect()}
-    for k in got:
-        assert got[k]["features"] == got2[k]["features"]
-
-
 def test_incremental_kg_auto_strategy(spark, tmp_path):
     """Streaming 'auto' mirrors the batch probe: a tiny limit forces the
     blocked foreachBatch path, a generous limit picks broadcast, and the
