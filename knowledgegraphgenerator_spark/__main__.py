@@ -20,11 +20,6 @@ plus the web-corpus subcommand.
       --source /path/incoming --dictionary /path/dict_parquet \\
       --output /path/triples --checkpoint /path/ckpt
 
-  python -m knowledgegraphgenerator_spark index \\
-      --input /path/documents_parquet [--buckets 32]
-  python -m knowledgegraphgenerator_spark search \\
-      --terms spark,window --k 20 [--output /path/hits]
-
   python -m knowledgegraphgenerator_spark curate \\
       --input /path/web_pages_parquet --output /path/cleaned \\
       [--line-dedup] [--pii] [--lm-score] [--max-avg-nll 40000] \\
@@ -121,54 +116,6 @@ def main(argv: list[str] | None = None, spark=None) -> int:
              "sketches and admit later batches against the stored "
              "sketches instead of re-reading the corpus text",
     )
-    ing.add_argument(
-        "--benchmark", default=None,
-        help="parquet of benchmark (shingle string) rows: drop "
-             "contaminated documents (n-gram overlap >= 200 permille) "
-             "from each batch BEFORE dedup/admit",
-    )
-    ing.add_argument(
-        "--index", action="store_true",
-        help="also index each admitted batch into the bucketed BM25 "
-             "store (bm25_postings / bm25_doclen): crawl -> admit -> "
-             "index -> serve in one stream",
-    )
-    ing.add_argument("--index-buckets", type=int, default=8)
-    ing.add_argument(
-        "--lm-artifact", default=None,
-        help="quality-gated admission: frozen save_lm_artifact() model "
-             "to score each batch against (requires --max-avg-nll)",
-    )
-    ing.add_argument(
-        "--max-avg-nll", type=int, default=None,
-        help="drop documents whose avg_nll_i4 under --lm-artifact "
-             "exceeds this bound, before dedup/admit",
-    )
-
-    ix = sub.add_parser(
-        "index",
-        help="documents parquet (doc_id, text) → bucketed "
-             "postings/doclen catalog tables — the BM25 serving store",
-    )
-    ix.add_argument("--input", required=True)
-    ix.add_argument("--postings-table", default="bm25_postings")
-    ix.add_argument("--doclen-table", default="bm25_doclen")
-    ix.add_argument("--buckets", type=int, default=32)
-
-    se = sub.add_parser(
-        "search",
-        help="BM25 top-k over an indexed store (same session catalog "
-             "or the warehouse files a previous `index` run wrote)",
-    )
-    se.add_argument("--terms", required=True,
-                    help="comma-separated query terms")
-    se.add_argument("--k", type=int, default=20)
-    se.add_argument("--postings-table", default="bm25_postings")
-    se.add_argument("--doclen-table", default="bm25_doclen")
-    se.add_argument("--output", default=None,
-                    help="write results parquet; default prints one "
-                         "JSON line per hit")
-
     cu = sub.add_parser(
         "curate",
         help="crawl-text curation chain: in-doc line dedup → PII "
@@ -211,18 +158,10 @@ def main(argv: list[str] | None = None, spark=None) -> int:
              "later --lm-artifact runs",
     )
 
-    for p in (faq, corpus, an, syn, dd, st, ing, ix, se, cu):
+    for p in (faq, corpus, an, syn, dd, st, ing, cu):
         p.add_argument("--v", action="store_true", help="verbose")
 
     args = ap.parse_args(argv)
-    if args.cmd == "search":
-        args.term_list = [
-            t.strip() for t in args.terms.split(",") if t.strip()
-        ]
-        if not args.term_list:
-            # clean exit-2 before any Spark session spins up
-            ap.error("search: --terms needs at least one non-empty term")
-
     owns_session = spark is None
     if owns_session:
         from knowledgegraphgenerator_spark.session import get_spark
@@ -354,46 +293,7 @@ def main(argv: list[str] | None = None, spark=None) -> int:
             incremental_ingest_dedup(
                 spark, args.source, args.corpus, args.checkpoint,
                 store_dir=args.store,
-                benchmark_dir=args.benchmark,
-                index_tables=(
-                    ("bm25_postings", "bm25_doclen")
-                    if args.index else None
-                ),
-                index_buckets=args.index_buckets,
-                lm_artifact_dir=args.lm_artifact,
-                max_avg_nll=args.max_avg_nll,
             )
-        elif args.cmd == "index":
-            from knowledgegraphgenerator_spark.operators.retrieval import (
-                tokenize_whitespace,
-                write_retrieval_tables,
-            )
-
-            tokens = tokenize_whitespace(spark.read.parquet(args.input))
-            write_retrieval_tables(
-                tokens,
-                postings_table=args.postings_table,
-                dl_table=args.doclen_table,
-                n_buckets=args.buckets,
-            )
-            if args.v:
-                print(f"indexed -> {args.postings_table}, "
-                      f"{args.doclen_table}")
-        elif args.cmd == "search":
-            from knowledgegraphgenerator_spark.operators.retrieval import (
-                bm25_topk_served,
-            )
-
-            hits = bm25_topk_served(
-                spark, args.term_list, k=args.k,
-                postings_table=args.postings_table,
-                dl_table=args.doclen_table,
-            )
-            if args.output:
-                hits.write.mode("overwrite").parquet(args.output)
-            else:
-                for r in hits.collect():
-                    print(json.dumps(r.asDict()))
         elif args.cmd == "curate":
             # fixed order: layout corrections first (line dedup), then
             # text rewrites (PII), then LM scoring over the FINAL text

@@ -815,9 +815,9 @@ def lm_doc_score(
     negative log-likelihood is rounded ONCE to integer 1e-4 nats
     (round(ln((c1 + V) / (c2 + 1.0)) * 10000)) and multiplied by the
     document's term frequency — the per-document sum is then an
-    order-free exact integer, the same cross-engine trick as BM25
-    (operators/retrieval.py module docstring). avg_nll_i4 uses
-    nonnegative integer division (both engines floor it identically);
+    order-free exact integer, the same cross-engine trick as
+    operators/components.integer_pagerank. avg_nll_i4 uses nonnegative
+    integer division (both engines floor it identically);
     perplexity = exp(avg_nll_i4 / 1e4) if a float is ever wanted.
 
     Output: (id_col, n_pairs, nll_i4, avg_nll_i4), one row per document

@@ -144,9 +144,9 @@ def write_triples_bucketed_table(
 
 def _managed_table_info(spark, table: str) -> dict:
     """Validated catalog info for an unqualified managed-table name:
-    the shared preamble of every destructive table operation here
-    (overwrite, compact) — one place for the name rule and the
-    DESCRIBE EXTENDED fetch, so safety checks cannot drift apart."""
+    the preamble of the destructive overwrite below — the name rule
+    and the DESCRIBE EXTENDED fetch. Empty when the catalog does not
+    know the table."""
     import re
 
     if not re.fullmatch(r"[a-z_][a-z0-9_]*", table):
@@ -164,110 +164,11 @@ def _managed_table_info(spark, table: str) -> dict:
     }
 
 
-def table_bucket_spec(spark, table: str) -> tuple:
-    """(bucket_col, n_buckets) of an existing bucketed catalog table —
-    the catalog is the source of truth for maintenance operations
-    (compact, repair); trusting caller arguments instead lets a flag
-    mismatch rewrite a store with an incoherent spec."""
-    info = _managed_table_info(spark, table)
-    if not info:
-        raise ValueError(f"no catalog table {table!r}")
-    n_buckets = int(info["Num Buckets"])
-    cols = [
-        c.strip().strip("`")
-        for c in info["Bucket Columns"].strip("[]").split(",")
-    ]
-    if len(cols) != 1:
-        raise ValueError(
-            f"single-column bucket specs only, got {cols!r} "
-            f"for {table!r}"
-        )
-    return cols[0], n_buckets
-
-
-def compact_bucketed_table(spark, table: str) -> None:
-    """Rewrite an append-accumulated bucketed table into one file set
-    per bucket — the maintenance step the append mode's docstring
-    promises ("compact periodically"). Each ``mode='append'`` write
-    adds a full file set per bucket; after many micro-batches the
-    per-bucket file count (and the per-task open/seek cost of every
-    bucket-riding join) grows linearly, so stores on an ingest cadence
-    compact on a slower cadence, exactly like Iceberg's rewrite-files
-    maintenance.
-
-    Production-shaped swap, not an in-place overwrite (Spark cannot
-    overwrite a table from a plan that reads the same table): write a
-    fresh bucketed table under ``<table>__compact``, then DROP the old
-    table and ALTER .. RENAME the new one into place. The bucket spec
-    travels with the catalog entry through the rename (pinned in
-    test_retrieval: the zero-Exchange bucket-key plan survives
-    compaction). The swap window is not atomic on the in-memory
-    catalog — run it inside the same maintenance lock that gates
-    appends (an ingest loop is sequential anyway); on Iceberg the
-    equivalent rewrite commits atomically."""
-    # the bucket spec comes from the CATALOG, never from arguments: a
-    # caller-supplied count that differs from the store's would make
-    # the rewrite FRAGMENT the table (old-bucket tasks x new buckets
-    # files) and leave a spec future appends reject. Same source of
-    # truth exposes the table type: an EXTERNAL table is refused for
-    # the same deletion-safety contract as the overwrite path — the
-    # swap would orphan the shared external location and serve a
-    # managed copy in its place.
-    info = _managed_table_info(spark, table)
-    if not info:
-        # crash-window recovery (ADVICE r5): the swap below is
-        # DROP TABLE then ALTER .. RENAME, and a crash between the two
-        # leaves the serving table absent with the fully-written
-        # compacted data stranded under <table>__compact. Detect that
-        # exact state and rename the compacted table back into place —
-        # the store is then already compacted, so return.
-        leftover = f"{table}__compact"
-        if _managed_table_info(spark, leftover):
-            spark.sql(f"ALTER TABLE {leftover} RENAME TO {table}")
-            return
-        raise ValueError(
-            f"compact requires an existing catalog table {table!r} "
-            f"(and no recoverable {leftover!r} from an interrupted "
-            "swap was found)"
-        )
-    if info.get("Type", "").upper() == "EXTERNAL":
-        raise ValueError(
-            f"refusing to compact EXTERNAL table {table!r}: the "
-            "drop-and-rename swap would orphan its shared location"
-        )
-    bucket_col, n_buckets = table_bucket_spec(spark, table)
-    tmp = f"{table}__compact"
-    # ZERO-shuffle rewrite, ONE file per bucket: force the BUCKETED
-    # scan for the read. The scan's bucket layout makes any explicit
-    # repartition on the bucket key "redundant" to the optimizer
-    # (scan outputPartitioning = HashPartitioning(bucket_col, N)), but
-    # AQE's autoBucketedScan then decides no join needs the layout and
-    # silently falls back to per-file scan partitions — each of which
-    # writes its own per-bucket file set, leaving the "compacted"
-    # store as fragmented as before (observed: 5 -> 5 files).
-    # Disabling autoBucketedScan for the rewrite keeps one scan task
-    # per bucket, so the write emits exactly one file per non-empty
-    # bucket with no exchange anywhere (observed: 8 -> 2 files).
-    key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try:
-        write_bucketed_table(
-            spark.table(table), tmp, bucket_col, n_buckets
-        )
-    finally:
-        spark.conf.set(key, prev)
-    spark.sql(f"DROP TABLE {table}")
-    spark.sql(f"ALTER TABLE {tmp} RENAME TO {table}")
-
-
 def managed_table_location(spark, table: str) -> str:
     """The warehouse path a managed table named ``table`` lives at in
     the CURRENT database — the single place the layout rule
     (``<warehouse>/<tbl>`` vs ``<warehouse>/<db>.db/<tbl>``) is
-    encoded; the bucketed-table writer's orphan cleanup and the
-    cross-process read fallback (operators/retrieval.py) both use
-    it so the two sides can never diverge."""
+    encoded; the bucketed-table writer's orphan cleanup uses it."""
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
     db = spark.catalog.currentDatabase()
     return (
@@ -282,7 +183,6 @@ def write_bucketed_table(
     table: str,
     bucket_col: str,
     n_buckets: int = 32,
-    mode: str = "overwrite",
 ) -> None:
     """Spark-NATIVE bucketed table (``bucketBy(N, bucket_col)
     .sortBy(bucket_col)`` + ``saveAsTable``): unlike a partition-column
@@ -292,8 +192,8 @@ def write_bucketed_table(
     and filters on the bucket key push to the scan. This is the
     parquet twin of the Iceberg ``bucket(N, col)`` table spec
     (SURVEY.md §7.4). Serving stores built on it: the triple store
-    (``write_triples_bucketed_table``, subj) and the retrieval store
-    (``operators/retrieval.write_retrieval_tables``, term / doc_id).
+    (``write_triples_bucketed_table``, subj) and the host link graph
+    that ``host_hits_served`` runs HITS over (src).
 
     Idempotent across SESSIONS, not just runs: a fresh metastore does
     not know about a previous session's managed-table directory, and
@@ -318,40 +218,6 @@ def write_bucketed_table(
 
     spark = df.sparkSession
     info = _managed_table_info(spark, table)
-    if mode == "append":
-        # append rides the EXISTING table's bucket spec; the layout
-        # below is the one place the spec is encoded, so an append
-        # written here can never diverge from the store it extends.
-        # A missing catalog entry is an error, not a CREATE: with the
-        # default in-memory catalog a previous session's warehouse
-        # files outlive the entry, and CREATE-over-nonempty-location
-        # would throw (or, on an empty dir, silently fork a store
-        # holding only this batch) — re-index with a full write, or
-        # deploy with a shared metastore for cross-process appends.
-        if not info:
-            raise ValueError(
-                f"append requires an existing catalog table {table!r}; "
-                "this session's catalog does not know it (in-memory "
-                "catalogs do not persist across processes) — rebuild "
-                "the store with a full write or use a shared metastore"
-            )
-        (
-            df.write.mode("append")
-            .format("parquet")
-            .bucketBy(n_buckets, bucket_col)
-            .sortBy(bucket_col)
-            .saveAsTable(table)
-        )
-        # a same-session READ of the table before this append (the
-        # repair's postings scan, the idempotence guard's doclen probe)
-        # caches the relation's FILE LISTING, and saveAsTable(append)
-        # does not invalidate it — without an explicit refresh the next
-        # read silently misses the appended files (observed: postings
-        # append "lost" after a restart-time repair had read the table)
-        spark.catalog.refreshTable(table)
-        return
-    if mode != "overwrite":
-        raise ValueError(f"unsupported mode {mode!r}")
     location = None
     if info:
         if info.get("Type", "").upper() == "EXTERNAL":

@@ -175,76 +175,87 @@ def run_pipeline(
     cleanup: list = []
     normalized = normalized.persist()
     cleanup.append(lambda: normalized.unpersist(blocking=True))
-    features = phrases.extract_doc_features(
-        normalized, stops, id_col="doc_id", text_col="norm_text"
-    ).persist()
-    # ONE explode + ONE shuffle builds all three dictionary sections;
-    # the result is vocabulary-bounded, so persist it and let the
-    # sections, the A3 self-join, and the probe/union all read the
-    # cache instead of re-deriving from the corpus (unified_term_counts
-    # docstring explains why unmaterialized sections re-explode).
-    counted = phrases.unified_term_counts(features).persist()
-    frames = phrases.sections_from_counted(counted)
-    frames["phrases"] = phrases.dedup_equal_count_phrases(frames["phrases"])
-
-    use_blocked = linking == "blocked"
-    dictionary_sizes: dict[str, int] = {}
-    probe_rows = None
-    if linking == "auto":
-        # ONE job decides the strategy AND (when broadcast wins) already
-        # delivers the dictionary: collect limit+1 rows — if everything
-        # fit, these ARE the dictionary rows; if the limit was exceeded,
-        # we learned "too big for broadcast" having moved only limit+1
-        # bounded rows to the driver.
-        probe_rows = (
-            phrases.union_dictionary_frames(frames)
-            .limit(broadcast_term_limit + 1)
-            .collect()
-        )
-        use_blocked = len(probe_rows) > broadcast_term_limit
-
-    if use_blocked:
-        # blocked linking reads features/counted through the frames —
-        # their caches are released by KGResult.close(), not here
+    try:
+        features = phrases.extract_doc_features(
+            normalized, stops, id_col="doc_id", text_col="norm_text"
+        ).persist()
         cleanup.append(lambda: features.unpersist(blocking=True))
+        # ONE explode + ONE shuffle builds all three dictionary sections;
+        # the result is vocabulary-bounded, so persist it and let the
+        # sections, the A3 self-join, and the probe/union all read the
+        # cache instead of re-deriving from the corpus (unified_term_counts
+        # docstring explains why unmaterialized sections re-explode).
+        counted = phrases.unified_term_counts(features).persist()
         cleanup.append(lambda: counted.unpersist(blocking=True))
-        onto = linking_ops.link_terms_blocked(
-            normalized, frames, stops,
-            id_col="doc_id", raw_col="question", norm_col="norm_text",
-            prune_doc_keys=blocked_prune,
-            cleanup=cleanup,
+        frames = phrases.sections_from_counted(counted)
+        frames["phrases"] = phrases.dedup_equal_count_phrases(
+            frames["phrases"]
         )
-        if probe_rows is not None:
-            sizes: dict[str, int] = {}
-            for r in probe_rows:
-                sizes[r["kind"]] = sizes.get(r["kind"], 0) + 1
-            dictionary_sizes = sizes  # >= truth on the truncated probe
-    else:
-        if probe_rows is not None:
-            dictionary = phrases.ranked_dictionary_from_rows(
-                probe_rows, stops
+
+        use_blocked = linking == "blocked"
+        dictionary_sizes: dict[str, int] = {}
+        probe_rows = None
+        if linking == "auto":
+            # ONE job decides the strategy AND (when broadcast wins) already
+            # delivers the dictionary: collect limit+1 rows — if everything
+            # fit, these ARE the dictionary rows; if the limit was exceeded,
+            # we learned "too big for broadcast" having moved only limit+1
+            # bounded rows to the driver.
+            probe_rows = (
+                phrases.union_dictionary_frames(frames)
+                .limit(broadcast_term_limit + 1)
+                .collect()
             )
+            use_blocked = len(probe_rows) > broadcast_term_limit
+
+        if use_blocked:
+            # blocked linking reads features/counted through the frames —
+            # their caches are released by KGResult.close(), not here
+            onto = linking_ops.link_terms_blocked(
+                normalized, frames, stops,
+                id_col="doc_id", raw_col="question", norm_col="norm_text",
+                prune_doc_keys=blocked_prune,
+                cleanup=cleanup,
+            )
+            if probe_rows is not None:
+                sizes: dict[str, int] = {}
+                for r in probe_rows:
+                    sizes[r["kind"]] = sizes.get(r["kind"], 0) + 1
+                dictionary_sizes = sizes  # >= truth on the truncated probe
         else:
-            dictionary = phrases.collect_ranked_dictionary(frames, stops)
-        features.unpersist()
-        counted.unpersist()
-        dictionary_sizes = {
-            "phrases": len(dictionary.phrases),
-            "unigrams": len(dictionary.unigrams),
-            "verbs": len(dictionary.verbs),
-        }
-        onto = linking_ops.link_terms(
-            normalized, dictionary,
-            id_col="doc_id", raw_col="question", norm_col="norm_text",
-            cleanup=cleanup,
-        )
-    # persisted: the optimiser reads the linked ontology twice, and
-    # triples reads the optimised one from three plan branches
-    linked = onto.persist()
-    cleanup.append(lambda: linked.unpersist(blocking=True))
-    onto = hierarchy.optimise_graph(linked, primaries).persist()
-    cleanup.append(lambda: onto.unpersist(blocking=True))
-    trip = triples.build_triples(onto, synonyms=synonyms, altq=altq)
+            if probe_rows is not None:
+                dictionary = phrases.ranked_dictionary_from_rows(
+                    probe_rows, stops
+                )
+            else:
+                dictionary = phrases.collect_ranked_dictionary(frames, stops)
+            # the dictionary is on the driver: drop the caches now (close()
+            # repeats the release, a no-op by then)
+            features.unpersist()
+            counted.unpersist()
+            dictionary_sizes = {
+                "phrases": len(dictionary.phrases),
+                "unigrams": len(dictionary.unigrams),
+                "verbs": len(dictionary.verbs),
+            }
+            onto = linking_ops.link_terms(
+                normalized, dictionary,
+                id_col="doc_id", raw_col="question", norm_col="norm_text",
+                cleanup=cleanup,
+            )
+        # persisted: the optimiser reads the linked ontology twice, and
+        # triples reads the optimised one from three plan branches
+        linked = onto.persist()
+        cleanup.append(lambda: linked.unpersist(blocking=True))
+        onto = hierarchy.optimise_graph(linked, primaries).persist()
+        cleanup.append(lambda: onto.unpersist(blocking=True))
+        trip = triples.build_triples(onto, synonyms=synonyms, altq=altq)
+    except BaseException:
+        # a failed build owns no result to close: release what it
+        # created so far before the error propagates
+        for fn in cleanup:
+            fn()
+        raise
     return KGResult(
         ontology=onto,
         triples=trip,

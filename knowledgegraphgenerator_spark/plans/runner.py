@@ -397,7 +397,7 @@ def run_resumable_pipeline(
 
     def optimise(n):
         linked = link(n).persist()
-        cleanup.append(linked.unpersist)
+        cleanup.append(lambda: linked.unpersist(blocking=True))
         return hierarchy.optimise_graph(linked)
 
     try:

@@ -56,9 +56,6 @@ from knowledgegraphgenerator_spark.operators.curation import (
     IPV4_RE as _IPV4_RE,
     PHONE_RE as _PHONE_RE,
 )
-from knowledgegraphgenerator_spark.operators.retrieval import (
-    bm25_oracle_sql as _bm25_oracle_sql,
-)
 
 # ---------------------------------------------------------------- helpers
 
@@ -1661,97 +1658,6 @@ def q_host_hits(spark, sf_dir):
     return integer_hits(nt, n_iters=2, assume_distinct=True)
 
 
-# BM25 retrieval: fixed bag-of-terms query over the corpus token
-# stream. Terms chosen for df spread at every sf: 'dup' is ~20x rarer
-# than the rest of the vocabulary, so idf actually discriminates.
-_BM25_QUERY_TERMS = ("customer", "dup", "spark", "window")
-
-
-def q_bm25_topk(spark, sf_dir):
-    """Okapi BM25 top-20 documents for a fixed 4-term query
-    (operators/retrieval.bm25_topk): postings/df/dl built from the
-    shared token stream; per-term scores in integer 1e-4 units so the
-    per-doc sum is order-free (see retrieval.py module docstring);
-    global top-k via TakeOrderedAndProject, rank window over the 20
-    survivors only."""
-    from knowledgegraphgenerator_spark.operators.retrieval import (
-        bm25_topk,
-    )
-
-    return bm25_topk(
-        _tokens(spark, sf_dir).select("doc_id", "term"),
-        _BM25_QUERY_TERMS,
-        k=20,
-    )
-
-
-def q_bm25_served(spark, sf_dir):
-    """Store-then-serve retrieval: the postings and doc-length tables
-    are MATERIALIZED as Spark-native bucketed catalog tables
-    (bucketBy(8, term) / bucketBy(8, doc_id) — the triple-store
-    layout, operators/retrieval.write_retrieval_tables) and the SAME
-    BM25 query then runs off the store without re-tokenizing the
-    corpus — the 100 TB serving shape. The term-keyed df aggregation
-    rides the bucket layout with zero Exchange and the query's In
-    filter reaches the parquet scan (pinned in test_retrieval).
-    Gated by the same DuckDB oracle as bm25_topk — store-then-serve
-    must be lossless."""
-    from knowledgegraphgenerator_spark.operators.retrieval import (
-        bm25_topk_served,
-        write_retrieval_tables,
-    )
-
-    write_retrieval_tables(
-        _tokens(spark, sf_dir).select("doc_id", "term"),
-        postings_table="bm25_postings_gate",
-        dl_table="bm25_doclen_gate",
-        n_buckets=8,
-    )
-    return bm25_topk_served(
-        spark,
-        _BM25_QUERY_TERMS,
-        k=20,
-        postings_table="bm25_postings_gate",
-        dl_table="bm25_doclen_gate",
-    )
-
-
-def q_bm25_incremental(spark, sf_dir):
-    """Incremental index maintenance: the store is BUILT from the
-    even-doc_id half of the corpus, the odd half is APPENDED as a
-    later admitted batch (operators/retrieval.append_retrieval_tables
-    — the indexing step of admit-only-novel ingestion), and the query
-    is served off the merged store. Answers to the SAME DuckDB oracle
-    as bm25_topk over the FULL corpus — append must equal rebuild
-    value-for-value."""
-    from knowledgegraphgenerator_spark.operators.retrieval import (
-        append_retrieval_tables,
-        bm25_topk_served,
-        write_retrieval_tables,
-    )
-
-    toks = _tokens(spark, sf_dir).select("doc_id", "term")
-    write_retrieval_tables(
-        toks.where(F.col("doc_id") % 2 == 0),
-        postings_table="bm25_inc_post_gate",
-        dl_table="bm25_inc_dl_gate",
-        n_buckets=8,
-    )
-    append_retrieval_tables(
-        toks.where(F.col("doc_id") % 2 != 0),
-        postings_table="bm25_inc_post_gate",
-        dl_table="bm25_inc_dl_gate",
-        n_buckets=8,
-    )
-    return bm25_topk_served(
-        spark,
-        _BM25_QUERY_TERMS,
-        k=20,
-        postings_table="bm25_inc_post_gate",
-        dl_table="bm25_inc_dl_gate",
-    )
-
-
 def q_lm_doc_score(spark, sf_dir):
     """CCNet-style LM quality scoring (curation.lm_doc_score): every
     document scored by integer-exact negative log-likelihood under a
@@ -1759,7 +1665,8 @@ def q_lm_doc_score(spark, sf_dir):
     that splits a crawl into head/middle/tail quality tiers (Wenzek et
     al. 2020). Self-supervised: no external model artifact. Per-bigram
     nll rounded ONCE to 1e-4 nats then summed as integers, so the
-    cross-engine hash is exact (the BM25 trick)."""
+    cross-engine hash is exact (integer arithmetic, as in
+    components.integer_pagerank)."""
     from knowledgegraphgenerator_spark.operators.curation import (
         lm_doc_score,
     )
@@ -2018,9 +1925,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "benchmark_overlap": q_benchmark_overlap,
     "domain_mixture_rebalance": q_domain_mixture_rebalance,
     "domain_cap_salted": q_domain_cap_salted,
-    "bm25_topk": q_bm25_topk,
-    "bm25_served": q_bm25_served,
-    "bm25_incremental": q_bm25_incremental,
     "anchor_text_profile": q_anchor_text_profile,
     "host_hits": q_host_hits,
     "bpe_merge_pairs": q_bpe_merge_pairs,
@@ -2785,15 +2689,6 @@ def _host_hits_oracle_sql(iters: int = 2) -> str:
 
 
 ORACLES["host_hits"] = _host_hits_oracle_sql()
-
-ORACLES["bm25_topk"] = _bm25_oracle_sql(
-    _TOKENS_SQL, _BM25_QUERY_TERMS, k=20
-)
-# store-then-serve must be lossless: the served query answers to the
-# SAME oracle as the from-tokens path; likewise append-vs-rebuild —
-# the incrementally maintained store must answer identically
-ORACLES["bm25_served"] = ORACLES["bm25_topk"]
-ORACLES["bm25_incremental"] = ORACLES["bm25_topk"]
 
 # serving HITS off the bucketed edge store must be bit-identical to the
 # in-memory path

@@ -294,12 +294,6 @@ def incremental_ingest_dedup(
     checkpoint_dir: str,
     max_bucket: int | None = 1000,
     store_dir: str | None = None,
-    benchmark_dir: str | None = None,
-    contamination_threshold_permille: int = 200,
-    index_tables: tuple[str, str] | None = None,
-    index_buckets: int = 8,
-    lm_artifact_dir: str | None = None,
-    max_avg_nll: int | None = None,
 ) -> None:
     """Streaming crawl ingestion that ADMITS ONLY NOVEL documents: each
     micro-batch is deduped (a) within itself in crawl order
@@ -343,54 +337,6 @@ def incremental_ingest_dedup(
     admit join, so cross-batch dedup is never silently skipped; a
     corpus dir containing anything other than ``batch_id=N``
     partitions fails loudly instead of deduping against nothing.
-
-    ``benchmark_dir``: parquet of (shingle string) rows — an eval
-    benchmark's token-3-gram shingle set. When set, each batch is
-    DECONTAMINATED first (curation.drop_contaminated: docs whose
-    shingle overlap reaches ``contamination_threshold_permille`` are
-    dropped), BEFORE dedup/admit — so a contaminated document neither
-    enters the corpus nor becomes the crawl-order canonical that
-    shadows a clean near-duplicate. The benchmark frame is read once
-    at stream start and broadcast per batch (benchmarks are frozen for
-    a stream's lifetime and MB-sized, same discipline as the frozen
-    linking dictionary). Admit decisions are differential-equal to the
-    sequential decontaminate → crawl_dedup → admit chain
-    (test_runner_streaming).
-
-    ``lm_artifact_dir`` + ``max_avg_nll`` (both required together):
-    QUALITY-GATED admission — each batch is filtered through
-    curation.lm_quality_filter against a FROZEN save_lm_artifact()
-    bigram LM (documents whose avg_nll_i4 exceeds the bound, or that
-    are too short to score, drop) AFTER decontamination and BEFORE
-    dedup/admit, for the same structural reason decontamination runs
-    first: a junk document must not survive as the crawl-order
-    canonical that shadows a good near-duplicate. The model frames are
-    loaded ONCE at stream start (frozen-dictionary discipline); admit
-    decisions are differential-equal to the sequential decontaminate →
-    lm_quality_filter → crawl_dedup → admit chain
-    (test_runner_streaming).
-
-    ``index_tables`` = (postings_table, doclen_table): each admitted
-    batch is ALSO indexed into the bucketed BM25 retrieval store
-    (operators/retrieval.py) — the crawl → admit → index → serve loop
-    in one stream. The first batch creates the store; later batches
-    append (at most one file per bucket per batch). Replay safety
-    composes: the corpus write is exactly-once by partition overwrite,
-    and the index append's doc-length guard makes a replayed batch a
-    no-op; if an append fails mid-way the handler runs
-    repair_retrieval_store before re-raising, AND each stream PROCESS
-    runs the same repair once before its first append — covering the
-    crash points the in-process handler cannot (killed between the
-    two appends, or death of the repairing process itself), since a
-    doclen table that lags the committed postings would otherwise let
-    the retried batch re-append postings and double-count tf/df. With
-    both, the retry is exactly-once at every crash point. Caveat: on
-    the default in-memory catalog the store's CATALOG ENTRY dies with
-    the process — a restarted stream fails loudly on the first append
-    (append requires an existing catalog table) rather than forking a
-    batch-only store; cross-restart streaming indexing REQUIRES a
-    shared metastore (an `index` CLI rebuild cannot help: its catalog
-    entry dies with its own process too).
     """
     from knowledgegraphgenerator_spark.operators.dedup import (
         admit_batch,
@@ -402,37 +348,6 @@ def incremental_ingest_dedup(
         list_children,
         list_subdirs,
     )
-
-    bench = None
-    if benchmark_dir is not None:
-        from knowledgegraphgenerator_spark.operators.curation import (
-            drop_contaminated,
-        )
-
-        bench = spark.read.parquet(benchmark_dir).select("shingle")
-
-    if (lm_artifact_dir is None) != (max_avg_nll is None):
-        raise ValueError(
-            "quality-gated ingestion needs BOTH lm_artifact_dir and "
-            "max_avg_nll (a model without a bound filters nothing; a "
-            "bound without a model has nothing to score against)"
-        )
-    lm_model = None
-    if lm_artifact_dir is not None:
-        from knowledgegraphgenerator_spark.operators.curation import (
-            load_lm_artifact,
-        )
-
-        # the model is FROZEN for the stream's lifetime: persist the
-        # bigram counts and derive+persist the context counts ONCE so
-        # per-batch scoring joins cached frames instead of re-scanning
-        # and re-aggregating the artifact every micro-batch
-        lm_c2, lm_vocab = load_lm_artifact(spark, lm_artifact_dir)
-        lm_c2 = lm_c2.persist()
-        lm_c1 = lm_c2.groupBy("w1").agg(
-            F.sum("c2").alias("c1")
-        ).persist()
-        lm_model = (lm_c2, lm_vocab, lm_c1)
 
     if store_dir is not None:
         _check_signature_store_family(spark, store_dir)
@@ -473,25 +388,7 @@ def incremental_ingest_dedup(
             and n != f"batch_id={batch_id}"
         ]
 
-    # one-shot restart-time store verification flag (see _index)
-    _store_verified = False
-
     def _admit(batch_df, batch_id: int) -> None:
-        if bench is not None:
-            batch_df = drop_contaminated(
-                batch_df,
-                bench,
-                threshold_permille=contamination_threshold_permille,
-            )
-        if lm_model is not None:
-            from knowledgegraphgenerator_spark.operators.curation import (
-                lm_quality_filter,
-            )
-
-            batch_df = lm_quality_filter(
-                batch_df, lm_model[0], lm_model[1], max_avg_nll,
-                c1=lm_model[2],
-            )
         # persist=False: each micro-batch is a NEW plan, so the
         # operator's internal persists could never be deduped or
         # released — a long-lived stream would leak one cache entry
@@ -538,125 +435,28 @@ def incremental_ingest_dedup(
                 batch, old.select("doc_id", "text"), "text", "doc_id",
                 max_bucket=max_bucket,
             )
-        def _index(rows) -> None:
-            """Index the admitted survivors into the retrieval store:
-            create on the first batch, append after; on a mid-append
-            failure run the repair then re-raise so the stream's
-            automatic retry is exactly-once (see docstring)."""
-            if index_tables is None:
-                return
-            from knowledgegraphgenerator_spark.operators.retrieval import (  # noqa: E501
-                append_retrieval_tables,
-                repair_retrieval_store,
-                write_retrieval_tables,
-            )
-
-            from knowledgegraphgenerator_spark.operators.retrieval import (  # noqa: E501
-                tokenize_whitespace,
-            )
-            from knowledgegraphgenerator_spark.operators.triples import (  # noqa: E501
-                managed_table_location,
-            )
-            from knowledgegraphgenerator_spark.plans.runner import (
-                hadoop_fs,
-            )
-
-            post_t, dl_t = index_tables
-            toks = tokenize_whitespace(rows)
-            have = [
-                t for t in (post_t, dl_t)
-                if spark.catalog.tableExists(t)
-            ]
-            if len(have) < 2:
-                # CREATE path — taken for a brand-new store AND for
-                # the in-process retry of a crash between the two
-                # creates (overwrite makes the re-create idempotent).
-                # But a table the CATALOG does not know whose
-                # warehouse DIRECTORY exists is an orphaned store
-                # from a previous process (in-memory catalogs die
-                # with the process): overwriting it would silently
-                # drop every pre-restart document from serving while
-                # dedup still refuses to readmit them. Fail loudly —
-                # rebuild via the `index` CLI or use a shared
-                # metastore (docstring).
-                for t in (post_t, dl_t):
-                    if t in have:
-                        continue
-                    fs, loc = hadoop_fs(
-                        spark, managed_table_location(spark, t)
-                    )
-                    if fs.exists(loc) and not have:
-                        raise ValueError(
-                            f"retrieval table {t!r} has warehouse "
-                            "data but no catalog entry — an orphaned "
-                            "store from a previous process. Streaming "
-                            "--index across restarts needs a SHARED "
-                            "metastore (an in-memory catalog cannot "
-                            "re-adopt the directory, and an `index` "
-                            "CLI rebuild dies with ITS process too); "
-                            "refusing to silently fork a batch-only "
-                            "store"
-                        )
-                write_retrieval_tables(
-                    toks, post_t, dl_t, n_buckets=index_buckets
-                )
-                return
-            nonlocal _store_verified
-            if not _store_verified:
-                # RESTART-time repair: a previous PROCESS may have
-                # died after the postings append committed but before
-                # the doclen append (the in-process except-repair
-                # below never ran). The append guard filters on
-                # doclen, so without this rebuild the retried batch
-                # would re-append its postings and silently
-                # double-count tf/df. Postings-sized, once per stream
-                # process — it makes the exactly-once claim true at
-                # every crash point, including death of the repairing
-                # process itself.
-                repair_retrieval_store(spark, post_t, dl_t)
-                _store_verified = True
-            try:
-                append_retrieval_tables(
-                    toks, post_t, dl_t, n_buckets=index_buckets
-                )
-                # foreachBatch writes through a CLONED session whose
-                # relation-cache refresh does not reach THIS session's
-                # cache — and the restart repair above read both
-                # tables through this session, caching the pre-append
-                # file listings. Refresh here or the post-stream reads
-                # silently miss every appended file.
-                for t in (post_t, dl_t):
-                    spark.catalog.refreshTable(t)
-            except Exception:
-                repair_retrieval_store(spark, post_t, dl_t)
-                raise
-
-        if store_dir is None and index_tables is None:
+        if store_dir is None:
             (
                 batch.write.mode("overwrite")
                 .parquet(f"{corpus_dir}/batch_id={batch_id}")
             )
             return
-        # survivors feed several writes (corpus, optional 2 store
-        # frames, optional 2 index tables): persist once so the admit
-        # join chain runs once, not per consumer
+        # survivors feed three writes (corpus and the 2 store frames):
+        # persist once so the admit join chain runs once, not per
+        # consumer
         batch = batch.persist()
         try:
             (
                 batch.write.mode("overwrite")
                 .parquet(f"{corpus_dir}/batch_id={batch_id}")
             )
-            if store_dir is not None:
-                sh, bands = batch_signature_parts(
-                    batch, "text", "doc_id"
-                )
-                sh.write.mode("overwrite").parquet(
-                    f"{store_dir}/shingles/batch_id={batch_id}"
-                )
-                bands.write.mode("overwrite").parquet(
-                    f"{store_dir}/bands/batch_id={batch_id}"
-                )
-            _index(batch)
+            sh, bands = batch_signature_parts(batch, "text", "doc_id")
+            sh.write.mode("overwrite").parquet(
+                f"{store_dir}/shingles/batch_id={batch_id}"
+            )
+            bands.write.mode("overwrite").parquet(
+                f"{store_dir}/bands/batch_id={batch_id}"
+            )
         finally:
             batch.unpersist()
 
@@ -666,12 +466,7 @@ def incremental_ingest_dedup(
         .trigger(availableNow=True)
         .start()
     )
-    try:
-        q.awaitTermination()
-    finally:
-        if lm_model is not None:
-            lm_model[0].unpersist()
-            lm_model[2].unpersist()
+    q.awaitTermination()
 
 
 def incremental_kg_triples_auto(

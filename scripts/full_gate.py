@@ -1,8 +1,7 @@
 #!/usr/bin/env python
 """Full-registry correctness gate: the local certification that covers
-EVERY ``queries()`` entry (68 of them). It fails loudly on any count
-mismatch and emits one row per registered query in the CORRECTNESS
-report format.
+EVERY ``queries()`` entry. It fails loudly on any count mismatch and
+emits one row per registered query in the CORRECTNESS report format.
 
 Usage:
     python scripts/full_gate.py [--sf /root/testdata/sf0.01] \

@@ -257,51 +257,6 @@ def test_ingest_dictionary_stream_composition(spark, tmp_path):
     assert len(streamed) > 0
 
 
-def test_cli_index_then_search(spark, tmp_path, monkeypatch, capsys):
-    """`index` materializes the bucketed retrieval store; `search`
-    serves BM25 off it — including via the warehouse-files fallback a
-    separate process would hit on the in-memory catalog (simulated by
-    forcing catalog resolution to miss)."""
-    monkeypatch.chdir(tmp_path)
-    docs = spark.createDataFrame(
-        [(1, "apple banana apple"), (2, "apple cherry"),
-         (3, "banana banana banana cherry")],
-        "doc_id long, text string",
-    )
-    src = str(tmp_path / "docs_parquet")
-    docs.write.parquet(src)
-
-    rc = main(
-        ["index", "--input", src, "--postings-table", "t_cli_post",
-         "--doclen-table", "t_cli_dl", "--buckets", "2"], spark=spark,
-    )
-    assert rc == 0
-
-    out = str(tmp_path / "hits")
-    rc = main(
-        ["search", "--terms", "apple,cherry", "--k", "2",
-         "--postings-table", "t_cli_post", "--doclen-table", "t_cli_dl",
-         "--output", out], spark=spark,
-    )
-    assert rc == 0
-    hits = {r["doc_id"]: r["rnk"] for r in spark.read.parquet(out).collect()}
-    assert len(hits) == 2 and 2 in hits  # doc 2 matches both terms
-
-    # stdout mode + warehouse fallback (catalog miss -> managed files)
-    monkeypatch.setattr(
-        type(spark.catalog), "tableExists", lambda self, t: False
-    )
-    rc = main(
-        ["search", "--terms", "apple,cherry", "--k", "2",
-         "--postings-table", "t_cli_post", "--doclen-table", "t_cli_dl"],
-        spark=spark,
-    )
-    assert rc == 0
-    lines = [json.loads(x) for x in
-             capsys.readouterr().out.strip().splitlines() if x.startswith("{")]
-    assert {h["doc_id"] for h in lines} == set(hits)
-
-
 def test_cli_curate_chain(spark, tmp_path):
     """curate --line-dedup --pii --max-avg-nll must equal the library
     chain (drop_repeated_lines → scrub_pii → lm_doc_score filter)

@@ -76,7 +76,8 @@ def test_dictionary_crosses_thresholds(spark, golden):
 def test_builds_release_caches_and_broadcasts(spark, monkeypatch):
     """A long-lived driver can run builds forever: once a build's
     terminal action is done, ``close()`` releases every cache and
-    broadcast the build created."""
+    broadcast the build created, and a build that raises releases them
+    itself."""
     sc = spark.sparkContext
     created = []
     real_broadcast = sc.broadcast
@@ -95,4 +96,19 @@ def test_builds_release_caches_and_broadcasts(spark, monkeypatch):
         result.close()
         assert persistent().size() == baseline
     assert created
+    assert not any(bc._jbroadcast.isValid() for bc in created)
+
+    # a build that fails after its caches and the linking broadcast
+    # exist releases them before the error propagates
+    from knowledgegraphgenerator_spark.operators import hierarchy
+
+    def failing_optimise(*args, **kwargs):
+        raise RuntimeError("optimise failed")
+
+    monkeypatch.setattr(hierarchy, "optimise_graph", failing_optimise)
+    created.clear()
+    with pytest.raises(RuntimeError, match="optimise failed"):
+        run_pipeline(_corpus_df(spark, 4))
+    assert created
+    assert persistent().size() == baseline
     assert not any(bc._jbroadcast.isValid() for bc in created)

@@ -721,409 +721,3 @@ def test_incremental_ingest_store_backfill_and_layout_guard(
             str(tmp_path / "ckpt2"),
         )
 
-
-def test_incremental_ingest_dedup_benchmark(spark, tmp_path):
-    """Decontaminating ingestion (--benchmark): contaminated documents
-    are dropped BEFORE dedup/admit, so (a) they never enter the corpus
-    and (b) a contaminated crawl-order canonical cannot shadow a clean
-    near-duplicate — the decisive ordering case: doc 1 (contaminated)
-    and doc 2 (clean, Jaccard 0.905 near-dup of 1) — dedup-first would
-    collapse 2 into 1 and then drop 1, admitting NOTHING; the
-    decontaminate-first stream admits 2. Stream decisions ==
-    the sequential drop_contaminated -> crawl_dedup -> admit_batch
-    chain across two drops."""
-    import pyspark.sql.functions as F
-
-    from knowledgegraphgenerator_spark.operators.curation import (
-        drop_contaminated,
-    )
-    from knowledgegraphgenerator_spark.operators.dedup import (
-        admit_batch,
-        crawl_dedup,
-    )
-    from knowledgegraphgenerator_spark.streaming.incremental import (
-        incremental_ingest_dedup,
-    )
-
-    ts = " ".join(f"t{i}" for i in range(4, 23))  # t4..t22
-    doc1 = f"b1 b2 b3 {ts}"   # 20 shingles, 4 bench hits = 200 permille
-    doc2 = f"x1 b2 b3 {ts}"   # 3 bench hits = 150 permille -> clean
-    other = "one two three four five six seven eight nine ten eleven"
-
-    bench = spark.createDataFrame(
-        [("b1 b2 b3",), ("b2 b3 t4",), ("b3 t4 t5",), ("t4 t5 t6",)],
-        "shingle string",
-    )
-    bench_path = str(tmp_path / "bench")
-    bench.write.mode("overwrite").parquet(bench_path)
-
-    def pages(rows):
-        return spark.createDataFrame(
-            [
-                (i, f"https://x/{i}",
-                 "2026-01-01 00:00:00", None, t, "en")
-                for i, t in rows
-            ],
-            "doc_id long, url string, warc_ts string, html binary,"
-            " text string, lang string",
-        ).withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
-
-    batch1 = [(1, doc1), (2, doc2), (4, other)]
-    batch2 = [
-        (11, doc2),                       # exact dup of admitted 2
-        (12, doc1),                       # contaminated again
-        (13, "totally novel document text with enough tokens here"),
-    ]
-
-    src = str(tmp_path / "src")
-    corpus = str(tmp_path / "corpus")
-    ckpt = str(tmp_path / "ckpt")
-
-    pages(batch1).write.mode("overwrite").parquet(src)
-    incremental_ingest_dedup(
-        spark, src, corpus, ckpt, benchmark_dir=bench_path
-    )
-    admitted1 = {r.doc_id for r in spark.read.parquet(corpus).collect()}
-    expect1 = {
-        r.doc_id
-        for r in crawl_dedup(
-            drop_contaminated(pages(batch1), bench), "text", "doc_id"
-        ).collect()
-    }
-    # the contaminated canonical is gone, its clean near-dup admitted
-    assert admitted1 == expect1 == {2, 4}
-
-    pages(batch2).write.mode("append").parquet(src)
-    incremental_ingest_dedup(
-        spark, src, corpus, ckpt, benchmark_dir=bench_path
-    )
-    admitted2 = {r.doc_id for r in spark.read.parquet(corpus).collect()}
-    old = spark.read.parquet(corpus).where("batch_id = 0").select(
-        "doc_id", "text"
-    )
-    expect2 = expect1 | {
-        r.doc_id
-        for r in admit_batch(
-            crawl_dedup(
-                drop_contaminated(pages(batch2), bench), "text", "doc_id"
-            ),
-            old, "text", "doc_id",
-        ).collect()
-    }
-    assert admitted2 == expect2 == {2, 4, 13}
-
-
-def test_incremental_ingest_with_index(spark, tmp_path):
-    """crawl -> admit -> index -> serve in one stream: after two file
-    drops, the bucketed retrieval store holds exactly the postings of
-    the admitted corpus (first batch creates, second appends), and a
-    BM25 query served off the store equals the from-tokens answer over
-    the admitted corpus."""
-    import pyspark.sql.functions as F
-
-    from knowledgegraphgenerator_spark.operators.retrieval import (
-        bm25_topk,
-        bm25_topk_served,
-        build_postings,
-    )
-    from knowledgegraphgenerator_spark.streaming.incremental import (
-        incremental_ingest_dedup,
-    )
-
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    other = "one two three four five six seven eight nine ten eleven"
-
-    def pages(rows):
-        return spark.createDataFrame(
-            [
-                (i, f"https://x/{i}",
-                 "2026-01-01 00:00:00", None, t, "en")
-                for i, t in rows
-            ],
-            "doc_id long, url string, warc_ts string, html binary,"
-            " text string, lang string",
-        ).withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
-
-    src = str(tmp_path / "src")
-    corpus = str(tmp_path / "corpus")
-    ckpt = str(tmp_path / "ckpt")
-    tables = ("t_ing_post", "t_ing_dl")
-    # a PREVIOUS test process may have left warehouse data without a
-    # catalog entry — exactly the orphaned-store case the stream
-    # refuses (by design); clear it like the documented operator
-    # action (rebuild/remove) so this run starts from a clean store
-    import shutil
-
-    from knowledgegraphgenerator_spark.operators.triples import (
-        managed_table_location,
-    )
-
-    for t in tables:
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(
-            managed_table_location(spark, t).removeprefix("file:"),
-            ignore_errors=True,
-        )
-
-    pages([(1, base), (2, base), (4, other)]).write.mode(
-        "overwrite"
-    ).parquet(src)
-    incremental_ingest_dedup(
-        spark, src, corpus, ckpt, index_tables=tables, index_buckets=2
-    )
-    pages(
-        [(10, base), (12, "totally novel document text here"),
-         (14, other + " twelve")]
-    ).write.mode("append").parquet(src)
-    incremental_ingest_dedup(
-        spark, src, corpus, ckpt, index_tables=tables, index_buckets=2
-    )
-
-    admitted = spark.read.parquet(corpus)
-    toks = admitted.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("term")
-    ).where(F.col("term") != "")
-    expect_post = sorted(map(tuple, build_postings(toks).collect()))
-    got_post = sorted(map(tuple, spark.table("t_ing_post").collect()))
-    assert got_post == expect_post and len(got_post) > 0
-
-    q = ("alpha", "novel", "one")
-    served = sorted(map(tuple, bm25_topk_served(
-        spark, q, k=5, postings_table="t_ing_post", dl_table="t_ing_dl"
-    ).collect()))
-    plain = sorted(map(tuple, bm25_topk(toks, q, k=5).collect()))
-    assert served == plain and len(served) > 0
-
-
-def test_incremental_ingest_index_refuses_orphaned_store(
-    spark, tmp_path
-):
-    """Warehouse data without a catalog entry (the in-memory-catalog
-    restart case) must fail the stream loudly instead of silently
-    forking a batch-only store that drops every pre-restart document
-    from serving."""
-    import os
-
-    import pyspark.sql.functions as F
-    import pytest
-
-    from knowledgegraphgenerator_spark.operators.triples import (
-        managed_table_location,
-    )
-    from knowledgegraphgenerator_spark.streaming.incremental import (
-        incremental_ingest_dedup,
-    )
-
-    tables = ("t_orp_post", "t_orp_dl")
-    for t in tables:
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-    loc = managed_table_location(spark, "t_orp_post").removeprefix("file:")
-    os.makedirs(loc, exist_ok=True)
-    with open(os.path.join(loc, "leftover.parquet"), "w") as f:
-        f.write("x")
-    try:
-        docs = spark.createDataFrame(
-            [(1, "https://x/1", "2026-01-01 00:00:00", None,
-              "some document text", "en")],
-            "doc_id long, url string, warc_ts string, html binary,"
-            " text string, lang string",
-        ).withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
-        src = str(tmp_path / "src")
-        docs.write.parquet(src)
-        with pytest.raises(Exception, match="orphaned store"):
-            incremental_ingest_dedup(
-                spark, src, str(tmp_path / "corpus"),
-                str(tmp_path / "ckpt"), index_tables=tables,
-            )
-    finally:
-        import shutil
-
-        shutil.rmtree(loc, ignore_errors=True)
-
-
-def test_incremental_ingest_quality_gated(spark, tmp_path):
-    """Quality-gated admission (--lm-artifact/--max-avg-nll): junk
-    documents are dropped against a FROZEN bigram LM BEFORE dedup/
-    admit — the decisive ordering case mirrors decontamination: doc 1
-    (junk under the model) arrives before doc 2 (clean near-dup of 1);
-    dedup-first would collapse 2 into 1 and then drop 1, admitting
-    NOTHING, while the quality-first stream admits 2. Stream decisions
-    == the sequential lm_quality_filter -> crawl_dedup -> admit chain,
-    and one-sided parameters fail loudly."""
-    import pyspark.sql.functions as F
-    import pytest
-
-    from knowledgegraphgenerator_spark.operators.curation import (
-        lm_quality_filter,
-        load_lm_artifact,
-        save_lm_artifact,
-    )
-    from knowledgegraphgenerator_spark.operators.dedup import crawl_dedup
-    from knowledgegraphgenerator_spark.streaming.incremental import (
-        incremental_ingest_dedup,
-    )
-
-    # model trained on "good" text; junk shares almost no bigrams
-    train = spark.createDataFrame(
-        [(100 + i, "the quick brown fox jumps over the lazy dog "
-                   "a stitch in time saves nine")
-         for i in range(4)],
-        "doc_id long, text string",
-    )
-    model = str(tmp_path / "model")
-    save_lm_artifact(train, model)
-
-    good = ("the quick brown fox jumps over the lazy dog "
-            "a stitch in time saves nine more words here now")
-    # near-dup of `good` (high Jaccard) arriving AFTER a junk-leaning
-    # twin would be shadowed under dedup-first
-    junk_twin = ("zz qq ww ee rr tt yy uu ii oo pp aa ss dd ff gg "
-                 "hh jj kk ll")
-    c2, vocab = load_lm_artifact(spark, model)
-
-    def pages(rows):
-        return spark.createDataFrame(
-            [
-                (i, f"https://x/{i}",
-                 "2026-01-01 00:00:00", None, t, "en")
-                for i, t in rows
-            ],
-            "doc_id long, url string, warc_ts string, html binary,"
-            " text string, lang string",
-        ).withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
-
-    batch1 = [(1, junk_twin), (2, good), (3, good + " extra")]
-    src = str(tmp_path / "src")
-    corpus = str(tmp_path / "corpus")
-    ckpt = str(tmp_path / "ckpt")
-    pages(batch1).write.mode("overwrite").parquet(src)
-
-    # pick a bound that separates good from junk under THIS model
-    scored = lm_quality_filter(
-        pages(batch1), c2, vocab, max_avg_nll=10**9
-    )  # no-op bound, sanity: semi join keeps schema
-    assert set(scored.columns) == set(pages(batch1).columns)
-    from knowledgegraphgenerator_spark.operators.curation import (
-        lm_doc_score_from_artifact,
-    )
-    by_doc = {
-        r["doc_id"]: r["avg_nll_i4"]
-        for r in lm_doc_score_from_artifact(pages(batch1), model)
-        .collect()
-    }
-    bound = (by_doc[2] + by_doc[1]) // 2
-    assert by_doc[2] < bound < by_doc[1]
-
-    incremental_ingest_dedup(
-        spark, src, corpus, ckpt,
-        lm_artifact_dir=model, max_avg_nll=bound,
-    )
-    admitted = {r.doc_id for r in spark.read.parquet(corpus).collect()}
-    expect = {
-        r.doc_id
-        for r in crawl_dedup(
-            lm_quality_filter(pages(batch1), c2, vocab, bound),
-            "text", "doc_id",
-        ).collect()
-    }
-    assert admitted == expect
-    assert 1 not in admitted and 2 in admitted
-
-    with pytest.raises(ValueError, match="BOTH lm_artifact_dir"):
-        incremental_ingest_dedup(
-            spark, src, corpus, str(tmp_path / "ckpt2"),
-            lm_artifact_dir=model,
-        )
-
-
-def test_incremental_ingest_index_restart_repair(spark, tmp_path):
-    """Cross-process crash between the two index appends: a previous
-    process died after batch B's POSTINGS committed but before its
-    doclen append (and before any in-process repair). The doclen-based
-    idempotence guard alone would let the restarted stream re-append
-    B's postings and silently double tf/df — the restart-time repair
-    (one per stream process) must close the hole: after the restarted
-    stream processes B, the postings hold NO duplicate (term, doc_id)
-    rows and doclen is exactly sum(tf) per doc over postings."""
-    import pyspark.sql.functions as F
-
-    from knowledgegraphgenerator_spark.operators.retrieval import (
-        build_postings,
-        tokenize_whitespace,
-    )
-    from knowledgegraphgenerator_spark.operators.triples import (
-        write_bucketed_table,
-    )
-    from knowledgegraphgenerator_spark.streaming.incremental import (
-        incremental_ingest_dedup,
-    )
-
-    def pages(rows):
-        return spark.createDataFrame(
-            [
-                (i, f"https://x/{i}",
-                 "2026-01-01 00:00:00", None, t, "en")
-                for i, t in rows
-            ],
-            "doc_id long, url string, warc_ts string, html binary,"
-            " text string, lang string",
-        ).withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
-
-    batch_a = [(1, "alpha beta gamma delta"),
-               (2, "beta gamma epsilon zeta")]
-    batch_b = [(3, "alpha zeta eta theta iota")]
-    tables = ("t_rr_post", "t_rr_dl")
-
-    # clear warehouse leftovers from a previous test PROCESS (the
-    # orphaned-store case the stream refuses by design)
-    import shutil
-
-    from knowledgegraphgenerator_spark.operators.triples import (
-        managed_table_location,
-    )
-
-    for t in tables:
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(
-            managed_table_location(spark, t).removeprefix("file:"),
-            ignore_errors=True,
-        )
-
-    src = str(tmp_path / "src")
-    corpus = str(tmp_path / "corpus")
-    ckpt = str(tmp_path / "ckpt")
-    pages(batch_a).write.mode("overwrite").parquet(src)
-    incremental_ingest_dedup(
-        spark, src, corpus, ckpt, index_tables=tables, index_buckets=2
-    )
-
-    # simulate the crashed half-append of batch B: postings committed,
-    # doclen NOT (exactly append_retrieval_tables' first write)
-    post_b = build_postings(
-        tokenize_whitespace(pages(batch_b).select("doc_id", "text"))
-    ).repartition(2, F.col("term"))
-    write_bucketed_table(post_b, tables[0], "term", 2, mode="append")
-
-    # "restart": B's files arrive and a NEW stream invocation runs
-    pages(batch_b).write.mode("append").parquet(src)
-    incremental_ingest_dedup(
-        spark, src, corpus, ckpt, index_tables=tables, index_buckets=2
-    )
-
-    post = spark.table(tables[0])
-    dup = (
-        post.groupBy("term", "doc_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .where(F.col("n") > 1)
-        .count()
-    )
-    assert dup == 0, "postings double-appended on restart"
-    dl = {(r["doc_id"], r["dl"]) for r in spark.table(tables[1]).collect()}
-    want = {
-        (r["doc_id"], r["dl"])
-        for r in post.groupBy("doc_id")
-        .agg(F.sum("tf").alias("dl"))
-        .collect()
-    }
-    assert dl == want, "doclen is not the pure function of postings"
-    assert {d for d, _ in dl} == {1, 2, 3}

@@ -1,7 +1,9 @@
 """Web link-graph construction (operators/webgraph.py): href extraction
-from raw HTML (binary or string) and host-level edge aggregation.
-Driver-gated twin: the host_link_graph query (queries.py) with a DuckDB
-regexp oracle."""
+from raw HTML (binary or string), host-level edge aggregation and
+anchor-text extraction, plus integer HITS over the link graph
+(operators/components.integer_hits). Driver-gated twins: the
+host_link_graph, anchor_text_profile and host_hits queries (queries.py)
+with DuckDB oracles."""
 
 from __future__ import annotations
 
@@ -100,3 +102,102 @@ def test_host_keeps_non_default_port(spark):
         ("a.com", "b.com"),
         ("c.com:443", "d.com:80"),
     }
+
+
+def test_integer_hits_star_graph(spark):
+    """Two pages linking one target: sources are pure hubs (split
+    mass), the target is the sole authority — exact integer values."""
+    from knowledgegraphgenerator_spark.operators.components import (
+        integer_hits,
+    )
+
+    edges = spark.createDataFrame(
+        [("a", "c"), ("b", "c")], "src string, dst string"
+    )
+    got = {
+        r["entity"]: (r["hub"], r["auth"])
+        for r in integer_hits(edges, n_iters=2).collect()
+    }
+    assert got == {
+        "a": (500000, 0),
+        "b": (500000, 0),
+        "c": (0, 1000000),
+    }
+
+
+def test_integer_hits_empty(spark):
+    from knowledgegraphgenerator_spark.operators.components import (
+        integer_hits,
+    )
+
+    edges = spark.createDataFrame([], "src string, dst string")
+    assert integer_hits(edges).count() == 0
+
+
+def test_integer_hits_zero_iters_returns_seed(spark):
+    """n_iters=0 returns the uniform seed state — the same
+    degenerate-parameter contract as integer_pagerank."""
+    from knowledgegraphgenerator_spark.operators.components import (
+        integer_hits,
+    )
+
+    edges = spark.createDataFrame(
+        [("a", "b")], "src string, dst string"
+    )
+    got = {
+        r["entity"]: (r["hub"], r["auth"])
+        for r in integer_hits(edges, n_iters=0).collect()
+    }
+    assert got == {"a": (500000, 500000), "b": (500000, 500000)}
+
+
+def test_extract_anchors_quote_styles_and_drops(spark):
+    """Double- and single-quoted hrefs both carry their anchor text;
+    relative links and anchors with nested markup are dropped (the
+    plain-text-anchor contract)."""
+    from knowledgegraphgenerator_spark.operators.webgraph import (
+        extract_anchors,
+    )
+
+    html = (
+        '<a href="https://a.com/x">download spark</a>'
+        "<a href='https://b.com/y' rel=nofollow>user guide</a>"
+        '<a href="/rel">local</a>'
+        '<a href="https://c.com/z"><b>bold</b></a>'
+    )
+    df = spark.createDataFrame(
+        [("https://src.com/", html)], "url string, html string"
+    )
+    got = sorted(
+        (r["href"], r["anchor"])
+        for r in extract_anchors(df, "html", "url").collect()
+    )
+    assert got == [
+        ("https://a.com/x", "download spark"),
+        ("https://b.com/y", "user guide"),
+    ]
+
+
+def test_anchor_text_profile_topk_and_ties(spark):
+    """Per-host term ranking: count desc, then term asc on ties; rank
+    cut at top_k; host normalization collapses www/port variants."""
+    from knowledgegraphgenerator_spark.operators.webgraph import (
+        anchor_text_profile,
+    )
+
+    rows = [
+        ("s", "https://t.com/1", "spark engine"),
+        ("s", "https://WWW.T.com:443/2", "spark docs"),
+        ("s", "https://t.com/3", "engine"),
+        ("s", "https://other.net/", "zz"),
+    ]
+    df = spark.createDataFrame(rows, "src_url string, href string, anchor string")
+    got = [
+        (r["dst_host"], r["rnk"], r["term"], r["cnt"])
+        for r in anchor_text_profile(df, top_k=2).collect()
+    ]
+    assert sorted(got) == [
+        ("other.net", 1, "zz", 1),
+        ("t.com", 1, "engine", 2),
+        ("t.com", 2, "spark", 2),
+    ]
