@@ -20,6 +20,10 @@ MASK_TOKEN = "~~~~"
 # graph optimiser (sparse-node collapse)
 OPTIMISER_NODE_LEVEL = 1
 OPTIMISER_MAX_QUES = 2
+# up to this many distinct paths the G1/G2 decision table is computed on
+# the driver and broadcast back (operators/hierarchy.py); above it the
+# table is built on the cluster
+OPTIMISER_DRIVER_PATH_LIMIT = 100_000
 
 # analyzer
 PATH_COVERAGE = 50

@@ -8,36 +8,52 @@ DataFrame re-expression of /root/reference/graph_optmiser/Optmiser.py:
   * only PRIMARY questions participate in the path maps — the reference
     iterates ``alt_ques_map`` keys (Optmiser.py:25-26), and alternates are
     never optimised;
-  * G1 (Optmiser.py:30-42): explode each distinct path's proper prefixes
-    of length 2..len-1 (the root-only prefix never demotes and the walk
-    starts at path[:-1]), left_anti-join against the populated-path set,
-    collect each path's demoted terms (the last element of every missing
-    prefix), then rewrite terms/tags with array ops — demoted terms keep
-    their terms-list order when appended to tags (convert_terms_to_tags
-    appends in terms order, Optmiser.py:8-19);
+  * G1 (Optmiser.py:30-42): for each distinct path, every proper prefix
+    of length 2..len-1 that is not itself a populated path demotes its
+    last element (the root-only prefix never demotes and the walk starts
+    at path[:-1]); terms/tags are rewritten with array ops — demoted
+    terms keep their terms-list order when appended to tags
+    (convert_terms_to_tags appends in terms order, Optmiser.py:8-19);
   * G2 (Optmiser.py:44-54): on RE-computed paths (Optmiser.py:56-62),
     paths of length node_level+1 with fewer than max_ques questions keep
     only the first node_level path elements as terms (reversed back to
     leaf→root), the rest demoted to tags in path order.
 
-Shuffle budget: one distinct over paths + one aggregation of missing
-prefixes + joins back keyed on path_key. Join strategy is LEFT TO AQE:
-for FAQ corpora the path set is tiny (broadcast), but for long documents
-it approaches |docs| and must shuffle — forcing broadcast was a measured
-10x regression at 400k distinct paths.
+Both rewrites depend only on a question's OLD path and on the multiset
+of distinct paths, so the corpus is aggregated ONCE into path stats and
+a per-path decision table is joined back in one projection. Who builds
+the table depends on the size of the distinct-path set:
+
+  * at most OPTIMISER_DRIVER_PATH_LIMIT paths (FAQ corpora, both
+    benchmark workloads): the stats are collected, the table is computed
+    in Python on the driver (``path_decisions``) and broadcast-joined
+    back — one corpus aggregation, no other shuffle;
+  * above the limit (long multi-topic documents, where the path set
+    approaches |docs|): the table is built on the cluster with a prefix
+    anti-join, a demoted-term aggregation and a G2 count, and the join
+    strategy is LEFT TO AQE — forcing broadcast was a measured 10x
+    regression at 400k distinct paths.
 """
 
 from __future__ import annotations
 
+from collections import Counter
+
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from knowledgegraphgenerator_spark.config import (
+    OPTIMISER_DRIVER_PATH_LIMIT,
     OPTIMISER_MAX_QUES,
     OPTIMISER_NODE_LEVEL,
 )
 
-_SEP = ""
+_SEP = "\x01"
+_DECISION_SCHEMA = (
+    "path_key string, demoted array<string>, new_path array<string>, "
+    "collapse boolean"
+)
 
 
 def _with_path(df: DataFrame) -> DataFrame:
@@ -46,167 +62,53 @@ def _with_path(df: DataFrame) -> DataFrame:
     )
 
 
-def demote_empty_ancestors(
-    onto: DataFrame, primaries: DataFrame | None = None
-) -> DataFrame:
-    """G1. ``onto``: (doc_id, question, terms, tags); ``primaries``:
-    (doc_id) rows participating in path maps (default: all)."""
-    w = _with_path(onto)
-    scoped = w if primaries is None else w.join(primaries, "doc_id", "semi")
-    paths = scoped.select("path_key", "path").distinct()
-
-    prefixes = (
-        paths.filter(F.size("path") >= 3)
-        .select(
-            "path_key",
-            F.explode(
-                F.expr(
-                    "transform(sequence(2, size(path) - 1),"
-                    " i -> slice(path, 1, i))"
-                )
-            ).alias("prefix"),
-        )
-        .withColumn("prefix_key", F.concat_ws(_SEP, "prefix"))
-    )
-    # join strategy left to AQE: the distinct-path set is tiny for
-    # FAQ-like corpora but approaches |docs| for long multi-topic
-    # documents — forcing broadcast here was a measured 10x regression
-    # on 400k-unique-path corpora.
-    missing = prefixes.join(
-        paths.select(F.col("path_key").alias("prefix_key")),
-        "prefix_key",
-        "left_anti",
-    )
-    demoted = missing.groupBy("path_key").agg(
-        F.collect_set(F.element_at("prefix", -1)).alias("demoted")
-    )
-
-    applied = (
-        scoped.join(demoted, "path_key", "left")
-        .withColumn(
-            "new_terms",
-            F.when(
-                F.col("demoted").isNull(), F.col("terms")
-            ).otherwise(
-                F.expr(
-                    "filter(terms, t -> NOT array_contains(demoted, t))"
-                )
-            ),
-        )
-        .withColumn(
-            "new_tags",
-            F.when(F.col("demoted").isNull(), F.col("tags")).otherwise(
-                F.concat(
-                    "tags",
-                    F.expr("filter(terms, t -> array_contains(demoted, t))"),
-                )
-            ),
-        )
-        .select(
-            "doc_id",
-            "question",
-            F.col("new_terms").alias("terms"),
-            F.col("new_tags").alias("tags"),
-        )
-    )
-    if primaries is None:
-        return applied
-    rest = w.join(primaries, "doc_id", "anti").select(
-        "doc_id", "question", "terms", "tags"
-    )
-    return applied.unionByName(rest)
-
-
-def collapse_sparse_nodes(
-    onto: DataFrame,
-    primaries: DataFrame | None = None,
+def path_decisions(
+    stats: dict[tuple[str, ...], int],
     node_level: int = OPTIMISER_NODE_LEVEL,
     max_ques: int = OPTIMISER_MAX_QUES,
+) -> list[tuple[str, list[str] | None, list[str], bool]]:
+    """G1/G2 decisions over ``{path: question count}``, one
+    ``(path_key, demoted, new_path, collapse)`` row per path that
+    changes. ``demoted`` is None when G1 keeps every term; the same rule
+    as tests/ref_impl/pipeline.py:optimise_graph."""
+    post_g1 = {}
+    for path in stats:
+        demoted = {
+            path[i - 1] for i in range(2, len(path)) if path[:i] not in stats
+        }
+        post_g1[path] = (demoted, tuple(t for t in path if t not in demoted))
+    totals: Counter = Counter()
+    for path, (_, new_path) in post_g1.items():
+        totals[new_path] += stats[path]
+    rows = []
+    for path, (demoted, new_path) in post_g1.items():
+        collapse = (
+            len(new_path) == node_level + 1 and totals[new_path] < max_ques
+        )
+        if demoted or collapse:
+            rows.append((
+                _SEP.join(path), sorted(demoted) or None, list(new_path),
+                collapse,
+            ))
+    return rows
+
+
+def _driver_table(spark, probe, node_level: int, max_ques: int) -> DataFrame:
+    rows = path_decisions(
+        {tuple(r["path"]): r["n_ques"] for r in probe}, node_level, max_ques
+    )
+    # from pandas (Arrow), not from a list: a list is parallelized
+    # through the Python workers, which costs a job per build
+    pdf = pd.DataFrame(
+        rows, columns=["path_key", "demoted", "new_path", "collapse"]
+    )
+    return F.broadcast(spark.createDataFrame(pdf, _DECISION_SCHEMA))
+
+
+def _distributed_table(
+    stats: DataFrame, node_level: int, max_ques: int
 ) -> DataFrame:
-    """G2 on recomputed paths (Optmiser.py:44-54)."""
-    w = _with_path(onto)
-    scoped = w if primaries is None else w.join(primaries, "doc_id", "semi")
-    counts = scoped.groupBy("path_key").agg(
-        F.count(F.lit(1)).alias("n_ques")
-    )
-    applied = (
-        scoped.join(counts, "path_key", "left")
-        .withColumn(
-            "collapse",
-            (F.size("path") == F.lit(node_level + 1))
-            & (F.col("n_ques") < F.lit(max_ques)),
-        )
-        .withColumn(
-            "new_terms",
-            F.when(
-                F.col("collapse"),
-                F.reverse(F.slice("path", 1, node_level)),
-            ).otherwise(F.col("terms")),
-        )
-        .withColumn(
-            "new_tags",
-            F.when(
-                F.col("collapse"),
-                F.concat(
-                    "tags",
-                    F.expr(
-                        f"slice(path, {node_level + 1},"
-                        f" greatest(size(path) - {node_level}, 0))"
-                    ),
-                ),
-            ).otherwise(F.col("tags")),
-        )
-        .select(
-            "doc_id",
-            "question",
-            F.col("new_terms").alias("terms"),
-            F.col("new_tags").alias("tags"),
-        )
-    )
-    if primaries is None:
-        return applied
-    rest = w.join(primaries, "doc_id", "anti").select(
-        "doc_id", "question", "terms", "tags"
-    )
-    return applied.unionByName(rest)
-
-
-def optimise_graph(
-    onto: DataFrame,
-    primaries: DataFrame | None = None,
-    node_level: int = OPTIMISER_NODE_LEVEL,
-    max_ques: int = OPTIMISER_MAX_QUES,
-) -> DataFrame:
-    """G1 then G2 in ONE corpus pass (G2 sees G1's rewritten paths —
-    Optmiser.py:56-62 — but both rewrites are pure functions of the OLD
-    path, so the whole decision table is computed on the distinct-path
-    aggregate and joined back once):
-
-      1. path_stats: groupBy(path_key) over the corpus — the only
-         corpus-wide aggregation (counts feed G2; first(path) is exact,
-         path is functionally dependent on path_key);
-      2. G1 demotion per distinct path (prefix explode + anti-join on
-         the small stats table);
-      3. post-G1 path per distinct path = filter(path, ¬demoted)
-         (reverse∘filter commutes with filter∘reverse);
-      4. G2 counts = sum of n_ques grouped by post-G1 path — the
-         sequential optimiser's "recomputed path map" without touching
-         the corpus again;
-      5. one join back applying demote+collapse in a single projection
-         (tag append order preserved: demoted in terms order, then
-         collapsed remainder in path order — Optmiser.py:8-19,44-54).
-
-    Shuffle budget: 1 corpus aggregation + 1 corpus join-back (strategy
-    left to AQE) vs the naive two passes of each. Both read ``onto``, so
-    a caller whose ``onto`` is expensive to recompute (the linker's
-    Python pass) persists it and owns its release.
-    """
-    w = _with_path(onto)
-    scoped = w if primaries is None else w.join(primaries, "doc_id", "semi")
-
-    path_stats = scoped.groupBy("path_key").agg(
-        F.count(F.lit(1)).alias("n_ques"), F.first("path").alias("path")
-    )
+    path_stats = stats.withColumn("path_key", F.concat_ws(_SEP, "path"))
     prefixes = (
         path_stats.filter(F.size("path") >= 3)
         .select(
@@ -228,7 +130,7 @@ def optimise_graph(
     demoted = missing.groupBy("path_key").agg(
         F.collect_set(F.element_at("prefix", -1)).alias("demoted")
     )
-    stats = (
+    post_g1 = (
         path_stats.join(demoted, "path_key", "left")
         .withColumn(
             "new_path",
@@ -238,10 +140,10 @@ def optimise_graph(
         )
         .withColumn("new_path_key", F.concat_ws(_SEP, "new_path"))
     )
-    g2_counts = stats.groupBy("new_path_key").agg(
+    g2_counts = post_g1.groupBy("new_path_key").agg(
         F.sum("n_ques").alias("total_ques")
     )
-    decisions = stats.join(g2_counts, "new_path_key").select(
+    return post_g1.join(g2_counts, "new_path_key").select(
         "path_key",
         "demoted",
         "new_path",
@@ -251,8 +153,46 @@ def optimise_graph(
         ).alias("collapse"),
     )
 
+
+def optimise_graph(
+    onto: DataFrame,
+    primaries: DataFrame | None = None,
+    node_level: int = OPTIMISER_NODE_LEVEL,
+    max_ques: int = OPTIMISER_MAX_QUES,
+) -> DataFrame:
+    """G1 then G2 (G2 sees G1's rewritten paths — Optmiser.py:56-62):
+
+      1. path stats: groupBy(path) over the corpus — the only
+         corpus-wide aggregation; one job collects at most limit+1 rows
+         of it, which decides who builds the decision table;
+      2. the decision table per distinct path: demoted terms (G1),
+         post-G1 path = filter(path, ¬demoted), and collapse (G2 on the
+         question count summed per post-G1 path);
+      3. one left join back on path_key applying demote+collapse in a
+         single projection (a null decision leaves the row unchanged;
+         tag append order preserved: demoted in terms order, then
+         collapsed remainder in path order — Optmiser.py:8-19,44-54).
+
+    The probe runs when this is called and the join back reads ``onto``
+    again, so a caller whose ``onto`` is expensive to recompute (the
+    linker's Python pass) persists it and owns its release.
+    """
+    w = _with_path(onto)
+    scoped = w if primaries is None else w.join(primaries, "doc_id", "semi")
+
+    # grouping on the array itself avoids first(path), which forces a
+    # SortAggregate
+    stats = scoped.groupBy("path").agg(F.count(F.lit(1)).alias("n_ques"))
+    probe = stats.limit(OPTIMISER_DRIVER_PATH_LIMIT + 1).collect()
+    if len(probe) <= OPTIMISER_DRIVER_PATH_LIMIT:
+        decisions = _driver_table(
+            onto.sparkSession, probe, node_level, max_ques
+        )
+    else:
+        decisions = _distributed_table(stats, node_level, max_ques)
+
     applied = (
-        scoped.join(decisions, "path_key")
+        scoped.join(decisions, "path_key", "left")
         .withColumn(
             "terms1",
             F.when(F.col("demoted").isNull(), F.col("terms")).otherwise(
@@ -302,12 +242,3 @@ def optimise_graph(
     )
     return applied.unionByName(rest)
 
-
-def optimise_graph_two_pass(
-    onto: DataFrame, primaries: DataFrame | None = None
-) -> DataFrame:
-    """Reference-shaped two-pass formulation (kept as the readable spec
-    and as the differential-test twin of the fused optimise_graph)."""
-    onto = onto.persist()
-    g1 = demote_empty_ancestors(onto, primaries).persist()
-    return collapse_sparse_nodes(g1, primaries)

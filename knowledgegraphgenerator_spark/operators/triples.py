@@ -35,7 +35,8 @@ def ontology_triples(
     ``row_local_dedup`` (ADVICE r3 #3): the default corpus-global
     ``.distinct()`` on the narrower_than branch is correct for batch but
     becomes a stateful ``Deduplicate`` with UNBOUNDED cross-batch state
-    inside a streaming query. Streaming callers set True: edges are
+    inside a streaming query. Streaming callers set True, and so does
+    ``build_triples``, whose own final distinct is global: edges are
     deduplicated WITHIN each row via ``array_distinct`` (zero state, the
     plan stays map-only), and the cross-document dedup is deferred to the
     consumer / the periodic batch vocabulary refresh, which rewrites the
@@ -103,7 +104,9 @@ def build_triples(
     synonyms: DataFrame | None = None,
     altq: DataFrame | None = None,
 ) -> DataFrame:
-    out = ontology_triples(onto)
+    # row-local: the distinct below is global, and a second one on
+    # narrower_than would be one more shuffle job
+    out = ontology_triples(onto, row_local_dedup=True)
     if synonyms is not None:
         out = out.unionByName(synonym_triples(synonyms))
     if altq is not None:

@@ -427,7 +427,8 @@ onto0 AS MATERIALIZED (
   LEFT JOIN mtag g USING (doc_id)
   LEFT JOIN fb f USING (doc_id)
 ),
--- G1 + G2 (Optmiser.py:8-62), fused exactly like operators/hierarchy.py:
+-- G1 + G2 (Optmiser.py:8-62), like the distributed decision table in
+-- operators/hierarchy.py:
 -- demotion decided per distinct path, G2 on the post-G1 recomputed paths
 paths AS MATERIALIZED (
   SELECT doc_id, question, terms, tags, list_reverse(terms) AS path,

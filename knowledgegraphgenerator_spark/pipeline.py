@@ -5,7 +5,7 @@ corpus(url/doc_id, html?, text, lang)
   → extract features (fused chunker pass)       [no shuffle]
   → term dictionary (agg + threshold + dedup)   [1 shuffle + tiny join]
   → broadcast dictionary → link terms           [no shuffle]
-  → optimise hierarchy (G1, G2)                 [tiny-path-set shuffles]
+  → optimise hierarchy (G1, G2)                 [path-stats probe + join]
   → triples                                     [explode + distinct]
 
 Reference lifecycle: /root/reference/KnowledgeGraphGenerator.py:31-64.
@@ -231,8 +231,8 @@ def run_pipeline(
                 dictionary = phrases.collect_ranked_dictionary(frames, stops)
             # the dictionary is on the driver: drop the caches now (close()
             # repeats the release, a no-op by then)
-            features.unpersist()
-            counted.unpersist()
+            features.unpersist(blocking=True)
+            counted.unpersist(blocking=True)
             dictionary_sizes = {
                 "phrases": len(dictionary.phrases),
                 "unigrams": len(dictionary.unigrams),
@@ -243,12 +243,14 @@ def run_pipeline(
                 id_col="doc_id", raw_col="question", norm_col="norm_text",
                 cleanup=cleanup,
             )
-        # persisted: the optimiser reads the linked ontology twice, and
-        # triples reads the optimised one from three plan branches
+        # persisted: the optimiser's path-stats probe and the triples
+        # write both read the linked ontology. The optimised ontology is
+        # not cached: triples re-reads it from three plan branches, and
+        # each re-read is a scan of this cache plus a broadcast join,
+        # cheaper than the jobs a second cache adds to the build.
         linked = onto.persist()
         cleanup.append(lambda: linked.unpersist(blocking=True))
-        onto = hierarchy.optimise_graph(linked, primaries).persist()
-        cleanup.append(lambda: onto.unpersist(blocking=True))
+        onto = hierarchy.optimise_graph(linked, primaries)
         trip = triples.build_triples(onto, synonyms=synonyms, altq=altq)
     except BaseException:
         # a failed build owns no result to close: release what it
