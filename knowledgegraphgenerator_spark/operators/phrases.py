@@ -13,17 +13,19 @@ Stage layout (every boundary a shuffle we either need or eliminate):
      the same aggregate and materializes the Counter-insertion-order
      tiebreaker (SURVEY.md Appendix A.4).
   3. thresholds — strict ``>`` filters (phrase_finder.py:33-34).
-  4. ``dedup_equal_count_phrases`` — the A3 equal-count substring drop as a
-     self-join on the count key + containment predicate + left_anti
-     (set-difference semantics proven equivalent to the reference's
-     remove-first-occurrence loop, phrase_finder.py:35-44). The join key
-     (cnt) bounds the quadratic blow-up to within-count groups; the
-     dictionary is already thresholded and tiny relative to the corpus.
-  5. ``collect_ranked_dictionary`` — sort by (cnt desc, first_seen asc) =
-     Counter.most_common parity, collect to driver, broadcast. The
-     dictionary is corpus-derived and vocabulary-bounded (≪ corpus); if it
-     ever outgrows broadcast, the fallback is the token-block equi-join in
-     operators/linking.py docstring.
+  4. A3, the equal-count substring drop (phrase_finder.py:35-44): phrase B
+     goes when a same-count phrase A != B contains it. One rule,
+     ``equal_count_substrings``, decides one count group; the driver runs
+     it over the collected rows (``dedup_equal_count_rows``) and the
+     cluster runs it per ``groupBy(cnt)`` group
+     (``dedup_equal_count_phrases``), both with set-difference semantics
+     equal to the reference's remove-first-occurrence loop.
+  5. ranking — sort by (cnt desc, first_seen asc) = Counter.most_common
+     parity on the driver (``ranked_dictionary_from_rows``). The broadcast
+     build collects the thresholded rows in one job (``thresholded_rows``)
+     and runs A3 and the ranking there: the dictionary is corpus-derived
+     and vocabulary-bounded (≪ corpus). If it ever outgrows broadcast,
+     the fallback is the token-block equi-join in operators/linking.py.
 """
 
 from __future__ import annotations
@@ -82,13 +84,14 @@ def unified_term_counts(features: DataFrame) -> DataFrame:
     passes over the features (round-2 shape; shuffle bytes are identical
     since the sections are disjoint, the saving is the 2 extra corpus/
     cache passes). The output is vocabulary-bounded — tiny relative to
-    the corpus — so the hot paths MATERIALIZE it once (pipeline: persist;
-    stage runner: its own committed stage) and every section/filter/
-    self-join downstream reads the materialization. Deriving sections
-    straight from this plan without materializing re-explodes per
-    section (Catalyst pushes the kind filter below the aggregate —
-    kind is a grouping key), which is why term_counts() below is only
-    the convenience form.
+    the corpus. The broadcast build reads it once, through
+    ``thresholded_rows``; a reader of several sections MATERIALIZES it
+    once (blocked build: persist; stage runner: its own committed stage)
+    and every section/filter/A3 downstream reads the materialization.
+    Deriving sections straight from this plan without materializing
+    re-explodes per section (Catalyst pushes the kind filter below the
+    aggregate — kind is a grouping key), which is why term_counts()
+    below is only the convenience form.
 
     first_seen = lexicographic min of (doc_id, pos) — deterministic
     Counter-insertion-order stand-in (corpus order = doc_id ascending,
@@ -114,24 +117,46 @@ def unified_term_counts(features: DataFrame) -> DataFrame:
     )
 
 
+_KINDS = ("phrases", "unigrams", "verbs")
+
+
+def _kept(kind: str) -> F.Column:
+    """Strict > thresholds (phrase_finder.py:33-34); verbs unthresholded
+    at corpus stage (assignment breaks at cnt==1, so cnt>=2 prefilter is
+    applied at collect time — SURVEY.md §2.6 O5)."""
+    cnt = F.col("cnt")
+    return {
+        "phrases": cnt > PHRASES_FREQ_THRESHOLD,
+        "unigrams": cnt > UNIGRAM_FREQ_THRESHOLD,
+        "verbs": F.lit(True),
+    }[kind]
+
+
 def sections_from_counted(counted: DataFrame) -> dict[str, DataFrame]:
     """Threshold-filtered sections of a (materialized) unified count
-    frame (strict >, phrase_finder.py:33-34); verbs unthresholded at
-    corpus stage (assignment breaks at cnt==1, so cnt>=2 prefilter is
-    applied at collect time — SURVEY.md §2.6 O5)."""
-
-    def section(kind: str) -> DataFrame:
-        return counted.where(F.col("kind") == kind).drop("kind")
-
+    frame — the cluster-side form blocked linking consumes."""
     return {
-        "phrases": section("phrases").filter(
-            F.col("cnt") > PHRASES_FREQ_THRESHOLD
-        ),
-        "unigrams": section("unigrams").filter(
-            F.col("cnt") > UNIGRAM_FREQ_THRESHOLD
-        ),
-        "verbs": section("verbs"),
+        kind: counted.where((F.col("kind") == kind) & _kept(kind))
+        .drop("kind")
+        for kind in _KINDS
     }
+
+
+def thresholded_rows(counted: DataFrame) -> DataFrame:
+    """All three thresholded sections as one (kind, term, cnt, fs_doc,
+    fs_pos) projection of a unified count frame, before A3 — the single
+    collect the broadcast build and the auto strategy probe run
+    (pipeline.run_pipeline). One filter, no union: the count frame is
+    read once, so it needs no cache."""
+    keep = None
+    for kind in _KINDS:
+        cond = (F.col("kind") == kind) & _kept(kind)
+        keep = cond if keep is None else keep | cond
+    return counted.where(keep).select(
+        "kind", "term", "cnt",
+        F.col("first_seen.doc_id").alias("fs_doc"),
+        F.col("first_seen.pos").alias("fs_pos"),
+    )
 
 
 def term_counts(features: DataFrame) -> dict[str, DataFrame]:
@@ -142,25 +167,57 @@ def term_counts(features: DataFrame) -> dict[str, DataFrame]:
     return sections_from_counted(unified_term_counts(features))
 
 
+def equal_count_substrings(terms: list[str]) -> set[str]:
+    """The A3 rule for ONE count group of distinct terms: the terms that
+    another term of the group contains (phrase_finder.py:35-44).
+
+    Exact: when no term holds a NUL, every occurrence of ``t`` in the
+    NUL-joined group lies inside one term, and ``t`` occurs in itself
+    exactly once — a second occurrence means another term contains it.
+    One C-speed scan of the group per term. Only non-English text keeps
+    NUL through normalization; such a group takes the pairwise test."""
+    if any("\x00" in t for t in terms):
+        return {t for t in terms if any(t in o for o in terms if o != t)}
+    joined = "\x00".join(terms)
+    return {t for t in terms if joined.count(t) > 1}
+
+
+def dedup_equal_count_rows(rows: list) -> list:
+    """Driver A3 over collected (kind, term, cnt, ...) rows: drop the
+    phrase rows ``equal_count_substrings`` flags within their count
+    group; unigram and verb rows pass through."""
+    groups: dict[int, list[str]] = {}
+    for r in rows:
+        if r["kind"] == "phrases":
+            groups.setdefault(r["cnt"], []).append(r["term"])
+    dropped = {
+        (cnt, t)
+        for cnt, terms in groups.items()
+        for t in equal_count_substrings(terms)
+    }
+    return [
+        r for r in rows
+        if r["kind"] != "phrases" or (r["cnt"], r["term"]) not in dropped
+    ]
+
+
 def dedup_equal_count_phrases(phrases: DataFrame) -> DataFrame:
-    """Drop phrase B when ∃A: B substring of A, cnt(B)==cnt(A), A≠B
-    (phrase_finder.py:35-44). Self-join blocked on cnt, then left_anti."""
-    a = phrases.select(
-        F.col("term").alias("b_term"), F.col("cnt").alias("cnt")
+    """Cluster A3 over a (term, cnt, ...) phrase section: each count
+    group runs ``equal_count_substrings`` in one task, and the flagged
+    (cnt, term) pairs leave through a left_anti join."""
+
+    def dropped(pdf: pd.DataFrame) -> pd.DataFrame:
+        terms = pdf["term"]
+        return pdf[terms.isin(equal_count_substrings(list(terms)))]
+
+    flagged = (
+        phrases.select("cnt", "term")
+        .groupBy("cnt")
+        .applyInPandas(dropped, schema="cnt long, term string")
     )
-    b = phrases.select(
-        F.col("term").alias("a_term"), F.col("cnt").alias("cnt")
+    return phrases.join(flagged, ["cnt", "term"], "left_anti").select(
+        phrases.columns
     )
-    dropped = (
-        a.join(b, "cnt")
-        .filter(
-            (F.col("a_term") != F.col("b_term"))
-            & (F.instr(F.col("a_term"), F.col("b_term")) > 0)
-        )
-        .select(F.col("b_term").alias("term"))
-        .distinct()
-    )
-    return phrases.join(dropped, "term", "left_anti")
 
 
 def build_dictionary_frames(

@@ -3,7 +3,8 @@
 corpus(url/doc_id, html?, text, lang)
   → normalize (Arrow UDF)                       [no shuffle]
   → extract features (fused chunker pass)       [no shuffle]
-  → term dictionary (agg + threshold + dedup)   [1 shuffle + tiny join]
+  → term dictionary (agg + threshold; A3 and    [1 shuffle + 1 collect]
+    ranking on the driver)
   → broadcast dictionary → link terms           [no shuffle]
   → optimise hierarchy (G1, G2)                 [path-stats probe + join]
   → triples                                     [explode + distinct]
@@ -13,6 +14,7 @@ Reference lifecycle: /root/reference/KnowledgeGraphGenerator.py:31-64.
 
 from __future__ import annotations
 
+from collections import Counter
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -149,13 +151,14 @@ def run_pipeline(
     broadcast_term_limit: int = 2_000_000,
     blocked_prune: bool = True,
 ) -> KGResult:
-    """``linking``: 'broadcast' collects the ranked dictionary to the
-    driver and broadcasts it (zero linking shuffles — right while the
-    dictionary is vocabulary-bounded); 'blocked' keeps the dictionary on
-    the cluster and links via the token-block equi-join
-    (operators/linking.py:link_terms_blocked — right when the dictionary
-    outgrows broadcast); 'auto' counts the dictionary once and picks
-    (<= broadcast_term_limit entries -> broadcast)."""
+    """``linking``: 'broadcast' collects the thresholded dictionary to
+    the driver, dedups (A3) and ranks it there and broadcasts it (zero
+    linking shuffles — right while the dictionary is vocabulary-bounded);
+    'blocked' keeps the dictionary on the cluster and links via the
+    token-block equi-join (operators/linking.py:link_terms_blocked —
+    right when the dictionary outgrows broadcast); 'auto' runs the
+    broadcast collect capped at broadcast_term_limit + 1 rows and picks
+    (<= broadcast_term_limit thresholded rows -> broadcast)."""
     if linking not in ("auto", "broadcast", "blocked"):
         raise ValueError(f"unknown linking strategy: {linking!r}")
     stops = resolve_stop_words(lang, stop_words)
@@ -169,70 +172,61 @@ def run_pipeline(
         corpus, id_col, text_col, lang_col, html_col
     )
     # The corpus is read twice (dictionary pass, then match pass) — cache
-    # the narrow normalized projection. The feature arrays are consumed
-    # by FOUR downstream actions (3 ranked collects + the dedup join), so
-    # cache them too or the chunker pass re-runs per action.
+    # the narrow normalized projection. The broadcast build reads the
+    # feature arrays and their counts ONCE (the thresholded collect), so
+    # it caches neither: each cache would cost a job of its own. Only
+    # the blocked build, whose linker reads the three sections, persists
+    # the counts.
     cleanup: list = []
     normalized = normalized.persist()
     cleanup.append(lambda: normalized.unpersist(blocking=True))
     try:
         features = phrases.extract_doc_features(
             normalized, stops, id_col="doc_id", text_col="norm_text"
-        ).persist()
-        cleanup.append(lambda: features.unpersist(blocking=True))
-        # ONE explode + ONE shuffle builds all three dictionary sections;
-        # the result is vocabulary-bounded, so persist it and let the
-        # sections, the A3 self-join, and the probe/union all read the
-        # cache instead of re-deriving from the corpus (unified_term_counts
-        # docstring explains why unmaterialized sections re-explode).
-        counted = phrases.unified_term_counts(features).persist()
-        cleanup.append(lambda: counted.unpersist(blocking=True))
-        frames = phrases.sections_from_counted(counted)
-        frames["phrases"] = phrases.dedup_equal_count_phrases(
-            frames["phrases"]
         )
+        # ONE explode + ONE shuffle builds all three dictionary sections
+        counted = phrases.unified_term_counts(features)
 
         use_blocked = linking == "blocked"
-        dictionary_sizes: dict[str, int] = {}
-        probe_rows = None
-        if linking == "auto":
-            # ONE job decides the strategy AND (when broadcast wins) already
-            # delivers the dictionary: collect limit+1 rows — if everything
-            # fit, these ARE the dictionary rows; if the limit was exceeded,
-            # we learned "too big for broadcast" having moved only limit+1
-            # bounded rows to the driver.
-            probe_rows = (
-                phrases.union_dictionary_frames(frames)
-                .limit(broadcast_term_limit + 1)
-                .collect()
+        rows = None
+        if not use_blocked:
+            # ONE job delivers the thresholded dictionary rows; under
+            # 'auto' it also decides the strategy: collect limit+1 rows —
+            # if everything fit, these ARE the dictionary rows; if the
+            # limit was exceeded, we learned "too big for broadcast"
+            # having moved only limit+1 bounded rows to the driver.
+            dict_rows = phrases.thresholded_rows(counted)
+            if linking == "auto":
+                dict_rows = dict_rows.limit(broadcast_term_limit + 1)
+            rows = dict_rows.collect()
+            use_blocked = (
+                linking == "auto" and len(rows) > broadcast_term_limit
             )
-            use_blocked = len(probe_rows) > broadcast_term_limit
 
+        dictionary_sizes: dict[str, int] = {}
         if use_blocked:
-            # blocked linking reads features/counted through the frames —
-            # their caches are released by KGResult.close(), not here
+            # the sections, the A3 groups and the linker all read the
+            # counts: materialize them once (the auto fallback re-runs
+            # the chunker pass its probe already ran)
+            counted = counted.persist()
+            cleanup.append(lambda: counted.unpersist(blocking=True))
+            frames = phrases.sections_from_counted(counted)
+            frames["phrases"] = phrases.dedup_equal_count_phrases(
+                frames["phrases"]
+            )
             onto = linking_ops.link_terms_blocked(
                 normalized, frames, stops,
                 id_col="doc_id", raw_col="question", norm_col="norm_text",
                 prune_doc_keys=blocked_prune,
                 cleanup=cleanup,
             )
-            if probe_rows is not None:
-                sizes: dict[str, int] = {}
-                for r in probe_rows:
-                    sizes[r["kind"]] = sizes.get(r["kind"], 0) + 1
-                dictionary_sizes = sizes  # >= truth on the truncated probe
+            if rows is not None:
+                # the truncated probe, before A3: a size estimate
+                dictionary_sizes = dict(Counter(r["kind"] for r in rows))
         else:
-            if probe_rows is not None:
-                dictionary = phrases.ranked_dictionary_from_rows(
-                    probe_rows, stops
-                )
-            else:
-                dictionary = phrases.collect_ranked_dictionary(frames, stops)
-            # the dictionary is on the driver: drop the caches now (close()
-            # repeats the release, a no-op by then)
-            features.unpersist(blocking=True)
-            counted.unpersist(blocking=True)
+            dictionary = phrases.ranked_dictionary_from_rows(
+                phrases.dedup_equal_count_rows(rows), stops
+            )
             dictionary_sizes = {
                 "phrases": len(dictionary.phrases),
                 "unigrams": len(dictionary.unigrams),

@@ -285,21 +285,13 @@ def q_trigram_count(spark, sf_dir):
 
 
 def q_substring_dedup(spark, sf_dir):
-    """A3: equal-count substring dedup as blocked self-join + left_anti
-    (phrase_finder.py:35-44)."""
-    b = _bigram_dict(spark, sf_dir)
-    sub = b.select(F.col("term").alias("b_term"), "cnt")
-    sup = b.select(F.col("term").alias("a_term"), "cnt")
-    dropped = (
-        sub.join(sup, "cnt")
-        .where(
-            (F.col("a_term") != F.col("b_term"))
-            & (F.instr(F.col("a_term"), F.col("b_term")) > 0)
-        )
-        .select(F.col("b_term").alias("term"))
-        .distinct()
+    """A3: equal-count substring dedup (phrase_finder.py:35-44) — the
+    production operator, so the oracle gates what the pipeline runs."""
+    from knowledgegraphgenerator_spark.operators.phrases import (
+        dedup_equal_count_phrases,
     )
-    return b.join(dropped, "term", "left_anti")
+
+    return dedup_equal_count_phrases(_bigram_dict(spark, sf_dir))
 
 
 def q_dict_merge_priority(spark, sf_dir):

@@ -54,7 +54,16 @@ def find_all_phrases(normalized_questions, stop_tokens):
         for t, c in unigram_counter.most_common()
         if c > UNIGRAM_FREQ_THRESHOLD
     ]
-    # literal remove-first-occurrence loop (phrase_finder.py:35-44)
+    return (
+        Counter({t: c for t, c in dedup_equal_count(phrases)}),
+        Counter({t: c for t, c in unis}),
+        verb_counter,
+    )
+
+
+def dedup_equal_count(phrases):
+    """[[term, cnt], ...] -> the kept pairs, in order: the literal
+    remove-first-occurrence loop (phrase_finder.py:35-44)."""
     kept = [list(x) for x in phrases]
     for phrase, cnt in phrases:
         for sub, sub_cnt in phrases:
@@ -64,11 +73,7 @@ def find_all_phrases(normalized_questions, stop_tokens):
                         kept.remove([sub, sub_cnt])
                 except ValueError:
                     pass
-    return (
-        Counter({t: c for t, c in kept}),
-        Counter({t: c for t, c in unis}),
-        verb_counter,
-    )
+    return kept
 
 
 def _filter_substrings(terms):

@@ -96,6 +96,15 @@ def test_builds_release_caches_and_broadcasts(spark, monkeypatch):
         result.close()
         assert persistent().size() == baseline
     assert created
+
+    # the blocked fallback (auto over a zero limit) persists the term
+    # counts its sections read; close() releases them too
+    result = run_pipeline(_corpus_df(spark, 4), broadcast_term_limit=0)
+    result.triples.collect()
+    assert persistent().size() > baseline
+    result.close()
+    assert persistent().size() == baseline
+    assert not any(bc._jbroadcast.isValid() for bc in created)
     assert not any(bc._jbroadcast.isValid() for bc in created)
 
     # a build that fails after its caches and the linking broadcast
@@ -112,3 +121,21 @@ def test_builds_release_caches_and_broadcasts(spark, monkeypatch):
     assert created
     assert persistent().size() == baseline
     assert not any(bc._jbroadcast.isValid() for bc in created)
+
+
+def test_build_job_budget(spark):
+    """The broadcast build collects the thresholded dictionary in one job
+    and caches neither the features nor the counts: a build plus its
+    triples collect submits 11 jobs on the fixture (22 when A3 ran as a
+    self-join over cached features and counts)."""
+    sc = spark.sparkContext
+    corpus = _corpus_df(spark, 4)
+    sc.setJobGroup("build_job_budget", "run_pipeline job audit")
+    try:
+        result = run_pipeline(corpus)
+        result.triples.collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    result.close()
+    jobs = sc.statusTracker().getJobIdsForGroup("build_job_budget")
+    assert len(jobs) <= 11, f"expected at most 11 jobs, got {len(jobs)}"
