@@ -169,17 +169,8 @@ def term_counts(features: DataFrame) -> dict[str, DataFrame]:
 
 def equal_count_substrings(terms: list[str]) -> set[str]:
     """The A3 rule for ONE count group of distinct terms: the terms that
-    another term of the group contains (phrase_finder.py:35-44).
-
-    Exact: when no term holds a NUL, every occurrence of ``t`` in the
-    NUL-joined group lies inside one term, and ``t`` occurs in itself
-    exactly once — a second occurrence means another term contains it.
-    One C-speed scan of the group per term. Only non-English text keeps
-    NUL through normalization; such a group takes the pairwise test."""
-    if any("\x00" in t for t in terms):
-        return {t for t in terms if any(t in o for o in terms if o != t)}
-    joined = "\x00".join(terms)
-    return {t for t in terms if joined.count(t) > 1}
+    another term of the group contains (phrase_finder.py:35-44)."""
+    return {t for t in terms if any(t in o for o in terms if o != t)}
 
 
 def dedup_equal_count_rows(rows: list) -> list:

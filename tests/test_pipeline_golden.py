@@ -105,7 +105,6 @@ def test_builds_release_caches_and_broadcasts(spark, monkeypatch):
     result.close()
     assert persistent().size() == baseline
     assert not any(bc._jbroadcast.isValid() for bc in created)
-    assert not any(bc._jbroadcast.isValid() for bc in created)
 
     # a build that fails after its caches and the linking broadcast
     # exist releases them before the error propagates
