@@ -28,6 +28,8 @@ Input is expected to be normalize_text() output: lowercase, ``\\w``-only.
 
 from __future__ import annotations
 
+from functools import lru_cache
+
 from knowledgegraphgenerator_spark.core.lemmatize import verb_lemma
 from knowledgegraphgenerator_spark.core.textnorm import tokenize
 
@@ -94,6 +96,9 @@ back even ever just maybe perhaps rather too very well
 """.split())
 
 
+# pure per-token function over a Zipf-distributed vocabulary: pages repeat
+# tokens heavily, so a bounded cache skips most of the lexicon lookups
+@lru_cache(maxsize=1 << 16)
 def token_class(token: str) -> str:
     """Classify a normalized token: 'VERB' | 'ADV' | 'FUNC' | 'NOUNISH'."""
     if token in AUX_VERBS:

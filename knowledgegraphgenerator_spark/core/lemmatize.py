@@ -17,6 +17,8 @@ stripping incl. consonant-doubling and silent-e restoration.
 
 from __future__ import annotations
 
+from functools import lru_cache
+
 # Reference domain overrides (Lemmatize.py:84) + common irregular nouns.
 NOUN_EXCEPTIONS: dict[str, str] = {
     "banking": "bank", "us": "us", "timing": "time", "timings": "time",
@@ -51,6 +53,9 @@ _VERB_EXCEPTIONS: dict[str, str] = {
 _VOWELS = set("aeiou")
 
 
+# pure per-token function; pages repeat tokens heavily (see
+# chunker.token_class)
+@lru_cache(maxsize=1 << 16)
 def noun_lemma(word: str) -> str:
     """Morphy-style noun lemma; returns the word itself when no rule fits."""
     if not word:

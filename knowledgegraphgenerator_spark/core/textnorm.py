@@ -15,6 +15,19 @@ match at the same position, which implies one is a prefix of the other —
 so ordering keys longest-first reproduces the reference's
 extended-form-before-base-form ordering exactly.
 
+Two departures from the literal reference pass, both output-preserving:
+
+  * the alternation matches case-sensitively. Expansion runs on lowercased
+    text, where ``IGNORECASE`` only adds the Unicode folds ``ſ``→``s`` and
+    ``ı``→``i``; those matches are not table keys after ``.lower()``, so
+    the reference raised ``KeyError`` on them (``"iſn't"``) and one such
+    page failed a whole build. Case-sensitive matching leaves them as text.
+  * the alternation runs only inside apostrophe runs. Every key contains
+    ``'`` and no whitespace, so every match lies inside a maximal
+    non-whitespace run that contains an apostrophe. Scanning those runs
+    alone gives the same matches as scanning the whole string and skips
+    the per-character alternation on the rest of the page.
+
 This module is pure Python on purpose: Java regex ``\\W`` is ASCII-only
 while Python's is Unicode-aware (SURVEY.md §7.4 item 1), so the whole
 chain runs inside one Arrow UDF rather than ``F.regexp_replace``.
@@ -92,9 +105,13 @@ _CONTRACTIONS_RE = re.compile(
     "(%s)" % "|".join(
         re.escape(k)
         for k in sorted(CONTRACTIONS, key=lambda k: (-len(k), k))
-    ),
-    re.IGNORECASE,
+    )
 )
+
+# A maximal non-whitespace run holding an apostrophe. The lookbehind
+# anchors each attempt at a run start, so a long apostrophe-free run costs
+# one linear scan, not one per character.
+_APOSTROPHE_RUN_RE = re.compile(r"(?<!\S)\S*'\S*")
 
 _NON_WORD_RE = re.compile(r"\W+")
 
@@ -118,11 +135,16 @@ TREEBANK_SPLITS: dict[str, tuple[str, ...]] = {
 }
 
 
-def expand_contractions(text: str) -> str:
-    """Single alternation pass; replacement keyed by lowercased match."""
+def _expand_run(m: re.Match) -> str:
     return _CONTRACTIONS_RE.sub(
-        lambda m: CONTRACTIONS[m.group(0).lower()], text
+        lambda c: CONTRACTIONS[c.group(0)], m.group(0)
     )
+
+
+def expand_contractions(text: str) -> str:
+    """One alternation pass over lowercased ``text``, run inside each
+    apostrophe run (see module docstring)."""
+    return _APOSTROPHE_RUN_RE.sub(_expand_run, text)
 
 
 def normalize_text(text: str, lang: str = "en") -> str:

@@ -2,10 +2,13 @@
 
 Stage layout (every boundary a shuffle we either need or eliminate):
 
-  1. ``extract_doc_features`` — one fused Arrow pass per document emitting
-     the phrase/unigram/verb feature arrays in in-document emission order
-     (the reference runs spaCy TWICE per question, phrase_finder.py:54,68;
-     we run the chunker once). mapInPandas, no shuffle.
+  1. features — one chunker pass per document emitting the
+     phrase/unigram/verb arrays in in-document emission order
+     (``feature_columns``; the reference runs spaCy TWICE per question,
+     phrase_finder.py:54,68). ``run_pipeline`` calls it inside its one
+     ``mapInPandas`` page pass, after HTML extraction and normalization,
+     and caches the result; ``extract_doc_features`` is the standalone
+     form over a normalized frame. No shuffle.
   2. ``term_counts`` — posexplode + groupBy(term). Spark's hash aggregate
      does map-side partial aggregation, so head-term skew collapses before
      the exchange — the classic reason NOT to salt a count(): each mapper
@@ -49,28 +52,35 @@ _FEATURES_SCHEMA = (
 )
 
 
+def feature_columns(
+    texts, stop_tokens: frozenset[str]
+) -> dict[str, list[list[str]]]:
+    """The phrase/unigram/verb arrays of each normalized text (a null
+    text has none): one chunker pass per text; arrays preserve emission
+    order (trigrams before bigrams per chunk, phrase_finder.py:61-62)."""
+    feats = [extract_features(t or "", stop_tokens) for t in texts]
+    return {
+        kind: [f[i] for f in feats]
+        for i, kind in enumerate(("phrases", "unigrams", "verbs"))
+    }
+
+
 def extract_doc_features(
     df: DataFrame,
     stop_tokens: frozenset[str],
     id_col: str = "doc_id",
     text_col: str = "norm_text",
 ) -> DataFrame:
-    """(doc_id, norm_text) -> (doc_id, phrases, unigrams, verbs).
-
-    One chunker pass per doc inside mapInPandas; arrays preserve emission
-    order (trigrams before bigrams per chunk, phrase_finder.py:61-62).
-    """
+    """(doc_id, norm_text) -> (doc_id, phrases, unigrams, verbs), one
+    ``feature_columns`` call per batch inside mapInPandas."""
     src = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("t"))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            feats = [extract_features(t or "", stop_tokens) for t in pdf["t"]]
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
-                    "phrases": [f[0] for f in feats],
-                    "unigrams": [f[1] for f in feats],
-                    "verbs": [f[2] for f in feats],
+                    **feature_columns(pdf["t"], stop_tokens),
                 }
             )
 

@@ -1,8 +1,9 @@
 """End-to-end KG construction pipeline (SURVEY.md §3.1 re-expressed).
 
 corpus(url/doc_id, html?, text, lang)
-  → normalize (Arrow UDF)                       [no shuffle]
-  → extract features (fused chunker pass)       [no shuffle]
+  → one Python pass per page: extract HTML,     [no shuffle]
+    normalize, chunker features (mapInPandas),
+    cached for the two corpus reads
   → term dictionary (agg + threshold; A3 and    [1 shuffle + 1 collect]
     ranking on the driver)
   → broadcast dictionary → link terms           [no shuffle]
@@ -15,16 +16,17 @@ Reference lifecycle: /root/reference/KnowledgeGraphGenerator.py:31-64.
 from __future__ import annotations
 
 from collections import Counter
+from collections.abc import Iterator
 from dataclasses import dataclass, field
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
+from knowledgegraphgenerator_spark.core import html as html_mod
+from knowledgegraphgenerator_spark.core import textnorm
 from knowledgegraphgenerator_spark.core.stopwords import resolve_stop_words
-from knowledgegraphgenerator_spark.functions.udfs import (
-    extract_text_udf,
-    normalize_text_udf,
-)
 from knowledgegraphgenerator_spark.operators import hierarchy, phrases, triples
 from knowledgegraphgenerator_spark.operators import linking as linking_ops
 
@@ -47,6 +49,70 @@ class KGResult:
         self._cleanup.clear()
 
 
+def _page_source(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    lang_col: str,
+    html_col: str | None,
+) -> DataFrame:
+    """-> (doc_id, lang[, text][, html]): the columns a page pass reads.
+    ``text`` is absent only when ``html_col`` is given and the frame has
+    no ``text_col``."""
+    cols = [F.col(id_col).alias("doc_id"), F.col(lang_col).alias("lang")]
+    if html_col is None or text_col in df.columns:
+        cols.append(F.col(text_col).alias("text"))
+    if html_col is not None:
+        cols.append(F.col(html_col).alias("html"))
+    return df.select(*cols)
+
+
+def _normalize_pages(pdf: pd.DataFrame) -> pd.DataFrame:
+    """One batch of ``_page_source`` rows -> (doc_id, lang, question,
+    norm_text). question = coalesce(text, extract_text(html)) when there
+    is an html column, else text; a null question normalizes to ""."""
+    question = pdf["text"] if "text" in pdf else [None] * len(pdf)
+    if "html" in pdf:
+        question = [
+            t if t is not None else html_mod.extract_text(h)
+            for t, h in zip(question, pdf["html"])
+        ]
+    norm = [
+        textnorm.normalize_text(q or "", lang)
+        for q, lang in zip(question, pdf["lang"])
+    ]
+    return pd.DataFrame(
+        {
+            "doc_id": pdf["doc_id"],
+            "lang": pdf["lang"],
+            "question": question,
+            "norm_text": norm,
+        }
+    )
+
+
+_PAGES_SCHEMA = (
+    "doc_id long, lang string, question string, norm_text string, "
+    "phrases array<string>, unigrams array<string>, verbs array<string>"
+)
+
+
+def _page_pass(src: DataFrame, stop_tokens: frozenset[str]) -> DataFrame:
+    """The build's single Python pass over the corpus: extract, normalize
+    and the chunker features of each page in one ``mapInPandas``, so a
+    page crosses the JVM↔Python boundary once before the dictionary
+    shuffle. -> ``_PAGES_SCHEMA``."""
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = _normalize_pages(pdf)
+            yield out.assign(
+                **phrases.feature_columns(out["norm_text"], stop_tokens)
+            )
+
+    return src.mapInPandas(gen, schema=_PAGES_SCHEMA)
+
+
 def normalize_corpus(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -54,22 +120,25 @@ def normalize_corpus(
     lang_col: str = "lang",
     html_col: str | None = None,
 ) -> DataFrame:
-    """-> (doc_id, question, lang, norm_text). When ``html_col`` is given
+    """-> (doc_id, lang, question, norm_text). When ``html_col`` is given
     and ``text_col`` is absent/null, text is extracted from HTML first
-    (byte-identical extractor, core/html.py)."""
-    cols = [F.col(id_col).alias("doc_id"), F.col(lang_col).alias("lang")]
-    if html_col is not None and text_col not in df.columns:
-        text = extract_text_udf(F.col(html_col))
-    elif html_col is not None:
-        text = F.coalesce(
-            F.col(text_col), extract_text_udf(F.col(html_col))
-        )
-    else:
-        text = F.col(text_col)
-    out = df.select(*cols, text.alias("question"))
-    return out.withColumn(
-        "norm_text", normalize_text_udf(F.col("question"), F.col("lang"))
+    (byte-identical extractor, core/html.py). The per-page work is the
+    build's (``_normalize_pages``) without the features."""
+    src = _page_source(df, id_col, text_col, lang_col, html_col)
+    schema = StructType(
+        [
+            StructField("doc_id", src.schema["doc_id"].dataType),
+            StructField("lang", src.schema["lang"].dataType),
+            StructField("question", StringType()),
+            StructField("norm_text", StringType()),
+        ]
     )
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield _normalize_pages(pdf)
+
+    return src.mapInPandas(gen, schema=schema)
 
 
 def run_faq_pipeline(
@@ -168,22 +237,19 @@ def run_pipeline(
     target = corpus.sparkSession.sparkContext.defaultParallelism
     if corpus.rdd.getNumPartitions() < min(target, 8):
         corpus = corpus.repartition(target)
-    normalized = normalize_corpus(
-        corpus, id_col, text_col, lang_col, html_col
-    )
-    # The corpus is read twice (dictionary pass, then match pass) — cache
-    # the narrow normalized projection. The broadcast build reads the
-    # feature arrays and their counts ONCE (the thresholded collect), so
-    # it caches neither: each cache would cost a job of its own. Only
-    # the blocked build, whose linker reads the three sections, persists
-    # the counts.
+    # The corpus is read twice (dictionary pass, then match pass): cache
+    # the page pass, so each page runs its Python work once. The
+    # broadcast build reads the counts ONCE (the thresholded collect), so
+    # it does not cache them: that cache would cost a job of its own.
+    # Only the blocked build, whose linker reads the three sections,
+    # persists the counts.
     cleanup: list = []
-    normalized = normalized.persist()
-    cleanup.append(lambda: normalized.unpersist(blocking=True))
+    pages = _page_pass(
+        _page_source(corpus, id_col, text_col, lang_col, html_col), stops
+    ).persist()
+    cleanup.append(lambda: pages.unpersist(blocking=True))
     try:
-        features = phrases.extract_doc_features(
-            normalized, stops, id_col="doc_id", text_col="norm_text"
-        )
+        features = pages.select("doc_id", "phrases", "unigrams", "verbs")
         # ONE explode + ONE shuffle builds all three dictionary sections
         counted = phrases.unified_term_counts(features)
 
@@ -206,8 +272,8 @@ def run_pipeline(
         dictionary_sizes: dict[str, int] = {}
         if use_blocked:
             # the sections, the A3 groups and the linker all read the
-            # counts: materialize them once (the auto fallback re-runs
-            # the chunker pass its probe already ran)
+            # counts: materialize them once (the auto fallback
+            # re-aggregates the cached features its probe counted)
             counted = counted.persist()
             cleanup.append(lambda: counted.unpersist(blocking=True))
             frames = phrases.sections_from_counted(counted)
@@ -215,7 +281,7 @@ def run_pipeline(
                 frames["phrases"]
             )
             onto = linking_ops.link_terms_blocked(
-                normalized, frames, stops,
+                pages, frames, stops,
                 id_col="doc_id", raw_col="question", norm_col="norm_text",
                 prune_doc_keys=blocked_prune,
                 cleanup=cleanup,
@@ -233,7 +299,7 @@ def run_pipeline(
                 "verbs": len(dictionary.verbs),
             }
             onto = linking_ops.link_terms(
-                normalized, dictionary,
+                pages, dictionary,
                 id_col="doc_id", raw_col="question", norm_col="norm_text",
                 cleanup=cleanup,
             )

@@ -5,7 +5,10 @@ emits one row per registered query in the CORRECTNESS report format.
 
 Usage:
     python scripts/full_gate.py [--sf /root/testdata/sf0.01] \
-        [--out CORRECTNESS_LOCAL_r04.json]
+        [--out gate_out/full_gate.json]
+
+The report goes under the git-ignored ``gate_out/`` by default, so a gate
+run leaves the working tree clean.
 
 Per query: run the Spark DataFrame and the DuckDB oracle SQL on the same
 parquet tables, compare row count, sorted column names, and an
@@ -52,7 +55,7 @@ def _value_hash(cols, rows):
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
-    ap.add_argument("--out", default="CORRECTNESS_LOCAL_r04.json")
+    ap.add_argument("--out", default="gate_out/full_gate.json")
     args = ap.parse_args()
 
     import duckdb
@@ -120,6 +123,7 @@ def main() -> int:
         "wall_s": round(time.time() - t0, 1),
         "queries": report,
     }
+    os.makedirs(os.path.dirname(args.out) or ".", exist_ok=True)
     with open(args.out, "w") as f:
         json.dump(payload, f, indent=2)
     print(f"\n{payload['n_green']}/{payload['n_queries']} green "

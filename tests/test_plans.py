@@ -444,3 +444,38 @@ def test_pagerank_contrib_bucketed_two_exchanges(spark):
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     finally:
         spark.sql("DROP TABLE IF EXISTS t_pr_edges")
+
+
+def test_build_runs_one_python_pass_over_the_corpus(spark, monkeypatch):
+    """The build's dictionary collect reads the corpus through ONE Python
+    node: HTML extraction, normalize and the chunker features run in one
+    cached ``mapInPandas``, with no scalar Arrow UDF beside it (each
+    Python node is another JVM↔Python crossing of every page)."""
+    from knowledgegraphgenerator_spark.operators import phrases
+    from knowledgegraphgenerator_spark.pipeline import run_pipeline
+
+    collected = []
+    real = phrases.thresholded_rows
+
+    def recording(counted):
+        out = real(counted)
+        collected.append(out)
+        return out
+
+    monkeypatch.setattr(phrases, "thresholded_rows", recording)
+    pages = spark.createDataFrame(
+        [
+            (1, None, b"<p>How can't I pay the bill?</p>", "en"),
+            (2, "How do I pay the bill?", None, "en"),
+        ],
+        "doc_id long, text string, html binary, lang string",
+    )
+    result = run_pipeline(pages, html_col="html")
+    try:
+        assert len(collected) == 1
+        plan = collected[0]._jdf.queryExecution().executedPlan().toString()
+    finally:
+        result.close()
+    assert "InMemoryRelation" in plan, plan
+    assert plan.count("MapInPandas") == 1, plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan

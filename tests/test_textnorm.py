@@ -3,10 +3,15 @@ semantics: /root/reference/StringProcessor.py:142-155)."""
 
 from __future__ import annotations
 
+import random
+import re
+import time
+
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from knowledgegraphgenerator_spark.core.textnorm import (
+    CONTRACTIONS,
     expand_contractions,
     normalize_text,
     tokenize,
@@ -62,3 +67,99 @@ def test_tokenize_roundtrip_on_clean_text(s):
 def test_expand_is_noop_without_apostrophe():
     s = "plain words without contractions"
     assert expand_contractions(s) == s
+
+
+# ---------------------------------------------------------------------------
+# The literal whole-string contraction pass (case-insensitive alternation
+# over the whole text, replacement keyed by the lowercased match) and the
+# normalize chain around it. ``tests/ref_impl`` shares ``normalize_text``
+# with the engine, so this copy is the reference the run-scoped,
+# case-sensitive expansion is checked against.
+
+_REFERENCE_RE = re.compile(
+    "(%s)" % "|".join(
+        re.escape(k)
+        for k in sorted(CONTRACTIONS, key=lambda k: (-len(k), k))
+    ),
+    re.IGNORECASE,
+)
+_REFERENCE_NON_WORD = re.compile(r"\W+")
+
+
+def _reference_expand(text: str) -> str:
+    return _REFERENCE_RE.sub(
+        lambda m: CONTRACTIONS[m.group(0).lower()], text
+    )
+
+
+def _reference_normalize(text: str, lang: str = "en") -> str:
+    out = text.lower()
+    if lang == "en":
+        expanded = _reference_expand(out)
+        if "'" in expanded:
+            expanded = _reference_expand(expanded)
+        out = _REFERENCE_NON_WORD.sub(" ", expanded)
+    return out
+
+
+# contraction keys (as written and upper-cased), stray apostrophes, the
+# whitespace kinds that end a run (tab, newline, NBSP, U+3000), the
+# characters IGNORECASE folds onto ASCII (long s, dotless i, dotted
+# capital I, Kelvin sign) and plain word/punctuation characters
+_KEYS = sorted(CONTRACTIONS)
+_ATOMS = [
+    "'", "''", " ", "\t", "\n", " ", "　", "ſ", "ı", "İ", "K",
+    "a", "s", "t", "n", "I", "S", "N'T", "'ve", "'s", "'m", ".", "-", "é",
+]
+
+
+def _random_text(rng: random.Random) -> str:
+    parts = []
+    for _ in range(rng.randint(0, 10)):
+        r = rng.random()
+        if r < 0.35:
+            parts.append(rng.choice(_KEYS))
+        elif r < 0.5:
+            parts.append(rng.choice(_KEYS).upper())
+        else:
+            parts.append(rng.choice(_ATOMS))
+    return "".join(parts)
+
+
+def test_run_scoped_expansion_matches_whole_string_pass():
+    rng = random.Random(20260)
+    compared = 0
+    for _ in range(20_000):
+        s = _random_text(rng)
+        try:
+            want_norm = _reference_normalize(s)
+            want_expand = _reference_expand(s.lower())
+        except KeyError:
+            # the reference's own case-fold crash; the engine must not
+            # raise there (test_case_folds_do_not_raise)
+            normalize_text(s)
+            continue
+        assert normalize_text(s) == want_norm, s
+        assert expand_contractions(s.lower()) == want_expand, s
+        compared += 1
+    assert compared > 19_000
+
+
+def test_case_folds_do_not_raise():
+    # IGNORECASE folded ſ/ı onto ASCII keys that .lower() leaves unchanged
+    # ("iſn't" matched "isn't"), so the lookup raised KeyError
+    assert normalize_text("iſn't") == "iſn t"
+    assert normalize_text("it'ſ fine") == "it ſ fine"
+    assert normalize_text("ı'm") == "ı m"
+    # "İ".lower() is "i" + U+0307, a non-word character
+    assert normalize_text("I'M SURE İT'S OK") == "i am sure i t s ok"
+    assert normalize_text("K'") == "k "
+
+
+def test_long_apostrophe_free_run_is_linear():
+    run = "x" * 100_000
+    t = time.perf_counter()
+    assert expand_contractions(run) == run
+    assert normalize_text(run + " can't") == run + " cannot"
+    # a quadratic scan of the run takes tens of seconds
+    assert time.perf_counter() - t < 2.0
