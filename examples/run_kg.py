@@ -10,7 +10,10 @@
         --resume-root s3://bucket/kg_stages/
 
 The script builds its own SparkSession from the cluster config (no
-local-mode assumptions) and runs the resumable pipeline; rerunning after
+local-mode assumptions) and runs the CLI's ``corpus`` subcommand on it,
+so spark-submit and ``python -m knowledgegraphgenerator_spark corpus``
+share one path and take the same flags (``--language``, ``--linking``,
+``--dedup``, ``--resume-root``). With ``--resume-root``, rerunning after
 a failure resumes from the last committed stage. The resume root may be
 a CLUSTER filesystem path (s3a://, hdfs://) — stage markers go through
 the Hadoop FileSystem API and per-partition lineage counts fall back to
@@ -21,24 +24,12 @@ pipeline — the order is structural; see operators/dedup.py:crawl_dedup.
 
 from __future__ import annotations
 
-import argparse
+import sys
 
 from pyspark.sql import SparkSession
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--input", required=True)
-    ap.add_argument("--output", required=True)
-    ap.add_argument("--resume-root", required=True)
-    ap.add_argument("--language", default="en")
-    ap.add_argument("--buckets", type=int, default=256)
-    ap.add_argument("--linking", default="auto",
-                    choices=["auto", "broadcast", "blocked"])
-    ap.add_argument("--dedup", default="none",
-                    choices=["none", "exact", "chain"])
-    args = ap.parse_args()
-
     spark = (
         SparkSession.builder.appName("kg-construct")
         .config("spark.sql.adaptive.enabled", "true")
@@ -46,29 +37,12 @@ def main() -> None:
         .config("spark.sql.session.timeZone", "UTC")
         .getOrCreate()
     )
-    from knowledgegraphgenerator_spark.operators.triples import write_triples
-    from knowledgegraphgenerator_spark.plans.runner import (
-        run_resumable_pipeline,
-    )
+    from knowledgegraphgenerator_spark.__main__ import main as cli
 
-    corpus = spark.read.parquet(args.input)
-    if args.dedup != "none":
-        from knowledgegraphgenerator_spark.operators.dedup import (
-            crawl_dedup,
-            exact_dedup,
-        )
-
-        corpus = (
-            exact_dedup(corpus, "text", "doc_id")
-            if args.dedup == "exact"
-            else crawl_dedup(corpus, "text", "doc_id")
-        )
-    triples = run_resumable_pipeline(
-        spark, corpus, args.resume_root, args.language,
-        linking_strategy=args.linking,
-    )
-    write_triples(triples, args.output, n_buckets=args.buckets)
-    spark.stop()
+    try:
+        cli(["corpus", *sys.argv[1:]], spark=spark)
+    finally:
+        spark.stop()
 
 
 if __name__ == "__main__":

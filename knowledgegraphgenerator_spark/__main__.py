@@ -18,7 +18,8 @@ plus the web-corpus subcommand.
 
   python -m knowledgegraphgenerator_spark stream \\
       --source /path/incoming --dictionary /path/dict_parquet \\
-      --output /path/triples --checkpoint /path/ckpt
+      --output /path/triples --checkpoint /path/ckpt \\
+      [--linking auto|broadcast|blocked]
 
   python -m knowledgegraphgenerator_spark curate \\
       --input /path/web_pages_parquet --output /path/cleaned \\
@@ -26,8 +27,8 @@ plus the web-corpus subcommand.
       [--lm-artifact /path/model | --save-lm-artifact /path/model]
 
 For cluster runs: zip the package (scripts/package.sh) and
-``spark-submit --py-files kg_spark.zip run_kg.py ...`` — the module only
-uses SparkSession.builder, no local-mode assumptions.
+``spark-submit --py-files kg_spark.zip examples/run_kg.py ...``, which
+builds its cluster session and calls ``main(["corpus", ...], spark=...)``.
 """
 
 from __future__ import annotations
@@ -206,26 +207,17 @@ def main(argv: list[str] | None = None, spark=None) -> int:
                 )
 
                 df = crawl_dedup(df, "text", "doc_id")
-            if args.resume_root:
-                from knowledgegraphgenerator_spark.plans.runner import (
-                    run_resumable_pipeline,
-                )
-
-                triples = run_resumable_pipeline(
-                    spark, df, args.resume_root, args.language,
-                    linking_strategy=args.linking,
-                )
-            else:
-                from knowledgegraphgenerator_spark.pipeline import run_pipeline
-
-                triples = run_pipeline(
-                    df, lang=args.language, linking=args.linking
-                ).triples
             from knowledgegraphgenerator_spark.operators.triples import (
                 write_triples,
             )
+            from knowledgegraphgenerator_spark.pipeline import run_pipeline
 
-            write_triples(triples, args.output)
+            result = run_pipeline(
+                df, lang=args.language, linking=args.linking,
+                resume_root=args.resume_root,
+            )
+            write_triples(result.triples, args.output)
+            result.close()
         elif args.cmd == "dictionary":
             from knowledgegraphgenerator_spark.core.stopwords import (
                 resolve_stop_words,
@@ -243,48 +235,17 @@ def main(argv: list[str] | None = None, spark=None) -> int:
             from knowledgegraphgenerator_spark.core.stopwords import (
                 resolve_stop_words,
             )
+            from knowledgegraphgenerator_spark.streaming.incremental import (
+                incremental_kg_triples,
+            )
 
-            stops = resolve_stop_words(args.language, None)
-            if args.linking == "auto":
-                # probe the artifact once; safe at any dictionary size
-                from knowledgegraphgenerator_spark.streaming.incremental import (  # noqa: E501
-                    incremental_kg_triples_auto,
-                )
-
-                chosen = incremental_kg_triples_auto(
-                    spark, args.source, args.dictionary, stops,
-                    args.output, args.checkpoint,
-                )
-                if args.v:
-                    print(f"stream linking strategy: {chosen}")
-            elif args.linking == "blocked":
-                from knowledgegraphgenerator_spark.operators.phrases import (
-                    load_dictionary_frames,
-                )
-                from knowledgegraphgenerator_spark.streaming.incremental import (
-                    incremental_kg_triples_blocked,
-                )
-
-                incremental_kg_triples_blocked(
-                    spark, args.source,
-                    load_dictionary_frames(spark, args.dictionary),
-                    stops, args.output, args.checkpoint,
-                )
-            else:
-                from knowledgegraphgenerator_spark.operators.phrases import (
-                    load_ranked_dictionary,
-                )
-                from knowledgegraphgenerator_spark.streaming.incremental import (
-                    incremental_kg_triples,
-                )
-
-                dictionary = load_ranked_dictionary(
-                    spark, args.dictionary, stops
-                )
-                incremental_kg_triples(
-                    spark, args.source, dictionary, args.output,
-                    args.checkpoint,
-                )
+            chosen = incremental_kg_triples(
+                spark, args.source, args.dictionary,
+                resolve_stop_words(args.language, None),
+                args.output, args.checkpoint, linking=args.linking,
+            )
+            if args.v:
+                print(f"stream linking strategy: {chosen}")
         elif args.cmd == "ingest":
             from knowledgegraphgenerator_spark.streaming.incremental import (
                 incremental_ingest_dedup,

@@ -9,7 +9,7 @@ model versions anyway (SURVEY.md §7.4 item 3). This module is therefore the
 PINNED extractor spec for the engine: a closed-class-lexicon chunker that is
 pure Python, versioned, and shared verbatim by
 
-  * the vectorized Arrow UDFs (knowledgegraphgenerator_spark/functions/udfs.py), and
+  * the build's one Python pass per page (pipeline.py:_page_pass), and
   * the sequential oracle (tests/ref_impl/pipeline.py)
 
 so Spark-vs-oracle golden tests are exact by construction.

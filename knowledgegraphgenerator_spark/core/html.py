@@ -5,8 +5,8 @@ web-scale corpus is ``web_pages(url, warc_ts, html:binary, text, lang)``
 (BASELINE.json input_hint) and the north star requires a boilerplate-strip
 extractor whose output is byte-identical per url across runs. This module
 IS that extractor spec: pure ``re``-based (no parser dependency), versioned
-(EXTRACTOR_VERSION), and executed inside a vectorized Arrow UDF
-(functions/udfs.py). Determinism over cleverness: same bytes in, same text
+(EXTRACTOR_VERSION), and executed inside the build's one Python pass
+per page (pipeline.py:_page_pass). Determinism over cleverness: same bytes in, same text
 out, on every executor, forever.
 
 Pipeline: decode utf-8 (replace) → drop <script>/<style>/<noscript>

@@ -1,23 +1,19 @@
-"""Vectorized Arrow UDFs (the engine's entire Python-on-executor surface).
+"""Vectorized Arrow UDFs for the token-level lemma chain.
 
-Everything else in the pipeline is JVM-side DataFrame ops; these are the
-operators Spark genuinely cannot express (SURVEY.md §2.3):
+Per-page work (HTML extraction, the P1-P3 normalize chain, the chunker
+features) runs inside one ``mapInPandas`` over the per-document functions
+(pipeline.py: the build's page pass and ``normalize_corpus``, which the
+enrichment stream also calls), because each scalar UDF is a separate
+JVM↔Python crossing. What is left here:
 
-  * ``normalize_text_udf`` — P1-P3 chain (lowercase → contraction
-    expansion → ``\\W+``-to-space). Kept in Python ``re`` because Java regex
-    ``\\W`` is ASCII-only while the reference's Python3 ``\\W`` is
-    Unicode-aware (/root/reference/StringProcessor.py:142-155; SURVEY.md
-    §7.4 item 1). It maps ``textnorm.normalize_text`` over the batch, a
-    null text normalizing to ``""``.
-  * ``lemmatize_sentence_udf`` — noun-lemma chain used for match docs
-    (/root/reference/strategy/NGramStrategy.py:65).
+  * ``match_tokens_udf`` — the match-doc token stream (tokenize, then
+    per-token noun lemma) that the token-block linking fallback joins on
+    (operators/linking.py:link_terms_blocked);
+  * ``lemmatize_sentence_udf`` — the same chain joined back into a
+    sentence (the reference's strategy/NGramStrategy.py:65).
 
-Scale notes: scalar pandas UDFs ride Arrow batches
-(spark.sql.execution.arrow.maxRecordsPerBatch). Each one is a separate
-JVM↔Python crossing, so ``run_pipeline`` does not chain them: its corpus
-pass calls the per-document functions (HTML extraction, normalize, the
-chunker features) inside one ``mapInPandas`` (pipeline.py). These UDFs
-serve the streaming and blocked-linking callers.
+Scalar pandas UDFs ride Arrow batches
+(spark.sql.execution.arrow.maxRecordsPerBatch).
 """
 
 from __future__ import annotations
@@ -31,39 +27,9 @@ from knowledgegraphgenerator_spark.core.lemmatize import noun_lemma
 
 
 @pandas_udf(StringType())
-def normalize_text_udf(text: pd.Series, lang: pd.Series) -> pd.Series:
-    return pd.Series(
-        map(textnorm.normalize_text, text.fillna(""), lang), index=text.index
-    )
-
-
-@pandas_udf(StringType())
 def lemmatize_sentence_udf(text: pd.Series) -> pd.Series:
     return text.fillna("").map(
         lambda s: " ".join(noun_lemma(t) for t in textnorm.tokenize(s))
-    )
-
-
-@pandas_udf(ArrayType(StringType()))
-def lemmatize_tokens_udf(tokens: pd.Series) -> pd.Series:
-    return tokens.map(
-        lambda ts: [noun_lemma(t) for t in ts] if ts is not None else []
-    )
-
-
-@pandas_udf(ArrayType(StringType()))
-def lemmatize_lang_udf(text: pd.Series, lang: pd.Series) -> pd.Series:
-    """N3 per-language lemma/stem dispatch (reference Lemmatize.py:140-194):
-    es/fr/de/pt/it Snowball-style stems, zh char-split, en noun lemmas,
-    everything else tokenize-only (core/stemmers.py)."""
-    from knowledgegraphgenerator_spark.core.stemmers import lemmatize_for_lang
-
-    return pd.Series(
-        [
-            lemmatize_for_lang(s or "", g or "en")
-            for s, g in zip(text, lang)
-        ],
-        index=text.index,
     )
 
 

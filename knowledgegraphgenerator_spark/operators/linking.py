@@ -31,9 +31,9 @@ by the same kg_triples DuckDB oracle (queries.py:kg_triples_blocked).
 
 Shuffle budget of the fallback: 1 token-key equi-join (shuffle hash, AQE
 skew-join eligible) + 1 groupBy(doc_id) collect + 1 doc join-back — vs
-zero shuffles for the broadcast path. ``link_terms_auto`` picks per run:
-broadcast below ``broadcast_term_limit`` dictionary entries, blocked
-above.
+zero shuffles for the broadcast path. ``choose_linking`` picks per build
+or stream start from the dictionary's measured size: broadcast up to
+``broadcast_term_limit`` dictionary rows, blocked above.
 """
 
 from __future__ import annotations
@@ -143,9 +143,8 @@ def _dictionary_df(frames: dict[str, DataFrame]) -> DataFrame:
 
 def doc_block_keys(docs: DataFrame) -> DataFrame:
     """(doc_id, ltoks) -> exploded (doc_id, block_key): every lemma token
-    plus every adjacent token pair, distinct per doc. This is the doc
-    side of the blocked equi-join; exposed so the shuffle-diet probe
-    (BENCH/blocked_prune_probe.py) measures exactly the operator's keys."""
+    plus every adjacent token pair, distinct per doc: the doc side of
+    the blocked equi-join."""
     return docs.select(
         "doc_id",
         F.explode(
@@ -170,7 +169,6 @@ def link_terms_blocked(
     id_col: str = "doc_id",
     raw_col: str = "question",
     norm_col: str = "norm_text",
-    prune_doc_keys: bool = True,
     cleanup: list | None = None,
 ) -> DataFrame:
     """Token-block + verify linking: no driver collect, no Python
@@ -179,19 +177,16 @@ def link_terms_blocked(
     (doc_id, question, norm_text) -> (doc_id, question, terms, tags),
     identical to link_terms.
 
-    ``prune_doc_keys`` (shuffle diet, VERDICT r2 'Next round' #4): most
-    exploded doc keys (every token + adjacent pair of every doc) miss the
-    dictionary — at 400k docs the equi-join shuffled 34.8M doc keys for
-    11.9M candidates. Before the shuffle, semi-join the doc keys against
+    Shuffle diet (VERDICT r2 'Next round' #4): most exploded doc keys
+    (every token + adjacent pair of every doc) miss the dictionary — at
+    400k docs the equi-join shuffled 34.8M doc keys for 11.9M
+    candidates. Before the shuffle, the doc keys are semi-joined against
     a broadcast of the dictionary's DISTINCT block-key xxhash64 set:
     8 bytes/key, so it broadcasts far past the point where the full
     dictionary rows (term + counts + first-seen) stopped fitting. A hash
     collision can only KEEP a miss-key (the real string equi-join drops
     it next), never drop a true match, so output is identical by
-    construction — and differentially tested + driver-gated. Disable only
-    when even the key-hash set outgrows broadcast (≳100M distinct lead
-    keys — Heaps-law ≫ the 2M-term auto threshold); the join then relies
-    on AQE skew handling alone, as in round 2.
+    construction — and differentially tested + driver-gated.
 
     ``cleanup`` (ADVICE r3 #2): the operator persists the tokenized docs
     and broadcasts the stop set; both outlive the returned (lazy)
@@ -220,15 +215,14 @@ def link_terms_blocked(
     doc_keys = doc_block_keys(docs)
 
     dict_df = _dictionary_df(frames)
-    if prune_doc_keys:
-        key_hashes = dict_df.select(
-            F.xxhash64("block_key").alias("_kh")
-        ).distinct()
-        doc_keys = (
-            doc_keys.withColumn("_kh", F.xxhash64("block_key"))
-            .join(F.broadcast(key_hashes), "_kh", "left_semi")
-            .drop("_kh")
-        )
+    key_hashes = dict_df.select(
+        F.xxhash64("block_key").alias("_kh")
+    ).distinct()
+    doc_keys = (
+        doc_keys.withColumn("_kh", F.xxhash64("block_key"))
+        .join(F.broadcast(key_hashes), "_kh", "left_semi")
+        .drop("_kh")
+    )
     # shuffle hash equi-join on the block key; the dictionary side never
     # leaves the cluster. AQE skew-join handles hot lead tokens.
     cands = doc_keys.join(dict_df, "block_key").select(
@@ -281,4 +275,29 @@ def link_terms_blocked(
 
     return joined.select("doc_id", "question", "ltoks", "cands").mapInPandas(
         gen, schema=_ONTOLOGY_SCHEMA
+    )
+
+
+def choose_linking(
+    rows: DataFrame, linking: str, broadcast_term_limit: int
+) -> tuple[bool, list | None]:
+    """Broadcast or blocked, decided from the dictionary's measured
+    size. ``rows`` is the (kind, term, cnt, fs_doc, fs_pos) dictionary
+    (``phrases.thresholded_rows`` in a build, the saved artifact in a
+    stream). -> (use_blocked, collected rows; None under 'blocked').
+
+    'blocked' collects nothing; 'broadcast' collects every row; 'auto'
+    collects at most one row more than the limit, in one job: if they
+    all fit, they ARE the dictionary rows, so choosing costs no extra
+    job; if not, only limit+1 bounded rows reached the driver."""
+    if linking not in ("auto", "broadcast", "blocked"):
+        raise ValueError(f"unknown linking strategy: {linking!r}")
+    if linking == "blocked":
+        return True, None
+    if linking == "auto":
+        rows = rows.limit(broadcast_term_limit + 1)
+    collected = rows.collect()
+    return (
+        linking == "auto" and len(collected) > broadcast_term_limit,
+        collected,
     )

@@ -255,8 +255,8 @@ def collect_ranked_dictionary(
 
 def union_dictionary_frames(frames: dict[str, DataFrame]) -> DataFrame:
     """All three sections as one (kind, term, cnt, fs_doc, fs_pos) frame
-    — the single-job shape shared by the collect path and the auto
-    strategy probe (pipeline.run_pipeline)."""
+    — the single-job shape of the collect path and of the saved
+    dictionary artifact (``save_dictionary``)."""
     unioned = None
     for kind, df in frames.items():
         part = df.select(
@@ -296,8 +296,8 @@ def ranked_dictionary_from_rows(
 def save_dictionary(frames: dict[str, DataFrame], path: str) -> None:
     """Persist the dictionary sections as one parquet table
     (kind, term, cnt, fs_doc, fs_pos) — the production vocabulary
-    artifact: the periodic batch refresh writes it, enrichment jobs
-    (streaming/incremental.py:incremental_kg_triples) load it. The
+    artifact: the periodic batch refresh writes it, the enrichment
+    stream (streaming/incremental.py:incremental_kg_triples) reads it. The
     ranking keys (cnt + first-seen position) are stored, not the rank,
     so a load reproduces most_common order exactly."""
     union_dictionary_frames(frames).write.mode("overwrite").parquet(path)

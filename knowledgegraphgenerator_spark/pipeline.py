@@ -29,6 +29,7 @@ from knowledgegraphgenerator_spark.core import textnorm
 from knowledgegraphgenerator_spark.core.stopwords import resolve_stop_words
 from knowledgegraphgenerator_spark.operators import hierarchy, phrases, triples
 from knowledgegraphgenerator_spark.operators import linking as linking_ops
+from knowledgegraphgenerator_spark.plans.runner import StageRunner
 
 
 @dataclass
@@ -44,9 +45,13 @@ class KGResult:
         DataFrames stay valid (unpersist only drops the cache). Every
         release blocks until its blocks are gone, so no removal work
         outlives this call and overlaps the next build."""
-        for fn in self._cleanup:
-            fn()
-        self._cleanup.clear()
+        _release(self._cleanup)
+
+
+def _release(cleanup: list) -> None:
+    for fn in cleanup:
+        fn()
+    cleanup.clear()
 
 
 def _page_source(
@@ -218,7 +223,7 @@ def run_pipeline(
     altq: DataFrame | None = None,
     linking: str = "auto",
     broadcast_term_limit: int = 2_000_000,
-    blocked_prune: bool = True,
+    resume_root: str | None = None,
 ) -> KGResult:
     """``linking``: 'broadcast' collects the thresholded dictionary to
     the driver, dedups (A3) and ranks it there and broadcasts it (zero
@@ -226,70 +231,57 @@ def run_pipeline(
     'blocked' keeps the dictionary on the cluster and links via the
     token-block equi-join (operators/linking.py:link_terms_blocked —
     right when the dictionary outgrows broadcast); 'auto' runs the
-    broadcast collect capped at broadcast_term_limit + 1 rows and picks
-    (<= broadcast_term_limit thresholded rows -> broadcast)."""
-    if linking not in ("auto", "broadcast", "blocked"):
-        raise ValueError(f"unknown linking strategy: {linking!r}")
+    broadcast collect capped one row past broadcast_term_limit and picks
+    (<= broadcast_term_limit thresholded rows -> broadcast; the one
+    decision lives in operators/linking.py:choose_linking).
+
+    ``resume_root``: instead of persisting the page pass (stage
+    ``pages``) and the linked ontology (stage ``linked``), commit them
+    and the triples (stage ``triples``) through
+    ``plans.runner.StageRunner`` under this root. A rerun loads every
+    committed stage and builds only the rest. The dictionary decision
+    and the linker run inside the ``linked`` build, so a run that loads
+    ``linked`` submits no dictionary job, and its ``dictionary_sizes``
+    is ``{}``. Each commit releases the caches and broadcasts its build
+    created: later stages read the committed parquet."""
     stops = resolve_stop_words(lang, stop_words)
     # Small-file inputs (one parquet footer) arrive as 1 split — fan out
     # to the cluster's parallelism or every Arrow stage runs on one core.
     # Real corpora arrive in thousands of splits and skip this branch.
-    target = corpus.sparkSession.sparkContext.defaultParallelism
+    spark = corpus.sparkSession
+    target = spark.sparkContext.defaultParallelism
     if corpus.rdd.getNumPartitions() < min(target, 8):
         corpus = corpus.repartition(target)
-    # The corpus is read twice (dictionary pass, then match pass): cache
-    # the page pass, so each page runs its Python work once. The
-    # broadcast build reads the counts ONCE (the thresholded collect), so
-    # it does not cache them: that cache would cost a job of its own.
-    # Only the blocked build, whose linker reads the three sections,
-    # persists the counts.
     cleanup: list = []
-    pages = _page_pass(
-        _page_source(corpus, id_col, text_col, lang_col, html_col), stops
-    ).persist()
-    cleanup.append(lambda: pages.unpersist(blocking=True))
-    try:
+    runner = None if resume_root is None else StageRunner(spark, resume_root)
+    dictionary_sizes: dict[str, int] = {}
+
+    def stage(name: str, build, input_df: DataFrame, persist: bool = True):
+        """``build(input_df)``, committed as stage ``name`` under the
+        resume root, or else persisted (when ``persist``) for the reads
+        that follow it."""
+        if runner is not None:
+            out = runner.run_stage(name, build, input_df=input_df)
+            _release(cleanup)
+            return out
+        out = build(input_df)
+        if persist:
+            out = out.persist()
+            cleanup.append(lambda: out.unpersist(blocking=True))
+        return out
+
+    def link(pages: DataFrame) -> DataFrame:
+        nonlocal dictionary_sizes
         features = pages.select("doc_id", "phrases", "unigrams", "verbs")
-        # ONE explode + ONE shuffle builds all three dictionary sections
+        # ONE explode + ONE shuffle builds all three dictionary sections.
+        # The broadcast build reads the counts ONCE (the thresholded
+        # collect), so it does not cache them: that cache would cost a
+        # job of its own.
         counted = phrases.unified_term_counts(features)
-
-        use_blocked = linking == "blocked"
-        rows = None
+        use_blocked, rows = linking_ops.choose_linking(
+            phrases.thresholded_rows(counted), linking, broadcast_term_limit
+        )
         if not use_blocked:
-            # ONE job delivers the thresholded dictionary rows; under
-            # 'auto' it also decides the strategy: collect limit+1 rows —
-            # if everything fit, these ARE the dictionary rows; if the
-            # limit was exceeded, we learned "too big for broadcast"
-            # having moved only limit+1 bounded rows to the driver.
-            dict_rows = phrases.thresholded_rows(counted)
-            if linking == "auto":
-                dict_rows = dict_rows.limit(broadcast_term_limit + 1)
-            rows = dict_rows.collect()
-            use_blocked = (
-                linking == "auto" and len(rows) > broadcast_term_limit
-            )
-
-        dictionary_sizes: dict[str, int] = {}
-        if use_blocked:
-            # the sections, the A3 groups and the linker all read the
-            # counts: materialize them once (the auto fallback
-            # re-aggregates the cached features its probe counted)
-            counted = counted.persist()
-            cleanup.append(lambda: counted.unpersist(blocking=True))
-            frames = phrases.sections_from_counted(counted)
-            frames["phrases"] = phrases.dedup_equal_count_phrases(
-                frames["phrases"]
-            )
-            onto = linking_ops.link_terms_blocked(
-                pages, frames, stops,
-                id_col="doc_id", raw_col="question", norm_col="norm_text",
-                prune_doc_keys=blocked_prune,
-                cleanup=cleanup,
-            )
-            if rows is not None:
-                # the truncated probe, before A3: a size estimate
-                dictionary_sizes = dict(Counter(r["kind"] for r in rows))
-        else:
             dictionary = phrases.ranked_dictionary_from_rows(
                 phrases.dedup_equal_count_rows(rows), stops
             )
@@ -298,25 +290,57 @@ def run_pipeline(
                 "unigrams": len(dictionary.unigrams),
                 "verbs": len(dictionary.verbs),
             }
-            onto = linking_ops.link_terms(
+            return linking_ops.link_terms(
                 pages, dictionary,
                 id_col="doc_id", raw_col="question", norm_col="norm_text",
                 cleanup=cleanup,
             )
-        # persisted: the optimiser's path-stats probe and the triples
-        # write both read the linked ontology. The optimised ontology is
+        # the sections, the A3 groups and the linker all read the counts:
+        # materialize them once (the auto fallback re-aggregates the
+        # cached features its probe counted)
+        counted = counted.persist()
+        cleanup.append(lambda: counted.unpersist(blocking=True))
+        frames = phrases.sections_from_counted(counted)
+        frames["phrases"] = phrases.dedup_equal_count_phrases(
+            frames["phrases"]
+        )
+        if rows is not None:
+            # the truncated probe, before A3: a size estimate
+            dictionary_sizes = dict(Counter(r["kind"] for r in rows))
+        return linking_ops.link_terms_blocked(
+            pages, frames, stops,
+            id_col="doc_id", raw_col="question", norm_col="norm_text",
+            cleanup=cleanup,
+        )
+
+    try:
+        # The corpus is read twice (dictionary pass, then match pass):
+        # cache (or commit) the page pass, so each page runs its Python
+        # work once.
+        pages = stage(
+            "pages",
+            lambda c: _page_pass(
+                _page_source(c, id_col, text_col, lang_col, html_col), stops
+            ),
+            corpus,
+        )
+        # persisted (or committed): the optimiser's path-stats probe and
+        # the triples write both read the linked ontology. The optimised ontology is
         # not cached: triples re-reads it from three plan branches, and
         # each re-read is a scan of this cache plus a broadcast join,
         # cheaper than the jobs a second cache adds to the build.
-        linked = onto.persist()
-        cleanup.append(lambda: linked.unpersist(blocking=True))
+        linked = stage("linked", link, pages)
         onto = hierarchy.optimise_graph(linked, primaries)
-        trip = triples.build_triples(onto, synonyms=synonyms, altq=altq)
+        trip = stage(
+            "triples",
+            lambda o: triples.build_triples(o, synonyms=synonyms, altq=altq),
+            onto,
+            persist=False,
+        )
     except BaseException:
         # a failed build owns no result to close: release what it
         # created so far before the error propagates
-        for fn in cleanup:
-            fn()
+        _release(cleanup)
         raise
     return KGResult(
         ontology=onto,

@@ -1,7 +1,10 @@
 """Resumable stage runner with per-stage lineage (north rule: "resumable
 from checkpoint with per-partition lineage + metrics").
 
-Every pipeline stage materializes to a table directory:
+``pipeline.run_pipeline(..., resume_root=root)`` commits its three
+materialized frames through this runner: the page pass (``pages``), the
+linked ontology (``linked``) and the triples (``triples``). Every stage
+materializes to a table directory:
 
     <root>/<stage>/data/            parquet (or Iceberg when the runtime
                                     jars are present — same layout)
@@ -291,122 +294,3 @@ class StageRunner:
     def lineage(self) -> DataFrame:
         return self.spark.read.parquet(os.path.join(self.root, "_lineage"))
 
-
-def run_resumable_pipeline(
-    spark: SparkSession,
-    corpus: DataFrame,
-    root: str,
-    lang: str = "en",
-    stop_words: list[str] | None = None,
-    linking_strategy: str = "auto",
-    broadcast_term_limit: int = 2_000_000,
-) -> DataFrame:
-    """The KG pipeline staged through the runner: normalized → features →
-    dictionary tables → ontology → triples, each stage committed and
-    resumable. Returns the triples DataFrame.
-
-    ``linking_strategy`` mirrors pipeline.run_pipeline: 'broadcast'
-    collects the ranked dictionary to the driver; 'blocked' keeps it on
-    the cluster (the dictionary-beyond-broadcast regime — without this
-    the DEPLOYMENT entry point would OOM the driver exactly at the
-    10^12-doc design point it exists for); 'auto' probes once
-    (limit+1 collect — the probe rows double as the dictionary when
-    broadcast wins, so choosing costs no extra job)."""
-    from knowledgegraphgenerator_spark.core.stopwords import resolve_stop_words
-    from knowledgegraphgenerator_spark.operators import (
-        hierarchy, linking, phrases, triples,
-    )
-    from knowledgegraphgenerator_spark.pipeline import normalize_corpus
-
-    runner = StageRunner(spark, root)
-    stops = resolve_stop_words(lang, stop_words)
-
-    normalized = runner.run_stage(
-        "normalized", lambda c: normalize_corpus(c), input_df=corpus
-    )
-    features = runner.run_stage(
-        "features",
-        lambda n: phrases.extract_doc_features(n, stops,
-                                               "doc_id", "norm_text"),
-        input_df=normalized,
-    )
-    # one corpus pass builds every section; the committed stage is the
-    # materialization the section stages filter (vocabulary-bounded, so
-    # the three downstream stages are metadata-cheap)
-    dict_counts = runner.run_stage(
-        "dict_counts",
-        lambda f: phrases.unified_term_counts(f),
-        input_df=features,
-    )
-    phrases_df = runner.run_stage(
-        "dict_phrases",
-        lambda c: phrases.dedup_equal_count_phrases(
-            phrases.sections_from_counted(c)["phrases"]
-        ),
-        input_df=dict_counts,
-    )
-    unigrams_df = runner.run_stage(
-        "dict_unigrams",
-        lambda c: phrases.sections_from_counted(c)["unigrams"],
-        input_df=dict_counts,
-    )
-    verbs_df = runner.run_stage(
-        "dict_verbs",
-        lambda c: phrases.sections_from_counted(c)["verbs"],
-        input_df=dict_counts,
-    )
-    if linking_strategy not in ("auto", "broadcast", "blocked"):
-        raise ValueError(f"unknown linking strategy: {linking_strategy!r}")
-    frames = {
-        "phrases": phrases_df, "unigrams": unigrams_df, "verbs": verbs_df
-    }
-    use_blocked = linking_strategy == "blocked"
-    probe_rows = None
-    if linking_strategy == "auto":
-        probe_rows = (
-            phrases.union_dictionary_frames(frames)
-            .limit(broadcast_term_limit + 1)
-            .collect()
-        )
-        use_blocked = len(probe_rows) > broadcast_term_limit
-
-    # the linker's broadcast/caches and the persisted linked ontology
-    # (the optimiser reads it twice) live until the ontology stage has
-    # committed; later stages read the committed parquet
-    cleanup: list = []
-    if use_blocked:
-        def link(n):
-            return linking.link_terms_blocked(
-                n, frames, stops,
-                id_col="doc_id", raw_col="question", norm_col="norm_text",
-                cleanup=cleanup,
-            )
-    else:
-        if probe_rows is not None:
-            dictionary = phrases.ranked_dictionary_from_rows(
-                probe_rows, stops
-            )
-        else:
-            dictionary = phrases.collect_ranked_dictionary(frames, stops)
-
-        def link(n):
-            return linking.link_terms(
-                n, dictionary, "doc_id", "question", "norm_text",
-                cleanup=cleanup,
-            )
-
-    def optimise(n):
-        linked = link(n).persist()
-        cleanup.append(lambda: linked.unpersist(blocking=True))
-        return hierarchy.optimise_graph(linked)
-
-    try:
-        ontology = runner.run_stage("ontology", optimise, input_df=normalized)
-    finally:
-        for fn in cleanup:
-            fn()
-    return runner.run_stage(
-        "triples",
-        lambda o: triples.build_triples(o),
-        input_df=ontology,
-    )

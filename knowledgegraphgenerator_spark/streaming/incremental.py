@@ -1,18 +1,19 @@
-"""Incremental corpus processing (Structured Streaming, Trigger.AvailableNow).
+"""The crawl loop's two streams (Structured Streaming,
+Trigger.AvailableNow), each exactly-once through Spark's checkpoint (the
+processed-file ledger) and an idempotent ``batch_id=N`` overwrite per
+micro-batch:
 
-The reference is a batch CLI (SURVEY.md §2.12) and the north rule asks for
-batch-with-resume, which plans/runner.py provides. This module is the
-*incremental ingest* complement: new web-page files landing in a
-directory are normalized + feature-extracted exactly once, with Spark's
-checkpoint directory providing the processed-file ledger. The
-corpus-global stages (dictionary, linking, hierarchy) are then run in
-batch over the accumulated feature table — term statistics are global
-aggregates, so recomputing them per micro-batch would change history;
-splitting ingest (streaming, per-row, embarrassingly parallel) from
-global stages (batch, resumable) is the correct decomposition at 100 TB.
+  * ``incremental_ingest_dedup`` admits only novel pages into the
+    corpus (exact, then MinHash, within the batch and against the
+    admitted corpus);
+  * ``incremental_kg_triples`` links each new page against a frozen
+    dictionary artifact and writes its ontology triples.
 
-``run_available_now`` drains everything currently in the source and
-stops — idempotent catch-up runs, cron-able.
+The corpus-global stages (dictionary, hierarchy) stay in the batch build
+(``pipeline.run_pipeline``, resumable through ``resume_root``): term and
+path statistics are global aggregates, so recomputing them per
+micro-batch would change history. ``availableNow`` drains everything
+currently in the source and stops — idempotent catch-up runs, cron-able.
 """
 
 from __future__ import annotations
@@ -38,172 +39,87 @@ WEB_PAGES_SCHEMA = StructType(
 )
 
 
-def incremental_normalize(
-    spark: SparkSession,
-    source_dir: str,
-    target_dir: str,
-    checkpoint_dir: str,
-    stop_tokens: frozenset[str],
-) -> None:
-    """readStream(parquet dir) → normalize + extract features →
-    writeStream(parquet, AvailableNow). Exactly-once per input file via
-    the stream checkpoint; output is the features table consumed by the
-    batch dictionary/linking stages."""
-    from knowledgegraphgenerator_spark.functions.udfs import normalize_text_udf
-    from knowledgegraphgenerator_spark.operators.phrases import (
-        extract_doc_features,
-    )
-
-    stream = (
-        spark.readStream.schema(WEB_PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", 64)
-        .parquet(source_dir)
-    )
-    normalized = stream.select(
-        "doc_id",
-        F.col("text").alias("question"),
-        "lang",
-        normalize_text_udf(F.col("text"), F.col("lang")).alias("norm_text"),
-    )
-    features = extract_doc_features(normalized, stop_tokens,
-                                    "doc_id", "norm_text")
-    q = (
-        features.writeStream.format("parquet")
-        .option("path", target_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def incremental_kg_triples(
     spark: SparkSession,
     source_dir: str,
-    dictionary,
-    target_dir: str,
-    checkpoint_dir: str,
-) -> None:
-    """Streaming KG ENRICHMENT: new web-page files → normalize → link
-    against a FROZEN ranked dictionary → per-doc ontology triples,
-    appended exactly once (stream checkpoint = processed-file ledger).
-
-    Production KG maintenance splits vocabulary REFRESH (periodic batch
-    over the accumulated corpus — term statistics are corpus-global,
-    see module docstring) from document enrichment (this): a doc's
-    triples depend only on the doc and the frozen dictionary, so the
-    whole stream plan is map-only — broadcast matcher, no aggregation,
-    no watermark, no state — and append mode is exact, not approximate.
-    To keep it map-only the narrower_than edges are deduplicated
-    ROW-LOCALLY (``ontology_triples(row_local_dedup=True)``): the batch
-    path's corpus-global ``.distinct()`` would be a stateful
-    ``Deduplicate`` with unbounded cross-batch state here (ADVICE r3
-    #3). Consequence: the emitted triple SET equals the batch path's,
-    but duplicate narrower_than rows may appear across documents —
-    identical semantics to the blocked streaming variant below, which
-    dedups per batch; consumers of the raw append stream read triples
-    as a set, and the periodic batch refresh rewrites the exact graph.
-    The hierarchy optimiser (G1/G2) is deliberately absent here: it
-    reads corpus-wide path statistics, so it belongs to the batch
-    refresh, which rewrites the optimised graph from the accumulated
-    ontology (plans/runner.py stages).
-    """
-    from knowledgegraphgenerator_spark.functions.udfs import normalize_text_udf
-    from knowledgegraphgenerator_spark.operators.linking import link_terms
-    from knowledgegraphgenerator_spark.operators.triples import (
-        ontology_triples,
-    )
-
-    stream = (
-        spark.readStream.schema(WEB_PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", 64)
-        .parquet(source_dir)
-    )
-    normalized = stream.where(
-        # rows with no identity or no text cannot be enriched; dropping
-        # them here also makes a source dir containing foreign parquet
-        # (schema-mismatched files project to all-NULL rows) a no-op
-        # instead of a stream of null docs
-        F.col("doc_id").isNotNull() & F.col("text").isNotNull()
-    ).select(
-        "doc_id",
-        F.col("text").alias("question"),
-        normalize_text_udf(F.col("text"), F.col("lang")).alias("norm_text"),
-    )
-    cleanup: list = []
-    onto = link_terms(normalized, dictionary, cleanup=cleanup)
-    trips = ontology_triples(onto, row_local_dedup=True)
-    q = (
-        trips.writeStream.format("parquet")
-        .option("path", target_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        for fn in cleanup:
-            fn()
-
-
-def incremental_kg_triples_blocked(
-    spark: SparkSession,
-    source_dir: str,
-    dictionary_frames,
+    dictionary_path: str,
     stop_tokens: frozenset[str],
     target_dir: str,
     checkpoint_dir: str,
-) -> None:
-    """Streaming enrichment for the dictionary-BEYOND-BROADCAST regime:
-    the frozen vocabulary stays on the cluster as section DataFrames
-    (operators/phrases.py:load_dictionary_frames) and each micro-batch
-    links via the token-block equi-join (link_terms_blocked) inside
-    ``foreachBatch`` — joins against static frames are batch-context
-    operations, so the fallback matcher runs unchanged.
+    *,
+    linking: str = "auto",
+    broadcast_term_limit: int = 2_000_000,
+) -> str:
+    """Streaming KG ENRICHMENT: new web-page files → normalize → link
+    against the FROZEN dictionary artifact at ``dictionary_path``
+    (``phrases.save_dictionary``) → per-doc ontology triples in
+    ``target_dir/batch_id=N``. Returns the linker it chose
+    ('broadcast' | 'blocked').
 
-    Exactly-once: each batch OVERWRITES its own ``batch_id=N``
-    subdirectory — a retried batch rewrites the same directory instead
-    of appending duplicates (the standard idempotent-foreachBatch
-    pattern). Readers see batch_id as a partition column.
+    Production KG maintenance splits vocabulary REFRESH (the periodic
+    batch build over the accumulated corpus, see module docstring) from
+    document enrichment (this): a doc's triples depend only on the doc
+    and the frozen dictionary. The dictionary is frozen for the stream's
+    lifetime, so the linker is chosen once per start, by the build's
+    probe (``choose_linking``) run on the artifact itself; under 'auto'
+    a dictionary past the limit never reaches the driver. Each page is
+    normalized by the build's per-page code (``normalize_corpus``).
 
-    Resource hygiene (ADVICE r3 #2): link_terms_blocked persists the
-    tokenized batch and broadcasts the stop set per call; over a
-    long-lived stream those accumulate. Each batch passes a ``cleanup``
-    list and releases both right after its write completes, so executor
-    cache/broadcast footprint stays O(one batch). Dedup semantics match
-    the broadcast stream: row-local narrower_than dedup plus the batch
-    write's own distinct-per-batch — never cross-batch state.
-    """
-    from knowledgegraphgenerator_spark.functions.udfs import normalize_text_udf
+    One sink serves both linkers: ``foreachBatch`` links the batch,
+    OVERWRITES its own ``batch_id=N`` directory (a retried batch
+    rewrites it instead of appending duplicates) and then releases the
+    caches and broadcasts that batch's linker created, so a long-lived
+    stream holds O(one batch) of them. narrower_than edges are
+    deduplicated ROW-LOCALLY (``ontology_triples(row_local_dedup=True)``):
+    a corpus-global ``.distinct()`` would need cross-batch state. The
+    emitted triple SET equals the batch path's; duplicate narrower_than
+    rows may appear across documents, and the periodic batch refresh
+    rewrites the exact graph. The hierarchy optimiser (G1/G2) reads
+    corpus-wide path statistics, so it also belongs to the batch
+    refresh."""
+    from knowledgegraphgenerator_spark.operators import phrases
     from knowledgegraphgenerator_spark.operators.linking import (
+        choose_linking,
+        link_terms,
         link_terms_blocked,
     )
     from knowledgegraphgenerator_spark.operators.triples import (
         ontology_triples,
     )
+    from knowledgegraphgenerator_spark.pipeline import normalize_corpus
+
+    use_blocked, rows = choose_linking(
+        spark.read.parquet(dictionary_path), linking, broadcast_term_limit
+    )
+    if use_blocked:
+        frames = phrases.load_dictionary_frames(spark, dictionary_path)
+
+        def link(pages, cleanup):
+            return link_terms_blocked(pages, frames, stop_tokens,
+                                      cleanup=cleanup)
+    else:
+        dictionary = phrases.ranked_dictionary_from_rows(rows, stop_tokens)
+
+        def link(pages, cleanup):
+            return link_terms(pages, dictionary, cleanup=cleanup)
 
     stream = (
         spark.readStream.schema(WEB_PAGES_SCHEMA)
         .option("maxFilesPerTrigger", 64)
         .parquet(source_dir)
     )
-    normalized = stream.where(
+    # rows with no identity or no text cannot be enriched; dropping them
+    # here also makes a source dir containing foreign parquet
+    # (schema-mismatched files project to all-NULL rows) a no-op instead
+    # of a stream of null docs
+    docs = stream.where(
         F.col("doc_id").isNotNull() & F.col("text").isNotNull()
-    ).select(
-        "doc_id",
-        F.col("text").alias("question"),
-        normalize_text_udf(F.col("text"), F.col("lang")).alias("norm_text"),
-    )
+    ).select("doc_id", "text", "lang")
 
-    def _link_batch(batch_df, batch_id: int) -> None:
+    def enrich_batch(batch_df, batch_id: int) -> None:
         cleanup: list = []
-        onto = link_terms_blocked(
-            batch_df, dictionary_frames, stop_tokens,
-            id_col="doc_id", raw_col="question", norm_col="norm_text",
-            cleanup=cleanup,
-        )
         try:
+            onto = link(normalize_corpus(batch_df), cleanup)
             (
                 ontology_triples(onto, row_local_dedup=True)
                 .write.mode("overwrite")
@@ -214,12 +130,17 @@ def incremental_kg_triples_blocked(
                 fn()
 
     q = (
-        normalized.writeStream.foreachBatch(_link_batch)
+        docs.writeStream.foreachBatch(enrich_batch)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
+    return "blocked" if use_blocked else "broadcast"
+
+
+# the stream's former 'auto' entry point: the same function
+incremental_kg_triples_auto = incremental_kg_triples
 
 
 def _check_signature_store_family(spark, store_dir: str) -> None:
@@ -467,47 +388,4 @@ def incremental_ingest_dedup(
         .start()
     )
     q.awaitTermination()
-
-
-def incremental_kg_triples_auto(
-    spark: SparkSession,
-    source_dir: str,
-    dictionary_path: str,
-    stop_tokens: frozenset[str],
-    target_dir: str,
-    checkpoint_dir: str,
-    broadcast_term_limit: int = 2_000_000,
-) -> str:
-    """Auto strategy for streaming enrichment (VERDICT r3 #8): probe the
-    frozen dictionary artifact ONCE at stream start — the same
-    limit+1 collect the batch pipeline's 'auto' uses (pipeline.py), so
-    when broadcast wins the probe rows ARE the dictionary and choosing
-    costs no extra job. Past the limit the stream runs the
-    beyond-broadcast foreachBatch blocked path instead of OOMing the
-    driver on the collect. The dictionary is frozen for the stream's
-    lifetime, so one probe per start is exact, not a heuristic.
-    Returns the chosen strategy name ('broadcast' | 'blocked')."""
-    from knowledgegraphgenerator_spark.operators.phrases import (
-        load_dictionary_frames,
-        ranked_dictionary_from_rows,
-        union_dictionary_frames,
-    )
-
-    frames = load_dictionary_frames(spark, dictionary_path)
-    probe_rows = (
-        union_dictionary_frames(frames)
-        .limit(broadcast_term_limit + 1)
-        .collect()
-    )
-    if len(probe_rows) > broadcast_term_limit:
-        incremental_kg_triples_blocked(
-            spark, source_dir, frames, stop_tokens,
-            target_dir, checkpoint_dir,
-        )
-        return "blocked"
-    dictionary = ranked_dictionary_from_rows(probe_rows, stop_tokens)
-    incremental_kg_triples(
-        spark, source_dir, dictionary, target_dir, checkpoint_dir
-    )
-    return "broadcast"
 

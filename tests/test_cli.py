@@ -6,6 +6,8 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+
 from knowledgegraphgenerator_spark.__main__ import main
 
 FILES = os.path.join(os.path.dirname(__file__), "fixtures", "files")
@@ -81,6 +83,101 @@ def test_cli_corpus_with_resume(spark, tmp_path):
          "--resume-root", str(tmp_path / "stages")], spark=spark,
     )
     assert rc == 0
+
+
+def _triple_multiset(spark, path):
+    return sorted(
+        tuple(r)
+        for r in spark.read.parquet(path).select("subj", "pred", "obj")
+        .collect()
+    )
+
+
+def _write_pages(spark, path, n):
+    from knowledgegraphgenerator_spark.sources.webpages import (
+        synthetic_web_pages,
+    )
+
+    synthetic_web_pages(spark, n, n_partitions=4).select(
+        "doc_id", "url", "warc_ts", "text", "lang"
+    ).write.mode("overwrite").parquet(path)
+
+
+@pytest.mark.parametrize("linking", ["auto", "blocked"])
+def test_cli_corpus_resume_matches_corpus(spark, tmp_path, monkeypatch,
+                                          linking):
+    """``corpus --resume-root`` writes the same triple multiset as
+    ``corpus``, and a rerun that finds only the triples stage
+    uncommitted loads the committed page pass and linked ontology: it
+    runs neither the page pass nor the dictionary probe nor a linker."""
+    from knowledgegraphgenerator_spark import pipeline
+    from knowledgegraphgenerator_spark.operators import linking as link_ops
+
+    src = str(tmp_path / "pages")
+    _write_pages(spark, src, 400)
+    stages = str(tmp_path / "stages")
+    args = ["corpus", "--input", src, "--linking", linking]
+
+    def run(out, *extra):
+        assert main([*args, "--output", str(tmp_path / out), *extra],
+                    spark=spark) == 0
+        return _triple_multiset(spark, str(tmp_path / out))
+
+    want = run("plain")
+    assert want
+    assert run("resumed", "--resume-root", stages) == want
+
+    os.remove(os.path.join(stages, "triples", "_SUCCESS_STAGE"))
+
+    def recomputed(*args, **kwargs):
+        raise AssertionError("a committed stage was recomputed")
+
+    monkeypatch.setattr(pipeline, "_page_pass", recomputed)
+    for name in ("choose_linking", "link_terms", "link_terms_blocked"):
+        monkeypatch.setattr(link_ops, name, recomputed)
+    assert run("rerun", "--resume-root", stages) == want
+
+
+def test_cli_stream_linkers_agree_and_release(spark, tmp_path,
+                                              monkeypatch):
+    """``stream --linking auto|broadcast|blocked`` write the same triple
+    multiset, and every run leaves the persistent-RDD count and the
+    valid broadcasts at their baseline: each micro-batch releases what
+    its linker created."""
+    src = str(tmp_path / "pages")
+    _write_pages(spark, src, 200)
+    dict_path = str(tmp_path / "dict")
+    assert main(["dictionary", "--input", src, "--output", dict_path],
+                spark=spark) == 0
+
+    sc = spark.sparkContext
+    created = []
+    real_broadcast = sc.broadcast
+
+    def recording_broadcast(value):
+        bc = real_broadcast(value)
+        created.append(bc)
+        return bc
+
+    monkeypatch.setattr(sc, "broadcast", recording_broadcast)
+    persistent = sc._jsc.sc().getPersistentRDDs
+    baseline = persistent().size()
+    got = {}
+    for linking in ("auto", "broadcast", "blocked"):
+        out = str(tmp_path / f"triples_{linking}")
+        assert main(
+            ["stream", "--source", src, "--dictionary", dict_path,
+             "--output", out, "--checkpoint", str(tmp_path / linking),
+             "--linking", linking],
+            spark=spark,
+        ) == 0
+        assert persistent().size() == baseline, linking
+        assert created and not any(
+            bc._jbroadcast.isValid() for bc in created
+        ), linking
+        got[linking] = _triple_multiset(spark, out)
+    assert got["auto"]
+    assert got["auto"] == got["broadcast"] == got["blocked"]
 
 
 def test_cli_dictionary_and_stream(spark, tmp_path):

@@ -1,18 +1,16 @@
-"""Byte-identical invariant (BASELINE.json input_hint): the vectorized
-Arrow UDFs must produce byte-for-byte the same strings as the pure-Python
-reference chain, including Unicode (Python ``\\W`` is Unicode-aware — the
-reason this stays in Python re, SURVEY.md §7.4 item 1)."""
+"""Byte-identical invariant (BASELINE.json input_hint): the Spark
+normalize pass (``normalize_corpus``, the per-page code the build and the
+stream run) and the lemma UDF must produce byte-for-byte the same
+strings as the pure-Python reference chain, including Unicode (Python
+``\\W`` is Unicode-aware — the reason this stays in Python re, SURVEY.md
+§7.4 item 1)."""
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
-
 from knowledgegraphgenerator_spark.core.lemmatize import noun_lemma
 from knowledgegraphgenerator_spark.core.textnorm import normalize_text, tokenize
-from knowledgegraphgenerator_spark.functions.udfs import (
-    lemmatize_sentence_udf,
-    normalize_text_udf,
-)
+from knowledgegraphgenerator_spark.functions.udfs import lemmatize_sentence_udf
+from knowledgegraphgenerator_spark.pipeline import normalize_corpus
 from tests.fixtures import FAQ_QUESTIONS
 
 UNICODE_CASES = [
@@ -34,10 +32,8 @@ def test_normalize_udf_byte_identical(spark):
     ]
     df = spark.createDataFrame(rows, "i long, text string, lang string")
     got = {
-        r["i"]: r["norm"]
-        for r in df.select(
-            "i", normalize_text_udf("text", "lang").alias("norm")
-        ).collect()
+        r["doc_id"]: r["norm_text"]
+        for r in normalize_corpus(df, id_col="i").collect()
     }
     for i, t, lang in rows:
         assert got[i] == normalize_text(t, lang), (lang, t)
@@ -60,16 +56,14 @@ def test_lemmatize_udf_byte_identical(spark):
 
 def test_normalize_udf_partitioning_invariant(spark):
     rows = [(i, q, "en") for i, q in enumerate(FAQ_QUESTIONS)]
-    a = {
-        r["i"]: r["n"]
-        for r in spark.createDataFrame(rows, "i long, text string, lang string")
-        .repartition(1)
-        .select("i", normalize_text_udf("text", "lang").alias("n")).collect()
-    }
-    b = {
-        r["i"]: r["n"]
-        for r in spark.createDataFrame(rows, "i long, text string, lang string")
-        .repartition(13)
-        .select("i", normalize_text_udf("text", "lang").alias("n")).collect()
-    }
-    assert a == b
+
+    def normalized(n_partitions):
+        df = spark.createDataFrame(
+            rows, "i long, text string, lang string"
+        ).repartition(n_partitions)
+        return {
+            r["doc_id"]: r["norm_text"]
+            for r in normalize_corpus(df, id_col="i").collect()
+        }
+
+    assert normalized(1) == normalized(13)
