@@ -112,10 +112,10 @@ def main(argv: list[str] | None = None, spark=None) -> int:
     ing.add_argument("--corpus", required=True)
     ing.add_argument("--checkpoint", required=True)
     ing.add_argument(
-        "--store", default=None,
-        help="signature-store dir: persist per-batch shingle/band "
-             "sketches and admit later batches against the stored "
-             "sketches instead of re-reading the corpus text",
+        "--store", required=True,
+        help="signature-store dir: each admitted batch persists its "
+             "shingle/band sketches here and later batches admit "
+             "against them, never re-reading the corpus text",
     )
     cu = sub.add_parser(
         "curate",

@@ -3,14 +3,21 @@
 All pure DataFrame ops (JVM-side, no Python in the hot path):
 
   * exact_dedup          hash-groupBy on content, keep min-id row
-  * shingle sets         token n-gram shingles via slice-transform SQL
-  * minhash_signatures   k universal-hash minima over xxhash64 shingles
-  * lsh_candidate_pairs  band-bucket equi-join
+  * token_shingles       token n-gram shingles via slice-transform SQL
+  * minhash_wide         k independent xxhash64 minima in one row per doc
+  * lsh_candidate_pairs_from_wide
+                         narrow banding → bucket groupBy → in-bucket pairs
   * verify_jaccard       integer-exact Jaccard verify on candidates
   * crawl_dedup          exact dedup, then the MinHash-LSH → verify →
                          keep-min chain over the survivors
-  * admit_batch*         drop a new batch's near duplicates of the admitted
-                         corpus (text or stored sketches)
+  * batch_signature_parts / incremental_neardup_pairs_from_parts /
+    admit_batch_against_store
+                         drop a new batch's near duplicates of the admitted
+                         corpus, read from the stored sketches
+
+One function per step: the oracle-gated queries (queries.py) call these
+same functions, changing only the parameters that give exact recall
+(``rows_per_band=1``, ``max_bucket=None``).
 
 Scale notes (the reason this layout): shingling+minhash are narrow maps;
 the only shuffles are the signature groupBy and the band join. The band
@@ -124,49 +131,6 @@ def minhash_wide(
     )
 
 
-def minhash_signatures(
-    shingles: DataFrame, id_col: str, k: int = 16
-) -> DataFrame:
-    """(id, j, mh): k permutation minima, the LONG form of
-    :func:`minhash_wide` (a narrow posexplode of the wide row — one
-    shuffle, no k-way row explosion). Permutation j is
-    ``pmod(xxhash64(shingle, j), P)`` — the r6 INDEPENDENT family; see
-    minhash_wide for why the old affine family was replaced and why
-    sketches persisted under it must be rebuilt
-    (``SIGNATURE_FAMILY``)."""
-    wide = minhash_wide(shingles, id_col, k)
-    return wide.select(
-        id_col,
-        F.posexplode(F.array(*[F.col(f"mh{j}") for j in range(k)])).alias(
-            "j", "mh"
-        ),
-    )
-
-
-def _banded_signatures(
-    signatures: DataFrame, id_col: str, rows_per_band: int
-) -> DataFrame:
-    """(id, band, sig): concatenated per-band minhash rows, from the
-    LONG (id, j, mh) form — kept for precomputed/stored long-format
-    inputs; chain operators band narrowly from the wide form instead
-    (:func:`_banded_from_wide`)."""
-    return (
-        signatures.withColumn(
-            "band", (F.col("j") / rows_per_band).cast("int")
-        )
-        .groupBy(id_col, "band")
-        .agg(
-            F.concat_ws(
-                "-",
-                F.expr(
-                    "transform(sort_array(collect_list(struct(j, mh))),"
-                    " x -> x.mh)"
-                ),
-            ).alias("sig")
-        )
-    )
-
-
 def _banded_from_wide(
     wide: DataFrame,
     id_col: str,
@@ -177,8 +141,7 @@ def _banded_from_wide(
     """(id, band, sig) derived NARROWLY from the wide signature row —
     no groupBy: the band concat is a per-row expression, so banding
     costs zero Exchanges on top of :func:`minhash_wide`'s single one.
-    Sig strings are byte-identical to :func:`_banded_signatures` (same
-    '-' joins in j order)."""
+    A band's sig is its minhash values joined by '-' in j order."""
     entries = []
     for b in range(math.ceil(k / rows_per_band)):
         cols = [
@@ -207,9 +170,8 @@ def in_bucket_pair_expr(
 ) -> str:
     """SQL for expanding a bucket array ``ids`` into unordered pairs
     (``out_a`` < ``out_b``) — the ONE place the in-bucket expansion
-    lambda lives (it is used by candidate generation, the co-occurrence
-    verify and two oracle-parity queries; r6 review asked for a single
-    source). ``elem_id=None`` means elements are bare ids;
+    lambda lives (it is used by candidate generation and two
+    oracle-parity queries). ``elem_id=None`` means elements are bare ids;
     otherwise they are structs and ``elem_id`` names the id field (the
     struct then must also carry ``n`` when ``compat=(num, den)`` asks
     for the sound size bound, which filters the raw slice BEFORE any
@@ -288,20 +250,6 @@ def _pairs_from_banded(
         .select("p.id_a", "p.id_b")
         .distinct()
     )
-
-
-def lsh_candidate_pairs(
-    signatures: DataFrame,
-    id_col: str,
-    rows_per_band: int = 2,
-    max_bucket: int | None = 1000,
-) -> DataFrame:
-    """Band signatures → bucket grouping → in-bucket pair expansion →
-    (id_a, id_b). Accepts the LONG (id, j, mh) signature form; chain
-    operators skip the long form entirely via
-    :func:`lsh_candidate_pairs_from_wide`."""
-    banded = _banded_signatures(signatures, id_col, rows_per_band)
-    return _pairs_from_banded(banded, id_col, max_bucket)
 
 
 def lsh_candidate_pairs_from_wide(
@@ -386,69 +334,6 @@ def verify_jaccard(
     )
 
 
-def verify_jaccard_cooccur(
-    pairs: DataFrame,
-    shingles: DataFrame,
-    id_col: str,
-    threshold_num: int = 8,
-    threshold_den: int = 10,
-) -> DataFrame:
-    """:func:`verify_jaccard` computed via shingle CO-OCCURRENCE
-    counting instead of per-candidate shingle expansion — output
-    identical (same (id_a, id_b, inter, union_n) rows for candidate
-    pairs passing the threshold).
-
-    When each form wins (both measured at sf1.0, BENCH in
-    OPTIMIZATION_r06.md): the expansion form's intersection join
-    generates ``sum over candidates of |sh(a)|`` rows; the co-occurrence
-    form generates ``sum over shingles of df*(df-1)/2`` rows. Recall-max
-    banding (rows_per_band=1, no bucket guard — the oracle-gated chain
-    configs) over a small hot vocabulary produces candidate sets so
-    large (sf1.0: 13.9M candidates x ~52 shingles/doc ≈ 730M expansion
-    rows vs 127M co-occurrence rows) that co-occurrence is ~5x cheaper.
-    With steep guarded banding (production: rows_per_band>=2,
-    max_bucket on) candidates are few and the expansion form is the
-    scale-safe choice — a single 10^9-df boilerplate shingle makes the
-    co-occurrence sum quadratic, which is exactly what candidate
-    bounding exists to avoid.
-
-    The size-compatibility prefilter (sound: inter <= min, union >=
-    max) runs INSIDE the pair-expansion lambda — each bucket element
-    carries its document's shingle count, so can't-pass pairs are
-    rejected by an integer compare during generation and never become
-    rows at all (r6; the join-then-filter form hashed every generated
-    row twice against the size table first). The candidate restriction
-    is an equi-join on the (id_a, id_b) key after counting. Pairs with
-    zero shared shingles appear in neither form (inner joins), and
-    cannot pass any threshold_num >= 1."""
-    sizes = shingles.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
-    na = sizes.select(F.col(id_col).alias("id_a"), F.col("n").alias("na"))
-    nb = sizes.select(F.col(id_col).alias("id_b"), F.col("n").alias("nb"))
-    sized = shingles.join(sizes, id_col).select(id_col, "shingle", "n")
-    pair_expr = in_bucket_pair_expr(
-        "id_a", "id_b", elem_id=id_col,
-        compat=(threshold_num, threshold_den),
-    )
-    inter = (
-        sized.groupBy("shingle")
-        .agg(F.collect_list(F.struct(id_col, "n")).alias("ids"))
-        .where(F.size("ids") >= 2)
-        .select(F.explode(F.expr(pair_expr)).alias("p"))
-        .groupBy("p.id_a", "p.id_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    return (
-        inter.join(pairs.select("id_a", "id_b"), ["id_a", "id_b"], "semi")
-        .join(na, "id_a")
-        .join(nb, "id_b")
-        .withColumn("union_n", F.col("na") + F.col("nb") - F.col("inter"))
-        .where(
-            F.col("inter") * threshold_den >= F.col("union_n") * threshold_num
-        )
-        .select("id_a", "id_b", "inter", "union_n")
-    )
-
-
 def crawl_dedup(
     df: DataFrame,
     text_col: str,
@@ -459,7 +344,6 @@ def crawl_dedup(
     threshold_num: int = 8,
     threshold_den: int = 10,
     max_bucket: int | None = 10_000,
-    verify_variant: str = "expand",
     persist: bool = True,
 ) -> DataFrame:
     """Crawl-order corpus dedup: EXACT hash dedup first, THEN MinHash
@@ -485,10 +369,7 @@ def crawl_dedup(
     unpersisted, one action recomputed the exact-dedup groupBy+semi
     three times and the shingle explode twice (the r5 sf1.0 bench paid
     90.2 s here); signatures ride the wide single-shuffle path.
-    ``verify_variant="cooccur"`` selects the co-occurrence verify form
-    (:func:`verify_jaccard_cooccur` — right for recall-max unguarded
-    banding over hot vocabularies; default "expand" is the
-    candidate-bounded production shape). ``persist=False`` skips the
+    ``persist=False`` skips the
     internal persists: a long-lived caller invoking this per micro-batch
     (streaming ingest) would otherwise accumulate one never-released
     cache entry per batch, since each batch's plan is new and the cache
@@ -505,56 +386,9 @@ def crawl_dedup(
         wide, id_col, rows_per_band, k, max_bucket=max_bucket,
         compat=(threshold_num, threshold_den),
     )
-    verify = (
-        verify_jaccard_cooccur if verify_variant == "cooccur"
-        else verify_jaccard
-    )
-    dups = verify(pairs, sh, id_col, threshold_num, threshold_den)
+    dups = verify_jaccard(pairs, sh, id_col, threshold_num, threshold_den)
     drop = dups.select(F.col("id_b").alias(id_col)).distinct()
     return uniq.join(drop, id_col, "anti")
-
-
-def incremental_neardup_pairs(
-    new_df: DataFrame,
-    old_df: DataFrame,
-    text_col: str,
-    id_col: str,
-    shingle_n: int = 3,
-    k: int = 16,
-    rows_per_band: int = 1,
-    threshold_num: int = 8,
-    threshold_den: int = 10,
-    max_bucket: int | None = 1000,
-) -> DataFrame:
-    """Dedup an incoming batch AGAINST an existing corpus: (id_new,
-    id_old, inter, union_n) for every new doc whose shingle Jaccard with
-    some old doc is >= num/den.
-
-    This is the daily-ingest shape at 100 TB: the batch is small, the
-    corpus is huge, and the work must be proportional to the batch. The
-    band equi-join is asymmetric — new bands against old bands only, so
-    new×new and old×old pairs never materialize, and with |new| << |old|
-    AQE broadcasts the new side: the old corpus is touched once by the
-    band join and once by the verify semi-join, both prunable. In
-    production the old side's signatures/shingles are the PERSISTED
-    output of the previous run (bucket the parquet by the band sig) —
-    recomputing them here keeps the operator self-contained;
-    :func:`incremental_neardup_pairs_from_parts` IS the precomputed
-    variant (the streaming ingest's signature store feeds it).
-    """
-    sh_new = token_shingles(new_df, text_col, id_col, shingle_n)
-    sh_old = token_shingles(old_df, text_col, id_col, shingle_n)
-    band_new = _banded_from_wide(
-        minhash_wide(sh_new, id_col, k), id_col, rows_per_band, k
-    )
-    band_old = _banded_from_wide(
-        minhash_wide(sh_old, id_col, k), id_col, rows_per_band, k
-    )
-    return incremental_neardup_pairs_from_parts(
-        sh_new, band_new, sh_old, band_old, id_col,
-        threshold_num=threshold_num, threshold_den=threshold_den,
-        max_bucket=max_bucket,
-    )
 
 
 def incremental_neardup_pairs_from_parts(
@@ -567,16 +401,20 @@ def incremental_neardup_pairs_from_parts(
     threshold_den: int = 10,
     max_bucket: int | None = 1000,
 ) -> DataFrame:
-    """The batch-vs-corpus join core of :func:`incremental_neardup_pairs`
-    operating on PRECOMPUTED shingle and banded-signature frames — the
-    production drop-in the docstring above promises (VERDICT r4 'Next
-    round' #7): the old side's ``(id, shingle)`` and ``(id, band, sig)``
-    frames are the PERSISTED output of previous ingest batches (read
-    straight from parquet), so admit cost stops re-shingling and
-    re-hashing the whole accumulated corpus every micro-batch and the
-    corpus text itself is never touched. ``sh_*`` schema:
-    (id, shingle); ``band_*`` schema: (id, band, sig) as produced by
-    ``token_shingles`` / ``_banded_signatures``."""
+    """Dedup an incoming batch AGAINST an existing corpus: (id_new,
+    id_old, inter, union_n) for every new doc whose shingle Jaccard with
+    some old doc is >= num/den.
+
+    This is the daily-ingest shape: the batch is small, the corpus is
+    huge, and the work must be proportional to the batch. The band
+    equi-join is asymmetric — new bands against old bands only, so
+    new×new and old×old pairs never materialize, and with |new| << |old|
+    AQE broadcasts the new side. The old side's ``(id, shingle)`` and
+    ``(id, band, sig)`` frames are the PERSISTED output of previous
+    ingest batches (read straight from parquet), so admit cost never
+    re-shingles or re-hashes the accumulated corpus and the corpus text
+    itself is never touched. Both sides come from
+    :func:`batch_signature_parts` with the same parameters."""
     if max_bucket is not None:
         # hot-bucket guard on the OLD side only (a degenerate old bucket
         # is the scale risk; the batch side is already small)
@@ -636,22 +474,6 @@ def incremental_neardup_pairs_from_parts(
     )
 
 
-def admit_batch(
-    new_df: DataFrame,
-    old_df: DataFrame,
-    text_col: str,
-    id_col: str,
-    **kwargs,
-) -> DataFrame:
-    """The batch minus anything near-duplicating the existing corpus."""
-    dup_ids = (
-        incremental_neardup_pairs(new_df, old_df, text_col, id_col, **kwargs)
-        .select(F.col("id_new").alias(id_col))
-        .distinct()
-    )
-    return new_df.join(dup_ids, id_col, "anti")
-
-
 def batch_signature_parts(
     df: DataFrame,
     text_col: str,
@@ -663,9 +485,9 @@ def batch_signature_parts(
     """(shingles, banded signatures) for a batch — the frames the
     streaming ingest PERSISTS per admitted batch so later batches admit
     against stored sketches instead of re-shingling the whole corpus.
-    Defaults match :func:`admit_batch`'s join parameters (shingle_n=3,
-    k=16, rows_per_band=1): stored bands are only comparable to query
-    bands computed with identical parameters."""
+    Defaults match :func:`admit_batch_against_store`'s join parameters
+    (shingle_n=3, k=16, rows_per_band=1): stored bands are only
+    comparable to query bands computed with identical parameters."""
     sh = token_shingles(df, text_col, id_col, shingle_n)
     bands = _banded_from_wide(
         minhash_wide(sh, id_col, k), id_col, rows_per_band, k
@@ -686,13 +508,12 @@ def admit_batch_against_store(
     threshold_den: int = 10,
     max_bucket: int | None = 1000,
 ) -> DataFrame:
-    """:func:`admit_batch` with the corpus side supplied as PERSISTED
-    signature-store frames (``(id, shingle)`` / ``(id, band, sig)``)
-    rather than recomputed from corpus text — admit cost is now
-    proportional to |batch| plus one scan of the (far smaller) sketch
-    store, and the corpus text files are never re-read. Decisions are
-    identical to the recompute path when the store was written with the
-    same parameters (differential-tested in test_runner_streaming)."""
+    """The batch minus anything near-duplicating the admitted corpus,
+    whose side is supplied as PERSISTED signature-store frames
+    (``(id, shingle)`` / ``(id, band, sig)``, written by
+    :func:`batch_signature_parts` with the same parameters) — admit cost
+    is proportional to |batch| plus one scan of the (far smaller) sketch
+    store, and the corpus text files are never re-read."""
     sh_new, band_new = batch_signature_parts(
         new_df, text_col, id_col, shingle_n, k, rows_per_band
     )

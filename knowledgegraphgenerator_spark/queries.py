@@ -555,7 +555,7 @@ def q_neardup_pairs_scale(spark, sf_dir):
         lsh_candidate_pairs_from_wide,
         minhash_wide,
         token_shingles,
-        verify_jaccard_cooccur,
+        verify_jaccard,
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
@@ -570,13 +570,12 @@ def q_neardup_pairs_scale(spark, sf_dir):
         wide, "doc_id", rows_per_band=1, k=16, max_bucket=None,
         compat=(8, 10),
     )
-    # recall-max banding over a hot vocabulary -> the co-occurrence
-    # verify form (see operators/dedup.verify_jaccard_cooccur docstring).
-    # NOT persisted: this frame IS the query's result — caching it would
-    # make the bench's second timed run a no-op. (neardup_components /
-    # neardup_keep_best persist the same frame as their INTERMEDIATE —
-    # their own CC/survivor work still runs per action.)
-    return verify_jaccard_cooccur(pairs, sh, "doc_id", 8, 10)
+    # the production verify (crawl_dedup's). NOT persisted: this frame
+    # IS the query's result — caching it would make a second timed run a
+    # no-op. (neardup_components / neardup_keep_best persist the same
+    # frame as their INTERMEDIATE — their own CC/survivor work still
+    # runs per action.)
+    return verify_jaccard(pairs, sh, "doc_id", 8, 10)
 
 
 def q_dedup_chain(spark, sf_dir):
@@ -587,31 +586,38 @@ def q_dedup_chain(spark, sf_dir):
     banding + guard off so the brute-force DuckDB oracle gates the
     chain's kept-set value-for-value (same gating argument as
     neardup_pairs_scale: verify is exact, band recall at J >= 0.8 is
-    1-(1-J)^16 per pair)."""
+    1-(1-J)^16 per pair). Every other parameter is the production
+    default."""
     from knowledgegraphgenerator_spark.operators.dedup import crawl_dedup
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     return crawl_dedup(
-        docs, "text", "doc_id", k=16, rows_per_band=1, max_bucket=None,
-        verify_variant="cooccur",
+        docs, "text", "doc_id", rows_per_band=1, max_bucket=None
     )
 
 
 def q_incremental_neardup(spark, sf_dir):
     """Incremental dedup: the daily-ingest shape — near-dup pairs of a
     NEW batch (doc_id % 4 == 0) against the EXISTING corpus (the rest).
-    New×new and old×old pairs never materialize (asymmetric band join,
-    operators/dedup.py:incremental_neardup_pairs). Bucket guard off so
+    Both sides are built as the ingest stream's signature store builds
+    them (operators/dedup.py:batch_signature_parts), then joined by the
+    store's admission core (incremental_neardup_pairs_from_parts):
+    new×new and old×old pairs never materialize. Bucket guard off so
     the brute-force oracle gates exact recall (1-(1-J)^16 at J >= 0.8)."""
     from knowledgegraphgenerator_spark.operators.dedup import (
-        incremental_neardup_pairs,
+        batch_signature_parts,
+        incremental_neardup_pairs_from_parts,
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    new = docs.where(F.col("doc_id") % 4 == 0)
-    old = docs.where(F.col("doc_id") % 4 != 0)
-    return incremental_neardup_pairs(
-        new, old, "text", "doc_id", rows_per_band=1, max_bucket=None
+    sh_new, band_new = batch_signature_parts(
+        docs.where(F.col("doc_id") % 4 == 0), "text", "doc_id"
+    )
+    sh_old, band_old = batch_signature_parts(
+        docs.where(F.col("doc_id") % 4 != 0), "text", "doc_id"
+    )
+    return incremental_neardup_pairs_from_parts(
+        sh_new, band_new, sh_old, band_old, "doc_id", max_bucket=None
     )
 
 
@@ -633,7 +639,7 @@ def q_neardup_components(spark, sf_dir):
         lsh_candidate_pairs_from_wide,
         minhash_wide,
         token_shingles,
-        verify_jaccard_cooccur,
+        verify_jaccard,
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
@@ -643,7 +649,7 @@ def q_neardup_components(spark, sf_dir):
         wide, "doc_id", rows_per_band=1, k=16, max_bucket=None,
         compat=(8, 10),
     )
-    verified = verify_jaccard_cooccur(pairs, sh, "doc_id", 8, 10).persist()
+    verified = verify_jaccard(pairs, sh, "doc_id", 8, 10).persist()
     return connected_components(verified, "id_a", "id_b").select(
         "id", "component"
     )
@@ -1492,7 +1498,7 @@ def q_neardup_keep_best(spark, sf_dir):
         lsh_candidate_pairs_from_wide,
         minhash_wide,
         token_shingles,
-        verify_jaccard_cooccur,
+        verify_jaccard,
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1502,7 +1508,7 @@ def q_neardup_keep_best(spark, sf_dir):
         wide, "doc_id", rows_per_band=1, k=16, max_bucket=None,
         compat=(8, 10),
     )
-    verified = verify_jaccard_cooccur(pairs, sh, "doc_id", 8, 10).persist()
+    verified = verify_jaccard(pairs, sh, "doc_id", 8, 10).persist()
     labels = connected_components(verified, "id_a", "id_b")
     scores = docs.select(
         F.col("doc_id").alias("id"),

@@ -5,7 +5,7 @@ micro-batch:
 
   * ``incremental_ingest_dedup`` admits only novel pages into the
     corpus (exact, then MinHash, within the batch and against the
-    admitted corpus);
+    admitted corpus's signature store);
   * ``incremental_kg_triples`` links each new page against a frozen
     dictionary artifact and writes its ontology triples.
 
@@ -65,13 +65,15 @@ def incremental_kg_triples(
     a dictionary past the limit never reaches the driver. Each page is
     normalized by the build's per-page code (``normalize_corpus``).
 
-    One sink serves both linkers: ``foreachBatch`` links the batch,
-    OVERWRITES its own ``batch_id=N`` directory (a retried batch
-    rewrites it instead of appending duplicates) and then releases the
-    caches and broadcasts that batch's linker created, so a long-lived
-    stream holds O(one batch) of them. narrower_than edges are
-    deduplicated ROW-LOCALLY (``ontology_triples(row_local_dedup=True)``):
-    a corpus-global ``.distinct()`` would need cross-batch state. The
+    One sink serves both linkers: ``foreachBatch`` links the batch
+    (persisting the linked frame, so each page's Python work runs once
+    for the three triple branches), OVERWRITES its own ``batch_id=N``
+    directory (a retried batch rewrites it instead of appending
+    duplicates) and then releases that cache and the caches and
+    broadcasts the batch's linker created, so a long-lived stream holds
+    O(one batch) of them. narrower_than edges are deduplicated
+    ROW-LOCALLY (``ontology_triples(row_local_dedup=True)``): a
+    corpus-global ``.distinct()`` would need cross-batch state. The
     emitted triple SET equals the batch path's; duplicate narrower_than
     rows may appear across documents, and the periodic batch refresh
     rewrites the exact graph. The hierarchy optimiser (G1/G2) reads
@@ -119,7 +121,11 @@ def incremental_kg_triples(
     def enrich_batch(batch_df, batch_id: int) -> None:
         cleanup: list = []
         try:
-            onto = link(normalize_corpus(batch_df), cleanup)
+            # persisted: ontology_triples reads the linked frame from three
+            # union branches, and each would otherwise rerun the batch's
+            # normalize and link Python work
+            onto = link(normalize_corpus(batch_df), cleanup).persist()
+            cleanup.append(lambda: onto.unpersist(blocking=True))
             (
                 ontology_triples(onto, row_local_dedup=True)
                 .write.mode("overwrite")
@@ -213,54 +219,49 @@ def incremental_ingest_dedup(
     source_dir: str,
     corpus_dir: str,
     checkpoint_dir: str,
-    max_bucket: int | None = 1000,
-    store_dir: str | None = None,
+    store_dir: str,
 ) -> None:
     """Streaming crawl ingestion that ADMITS ONLY NOVEL documents: each
     micro-batch is deduped (a) within itself in crawl order
     (operators/dedup.py:crawl_dedup — exact hash first, then MinHash)
     and (b) against the ACCUMULATED admitted corpus via the asymmetric
-    batch-vs-corpus band join (admit_batch — new×new and old×old pairs
-    never materialize, work tracks |batch|); survivors append to the
-    corpus, so the next batch dedups against them. This is the streaming
-    face of the daily-ingest regime the incremental operators exist for.
+    batch-vs-corpus band join over the signature store
+    (``admit_batch_against_store`` — new×new and old×old pairs never
+    materialize, work tracks |batch|); survivors append to the corpus
+    and their sketches to the store, so the next batch dedups against
+    them.
+
+    The signature store: each admitted batch persists its shingles and
+    banded minhash signatures (``<store_dir>/shingles/batch_id=N``,
+    ``<store_dir>/bands/batch_id=N``), and later batches admit against
+    those stored sketches — the corpus TEXT is never re-read or
+    re-shingled, so per-batch admit cost tracks |batch| + one scan of
+    the compact sketch store instead of growing with the full corpus.
+    The CORPUS is the source of truth and the store a derived cache: any
+    prior corpus batch missing from either store frame (a corpus
+    bootstrapped by hand, a partial restore, pruned bands) is BACKFILLED
+    from corpus text before the admit join, so cross-batch dedup is
+    never silently skipped. A store stamped by another MinHash family is
+    refused (``_check_signature_store_family``).
 
     Exactly-once AND replay-safe: survivors land in
-    ``corpus_dir/batch_id=N`` via overwrite — a retried batch rewrites
-    its own partition, never appends duplicates — and the old-corpus
-    read EXCLUDES the current batch's own partition (ADVICE r4 #1): on
-    a foreachBatch retry (crash after the ``batch_id=N`` write but
-    before the checkpoint offset commit) the corpus already contains
-    this batch's output, and reading it back would make every survivor
-    an exact duplicate of itself, emptying the partition permanently.
-    Prior partitions are enumerated explicitly through the Hadoop
-    FileSystem API (cluster-FS-safe); a missing corpus dir is the
-    legitimate first-batch case, while any OTHER read failure
-    (transient FS error, permissions, corrupt footer) propagates and
-    fails the batch so the stream retries — it is NOT treated as
-    "first batch" (ADVICE r4 #2). Rows without identity or text are
-    dropped at the source (no stable doc_id → no dedup key).
-
-    ``store_dir`` (VERDICT r4 'Next round' #7 — ingest compaction):
-    when set, each admitted batch ALSO persists its shingles and
-    banded minhash signatures (``<store_dir>/shingles/batch_id=N``,
-    ``<store_dir>/bands/batch_id=N``) and later batches admit against
-    those stored sketches via ``admit_batch_against_store`` — the
-    corpus TEXT is never re-read or re-shingled, so per-batch admit
-    cost tracks |batch| + one scan of the compact sketch store instead
-    of growing with the full corpus. Admit decisions are
-    differential-equal to the recompute path (test_runner_streaming).
-    Store partitions get the same replay-safe own-partition exclusion
-    and overwrite semantics as the corpus. The CORPUS is the source of
-    truth and the store a derived cache: any prior corpus batch
-    missing from either store frame (store enabled mid-life, partial
-    restore, pruned bands) is BACKFILLED from corpus text before the
-    admit join, so cross-batch dedup is never silently skipped; a
-    corpus dir containing anything other than ``batch_id=N``
-    partitions fails loudly instead of deduping against nothing.
+    ``corpus_dir/batch_id=N`` (and the store's ``batch_id=N``) via
+    overwrite — a retried batch rewrites its own partition, never
+    appends duplicates — and the prior-batch read EXCLUDES the current
+    batch's own partition: on a foreachBatch retry (crash after the
+    ``batch_id=N`` write but before the checkpoint offset commit) the
+    corpus already contains this batch's output, and reading it back
+    would make every survivor an exact duplicate of itself, emptying the
+    partition permanently. Prior partitions are enumerated explicitly
+    through the Hadoop FileSystem API (cluster-FS-safe); a missing
+    corpus dir is the legitimate first-batch case, while any OTHER read
+    failure propagates and fails the batch so the stream retries. A
+    corpus dir containing anything other than ``batch_id=N`` partitions
+    fails loudly instead of deduping against nothing. Rows without
+    identity or text are dropped at the source (no stable doc_id → no
+    dedup key).
     """
     from knowledgegraphgenerator_spark.operators.dedup import (
-        admit_batch,
         admit_batch_against_store,
         batch_signature_parts,
         crawl_dedup,
@@ -270,8 +271,7 @@ def incremental_ingest_dedup(
         list_subdirs,
     )
 
-    if store_dir is not None:
-        _check_signature_store_family(spark, store_dir)
+    _check_signature_store_family(spark, store_dir)
 
     stream = (
         spark.readStream.schema(WEB_PAGES_SCHEMA)
@@ -285,9 +285,8 @@ def incremental_ingest_dedup(
     def _corpus_batches(batch_id: int) -> list[str]:
         """Prior ``batch_id=K`` partition names of the corpus — the
         SOURCE OF TRUTH for what has been admitted. Fails loudly on
-        any other layout: the old ``spark.read.parquet(corpus_dir)``
-        silently read arbitrary parquet, so a foreign-layout corpus
-        must not silently dedup against NOTHING instead."""
+        any other layout: a foreign-layout corpus must not silently
+        dedup against NOTHING."""
         entries = list_children(spark, corpus_dir)
         foreign = [
             n for n, is_dir in entries
@@ -300,7 +299,8 @@ def incremental_ingest_dedup(
                 f"entries {foreign[:5]}: incremental_ingest_dedup "
                 "manages only batch_id=N partitions it wrote itself — "
                 "bootstrap an existing corpus by placing it under "
-                f"{corpus_dir}/batch_id=0"
+                f"{corpus_dir}/batch_id=-1 (the stream numbers its own "
+                "batches from 0)"
             )
         return [
             n for n, is_dir in entries
@@ -313,55 +313,33 @@ def incremental_ingest_dedup(
         # persist=False: each micro-batch is a NEW plan, so the
         # operator's internal persists could never be deduped or
         # released — a long-lived stream would leak one cache entry
-        # per batch (r6 review finding)
+        # per batch
         batch = crawl_dedup(batch_df, "text", "doc_id", persist=False)
         prior = _corpus_batches(batch_id)
-        if store_dir is not None:
-            # the store is a derived CACHE of the corpus: any corpus
-            # batch missing from either store frame (pre-store
-            # history, partial restore, pruned bands) is backfilled
-            # from corpus text once, so enabling --store mid-life or
-            # repairing a damaged store never silently skips dedup
-            have_sh = set(list_subdirs(spark, f"{store_dir}/shingles"))
-            have_bands = set(list_subdirs(spark, f"{store_dir}/bands"))
-            for d in prior:
-                if d in have_sh and d in have_bands:
-                    continue
-                rows = spark.read.parquet(f"{corpus_dir}/{d}")
-                sh_b, band_b = batch_signature_parts(
-                    rows.select("doc_id", "text"), "text", "doc_id"
-                )
-                sh_b.write.mode("overwrite").parquet(
-                    f"{store_dir}/shingles/{d}"
-                )
-                band_b.write.mode("overwrite").parquet(
-                    f"{store_dir}/bands/{d}"
-                )
-            if prior:
-                batch = admit_batch_against_store(
-                    batch,
-                    spark.read.parquet(
-                        *[f"{store_dir}/shingles/{d}" for d in prior]
-                    ),
-                    spark.read.parquet(
-                        *[f"{store_dir}/bands/{d}" for d in prior]
-                    ),
-                    "text", "doc_id", max_bucket=max_bucket,
-                )
-        elif prior:
-            old = spark.read.parquet(
-                *[f"{corpus_dir}/{d}" for d in prior]
+        # the store is a derived CACHE of the corpus: any corpus batch
+        # missing from either store frame is backfilled from corpus
+        # text once, so a hand-bootstrapped corpus or a damaged store
+        # never silently skips dedup
+        have_sh = set(list_subdirs(spark, f"{store_dir}/shingles"))
+        have_bands = set(list_subdirs(spark, f"{store_dir}/bands"))
+        for d in prior:
+            if d in have_sh and d in have_bands:
+                continue
+            rows = spark.read.parquet(f"{corpus_dir}/{d}")
+            sh_b, band_b = batch_signature_parts(
+                rows.select("doc_id", "text"), "text", "doc_id"
             )
-            batch = admit_batch(
-                batch, old.select("doc_id", "text"), "text", "doc_id",
-                max_bucket=max_bucket,
+            sh_b.write.mode("overwrite").parquet(f"{store_dir}/shingles/{d}")
+            band_b.write.mode("overwrite").parquet(f"{store_dir}/bands/{d}")
+        if prior:
+            batch = admit_batch_against_store(
+                batch,
+                spark.read.parquet(
+                    *[f"{store_dir}/shingles/{d}" for d in prior]
+                ),
+                spark.read.parquet(*[f"{store_dir}/bands/{d}" for d in prior]),
+                "text", "doc_id",
             )
-        if store_dir is None:
-            (
-                batch.write.mode("overwrite")
-                .parquet(f"{corpus_dir}/batch_id={batch_id}")
-            )
-            return
         # survivors feed three writes (corpus and the 2 store frames):
         # persist once so the admit join chain runs once, not per
         # consumer
@@ -388,4 +366,3 @@ def incremental_ingest_dedup(
         .start()
     )
     q.awaitTermination()
-

@@ -21,8 +21,8 @@ def test_crawl_cycle_composition(spark):
         latest_snapshot_per_url,
     )
     from knowledgegraphgenerator_spark.operators.dedup import (
-        lsh_candidate_pairs,
-        minhash_signatures,
+        lsh_candidate_pairs_from_wide,
+        minhash_wide,
         token_shingles,
         verify_jaccard,
     )
@@ -107,9 +107,10 @@ def test_crawl_cycle_composition(spark):
     # 4. near-dup clustering with quality retention: /3 and /4 are a
     # clone family; the KEPT one must be the LONGER /4, not first-seen
     sh = token_shingles(clean, "text", "doc_id", 3)
-    sigs = minhash_signatures(sh, "doc_id", k=16)
-    pairs = lsh_candidate_pairs(sigs, "doc_id", rows_per_band=1,
-                                max_bucket=None)
+    pairs = lsh_candidate_pairs_from_wide(
+        minhash_wide(sh, "doc_id", k=16), "doc_id", rows_per_band=1, k=16,
+        max_bucket=None,
+    )
     verified = verify_jaccard(pairs, sh, "doc_id", 7, 10)
     labels = connected_components(verified, "id_a", "id_b")
     scores = clean.select(

@@ -39,17 +39,24 @@ def test_shingles_and_jaccard(docs):
 
 def test_minhash_lsh_finds_exact_dup(docs):
     sh = dedup.token_shingles(docs, "text", "doc_id", n=3)
-    sigs = dedup.minhash_signatures(sh, "doc_id", k=8)
-    assert sigs.count() == 5 * 8
-    pairs = dedup.lsh_candidate_pairs(sigs, "doc_id", rows_per_band=2)
+    wide = dedup.minhash_wide(sh, "doc_id", k=8)
+    # one row per doc: id, 8 permutation minima and the shingle count
+    assert wide.count() == 5
+    assert sorted(wide.columns) == sorted(
+        ["doc_id", "n"] + [f"mh{j}" for j in range(8)]
+    )
+    pairs = dedup.lsh_candidate_pairs_from_wide(
+        wide, "doc_id", rows_per_band=2, k=8
+    )
     got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
     assert (1, 2) in got  # identical docs always collide in every band
 
 
 def test_incremental_neardup_asymmetric(spark):
     from knowledgegraphgenerator_spark.operators.dedup import (
-        admit_batch,
-        incremental_neardup_pairs,
+        admit_batch_against_store,
+        batch_signature_parts,
+        incremental_neardup_pairs_from_parts,
     )
 
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
@@ -65,8 +72,10 @@ def test_incremental_neardup_asymmetric(spark):
     ]
     old = spark.createDataFrame(old_rows, "doc_id long, text string")
     new = spark.createDataFrame(new_rows, "doc_id long, text string")
-    pairs = incremental_neardup_pairs(
-        new, old, "text", "doc_id", rows_per_band=1, max_bucket=None
+    sh_old, band_old = batch_signature_parts(old, "text", "doc_id")
+    sh_new, band_new = batch_signature_parts(new, "text", "doc_id")
+    pairs = incremental_neardup_pairs_from_parts(
+        sh_new, band_new, sh_old, band_old, "doc_id", max_bucket=None
     ).collect()
     got = {(r.id_new, r.id_old) for r in pairs}
     # cross-side dups found for BOTH new copies; no new-new (100,102),
@@ -76,8 +85,8 @@ def test_incremental_neardup_asymmetric(spark):
     assert all(not (a in (1, 3) and b in (1, 3)) for a, b in got)
     admitted = sorted(
         r.doc_id
-        for r in admit_batch(
-            new, old, "text", "doc_id", rows_per_band=1, max_bucket=None
+        for r in admit_batch_against_store(
+            new, sh_old, band_old, "text", "doc_id", max_bucket=None
         ).collect()
     )
     assert admitted == [101]

@@ -210,6 +210,53 @@ def test_incremental_kg_triples_stream(spark, tmp_path):
     )
 
 
+def test_incremental_kg_triples_page_work_once(spark, tmp_path, monkeypatch):
+    """Each streamed page is normalized (and so linked) ONCE per
+    micro-batch, although ontology_triples reads the linked frame from
+    three union branches. The page work is counted on the executors
+    through an accumulator wrapped around the per-page normalize."""
+    import pyspark.sql.functions as F
+
+    from knowledgegraphgenerator_spark import pipeline
+    from knowledgegraphgenerator_spark.core.stopwords import (
+        resolve_stop_words,
+    )
+    from knowledgegraphgenerator_spark.operators import phrases
+    from knowledgegraphgenerator_spark.streaming.incremental import (
+        incremental_kg_triples,
+    )
+
+    corpus = _corpus(spark).select(
+        "doc_id",
+        F.concat(F.lit("https://x/"), F.col("doc_id")).alias("url"),
+        F.lit("2026-01-01 00:00:00").cast("timestamp").alias("warc_ts"),
+        "text", "lang",
+    )
+    src = str(tmp_path / "src")
+    corpus.write.mode("overwrite").parquet(src)
+    stops = resolve_stop_words("en", None)
+    dict_path = str(tmp_path / "dict")
+    phrases.save_dictionary(dict(phrases.build_dictionary_frames(
+        pipeline.normalize_corpus(corpus.select("doc_id", "text", "lang")),
+        stops, "doc_id", "norm_text",
+    )), dict_path)
+
+    pages_seen = spark.sparkContext.accumulator(0)
+    normalize_pages = pipeline._normalize_pages
+
+    def counted(pdf):
+        pages_seen.add(len(pdf))
+        return normalize_pages(pdf)
+
+    monkeypatch.setattr(pipeline, "_normalize_pages", counted)
+    incremental_kg_triples(
+        spark, src, dict_path, stops,
+        str(tmp_path / "tgt"), str(tmp_path / "ckpt"),
+    )
+    assert spark.read.parquet(str(tmp_path / "tgt")).count() > 0
+    assert pages_seen.value == len(FAQ_QUESTIONS)
+
+
 def test_incremental_kg_blocked_stream_matches_broadcast(spark, tmp_path):
     """The beyond-broadcast stream (token-block linking over cluster-side
     dictionary frames) must emit the same triples as the broadcast
@@ -389,17 +436,12 @@ def test_incremental_kg_auto_strategy(spark, tmp_path):
 
 
 def test_incremental_ingest_dedup_stream(spark, tmp_path):
-    """Streaming admit-only-novel ingestion == the sequential batch
-    application of crawl_dedup + admit_batch, across two file drops:
+    """Streaming admit-only-novel ingestion across two file drops:
     within-batch exact/near clones collapse, cross-batch exact and
     near duplicates of already-admitted docs are rejected, novel docs
-    are admitted."""
+    are admitted. The expected sets follow from the construction."""
     import pyspark.sql.functions as F
 
-    from knowledgegraphgenerator_spark.operators.dedup import (
-        admit_batch,
-        crawl_dedup,
-    )
     from knowledgegraphgenerator_spark.streaming.incremental import (
         incremental_ingest_dedup,
     )
@@ -433,31 +475,22 @@ def test_incremental_ingest_dedup_stream(spark, tmp_path):
 
     src = str(tmp_path / "src")
     corpus = str(tmp_path / "corpus")
+    store = str(tmp_path / "store")
     ckpt = str(tmp_path / "ckpt")
 
     pages(batch1).write.mode("overwrite").parquet(src)
-    incremental_ingest_dedup(spark, src, corpus, ckpt)
-    admitted1 = {r.doc_id for r in spark.read.parquet(corpus).collect()}
-    expect1 = {
-        r.doc_id
-        for r in crawl_dedup(pages(batch1), "text", "doc_id").collect()
+    incremental_ingest_dedup(spark, src, corpus, ckpt, store_dir=store)
+    # 2 exactly clones 1; 3 (one appended token, J = 8/9) near-clones 1
+    assert {r.doc_id for r in spark.read.parquet(corpus).collect()} == {
+        1, 4,
     }
-    assert admitted1 == expect1 == {1, 4}
 
     pages(batch2).write.mode("append").parquet(src)
-    incremental_ingest_dedup(spark, src, corpus, ckpt)
-    admitted2 = {r.doc_id for r in spark.read.parquet(corpus).collect()}
-    old = spark.read.parquet(corpus).where("batch_id = 0").select(
-        "doc_id", "text"
-    )
-    expect2 = expect1 | {
-        r.doc_id
-        for r in admit_batch(
-            crawl_dedup(pages(batch2), "text", "doc_id"),
-            old, "text", "doc_id",
-        ).collect()
+    incremental_ingest_dedup(spark, src, corpus, ckpt, store_dir=store)
+    # 10/11 duplicate admitted 1, 14 admitted 4, 13 exactly clones 12
+    assert {r.doc_id for r in spark.read.parquet(corpus).collect()} == {
+        1, 4, 12,
     }
-    assert admitted2 == expect2 == {1, 4, 12}
 
 
 def test_incremental_ingest_dedup_replay_safe(spark, tmp_path):
@@ -495,25 +528,30 @@ def test_incremental_ingest_dedup_replay_safe(spark, tmp_path):
     corpus = str(tmp_path / "corpus")
     pages.write.mode("overwrite").parquet(src)
 
-    incremental_ingest_dedup(spark, src, corpus, str(tmp_path / "ckpt1"))
+    store = str(tmp_path / "store")
+    incremental_ingest_dedup(
+        spark, src, corpus, str(tmp_path / "ckpt1"), store_dir=store
+    )
     assert {
         r.doc_id for r in spark.read.parquet(corpus).collect()
     } == {1, 4}
 
     # replay batch 0 with the corpus already holding batch_id=0
-    incremental_ingest_dedup(spark, src, corpus, str(tmp_path / "ckpt2"))
+    incremental_ingest_dedup(
+        spark, src, corpus, str(tmp_path / "ckpt2"), store_dir=store
+    )
     replayed = spark.read.parquet(corpus)
     assert {r.doc_id for r in replayed.collect()} == {1, 4}
     assert {r.batch_id for r in replayed.select("batch_id").collect()} == {0}
 
 
 def test_incremental_ingest_dedup_signature_store(spark, tmp_path):
-    """Store-backed ingest (VERDICT r4 #7): admitting against the
-    PERSISTED shingle/band sketch store must reach exactly the same
-    admit decisions as the recompute path, across two file drops with
-    within-batch clones, cross-batch exact dups, cross-batch near-dups
-    and novel docs — and a replayed batch (fresh checkpoint over the
-    same source) leaves corpus AND store intact."""
+    """Store-backed ingest: admitting against the PERSISTED shingle/band
+    sketch store across two file drops with within-batch clones,
+    cross-batch exact dups, cross-batch near-dups and novel docs; the
+    store holds the admitted docs' sketches in 16 one-row bands, and a
+    replayed batch (fresh checkpoint over the same source) leaves
+    corpus AND store intact."""
     import pyspark.sql.functions as F
 
     from knowledgegraphgenerator_spark.streaming.incremental import (
@@ -542,24 +580,19 @@ def test_incremental_ingest_dedup_signature_store(spark, tmp_path):
     ]
 
     src = str(tmp_path / "src")
-    plain = str(tmp_path / "plain")
     stored = str(tmp_path / "stored")
     store = str(tmp_path / "store")
 
+    expected = [{1, 4}, {1, 4, 12}]
     for n, batch in enumerate([batch1, batch2]):
         mode = "overwrite" if n == 0 else "append"
         pages(batch).write.mode(mode).parquet(src)
         incremental_ingest_dedup(
-            spark, src, plain, str(tmp_path / "ckpt_plain")
-        )
-        incremental_ingest_dedup(
             spark, src, stored, str(tmp_path / "ckpt_store"),
             store_dir=store,
         )
-        got_plain = {r.doc_id for r in spark.read.parquet(plain).collect()}
         got_store = {r.doc_id for r in spark.read.parquet(stored).collect()}
-        assert got_plain == got_store, f"drop {n}"
-    assert got_store == {1, 4, 12}
+        assert got_store == expected[n], f"drop {n}"
 
     # the store holds one sketch partition per batch, and its bands use
     # the admit-join parameters (16 one-row bands)
@@ -628,12 +661,13 @@ def test_stage_runner_cluster_fs_branch(spark, tmp_path, monkeypatch):
 def test_incremental_ingest_store_backfill_and_layout_guard(
     spark, tmp_path
 ):
-    """Code-review r5 findings #1/#3/#4: (a) enabling --store AFTER
-    plain ingests must BACKFILL sketches for the pre-store corpus
-    batches — a batch of exact clones of pre-store docs is rejected,
-    not silently admitted; (b) a corpus dir with a foreign layout
-    (plain parquet files, no batch_id=N partitions) fails loudly
-    instead of deduping against nothing."""
+    """(a) A corpus batch the store has no sketches for — here a
+    ``batch_id=-1`` corpus placed by hand, the documented bootstrap —
+    is BACKFILLED into the store before the admit join, so a batch of
+    exact clones of its docs is rejected, not silently admitted; (b) a
+    corpus dir with a foreign layout (plain parquet files, no
+    batch_id=N partitions) fails loudly instead of deduping against
+    nothing."""
     import pyspark.sql.functions as F
     import pytest
 
@@ -658,20 +692,22 @@ def test_incremental_ingest_store_backfill_and_layout_guard(
     store = str(tmp_path / "store")
     ckpt = str(tmp_path / "ckpt")
 
-    # batch 0 ingested WITHOUT a store
+    # bootstrapped by hand: in the corpus, not in the store. Not
+    # batch_id=0: the stream's first micro-batch is batch 0, whose own
+    # partition a replay excludes and overwrites
     pages([(1, base), (4, "one two three four five six seven")]).write \
-        .mode("overwrite").parquet(src)
-    incremental_ingest_dedup(spark, src, corpus, ckpt)
+        .mode("overwrite").parquet(f"{corpus}/batch_id=-1")
 
-    # batch 1 WITH the store: doc 10 exactly clones pre-store doc 1 —
-    # the backfill must materialize batch-0 sketches so it is rejected
+    # the stream's first batch: doc 10 exactly clones bootstrapped doc
+    # 1 — the backfill must materialize the bootstrap's sketches so it
+    # is rejected
     pages([(10, base), (12, "totally novel text with enough tokens")]) \
-        .write.mode("append").parquet(src)
+        .write.mode("overwrite").parquet(src)
     incremental_ingest_dedup(spark, src, corpus, ckpt, store_dir=store)
     assert {
         r.doc_id for r in spark.read.parquet(corpus).collect()
     } == {1, 4, 12}
-    # backfilled batch-0 sketches exist alongside batch-1's
+    # backfilled bootstrap sketches exist alongside batch 0's
     sh_docs = {
         r.doc_id
         for r in spark.read.parquet(f"{store}/shingles")
@@ -679,7 +715,7 @@ def test_incremental_ingest_store_backfill_and_layout_guard(
     }
     assert sh_docs == {1, 4, 12}
 
-    # foreign corpus layout -> loud failure, store or not
+    # foreign corpus layout -> loud failure
     foreign = str(tmp_path / "foreign_corpus")
     pages([(1, base)]).write.mode("overwrite").parquet(foreign)
     pages([(2, base + " mu")]).write.mode("overwrite").parquet(
@@ -688,6 +724,6 @@ def test_incremental_ingest_store_backfill_and_layout_guard(
     with pytest.raises(Exception, match="non-batch_id"):
         incremental_ingest_dedup(
             spark, str(tmp_path / "src2"), foreign,
-            str(tmp_path / "ckpt2"),
+            str(tmp_path / "ckpt2"), store_dir=str(tmp_path / "store2"),
         )
 
