@@ -4,14 +4,19 @@ plus the web-corpus subcommand.
   python -m knowledgegraphgenerator_spark faq \\
       --file_path faqs.json --type json_export [--language en] \\
       [--synonyms_file_path generated_synonyms.csv] \\
-      [--output_file_path ao_output.json]
+      [--output_file_path ao_output.json] [--triples_path /path/triples]
 
   python -m knowledgegraphgenerator_spark corpus \\
       --input /path/web_pages_parquet --output /path/kg_out \\
-      [--language en] [--resume-root /path/stages]
+      [--language en] [--resume-root /path/stages] \\
+      [--linking auto|broadcast|blocked] [--dedup none|exact|chain]
 
   python -m knowledgegraphgenerator_spark analyze \\
-      --file_path ao_output.json [--language en]
+      --file_path ao_output.json [--language en] \\
+      [--report_path analyzer_report.csv]
+
+  python -m knowledgegraphgenerator_spark synonyms \\
+      --file_path ao_output.json [--output_path generated_synonyms.csv]
 
   python -m knowledgegraphgenerator_spark dictionary \\
       --input /path/web_pages_parquet --output /path/dict_parquet
@@ -21,10 +26,9 @@ plus the web-corpus subcommand.
       --output /path/triples --checkpoint /path/ckpt \\
       [--linking auto|broadcast|blocked]
 
-  python -m knowledgegraphgenerator_spark curate \\
-      --input /path/web_pages_parquet --output /path/cleaned \\
-      [--line-dedup] [--pii] [--lm-score] [--max-avg-nll 40000] \\
-      [--lm-artifact /path/model | --save-lm-artifact /path/model]
+  python -m knowledgegraphgenerator_spark ingest \\
+      --source /path/incoming --corpus /path/corpus \\
+      --checkpoint /path/ckpt --store /path/signature_store
 
 For cluster runs: zip the package (scripts/package.sh) and
 ``spark-submit --py-files kg_spark.zip examples/run_kg.py ...``, which
@@ -117,49 +121,7 @@ def main(argv: list[str] | None = None, spark=None) -> int:
              "shingle/band sketches here and later batches admit "
              "against them, never re-reading the corpus text",
     )
-    cu = sub.add_parser(
-        "curate",
-        help="crawl-text curation chain: in-doc line dedup → PII "
-             "scrub → bigram-LM quality scoring/filter — cleaned "
-             "corpus parquet ready for `corpus`/`ingest`",
-    )
-    cu.add_argument("--input", required=True)
-    cu.add_argument("--output", required=True)
-    cu.add_argument(
-        "--line-dedup", action="store_true",
-        help="remove repeated exact lines within each document "
-             "(RefinedWeb line-wise correction)",
-    )
-    cu.add_argument(
-        "--pii", action="store_true",
-        help="redact emails/IPv4s/phones in place",
-    )
-    cu.add_argument(
-        "--lm-score", action="store_true",
-        help="attach n_pairs/nll_i4/avg_nll_i4 from a corpus-trained "
-             "add-one bigram LM (CCNet-style), scored AFTER the text "
-             "rewrites",
-    )
-    cu.add_argument(
-        "--max-avg-nll", type=int, default=None,
-        help="drop documents whose avg_nll_i4 exceeds this bound "
-             "(integer 1e-4 nats; implies --lm-score); docs too short "
-             "to score (<2 tokens) are dropped too",
-    )
-    cu.add_argument(
-        "--lm-artifact", default=None,
-        help="score against a FROZEN save_lm_artifact() model instead "
-             "of self-training on the input (the CCNet reference-model "
-             "regime); implies --lm-score",
-    )
-    cu.add_argument(
-        "--save-lm-artifact", default=None,
-        help="ALSO train a bigram LM on the text that SHIPS (after any "
-             "--max-avg-nll filter) and persist it to this path for "
-             "later --lm-artifact runs",
-    )
-
-    for p in (faq, corpus, an, syn, dd, st, ing, cu):
+    for p in (faq, corpus, an, syn, dd, st, ing):
         p.add_argument("--v", action="store_true", help="verbose")
 
     args = ap.parse_args(argv)
@@ -255,64 +217,6 @@ def main(argv: list[str] | None = None, spark=None) -> int:
                 spark, args.source, args.corpus, args.checkpoint,
                 store_dir=args.store,
             )
-        elif args.cmd == "curate":
-            # fixed order: layout corrections first (line dedup), then
-            # text rewrites (PII), then LM scoring over the FINAL text
-            # — the model must be trained on what ships
-            from pyspark.sql import functions as F
-
-            from knowledgegraphgenerator_spark.operators.curation import (
-                drop_repeated_lines,
-                lm_doc_score,
-                lm_doc_score_from_artifact,
-                save_lm_artifact,
-                scrub_pii,
-            )
-
-            df = spark.read.parquet(args.input)
-            if args.line_dedup:
-                df = drop_repeated_lines(df).drop("n_dropped")
-            if args.pii:
-                df = (
-                    scrub_pii(df)
-                    .drop("text", "n_emails", "n_ips", "n_phones")
-                    .withColumnRenamed("scrubbed", "text")
-                )
-            want_scores = (
-                args.lm_score
-                or args.max_avg_nll is not None
-                or args.lm_artifact is not None
-            )
-            if want_scores or args.save_lm_artifact:
-                # curation chains re-read df several times upstream of
-                # the LM's corpus-wide aggregations — persist the
-                # rewritten text once so the scan doesn't re-run per job
-                df = df.persist()
-            if want_scores:
-                # re-curating an already-scored corpus: stale LM
-                # columns would collide with the fresh score join
-                df = df.drop("n_pairs", "nll_i4", "avg_nll_i4")
-                if args.lm_artifact:
-                    scores = lm_doc_score_from_artifact(
-                        df, args.lm_artifact
-                    )
-                else:
-                    scores = lm_doc_score(df)
-                if args.max_avg_nll is not None:
-                    scores = scores.where(
-                        F.col("avg_nll_i4") <= args.max_avg_nll
-                    )
-                    df = df.join(scores, "doc_id")
-                else:
-                    df = df.join(scores, "doc_id", "left")
-            if args.save_lm_artifact:
-                # train on the text that SHIPS — after any quality
-                # filter, so the frozen reference model is not
-                # contaminated by the documents this run dropped
-                save_lm_artifact(df, args.save_lm_artifact)
-            df.write.mode("overwrite").parquet(args.output)
-            if args.v:
-                print(f"curated corpus -> {args.output}")
         elif args.cmd == "synonyms":
             from knowledgegraphgenerator_spark.operators.word2vec import (
                 synonym_generation_master,

@@ -73,24 +73,6 @@ def noun_lemma(word: str) -> str:
     return w
 
 
-def lemmatize_tokens(tokens: list[str]) -> list[str]:
-    return [noun_lemma(t) for t in tokens]
-
-
-def lemmatize_sentence(sentence: str) -> str:
-    """Tokenize + per-token noun lemma, space-rejoined.
-
-    Mirrors ``" ".join(lemma.lemmatize(q))`` at
-    /root/reference/strategy/NGramStrategy.py:65 and
-    phrase_finder.py:58 (chunk text).
-    """
-    if not sentence:
-        return ""
-    from knowledgegraphgenerator_spark.core.textnorm import tokenize
-
-    return " ".join(noun_lemma(t) for t in tokenize(sentence))
-
-
 def verb_lemma(word: str) -> str:
     """Base form of a verb token (-ing / -ed / -s stripping)."""
     if not word:

@@ -2,24 +2,30 @@
 
 The web-scale curation steps that sit between raw crawl text and a
 training shard, each pure DataFrame SQL (JVM-side, whole-stage codegen,
-no Python in the hot path) and each value-gated by a DuckDB oracle in
-queries.py:
+no Python in the hot path) and, except drop_contaminated (unit-tested
+only), each value-gated by a DuckDB oracle in queries.py:
 
-  * scrub_pii           sequential email -> IPv4 -> phone redaction with
-                        per-class counts (regexp_replace / regexp_count)
   * repetition_signals  Gopher-style repetition metrics (Rae et al. 2021,
                         "Scaling Language Models", Table A1) in their
                         token-fraction form: top-unigram fraction,
                         top-bigram fraction, duplicate 5-gram occurrence
                         mass — integer-only so cross-engine hashing is
                         exact
+  * canonical_urls      URL canonicalization and registered domain
+  * chunk_by_tokens     fixed-size token windows per document
   * cap_per_key         per-domain/source document cap (row_number over
                         the key, deterministic order)
   * mod_stratified_sample  deterministic per-stratum sampling by modular
                         arithmetic on the id — reproducible across runs
                         and engines, no RNG state
+  * remove_duplicate_spans  corpus-wide duplicated-span removal
+  * benchmark_overlap / drop_contaminated  n-gram overlap with a
+                        benchmark set, and the filter on it
+  * domain_mixture_rebalance  deterministic downsampling toward a
+                        uniform per-domain share
+  * latest_snapshot_per_url / crawl_delta  snapshot bookkeeping
 
-Scale notes: scrub_pii, repetition_signals, and the samplers are narrow
+Scale notes: repetition_signals and the samplers are narrow
 maps/filters — ZERO shuffles, one corpus scan, they pipeline into the
 scan (repetition_signals computes all its n-gram statistics from each
 row's own token array; plan-pinned in tests). cap_per_key is a
@@ -29,9 +35,6 @@ bounded by AQE skew handling plus the cap itself discarding the tail
 after rank K; for billion-row domains swap in the group-top-K
 aggregate form (commented at the call-site) which partial-aggregates
 map-side.
-
-PII patterns are written in the RE2/Java-regex common subset so the
-Spark plan and the DuckDB oracle compile the IDENTICAL pattern.
 """
 
 from __future__ import annotations
@@ -39,30 +42,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-
-# RE2/Java common-subset patterns (no lookbehind, no \p classes)
-EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
-IPV4_RE = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
-PHONE_RE = r"\+?\d{3}[- ]\d{3}[- ]\d{4}"
-
-
-def scrub_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Redact emails, then IPv4s, then phone numbers, counting each class
-    on the text as it stood when that class was scanned (sequential
-    semantics, so e.g. digits inside an already-redacted email can't be
-    re-counted as a phone). Adds n_emails/n_ips/n_phones/scrubbed."""
-    t0 = F.col(text_col)
-    t1 = F.regexp_replace(t0, EMAIL_RE, "<EMAIL>")
-    t2 = F.regexp_replace(t1, IPV4_RE, "<IP>")
-    t3 = F.regexp_replace(t2, PHONE_RE, "<PHONE>")
-    return df.withColumns(
-        {
-            "n_emails": F.regexp_count(t0, F.lit(EMAIL_RE)),
-            "n_ips": F.regexp_count(t1, F.lit(IPV4_RE)),
-            "n_phones": F.regexp_count(t2, F.lit(PHONE_RE)),
-            "scrubbed": t3,
-        }
-    )
 
 
 def repetition_signals(
@@ -790,344 +769,3 @@ def crawl_delta(
         "old_hash",
         "new_hash",
     )
-
-
-def lm_doc_score(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    train: DataFrame | None = None,
-) -> DataFrame:
-    """CCNet-style language-model quality scoring (Wenzek et al. 2020,
-    "CCNet: Extracting High Quality Monolingual Datasets from Web Crawl
-    Data"): score every document by its negative log-likelihood under a
-    corpus-trained bigram LM with add-one smoothing, the
-    perplexity-bucket signal CCNet uses to split a crawl into
-    head/middle/tail quality tiers. Self-supervised — the LM is trained
-    on the corpus being scored, so there is no external model artifact
-    (KenLM stands outside this sandbox; the bigram LM is the
-    SQL-expressible member of the same family).
-
-    Model: p(w2|w1) = (c2(w1,w2) + 1) / (c1(w1) + V), where c2 is the
-    corpus bigram count, c1(w1) the count of w1 as a bigram CONTEXT
-    (i.e. occurrences not in document-final position, == sum of c2 over
-    w2), and V the corpus unigram vocabulary size. Per bigram TYPE the
-    negative log-likelihood is rounded ONCE to integer 1e-4 nats
-    (round(ln((c1 + V) / (c2 + 1.0)) * 10000)) and multiplied by the
-    document's term frequency — the per-document sum is then an
-    order-free exact integer, the same cross-engine trick as
-    operators/components.integer_pagerank. avg_nll_i4 uses nonnegative
-    integer division (both engines floor it identically);
-    perplexity = exp(avg_nll_i4 / 1e4) if a float is ever wanted.
-
-    Output: (id_col, n_pairs, nll_i4, avg_nll_i4), one row per document
-    with >= 2 tokens (a document with no bigram has no likelihood under
-    a bigram model; callers treat absence as unscorable).
-
-    ``train``: when given, counts and vocabulary come from the TRAIN
-    frame and ``df`` is the held-out set being scored — the
-    train/validation regime (CCNet trains on Wikipedia, scores the
-    crawl). Unseen events are exactly what add-one smoothing prices:
-    an unseen bigram under a seen context costs ln((c1 + V) / 1), an
-    out-of-vocabulary context the uniform ln(V) — both ride the same
-    rounded-once integer expression via left joins + coalesce(0), so
-    held-out scoring stays hash-exact cross-engine. An empty/tokenless
-    train frame (V = 0) has no model: every document is unscorable and
-    the result is empty.
-
-    Scale shape: bigram pairs come from zip-sliced split arrays — a
-    NARROW projection, no self-join and no per-doc window, so the token
-    stream is never shuffled on doc_id. Three aggregations follow
-    ((doc, w1, w2) tf; (w1, w2) corpus counts; vocabulary scalar), all
-    with map-side partial agg, then one equi-join of doc-bigram tf
-    against corpus bigram counts on the (w1, w2) key — AQE handles hot
-    bigrams ("of the") via skew-join splitting; the context-count
-    frame c1 is vocabulary-sized and broadcast. Nothing here is
-    quadratic and nothing materializes per-position state.
-    """
-    score_t = _lm_tokens(df, text_col, id_col)
-    train_t = (
-        score_t if train is None else _lm_tokens(train, text_col, id_col)
-    )
-    # vocabulary scalar (one small agg; config-sized driver value)
-    v_row = (
-        train_t.select(F.explode("t").alias("term"))
-        .agg(F.countDistinct("term").alias("v"))
-        .collect()[0]
-    )
-    vocab = int(v_row["v"] or 0)
-    if vocab == 0:
-        # no model (empty/tokenless train frame): nothing is scorable
-        return _lm_empty_scores(df, id_col)
-    ptf = _lm_ptf_from_tokens(score_t, id_col)
-    if train is None:
-        # self-trained: the doc-bigram tf frame feeds the scoring join
-        # AND the model counts (c2, and c1 via c2) — persist it so the
-        # token split + pair explode + tf aggregation run once per
-        # action instead of three times (r6; the cache manager dedups
-        # repeated calls by plan)
-        ptf = ptf.persist()
-        c2 = ptf.groupBy("w1", "w2").agg(F.sum("tf").alias("c2"))
-    else:
-        c2 = (
-            _lm_pairs(train_t, id_col)
-            .groupBy("w1", "w2")
-            .agg(F.count(F.lit(1)).cast("long").alias("c2"))
-        )
-        # held-out: the train-side bigram counts feed both the scoring
-        # join and the context-count derivation — persist the
-        # model-sized frame, not the corpus
-        c2 = c2.persist()
-    return _lm_score_tail(ptf, c2, vocab, id_col)
-
-
-def _lm_tokens(
-    frame: DataFrame, text_col: str, id_col: str
-) -> DataFrame:
-    """(id, t: filtered token array) — shared by every LM path."""
-    toks = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
-    return frame.select(F.col(id_col), toks.alias("t"))
-
-
-def _lm_ptf_from_tokens(with_t: DataFrame, id_col: str) -> DataFrame:
-    """(id, w1, w2, tf) doc-bigram term frequencies — the scoring-side
-    input every LM path builds."""
-    return _lm_pairs(with_t, id_col).groupBy(id_col, "w1", "w2").agg(
-        F.count(F.lit(1)).alias("tf")
-    )
-
-
-def _lm_ptf(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    return _lm_ptf_from_tokens(_lm_tokens(df, text_col, id_col), id_col)
-
-
-def _lm_empty_scores(df: DataFrame, id_col: str) -> DataFrame:
-    """Empty (id, n_pairs, nll_i4, avg_nll_i4) frame with the caller's
-    id type — the nothing-is-scorable result."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    return df.sparkSession.createDataFrame(
-        [],
-        StructType(
-            [
-                StructField(id_col, df.schema[id_col].dataType),
-                StructField("n_pairs", LongType()),
-                StructField("nll_i4", LongType()),
-                StructField("avg_nll_i4", LongType()),
-            ]
-        ),
-    )
-
-
-def _lm_pairs(with_t: DataFrame, id_col: str) -> DataFrame:
-    """(id, w1, w2) adjacent-pair rows from zip-sliced token arrays —
-    narrow, never a doc_id shuffle or window."""
-    return with_t.where(F.size("t") >= 2).select(
-        id_col,
-        F.explode(
-            F.arrays_zip(
-                F.slice(F.col("t"), 1, F.size("t") - 1).alias("w1"),
-                F.slice(F.col("t"), 2, F.size("t") - 1).alias("w2"),
-            )
-        ).alias("p"),
-    ).select(
-        id_col, F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2")
-    )
-
-
-def _lm_score_tail(
-    ptf: DataFrame,
-    c2: DataFrame,
-    vocab: int,
-    id_col: str,
-    c1: DataFrame | None = None,
-) -> DataFrame:
-    """Shared scoring tail of the self-trained / held-out /
-    from-artifact LM paths: doc-bigram tf against model counts.
-    c1 is always DERIVED from c2 (sum over w2), so a persisted model
-    cannot carry an inconsistent context count — a caller that scores
-    many batches against one frozen model (streaming ingest) derives
-    it ONCE, persists, and passes it in. Left joins + coalesce(0): a
-    no-op when the model was trained on the scored corpus itself
-    (every pair is present), the unseen-event price otherwise."""
-    if c1 is None:
-        c1 = c2.groupBy("w1").agg(F.sum("c2").alias("c1"))
-    nll = F.expr(
-        f"CAST(round(ln((coalesce(c1, 0) + {vocab})"
-        " / (coalesce(c2, 0) + 1.0)) * 10000) AS BIGINT)"
-    )
-    return (
-        ptf.join(c2, ["w1", "w2"], "left")
-        .join(F.broadcast(c1), "w1", "left")
-        .groupBy(id_col)
-        .agg(
-            F.sum("tf").cast("long").alias("n_pairs"),
-            F.sum(F.col("tf") * nll).cast("long").alias("nll_i4"),
-        )
-        .select(
-            id_col,
-            "n_pairs",
-            "nll_i4",
-            F.expr("nll_i4 div n_pairs").cast("long").alias("avg_nll_i4"),
-        )
-    )
-
-
-def save_lm_artifact(
-    train: DataFrame, path: str, text_col: str = "text"
-) -> None:
-    """Persist a trained bigram LM as ONE parquet table — the frozen
-    reference-model regime (CCNet trains its LM once on a clean corpus
-    and every crawl batch scores against it): rows
-    (kind='bigram', w1, w2, cnt=c2) plus one (kind='meta',
-    w1='vocab_size', cnt=V) row. Only bigram counts and the vocabulary
-    scalar are stored; context counts are re-derived on load
-    (sum of c2 over w2), so the artifact cannot go internally
-    inconsistent. Same artifact discipline as the linking dictionary
-    (operators/phrases.save_dictionary): batch refresh writes it,
-    scoring jobs load it.
-
-    Refuses to write a model with an empty vocabulary: an empty or
-    tokenless training corpus is a misconfiguration (wrong path, empty
-    read), and a vocab=0 artifact consumed by a quality-gated stream
-    would silently drop every document forever — fail at training
-    time, where the mistake is."""
-    with_t = train.select(
-        F.lit(0).cast("long").alias("_lm_id"), F.col(text_col)
-    )
-    with_t = _lm_tokens(with_t, text_col, "_lm_id")
-    vocab = int(
-        with_t.select(F.explode("t").alias("term"))
-        .agg(F.countDistinct("term"))
-        .collect()[0][0]
-        or 0
-    )
-    if vocab == 0:
-        raise ValueError(
-            "save_lm_artifact: training corpus has no tokens — refusing "
-            "to write an unusable vocab=0 model (check the input path)"
-        )
-    c2 = (
-        _lm_pairs(with_t, "_lm_id")
-        .groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
-    meta = train.sparkSession.createDataFrame(
-        [("meta", "vocab_size", None, vocab)],
-        "kind string, w1 string, w2 string, cnt long",
-    )
-    c2.select(
-        F.lit("bigram").alias("kind"), "w1", "w2", F.col("cnt")
-    ).unionByName(meta).write.mode("overwrite").parquet(path)
-
-
-def load_lm_artifact(spark, path: str) -> tuple[DataFrame, int]:
-    """Load a save_lm_artifact() table into its scoring form:
-    (c2 frame (w1, w2, c2), vocabulary size). Rejects non-artifact
-    parquet loudly (no meta row) AND an unusable vocab<=0 model
-    (save_lm_artifact refuses to write one, but a hand-built or
-    corrupted table must not silently drop every scored document).
-    One config-sized collect for the scalar; the c2 frame stays lazy —
-    a stream loads the model ONCE at start and scores every batch
-    against the same frames (the frozen dictionary discipline,
-    streaming/incremental.py)."""
-    art = spark.read.parquet(path)
-    meta = art.where(
-        (F.col("kind") == "meta") & (F.col("w1") == "vocab_size")
-    ).select("cnt").collect()
-    if not meta:
-        raise ValueError(
-            f"LM artifact at {path} has no meta/vocab_size row — not a "
-            "save_lm_artifact() table"
-        )
-    vocab = int(meta[0]["cnt"] or 0)
-    if vocab <= 0:
-        raise ValueError(
-            f"LM artifact at {path} has vocab_size={vocab} — an empty "
-            "model scores nothing and a quality gate on it would drop "
-            "every document; retrain on a non-empty corpus"
-        )
-    c2 = art.where(F.col("kind") == "bigram").select(
-        "w1", "w2", F.col("cnt").alias("c2")
-    )
-    return c2, vocab
-
-
-def lm_quality_filter(
-    df: DataFrame,
-    c2: DataFrame,
-    vocab: int,
-    max_avg_nll: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    c1: DataFrame | None = None,
-) -> DataFrame:
-    """Keep only documents whose avg_nll_i4 under the given model
-    (load_lm_artifact frames) is <= ``max_avg_nll``; documents too
-    short to score (<2 tokens) drop too — the same contract as the
-    curate CLI's --max-avg-nll. Semi join, so the input schema passes
-    through untouched. An empty model is rejected loudly (a vocab=0
-    gate would silently drop everything; load_lm_artifact refuses to
-    produce one). Per-batch callers (streaming ingest) pass the
-    derived-and-persisted ``c1`` so the model is not re-aggregated
-    per batch."""
-    if vocab <= 0:
-        raise ValueError(
-            "lm_quality_filter: vocab must be positive — an empty model "
-            "would drop every document"
-        )
-    keep = (
-        _lm_score_tail(_lm_ptf(df, text_col, id_col), c2, vocab, id_col,
-                       c1=c1)
-        .where(F.col("avg_nll_i4") <= max_avg_nll)
-        .select(id_col)
-    )
-    return df.join(keep, id_col, "semi")
-
-
-def lm_doc_score_from_artifact(
-    df: DataFrame,
-    path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Score a corpus against a save_lm_artifact() model — exactly
-    equal to ``lm_doc_score(df, train=<the corpus the artifact was
-    trained on>)`` (differential-tested), without re-reading or
-    re-pairing the training text. The model load is two scans of the
-    compact artifact (bigram-type rows ~|bigram vocab|, one meta row);
-    scoring cost is the usual one (w1, w2) equi-join."""
-    c2, vocab = load_lm_artifact(df.sparkSession, path)
-    return _lm_score_tail(_lm_ptf(df, text_col, id_col), c2, vocab, id_col)
-
-
-def drop_repeated_lines(
-    df: DataFrame,
-    text_col: str = "text",
-    sep: str = "\n",
-) -> DataFrame:
-    """RefinedWeb-style line-wise correction (Penedo et al. 2023 §3.3,
-    "The RefinedWeb Dataset for Falcon LLM"): within each document,
-    remove every repeated occurrence of an exact line, keeping the
-    first — the in-document counterpart of cross-document span removal
-    (remove_duplicate_spans), aimed at nav bars / cookie banners /
-    footer text that repeat inside one page. Lines are compared EXACTLY
-    (no trimming), empty lines included — so at most one empty line
-    survives, which also collapses blank-line runs.
-
-    Output: the input row with ``text_col`` rewritten plus ``n_dropped``
-    (lines removed). ``array_distinct`` preserves first-occurrence
-    order; the DuckDB oracle mirrors it with min(pos) grouping +
-    ordered string_agg.
-
-    Scale shape: a NARROW per-row map over the split array — zero
-    shuffles, zero explodes, pipelines into the scan like scrub_pii.
-    ``sep`` is a LITERAL separator (regex-escaped before F.split).
-    """
-    import re as _re
-
-    lines = F.split(F.col(text_col), _re.escape(sep), -1)
-    kept = F.array_distinct(lines)
-    return df.withColumn(
-        "n_dropped", (F.size(lines) - F.size(kept)).cast("long")
-    ).withColumn(text_col, F.array_join(kept, sep))

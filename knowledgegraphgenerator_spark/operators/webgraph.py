@@ -32,7 +32,7 @@ def _host(col: str) -> Column:
     :443 for https — RFC 3986 normalization; an explicit non-default
     port is a distinct origin and stays) and leading-www stripped — the
     same normalization canonical_urls applies
-    (operators/curation.py:181), inlined so the edge build stays a
+    (operators/curation.py:canonical_urls), inlined so the edge build stays a
     single narrow projection."""
     scheme = (
         f"lower(regexp_extract({col},"

@@ -43,12 +43,12 @@ def dedup_answers(df: DataFrame, text_col: str, order_col: str) -> DataFrame:
     )
 
 
-def clean_vocab_term(col: F.Column) -> F.Column:
-    """P13: take pre-':' part, strip **/!!, keep pre-'/' surface form."""
-    c = F.split(col, ":").getItem(0)
-    c = F.regexp_replace(c, r"^\*\*", "")
-    c = F.regexp_replace(c, r"^!!", "")
-    return F.split(c, "/").getItem(0)
+def clean_vocab_term(raw: str) -> str:
+    """P13: take the pre-':' part, strip ONE leading ``**`` or ``!!``
+    marker, keep the pre-'/' surface form."""
+    base = raw.split(":")[0]
+    base = base[2:] if base.startswith(("**", "!!")) else base
+    return base.split("/")[0]
 
 
 def train_synonym_model(
@@ -181,9 +181,7 @@ def synonym_generation_master(
     answers = []
     for i, faq in enumerate(export.get("faqs", [])):
         for raw in list(faq.get("terms", [])) + list(faq.get("tags", [])):
-            base = raw.split(":")[0]
-            base = base[2:] if base.startswith(("**", "!!")) else base
-            surface = base.split("/")[0]
+            surface = clean_vocab_term(raw)
             if surface and surface not in seen:
                 seen.add(surface)
                 vocab.append(surface)

@@ -16,16 +16,13 @@ Coverage map to SURVEY.md §2 (reference file:line cited per query):
   G3/A.10            path_edges
   J5/G1              path_prefix_antijoin
   dedup (rebuild)    dedup_exact, minhash_signatures, lsh_candidate_pairs,
-                     jaccard_pairs, simhash16
-  text analysis      lang_id_heuristic, quality_score, token_stats,
-                     token_stats_bpe, winnow_fingerprint,
+                     jaccard_pairs
+  text analysis      lang_id_heuristic, quality_score,
                      doc_length_quantiles (exact type-7 percentiles)
-  curation           pii_scrub (sequential redaction + counts),
-                     repetition_signals (Gopher-style token-fraction
+  curation           repetition_signals (Gopher-style token-fraction
                      repetition cuts), domain_cap (per-source top-K),
                      stratified_sample (deterministic mod-sampling)
-  term scoring       tfidf_top_terms, rake_keywords (north_star
-                     TF-IDF/RAKE), term_cooccurrence (hierarchy stats)
+  hierarchy stats    term_cooccurrence
   scale sketches     neardup_pairs_scale (xxhash minhash → 16x1 LSH →
                      exact verify; decision-level brute-force oracle);
                      neardup_components (the same chain → connected
@@ -51,11 +48,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from knowledgegraphgenerator_spark.operators.curation import (
-    EMAIL_RE as _EMAIL_RE,
-    IPV4_RE as _IPV4_RE,
-    PHONE_RE as _PHONE_RE,
-)
 
 # ---------------------------------------------------------------- helpers
 
@@ -65,8 +57,6 @@ VERBISH = ("scan", "sort", "merge", "join", "filter", "group", "stream",
 MINHASH_A = (7, 11, 13, 17, 19, 23, 29, 31)
 MINHASH_B = (3, 5, 7, 11, 13, 17, 19, 23)
 MINHASH_P = 2147483647
-SIMHASH_MULT = 2654435761
-FP_MOD = 1048573
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -503,46 +493,6 @@ def q_jaccard_pairs(spark, sf_dir):
     )
 
 
-def q_simhash16(spark, sf_dir):
-    """16-bit SimHash from dense token ids, token-frequency weighted.
-
-    r6 shape (output identical): the 16 per-bit contribution sums are
-    16 ``sum`` agg expressions in ONE groupBy(doc_id) instead of a
-    16-way crossJoin row explosion + two stacked shuffles
-    ((doc_id, bit) then doc_id) — contributions are linear in the
-    weight, so summing ±w per bit in one pass is exactly the old
-    bit-exploded sum (guide §2.3 'aggregate before you shuffle')."""
-    toks = _tokens(spark, sf_dir)
-    ids = (
-        toks.select("term").distinct()
-        .withColumn(
-            "tid", F.row_number().over(Window.orderBy("term")).cast("long")
-        )
-    )
-    weighted = (
-        toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("w"))
-        .join(ids, "term")
-        .withColumn("h", (F.col("tid") * SIMHASH_MULT) % 65536)
-    )
-    per_bit = weighted.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(
-                    F.expr(f"(h >> {b}) & 1") == 1, F.col("w")
-                ).otherwise(-F.col("w"))
-            ).alias(f"s{b}")
-            for b in range(16)
-        ]
-    )
-    simhash = None
-    for b in range(16):
-        term = F.when(
-            F.col(f"s{b}") > 0, F.lit(1 << b).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-        simhash = term if simhash is None else simhash + term
-    return per_bit.select("doc_id", simhash.alias("simhash"))
-
-
 def q_neardup_pairs_scale(spark, sf_dir):
     """The REAL near-dup operator chain at scale shape (VERDICT r1 #6):
     xxhash64-based MinHash (operators/dedup.py) → 16 one-row LSH bands →
@@ -759,54 +709,6 @@ def q_quality_score(spark, sf_dir):
     )
 
 
-def q_token_stats(spark, sf_dir):
-    """Token counting (whitespace tokenizer)."""
-    d = _t(spark, sf_dir, "documents")
-    toks = _tokens(spark, sf_dir)
-    agg = toks.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_tokens"),
-        F.countDistinct("term").alias("n_distinct"),
-    )
-    return d.select("doc_id", F.length("text").alias("n_chars")).join(
-        agg, "doc_id"
-    )
-
-
-def q_pii_scrub(spark, sf_dir):
-    """Curation: PII redaction. The synthetic corpus carries no PII, so
-    the query deterministically injects one email / phone / IPv4 per
-    id-residue class first (same expression on the oracle side), making
-    the counts and the scrubbed text non-trivial at every sf."""
-    from knowledgegraphgenerator_spark.operators.curation import scrub_pii
-
-    d = _t(spark, sf_dir, "documents")
-    injected = d.select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.when(
-                F.col("doc_id") % 5 == 0,
-                F.concat(
-                    F.lit(" contact user"),
-                    F.col("doc_id").cast("string"),
-                    F.lit("@example.com"),
-                ),
-            ).otherwise(F.lit("")),
-            F.when(F.col("doc_id") % 7 == 0, F.lit(" call +555 123 4567"))
-            .otherwise(F.lit("")),
-            F.when(F.col("doc_id") % 11 == 0, F.lit(" from 10.0.0.1"))
-            .otherwise(F.lit("")),
-        ).alias("text"),
-    )
-    return scrub_pii(injected).select(
-        "doc_id",
-        F.col("n_emails").cast("long").alias("n_emails"),
-        F.col("n_ips").cast("long").alias("n_ips"),
-        F.col("n_phones").cast("long").alias("n_phones"),
-        "scrubbed",
-    )
-
-
 def q_repetition_signals(spark, sf_dir):
     """Curation: Gopher-style repetition metrics + keep/drop verdict."""
     from knowledgegraphgenerator_spark.operators.curation import (
@@ -907,117 +809,6 @@ def q_canonical_urls(spark, sf_dir):
     return canonical_urls(
         d.select("doc_id", url.alias("url"))
     ).select("doc_id", "host", "registered_domain", "canonical_url")
-
-
-def q_winnow_fingerprint(spark, sf_dir):
-    """Rolling-hash 4-gram document fingerprint (winnowing-style min)."""
-    toks = _tokens(spark, sf_dir)
-    ids = (
-        toks.select("term").distinct()
-        .withColumn(
-            "tid", F.row_number().over(Window.orderBy("term")).cast("long")
-        )
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    seq = toks.join(ids, "term").select("doc_id", "pos", "tid")
-    grams = (
-        seq.withColumn("t1", F.lead("tid", 1).over(w))
-        .withColumn("t2", F.lead("tid", 2).over(w))
-        .withColumn("t3", F.lead("tid", 3).over(w))
-        .where(F.col("t3").isNotNull())
-        .withColumn(
-            "h",
-            (((F.col("tid") * 31 + F.col("t1")) % FP_MOD * 31
-              + F.col("t2")) % FP_MOD * 31 + F.col("t3")) % FP_MOD,
-        )
-    )
-    return grams.groupBy("doc_id").agg(
-        F.min("h").alias("fingerprint"),
-        F.countDistinct("h").alias("n_shingles"),
-    )
-
-
-def q_tfidf_top_terms(spark, sf_dir):
-    """TF-IDF term scoring (north_star: 'TF-IDF/RAKE term scoring per
-    partition') — top-5 terms per doc by tf·ln(N/df)."""
-    toks = _tokens(spark, sf_dir)
-    n_docs = _t(spark, sf_dir, "documents").count()
-    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    scored = (
-        tf.join(df_, "term")
-        .withColumn("tfidf", F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("df")))
-    )
-    w = Window.partitionBy("doc_id").orderBy(
-        F.desc("tfidf"), F.asc("term")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .where(F.col("rnk") <= 5)
-        .select("doc_id", "rnk", "term", "tf", "df",
-                F.round("tfidf", 4).alias("tfidf"))
-    )
-
-
-def q_rake_keywords(spark, sf_dir):
-    """RAKE keyword scoring (public Rose et al. 2010 algorithm):
-    stopword-delimited chunks; word score = degree/freq within the doc;
-    phrase score = sum of word scores. Top-3 phrases per doc."""
-    toks = _tokens(spark, sf_dir).withColumn(
-        "is_stop", F.col("term").isin(*DOC_STOPWORDS).cast("int")
-    )
-    w_doc = Window.partitionBy("doc_id").orderBy("pos") \
-        .rowsBetween(Window.unboundedPreceding, 0)
-    with_chunk = toks.withColumn("chunk_id", F.sum("is_stop").over(w_doc))
-    words = with_chunk.where("is_stop = 0")
-    chunk_len = words.groupBy("doc_id", "chunk_id").agg(
-        F.count(F.lit(1)).alias("clen")
-    )
-    occ = words.join(chunk_len, ["doc_id", "chunk_id"])
-    word_scores = occ.groupBy("doc_id", "term").agg(
-        (F.sum("clen") / F.count(F.lit(1))).alias("wscore")
-    )
-    phrases_df = (
-        words.groupBy("doc_id", "chunk_id")
-        .agg(
-            F.expr(
-                "concat_ws(' ', transform(sort_array(collect_list("
-                "struct(pos, term))), x -> x.term))"
-            ).alias("phrase")
-        )
-    )
-    phrase_scores = (
-        words.join(word_scores, ["doc_id", "term"])
-        .groupBy("doc_id", "chunk_id")
-        .agg(F.sum("wscore").alias("score"))
-        .join(phrases_df, ["doc_id", "chunk_id"])
-        .select("doc_id", "phrase", "score")
-        .distinct()
-    )
-    w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("phrase"))
-    return (
-        phrase_scores.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .where(F.col("rnk") <= 3)
-        .select("doc_id", "rnk", "phrase", F.round("score", 4).alias("score"))
-    )
-
-
-def q_token_stats_bpe(spark, sf_dir):
-    """Token counting, BPE-ish: words vs punctuation-split subtokens.
-
-    ``\\w+`` word tokens and single non-space-non-word marks — the
-    pre-tokenization regex shape BPE tokenizers use (GPT-2-style
-    pretokenizer simplified to its ASCII core; counts only, no merges).
-    """
-    d = _t(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id",
-        F.size(F.split(F.col("text"), r"\s+")).cast("long").alias("ws_tokens"),
-        F.size(F.expr(r"regexp_extract_all(text, '\\w+', 0)"))
-        .cast("long").alias("word_tokens"),
-        F.size(F.expr(r"regexp_extract_all(text, '[^\\w\\s]', 0)"))
-        .cast("long").alias("punct_tokens"),
-    )
 
 
 def q_term_cooccurrence(spark, sf_dir):
@@ -1656,111 +1447,6 @@ def q_host_hits(spark, sf_dir):
     return integer_hits(nt, n_iters=2, assume_distinct=True)
 
 
-def q_lm_doc_score(spark, sf_dir):
-    """CCNet-style LM quality scoring (curation.lm_doc_score): every
-    document scored by integer-exact negative log-likelihood under a
-    corpus-trained add-one bigram LM — the perplexity-bucket signal
-    that splits a crawl into head/middle/tail quality tiers (Wenzek et
-    al. 2020). Self-supervised: no external model artifact. Per-bigram
-    nll rounded ONCE to 1e-4 nats then summed as integers, so the
-    cross-engine hash is exact (integer arithmetic, as in
-    components.integer_pagerank)."""
-    from knowledgegraphgenerator_spark.operators.curation import (
-        lm_doc_score,
-    )
-
-    return lm_doc_score(
-        _t(spark, sf_dir, "documents").select("doc_id", "text")
-    )
-
-
-def q_lm_heldout_score(spark, sf_dir):
-    """Held-out LM scoring — the train/validation regime (CCNet trains
-    on Wikipedia, scores the crawl): the bigram LM is trained on the
-    even-doc_id half of the corpus and the odd half is scored, so
-    UNSEEN bigrams and out-of-vocabulary contexts actually occur and
-    the add-one smoothing path (left joins + coalesce(0)) is what the
-    oracle certifies."""
-    from knowledgegraphgenerator_spark.operators.curation import (
-        lm_doc_score,
-    )
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return lm_doc_score(
-        docs.where(F.col("doc_id") % 2 != 0),
-        train=docs.where(F.col("doc_id") % 2 == 0),
-    )
-
-
-def q_lm_ppl_buckets(spark, sf_dir):
-    """The CCNet head/middle/tail split itself (Wenzek et al. 2020 §4.3
-    — the corpus is divided into three equal-mass perplexity tiers and
-    training mixes sample by tier): exact terciles of avg_nll_i4 are
-    computed ONCE (type-7 `percentile`, the doc_length_quantiles
-    parity shape — swap to approx_percentile at 100 TB), broadcast,
-    and every document is assigned its tier in a narrow map — CCNet's
-    actual production design (cutoffs are computed on a sample once,
-    then assignment streams). Integer scores make the tier boundaries
-    cross-engine-safe: a type-7 cut only ever equals a data value
-    exactly or falls strictly between two integers, so <= comparisons
-    cannot disagree on float round-off."""
-    from knowledgegraphgenerator_spark.operators.curation import (
-        lm_doc_score,
-    )
-
-    # persisted: both the tercile aggregation and the returned frame
-    # consume the full scoring lineage — without this the corpus-wide
-    # LM scoring runs twice
-    scores = lm_doc_score(
-        _t(spark, sf_dir, "documents").select("doc_id", "text")
-    ).persist()
-    cuts = scores.agg(
-        F.expr("percentile(avg_nll_i4, 0.33333D)").alias("c1"),
-        F.expr("percentile(avg_nll_i4, 0.66667D)").alias("c2"),
-    )
-    return scores.crossJoin(F.broadcast(cuts)).select(
-        "doc_id",
-        "avg_nll_i4",
-        F.when(F.col("avg_nll_i4") <= F.col("c1"), F.lit("head"))
-        .when(F.col("avg_nll_i4") <= F.col("c2"), F.lit("middle"))
-        .otherwise(F.lit("tail"))
-        .alias("bucket"),
-    )
-
-
-# RefinedWeb line-dedup seeds: the synthetic documents are single-line,
-# so the corpus is unioned with deterministic multi-line documents
-# (mirrored as VALUES in the DuckDB oracle — the docs_at_root seeding
-# pattern) so the gate has discriminating non-zero n_dropped rows at
-# every sf.
-LINE_DEDUP_SEEDS = [
-    (
-        900000001,
-        "cookie notice\nreal paragraph one\ncookie notice"
-        "\nreal paragraph two\ncookie notice",
-    ),
-    (900000002, "a\n\n\nb\n\na"),
-    (900000003, "no repeats here"),
-]
-
-
-def q_line_dedup(spark, sf_dir):
-    """RefinedWeb-style in-document line dedup
-    (curation.drop_repeated_lines): repeated exact lines removed
-    keeping the first — nav bars / cookie banners / footers inside one
-    page. Narrow zero-shuffle map; corpus unioned with
-    LINE_DEDUP_SEEDS for discriminating output (see constant)."""
-    from knowledgegraphgenerator_spark.operators.curation import (
-        drop_repeated_lines,
-    )
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    seeds = spark.createDataFrame(
-        LINE_DEDUP_SEEDS, "doc_id long, text string"
-    )
-    return drop_repeated_lines(docs.unionByName(seeds))
-
-
 def q_host_hits_served(spark, sf_dir):
     """Store-then-serve for HITS (the host_hits twin of
     kg_pagerank_served): the extracted host link graph is MATERIALIZED
@@ -1799,35 +1485,6 @@ def q_host_hits_served(spark, sf_dir):
         n_iters=2,
         assume_distinct=True,
         persist=False,
-    )
-
-
-def q_bpe_merge_pairs(spark, sf_dir):
-    """Tokenizer-training prep: the corpus-wide adjacent character-pair
-    statistic that drives one BPE merge iteration (Sennrich et al.
-    2016) — pair counts weighted by word frequency, top-20 with rank.
-    Two combinable groupBys (word dictionary, then pair agg over the
-    DICTIONARY — ~|vocab| rows, not corpus tokens) + a
-    TakeOrderedAndProject top-k; the ANSI sequence(1,0)-counts-DOWN
-    trap is guarded by the length >= 2 filter."""
-    toks = _tokens(spark, sf_dir)
-    words = toks.groupBy("term").agg(F.count(F.lit(1)).alias("cnt"))
-    pairs = words.where(F.length("term") >= 2).select(
-        F.explode(
-            F.expr(
-                "transform(sequence(1, length(term) - 1),"
-                " i -> substring(term, i, 2))"
-            )
-        ).alias("pair"),
-        "cnt",
-    )
-    agg = pairs.groupBy("pair").agg(
-        F.sum("cnt").cast("long").alias("cnt")
-    )
-    topk = agg.orderBy(F.desc("cnt"), F.asc("pair")).limit(20)
-    w = Window.orderBy(F.desc("cnt"), F.asc("pair"))
-    return topk.select(
-        "pair", "cnt", F.row_number().over(w).cast("long").alias("rnk")
     )
 
 
@@ -1909,10 +1566,6 @@ def q_anchor_text_profile(spark, sf_dir):
 # The FULL registry — all entries, count-asserted — is certified by
 # scripts/full_gate.py.
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "lm_doc_score": q_lm_doc_score,
-    "lm_heldout_score": q_lm_heldout_score,
-    "lm_ppl_buckets": q_lm_ppl_buckets,
-    "line_dedup": q_line_dedup,
     "host_hits_served": q_host_hits_served,
     "host_pagerank": q_host_pagerank,
     "dedup_exact": q_dedup_exact,
@@ -1925,9 +1578,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "domain_cap_salted": q_domain_cap_salted,
     "anchor_text_profile": q_anchor_text_profile,
     "host_hits": q_host_hits,
-    "bpe_merge_pairs": q_bpe_merge_pairs,
-    "tfidf_top_terms": q_tfidf_top_terms,
-    "rake_keywords": q_rake_keywords,
     "term_cooccurrence": q_term_cooccurrence,
     "host_link_graph": q_host_link_graph,
     "neardup_pairs_scale": q_neardup_pairs_scale,
@@ -1948,32 +1598,26 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "kg_pagerank": q_kg_pagerank,
     "kg_pagerank_served": q_kg_pagerank_served,
     "docs_at_root": q_docs_at_root,
-    # --- position 51+ (rotating tail, see comment above): stable
-    # queries with green driver rows in r02-r04; certified by
-    # scripts/full_gate.py every round
     "doc_path_coverage": q_doc_path_coverage,
     "stratified_sample": q_stratified_sample,
     "chunk_by_tokens": q_chunk_by_tokens,
     "doc_length_quantiles": q_doc_length_quantiles,
     "salted_term_stats": q_salted_term_stats,
     "lang_id_heuristic": q_lang_id_heuristic,
-    "pii_scrub": q_pii_scrub,
     "repetition_signals": q_repetition_signals,
     "domain_cap": q_domain_cap,
     "kg_ontology": q_kg_ontology,
     "trigram_count": q_trigram_count,
     "dict_merge_priority": q_dict_merge_priority,
-    "simhash16": q_simhash16,
     "canonical_urls": q_canonical_urls,
     "quality_score": q_quality_score,
-    "token_stats": q_token_stats,
-    "token_stats_bpe": q_token_stats_bpe,
-    "winnow_fingerprint": q_winnow_fingerprint,
     "jaccard_pairs": q_jaccard_pairs,
     "minhash_signatures": q_minhash_signatures,
     "path_prefix_antijoin": q_path_prefix_antijoin,
     "term_count_threshold": q_term_count_threshold,
     "bigram_count": q_bigram_count,
+    # --- position 51+ (rotating tail, see comment above): stable
+    # queries, certified by scripts/full_gate.py every round
     "substring_dedup": q_substring_dedup,
     "doc_terms_ranked": q_doc_terms_ranked,
     "path_edges": q_path_edges,
@@ -2111,20 +1755,6 @@ ORACLES: dict[str, str] = {
         " JOIN so ON ix.id_old = so.doc_id"
         " WHERE inter * 10 >= (sn.n + so.n - inter) * 8"
     ),
-    "simhash16": (
-        f"WITH toks AS ({_TOKENS_SQL}), "
-        "ids AS (SELECT term, CAST(row_number() OVER (ORDER BY term) AS BIGINT)"
-        " AS tid FROM (SELECT DISTINCT term FROM toks)), "
-        "weighted AS (SELECT doc_id, t.term, CAST(count(*) AS BIGINT) AS w,"
-        f" (any_value(tid) * {SIMHASH_MULT}) % 65536 AS h "
-        "FROM toks t JOIN ids USING (term) GROUP BY doc_id, t.term), "
-        "bits AS (SELECT unnest(generate_series(0, 15)) AS bit), "
-        "persig AS (SELECT doc_id, bit, sum(CASE WHEN (h >> bit) & 1 = 1"
-        " THEN w ELSE -w END) AS s FROM weighted CROSS JOIN bits"
-        " GROUP BY doc_id, bit) "
-        "SELECT doc_id, CAST(sum(CASE WHEN s > 0 THEN (1 << bit)"
-        " ELSE 0 END) AS BIGINT) AS simhash FROM persig GROUP BY doc_id"
-    ),
     "lang_id_heuristic": (
         f"WITH toks AS ({_TOKENS_SQL}), "
         "agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens, "
@@ -2132,29 +1762,6 @@ ORACLES: dict[str, str] = {
         " AS BIGINT) AS hits FROM toks GROUP BY doc_id) "
         "SELECT doc_id, hits, n_tokens, CASE WHEN hits * 10 >= n_tokens"
         " THEN 'en_like' ELSE 'other' END AS pred FROM agg"
-    ),
-    "pii_scrub": (
-        "WITH inj AS (SELECT doc_id, text"
-        " || CASE WHEN doc_id % 5 = 0 THEN ' contact user' ||"
-        " CAST(doc_id AS VARCHAR) || '@example.com' ELSE '' END"
-        " || CASE WHEN doc_id % 7 = 0 THEN ' call +555 123 4567'"
-        " ELSE '' END"
-        " || CASE WHEN doc_id % 11 = 0 THEN ' from 10.0.0.1' ELSE '' END"
-        " AS text FROM documents), "
-        "s1 AS (SELECT doc_id,"
-        f" CAST(len(regexp_extract_all(text, '{_EMAIL_RE}')) AS BIGINT)"
-        " AS n_emails,"
-        f" regexp_replace(text, '{_EMAIL_RE}', '<EMAIL>', 'g') AS t1"
-        " FROM inj), "
-        "s2 AS (SELECT doc_id, n_emails,"
-        f" CAST(len(regexp_extract_all(t1, '{_IPV4_RE}')) AS BIGINT)"
-        " AS n_ips,"
-        f" regexp_replace(t1, '{_IPV4_RE}', '<IP>', 'g') AS t2 FROM s1) "
-        "SELECT doc_id, n_emails, n_ips,"
-        f" CAST(len(regexp_extract_all(t2, '{_PHONE_RE}')) AS BIGINT)"
-        " AS n_phones,"
-        f" regexp_replace(t2, '{_PHONE_RE}', '<PHONE>', 'g') AS scrubbed"
-        " FROM s2"
     ),
     "repetition_signals": (
         f"WITH toks AS ({_TOKENS_SQL}), "
@@ -2273,43 +1880,10 @@ ORACLES: dict[str, str] = {
         "n_distinct * 1000 // n_tokens >= 200 THEN 'keep' ELSE 'drop' END"
         " AS verdict FROM agg"
     ),
-    "token_stats": (
-        f"WITH toks AS ({_TOKENS_SQL}), "
-        "agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens, "
-        "CAST(count(DISTINCT term) AS BIGINT) AS n_distinct FROM toks"
-        " GROUP BY doc_id) "
-        "SELECT d.doc_id, CAST(length(d.text) AS BIGINT) AS n_chars,"
-        " n_tokens, n_distinct FROM documents d JOIN agg"
-        " ON d.doc_id = agg.doc_id"
-    ),
-    "winnow_fingerprint": (
-        f"WITH toks AS ({_TOKENS_SQL}), "
-        "ids AS (SELECT term, CAST(row_number() OVER (ORDER BY term) AS BIGINT)"
-        " AS tid FROM (SELECT DISTINCT term FROM toks)), "
-        "seq AS (SELECT doc_id, pos, tid FROM toks JOIN ids USING (term)), "
-        "grams AS (SELECT doc_id, tid, "
-        "lead(tid, 1) OVER w AS t1, lead(tid, 2) OVER w AS t2,"
-        " lead(tid, 3) OVER w AS t3 FROM seq"
-        " WINDOW w AS (PARTITION BY doc_id ORDER BY pos)) "
-        f"SELECT doc_id, min((((tid * 31 + t1) % {FP_MOD} * 31 + t2)"
-        f" % {FP_MOD} * 31 + t3) % {FP_MOD}) AS fingerprint, "
-        "CAST(count(DISTINCT (((tid * 31 + t1) % "
-        f"{FP_MOD} * 31 + t2) % {FP_MOD} * 31 + t3) % {FP_MOD})"
-        " AS BIGINT) AS n_shingles "
-        "FROM grams WHERE t3 IS NOT NULL GROUP BY doc_id"
-    ),
     "salted_term_stats": (
         f"SELECT term, CAST(count(*) AS BIGINT) AS cnt, "
         f"CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs "
         f"FROM ({_TOKENS_SQL}) GROUP BY term HAVING count(*) > 50"
-    ),
-    "token_stats_bpe": (
-        "SELECT doc_id, "
-        "CAST(len(string_split_regex(text, '\\s+')) AS BIGINT) AS ws_tokens, "
-        "CAST(len(regexp_extract_all(text, '\\w+')) AS BIGINT)"
-        " AS word_tokens, "
-        "CAST(len(regexp_extract_all(text, '[^\\w\\s]')) AS BIGINT)"
-        " AS punct_tokens FROM documents"
     ),
     "term_cooccurrence": (
         f"WITH toks AS (SELECT DISTINCT doc_id, term FROM ({_TOKENS_SQL})), "
@@ -2319,46 +1893,6 @@ ORACLES: dict[str, str] = {
         "SELECT a.term AS ta, b.term AS tb, CAST(count(*) AS BIGINT) AS cnt "
         "FROM dt a JOIN dt b ON a.doc_id = b.doc_id AND a.term < b.term "
         "GROUP BY a.term, b.term HAVING count(*) >= 5"
-    ),
-    "tfidf_top_terms": (
-        f"WITH toks AS ({_TOKENS_SQL}), "
-        "tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf"
-        " FROM toks GROUP BY doc_id, term), "
-        "dfq AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf"
-        " GROUP BY term), "
-        "n AS (SELECT CAST(count(*) AS DOUBLE) AS nd FROM documents), "
-        "scored AS (SELECT doc_id, term, tf, df,"
-        " tf * ln(nd / df) AS tfidf FROM tf JOIN dfq USING (term), n), "
-        "ranked AS (SELECT *, CAST(row_number() OVER (PARTITION BY doc_id"
-        " ORDER BY tfidf DESC, term ASC) AS BIGINT) AS rnk FROM scored) "
-        "SELECT doc_id, rnk, term, tf, df, round(tfidf, 4) AS tfidf"
-        " FROM ranked WHERE rnk <= 5"
-    ),
-    "rake_keywords": (
-        f"WITH toks AS (SELECT *, CASE WHEN term IN {DOC_STOPWORDS!r}"
-        f" THEN 1 ELSE 0 END AS is_stop FROM ({_TOKENS_SQL})), "
-        "wc AS (SELECT *, sum(is_stop) OVER (PARTITION BY doc_id"
-        " ORDER BY pos ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
-        " AS chunk_id FROM toks), "
-        "words AS (SELECT * FROM wc WHERE is_stop = 0), "
-        "clens AS (SELECT doc_id, chunk_id, CAST(count(*) AS BIGINT)"
-        " AS clen FROM words GROUP BY doc_id, chunk_id), "
-        "occ AS (SELECT w.doc_id, w.chunk_id, w.term, w.pos, clen"
-        " FROM words w JOIN clens USING (doc_id, chunk_id)), "
-        "ws AS (SELECT doc_id, term,"
-        " CAST(sum(clen) AS DOUBLE) / count(*) AS wscore FROM occ"
-        " GROUP BY doc_id, term), "
-        "phr AS (SELECT doc_id, chunk_id,"
-        " string_agg(term, ' ' ORDER BY pos) AS phrase FROM words"
-        " GROUP BY doc_id, chunk_id), "
-        "ps AS (SELECT DISTINCT w.doc_id, phrase, score FROM "
-        "(SELECT doc_id, chunk_id, sum(wscore) AS score FROM words"
-        " JOIN ws USING (doc_id, term) GROUP BY doc_id, chunk_id) w "
-        "JOIN phr ON w.doc_id = phr.doc_id AND w.chunk_id = phr.chunk_id), "
-        "ranked AS (SELECT *, CAST(row_number() OVER (PARTITION BY doc_id"
-        " ORDER BY score DESC, phrase ASC) AS BIGINT) AS rnk FROM ps) "
-        "SELECT doc_id, rnk, phrase, round(score, 4) AS score FROM ranked"
-        " WHERE rnk <= 3"
     ),
 }
 
@@ -2691,127 +2225,6 @@ ORACLES["host_hits"] = _host_hits_oracle_sql()
 # serving HITS off the bucketed edge store must be bit-identical to the
 # in-memory path
 ORACLES["host_hits_served"] = _host_hits_oracle_sql()
-
-# CCNet bigram-LM scoring: identical add-one model, identical one-round
-# 1e-4-nat integerization per bigram TYPE, identical floor division
-# held-out regime: counts/vocab from the even-doc_id half, scoring over
-# the odd half; unseen events priced via left joins + coalesce(0)
-ORACLES["lm_heldout_score"] = (
-    "WITH fl AS (SELECT doc_id,"
-    " list_filter(string_split(text, ' '), x -> x <> '') AS t"
-    " FROM documents), "
-    "tr AS (SELECT * FROM fl WHERE doc_id % 2 = 0), "
-    "sc AS (SELECT * FROM fl WHERE doc_id % 2 <> 0), "
-    "v AS (SELECT CAST(count(DISTINCT term) AS BIGINT) AS v"
-    " FROM (SELECT unnest(t) AS term FROM tr)), "
-    "tp AS (SELECT unnest(t[1:len(t)-1]) AS w1,"
-    " unnest(t[2:len(t)]) AS w2 FROM tr WHERE len(t) >= 2), "
-    "c2 AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS c2 FROM tp"
-    " GROUP BY w1, w2), "
-    "c1 AS (SELECT w1, CAST(sum(c2) AS BIGINT) AS c1 FROM c2"
-    " GROUP BY w1), "
-    "sp AS (SELECT doc_id, unnest(t[1:len(t)-1]) AS w1,"
-    " unnest(t[2:len(t)]) AS w2 FROM sc WHERE len(t) >= 2), "
-    "ptf AS (SELECT doc_id, w1, w2, CAST(count(*) AS BIGINT) AS tf"
-    " FROM sp GROUP BY doc_id, w1, w2), "
-    "s AS (SELECT ptf.doc_id, ptf.tf,"
-    " CAST(round(ln((coalesce(c1.c1, 0) + v.v)"
-    " / (coalesce(c2.c2, 0) + 1.0)) * 10000) AS BIGINT) AS nll"
-    " FROM ptf LEFT JOIN c2 USING (w1, w2) LEFT JOIN c1 USING (w1)"
-    " CROSS JOIN v) "
-    "SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_pairs,"
-    " CAST(sum(tf * nll) AS BIGINT) AS nll_i4,"
-    " CAST(sum(tf * nll) // sum(tf) AS BIGINT) AS avg_nll_i4"
-    " FROM s GROUP BY doc_id"
-)
-
-_LM_SCORE_SQL = (
-    "WITH fl AS (SELECT doc_id,"
-    " list_filter(string_split(text, ' '), x -> x <> '') AS t"
-    " FROM documents), "
-    "v AS (SELECT CAST(count(DISTINCT term) AS BIGINT) AS v"
-    " FROM (SELECT unnest(t) AS term FROM fl)), "
-    "pairs AS (SELECT doc_id, unnest(t[1:len(t)-1]) AS w1,"
-    " unnest(t[2:len(t)]) AS w2 FROM fl WHERE len(t) >= 2), "
-    "ptf AS (SELECT doc_id, w1, w2, CAST(count(*) AS BIGINT) AS tf"
-    " FROM pairs GROUP BY doc_id, w1, w2), "
-    "c2 AS (SELECT w1, w2, CAST(sum(tf) AS BIGINT) AS c2 FROM ptf"
-    " GROUP BY w1, w2), "
-    "c1 AS (SELECT w1, CAST(sum(c2) AS BIGINT) AS c1 FROM c2"
-    " GROUP BY w1), "
-    "s AS (SELECT ptf.doc_id, ptf.tf,"
-    " CAST(round(ln((c1.c1 + v.v) / (c2.c2 + 1.0)) * 10000) AS BIGINT)"
-    " AS nll"
-    " FROM ptf JOIN c2 USING (w1, w2) JOIN c1 USING (w1) CROSS JOIN v) "
-    "SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_pairs,"
-    " CAST(sum(tf * nll) AS BIGINT) AS nll_i4,"
-    " CAST(sum(tf * nll) // sum(tf) AS BIGINT) AS avg_nll_i4"
-    " FROM s GROUP BY doc_id"
-)
-ORACLES["lm_doc_score"] = _LM_SCORE_SQL
-
-# CCNet tier split: the same scored frame, exact type-7 terciles as a
-# 1-row CTE, tier assignment by <= comparison (integer scores make the
-# boundaries round-off-safe)
-ORACLES["lm_ppl_buckets"] = (
-    f"WITH s AS ({_LM_SCORE_SQL}), "
-    "c AS (SELECT quantile_cont(avg_nll_i4, 0.33333) AS c1,"
-    " quantile_cont(avg_nll_i4, 0.66667) AS c2 FROM s) "
-    "SELECT doc_id, avg_nll_i4,"
-    " CASE WHEN avg_nll_i4 <= c1 THEN 'head'"
-    " WHEN avg_nll_i4 <= c2 THEN 'middle'"
-    " ELSE 'tail' END AS bucket"
-    " FROM s, c"
-)
-
-
-def _line_dedup_seed_values() -> str:
-    """LINE_DEDUP_SEEDS as DuckDB VALUES, newlines as chr(10)."""
-    rows = []
-    for doc_id, text in LINE_DEDUP_SEEDS:
-        lit = " || chr(10) || ".join(
-            "'" + p.replace("'", "''") + "'" for p in text.split("\n")
-        )
-        rows.append(f"(CAST({doc_id} AS BIGINT), {lit})")
-    return ", ".join(rows)
-
-
-# order-preserving distinct of lines: min(pos) grouping + ordered
-# string_agg mirrors Spark array_distinct's first-occurrence order
-ORACLES["line_dedup"] = (
-    "WITH d AS (SELECT doc_id, text FROM documents UNION ALL"
-    f" SELECT * FROM (VALUES {_line_dedup_seed_values()})"
-    " AS seeds(doc_id, text)), "
-    "l AS (SELECT doc_id,"
-    " unnest(string_split(text, chr(10))) AS line,"
-    " unnest(generate_series(1, len(string_split(text, chr(10)))))"
-    " AS pos FROM d), "
-    "f AS (SELECT doc_id, line, min(pos) AS fp FROM l"
-    " GROUP BY doc_id, line), "
-    "agg AS (SELECT doc_id,"
-    " string_agg(line, chr(10) ORDER BY fp) AS text,"
-    " CAST(count(*) AS BIGINT) AS n_kept FROM f GROUP BY doc_id), "
-    "tot AS (SELECT doc_id,"
-    " CAST(len(string_split(text, chr(10))) AS BIGINT) AS n_lines"
-    " FROM d) "
-    "SELECT doc_id, agg.text AS text, (n_lines - n_kept) AS n_dropped"
-    " FROM agg JOIN tot USING (doc_id)"
-)
-
-ORACLES["bpe_merge_pairs"] = (
-    f"WITH toks AS ({_TOKENS_SQL}), "
-    "words AS (SELECT term, CAST(count(*) AS BIGINT) AS cnt FROM toks"
-    " GROUP BY term), "
-    "pairs AS (SELECT unnest(list_transform("
-    "generate_series(1, length(term) - 1),"
-    " i -> substr(term, i, 2))) AS pair, cnt"
-    " FROM words WHERE length(term) >= 2), "
-    "agg AS (SELECT pair, CAST(sum(cnt) AS BIGINT) AS cnt FROM pairs"
-    " GROUP BY pair), "
-    "ranked AS (SELECT pair, cnt, CAST(row_number() OVER ("
-    " ORDER BY cnt DESC, pair) AS BIGINT) AS rnk FROM agg) "
-    "SELECT pair, cnt, rnk FROM ranked WHERE rnk <= 20"
-)
 
 # Anchor-text profile: mirrors _anchor_pages' synthesis, the two-pass
 # whole-<a>-element scan, and the host normalization; DuckDB lists are

@@ -352,66 +352,3 @@ def test_ingest_dictionary_stream_composition(spark, tmp_path):
     streamed = multiset(spark.read.parquet(out))
     assert streamed == multiset(batch)
     assert len(streamed) > 0
-
-
-def test_cli_curate_chain(spark, tmp_path):
-    """curate --line-dedup --pii --max-avg-nll must equal the library
-    chain (drop_repeated_lines → scrub_pii → lm_doc_score filter)
-    applied in the same order, and the output corpus schema must stay
-    `corpus`/`ingest`-compatible (text column, plus the LM columns)."""
-    import pyspark.sql.functions as F
-
-    from knowledgegraphgenerator_spark.operators.curation import (
-        drop_repeated_lines,
-        lm_doc_score,
-        scrub_pii,
-    )
-
-    rows = [
-        (1, "nav bar\nthe cat sat on the mat\nnav bar", "en"),
-        (2, "contact me@example.com now\nthe cat sat here", "en"),
-        (3, "zq xv qp zq wv", "en"),  # rare bigrams: worst LM score
-        (4, "the cat sat on the mat again today", "en"),
-        (5, "x", "en"),  # unscorable (<2 tokens): dropped by the filter
-    ]
-    src = str(tmp_path / "curate_src")
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string"
-    ).write.mode("overwrite").parquet(src)
-
-    # library chain, same order as the CLI
-    lib = drop_repeated_lines(spark.read.parquet(src)).drop("n_dropped")
-    lib = (
-        scrub_pii(lib)
-        .drop("text", "n_emails", "n_ips", "n_phones")
-        .withColumnRenamed("scrubbed", "text")
-    )
-    scores = lm_doc_score(lib)
-    cut = scores.agg(F.max("avg_nll_i4")).collect()[0][0] - 1
-    expected = {
-        tuple(r)
-        for r in lib.join(
-            scores.where(F.col("avg_nll_i4") <= cut), "doc_id"
-        ).select("doc_id", "text").collect()
-    }
-
-    out = str(tmp_path / "curate_out")
-    rc = main(
-        [
-            "curate", "--input", src, "--output", out,
-            "--line-dedup", "--pii", "--max-avg-nll", str(cut),
-        ],
-        spark=spark,
-    )
-    assert rc == 0
-    got_df = spark.read.parquet(out)
-    assert {"doc_id", "text", "lang", "n_pairs", "nll_i4", "avg_nll_i4"} \
-        <= set(got_df.columns)
-    got = {tuple(r) for r in got_df.select("doc_id", "text").collect()}
-    assert got == expected
-    ids = {r[0] for r in got}
-    assert 3 not in ids and 5 not in ids  # worst-scored + unscorable out
-    assert 1 in ids and 2 in ids and 4 in ids
-    texts = dict(got)
-    assert texts[1] == "nav bar\nthe cat sat on the mat"  # line deduped
-    assert "<EMAIL>" in texts[2] and "me@example.com" not in texts[2]

@@ -1,7 +1,9 @@
-"""Corpus-curation operators (operators/curation.py): PII scrubbing,
-Gopher-style repetition signals, per-domain caps, deterministic
-stratified sampling. Driver-gated twins live in queries.py
-(pii_scrub / repetition_signals / domain_cap / stratified_sample);
+"""Corpus-curation operators (operators/curation.py): Gopher-style
+repetition signals, URL canonicalization, token chunking, per-domain
+caps, deterministic stratified sampling, duplicated-span removal,
+benchmark decontamination, mixture rebalancing and crawl snapshots.
+Oracle-gated twins live in queries.py (repetition_signals /
+domain_cap / stratified_sample and the rest of the curation rows);
 these unit tests cover the edge cases the synthetic corpus can't hit
 and pin the zero-shuffle plan shapes."""
 
@@ -11,39 +13,11 @@ from knowledgegraphgenerator_spark.operators.curation import (
     cap_per_key,
     mod_stratified_sample,
     repetition_signals,
-    scrub_pii,
 )
 
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_scrub_pii_sequential_semantics(spark):
-    rows = [
-        (1, "mail a.b-c_d%x+1@sub.example.co.uk now"),
-        (2, "server 192.168.1.254 and 10.0.0.1 up"),
-        (3, "call +555 123 4567 or 555-987 6543".replace("987 ", "987-")),
-        (4, "mixed bob@x.io at 8.8.8.8 tel 555 111 2222"),
-        (5, "clean text no pii"),
-        (6, ""),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r.doc_id: r for r in scrub_pii(df).collect()}
-
-    assert out[1].n_emails == 1 and "<EMAIL>" in out[1].scrubbed
-    assert "@" not in out[1].scrubbed
-    assert out[2].n_ips == 2 and out[2].scrubbed.count("<IP>") == 2
-    assert out[3].n_phones == 2
-    assert out[4].n_emails == 1 and out[4].n_ips == 1 and out[4].n_phones == 1
-    assert out[4].scrubbed == "mixed <EMAIL> at <IP> tel <PHONE>"
-    assert out[5].scrubbed == "clean text no pii"
-    assert (out[5].n_emails, out[5].n_ips, out[5].n_phones) == (0, 0, 0)
-    # sequential scrub: digits of an already-redacted IP can't be
-    # re-counted as a phone; email host dots can't become an IP
-    assert out[2].n_phones == 0
-    # narrow map: no exchange, pipeline into the source
-    assert "Exchange" not in _plan(scrub_pii(df))
 
 
 def test_repetition_signals_crafted(spark):

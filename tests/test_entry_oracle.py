@@ -87,25 +87,3 @@ def test_rows_only_queries_run(spark):
     for name in ("kg_ontology",):
         df = entry_mod.queries()[name](spark, SF_DIR)
         assert df.count() > 0
-
-
-def test_bpe_pair_guard_short_words(spark, tmp_path):
-    """Length-1 words must contribute no pairs (ANSI sequence(1,0)
-    counts DOWN — the length >= 2 filter in q_bpe_merge_pairs is
-    load-bearing). Exercises the REAL registered query on a crafted
-    documents table where removing the guard crashes (ANSI) or mints
-    phantom pairs."""
-    from knowledgegraphgenerator_spark.queries import QUERIES
-
-    docs = spark.createDataFrame(
-        [(1, "a a a go", "en"), (2, "a go be", "en")],
-        "doc_id long, text string, lang string",
-    )
-    sf = str(tmp_path / "sf")
-    docs.write.parquet(f"{sf}/documents.parquet")
-    got = {
-        r["pair"]: (r["cnt"], r["rnk"])
-        for r in QUERIES["bpe_merge_pairs"](spark, sf).collect()
-    }
-    # words: a(x4, len 1 -> no pairs), go(x2), be(x1)
-    assert got == {"go": (2, 1), "be": (1, 2)}

@@ -60,8 +60,7 @@ def test_partial_aggregation_before_exchange(spark):
     assert "Exchange" in plan
 
 
-@pytest.mark.parametrize("name", ["minhash_signatures", "simhash16",
-                                  "winnow_fingerprint", "dedup_chain",
+@pytest.mark.parametrize("name", ["minhash_signatures", "dedup_chain",
                                   "neardup_pairs_scale",
                                   "incremental_neardup"])
 def test_hash_sketches_are_jvm_only(spark, name):

@@ -1,7 +1,8 @@
 """Byte-identical invariant (BASELINE.json input_hint): the Spark
 normalize pass (``normalize_corpus``, the per-page code the build and the
-stream run) and the lemma UDF must produce byte-for-byte the same
-strings as the pure-Python reference chain, including Unicode (Python
+stream run) and the match-token UDF that the blocked linker joins on
+must produce byte-for-byte the same strings as the pure-Python reference
+chain, including Unicode (Python
 ``\\W`` is Unicode-aware — the reason this stays in Python re, SURVEY.md
 §7.4 item 1)."""
 
@@ -9,7 +10,7 @@ from __future__ import annotations
 
 from knowledgegraphgenerator_spark.core.lemmatize import noun_lemma
 from knowledgegraphgenerator_spark.core.textnorm import normalize_text, tokenize
-from knowledgegraphgenerator_spark.functions.udfs import lemmatize_sentence_udf
+from knowledgegraphgenerator_spark.functions.udfs import match_tokens_udf
 from knowledgegraphgenerator_spark.pipeline import normalize_corpus
 from tests.fixtures import FAQ_QUESTIONS
 
@@ -40,18 +41,18 @@ def test_normalize_udf_byte_identical(spark):
 
 
 def test_lemmatize_udf_byte_identical(spark):
-    texts = [normalize_text(q) for q in FAQ_QUESTIONS]
+    texts = [normalize_text(q) for q in FAQ_QUESTIONS + UNICODE_CASES]
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
                                "i long, text string")
     got = {
-        r["i"]: r["lem"]
+        r["i"]: r["toks"]
         for r in df.select(
-            "i", lemmatize_sentence_udf("text").alias("lem")
+            "i", match_tokens_udf("text").alias("toks")
         ).collect()
     }
     for i, t in enumerate(texts):
         # tokenize = whitespace + Treebank splits (cannot -> can not, ...)
-        assert got[i] == " ".join(noun_lemma(x) for x in tokenize(t))
+        assert got[i] == [noun_lemma(x) for x in tokenize(t)]
 
 
 def test_normalize_udf_partitioning_invariant(spark):

@@ -28,15 +28,11 @@ def test_dedup_answers_keeps_first_and_drops_templates(answers):
     assert 3 not in ids  # {{ template dropped
 
 
-def test_clean_vocab_term(spark):
-    import pyspark.sql.functions as F
-
-    df = spark.createDataFrame(
-        [("**credit card/cc:trait",), ("!!org/alt",), ("plain",)],
-        "raw string",
-    )
-    got = [r[0] for r in df.select(w2v.clean_vocab_term(F.col("raw"))).collect()]
-    assert got == ["credit card", "org", "plain"]
+def test_clean_vocab_term():
+    raws = ["**credit card/cc:trait", "!!org/alt", "plain", "**!!x"]
+    got = [w2v.clean_vocab_term(r) for r in raws]
+    # one marker is stripped: "**!!x" keeps its "!!"
+    assert got == ["credit card", "org", "plain", "!!x"]
 
 
 def test_train_and_topk(answers):
