@@ -159,9 +159,7 @@ def keep_best_per_cluster(
     )
 
 
-def ancestor_closure(
-    edges: DataFrame, max_depth: int = 25, assume_distinct: bool = False
-) -> DataFrame:
+def ancestor_closure(edges: DataFrame, max_depth: int = 25) -> DataFrame:
     """Transitive ancestor closure of a child→parent edge set — the
     graph-scale generalization of the reference's in-memory tree walk
     (`/root/reference/analyzer/ontology_analyzer.py:175-188`, which
@@ -174,9 +172,8 @@ def ancestor_closure(
     accumulated closure before expanding.
 
     Scale shape (same discipline as kg_pagerank / connected_components):
-      * one equi-join on the subject key per round — on tables bucketed
-        by subj (write_triples_bucketed_table) that join plans with
-        zero Exchange on the bucketed side;
+      * the edges are deduplicated once, then one equi-join on the
+        subject key per round;
       * one anti-join on the (descendant, ancestor) pair key per round,
         bounded by the closure size (paths in a hierarchy, not pairs of
         nodes²: the closure of a forest has |V|·avg_depth rows);
@@ -185,19 +182,11 @@ def ancestor_closure(
         flat at 10^12-node scale;
       * ``max_depth`` caps pathological cycles — the DuckDB oracle
         carries the identical cap, so both engines agree even on
-        non-DAG input;
-      * ``assume_distinct=True`` skips the defensive edge
-        deduplication. Set it when serving off a stored distinct edge
-        set — e.g. the bucketed triple table — because the ``distinct``
-        inserts an Exchange that re-partitions the edges and defeats
-        the bucket layout the per-round hop join would otherwise use
-        (pinned in test_plans).
+        non-DAG input.
     """
     nt = edges.select(
         F.col("subj").alias("descendant"), F.col("obj").alias("ancestor")
-    )
-    if not assume_distinct:
-        nt = nt.distinct()
+    ).distinct()
     closure = nt.withColumn(
         "depth", F.lit(1).cast("long")
     ).localCheckpoint()
@@ -235,8 +224,6 @@ def integer_pagerank(
     total_mass: int = 1_000_000,
     teleport_mass: int = 150_000,
     damping_pct: int = 85,
-    assume_distinct: bool = False,
-    persist: bool = True,
 ) -> DataFrame:
     """Fixed-k integer power-iteration PageRank over a (src, dst) edge
     set — entity importance for KG consumers (the graph-scale
@@ -249,35 +236,25 @@ def integer_pagerank(
     float-summation-order hazard.
 
     Scale shape (same discipline as ancestor_closure):
+      * the edges are deduplicated once (a duplicate edge counts once)
+        and the edge and node sets are persisted for the iterations,
+        then released before returning;
       * each iteration is one equi-join on src + one aggregation on
         dst; the iterate is ``localCheckpoint``-ed so lineage stays
-        flat at 10^12-node scale;
-      * ``assume_distinct=True`` + ``persist=False`` is the SERVE
-        configuration for edges read from the ``bucketBy(subj)``
-        catalog table (write_triples_bucketed_table): the defensive
-        ``distinct`` would insert an Exchange that re-partitions the
-        edges and defeats the bucket layout, and a persist would hide
-        the bucketed scan behind an InMemoryRelation. On the bucketed
-        table the per-iteration contrib plan carries exactly TWO
-        Exchanges — the rank iterate and the final dst aggregation;
-        the edge scan and the out-degree aggregation ride the bucket
-        layout shuffle-free (pinned in test_plans).
+        flat at 10^12-node scale.
     """
     spark = edges.sparkSession
-    nt = edges.select("src", "dst")
-    if not assume_distinct:
-        nt = nt.distinct()
-    if persist:
-        nt = nt.persist()
+    nt = edges.select("src", "dst").distinct().persist()
     nodes = (
         nt.select(F.col("src").alias("entity"))
         .union(nt.select(F.col("dst").alias("entity")))
         .distinct()
+        .persist()
     )
-    if persist:
-        nodes = nodes.persist()
     n = nodes.count()
     if n == 0:
+        nt.unpersist()
+        nodes.unpersist()
         return spark.createDataFrame([], "entity string, pr long")
     outdeg = nt.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     pr = nodes.withColumn("pr", F.lit(total_mass // n).cast("long"))
@@ -306,122 +283,11 @@ def integer_pagerank(
             )
             .localCheckpoint()
         )
-    if persist:
-        # the iterates are checkpoint-backed (and the n_iters=0 seed
-        # recomputes from source) — drop the edge/node caches so
-        # repeated calls in one session (full gate, bench repeats)
-        # don't accumulate dead cached partitions
-        nt.unpersist()
-        nodes.unpersist()
+    # the iterates are checkpoint-backed (and the n_iters=0 seed
+    # recomputes from source) — drop the edge/node caches so repeated
+    # calls in one session (full gate, bench repeats) don't accumulate
+    # dead cached partitions
+    nt.unpersist()
+    nodes.unpersist()
     return pr
 
-
-def integer_hits(
-    edges: DataFrame,
-    n_iters: int = 2,
-    total_mass: int = 1_000_000,
-    assume_distinct: bool = False,
-    persist: bool = True,
-) -> DataFrame:
-    """Fixed-k integer HITS (Kleinberg hubs & authorities) over a
-    (src, dst) edge set — the second classic web-graph authority score
-    next to integer_pagerank, for crawl prioritization / host quality.
-
-    Variant pinned for cross-engine bit-exactness (mirrored by the
-    unrolled-CTE DuckDB oracle in queries.py):
-      * authorities seed uniform at ``total_mass // n``;
-      * each iteration recomputes hubs from authorities over OUT-edges,
-        L1-normalizes to integer micro-units (``raw * total_mass //
-        sum(raw)``, nonnegative ``div`` only), then authorities from
-        the normalized hubs over IN-edges, normalized the same way —
-        so every value both engines ever hold is a nonnegative int64.
-    Overflow bound: normalized scores sum to <= total_mass, so a raw
-    sum is < total_mass^2 = 10^12 and the normalization product is
-    < total_mass^2 * total_mass = 10^18 < 2^63 ONLY when the per-node
-    raw score stays under ~9.2e12; with mass 10^6 that holds for any
-    graph (raw[v] <= sum of a normalized vector <= 10^6, times 10^6 =
-    10^12). ANSI mode would throw loudly on violation, not corrupt.
-
-    Scale shape = integer_pagerank's: per iteration, one equi-join per
-    direction + one combinable aggregation; iterates are
-    ``localCheckpoint``-ed to keep lineage flat; ``assume_distinct`` /
-    ``persist=False`` is the bucketed-table serve configuration
-    (operators/triples.py:133).
-    """
-    spark = edges.sparkSession
-    nt = edges.select("src", "dst")
-    if not assume_distinct:
-        nt = nt.distinct()
-    if persist:
-        nt = nt.persist()
-    nodes = (
-        nt.select(F.col("src").alias("entity"))
-        .union(nt.select(F.col("dst").alias("entity")))
-        .distinct()
-    )
-    if persist:
-        nodes = nodes.persist()
-    n = nodes.count()
-    if n == 0:
-        return spark.createDataFrame(
-            [], "entity string, hub long, auth long"
-        )
-
-    def _normalize(raw: DataFrame, col: str) -> DataFrame:
-        """nodes-complete integer L1 normalization of (entity, raw).
-
-        The filled vector is localCheckpoint-ed BEFORE fan-out so the
-        edge join + aggregation underneath runs exactly once per
-        half-step (the total-sum branch and the output branch both
-        read the checkpoint, which also keeps lineage flat across
-        iterations); the L1 total rides a broadcast crossJoin — no
-        driver collect."""
-        filled = (
-            nodes.join(raw, "entity", "left")
-            .select(
-                "entity",
-                F.coalesce(F.col("raw"), F.lit(0))
-                .cast("long")
-                .alias("raw"),
-            )
-            .localCheckpoint()
-        )
-        total = filled.agg(F.sum("raw").alias("t"))
-        return filled.crossJoin(F.broadcast(total)).select(
-            "entity",
-            F.expr(
-                f"CASE WHEN t = 0 THEN 0L"
-                f" ELSE raw * {total_mass}L div t END"
-            ).cast("long").alias(col),
-        )
-
-    # seeds: both vectors uniform, so n_iters=0 returns the seed state
-    # (the integer_pagerank degenerate-parameter contract)
-    auth = nodes.withColumn(
-        "auth", F.lit(total_mass // n).cast("long")
-    )
-    hub = nodes.withColumn(
-        "hub", F.lit(total_mass // n).cast("long")
-    )
-    for _ in range(n_iters):
-        h_raw = (
-            nt.join(auth, nt["dst"] == auth["entity"])
-            .groupBy(nt["src"].alias("entity"))
-            .agg(F.sum("auth").alias("raw"))
-        )
-        hub = _normalize(h_raw, "hub")
-        a_raw = (
-            nt.join(hub, nt["src"] == hub["entity"])
-            .groupBy(nt["dst"].alias("entity"))
-            .agg(F.sum("hub").alias("raw"))
-        )
-        auth = _normalize(a_raw, "auth")
-    if persist:
-        # same cache hygiene as integer_pagerank: iterates are
-        # checkpoint-backed, seeds recompute — release the caches
-        nt.unpersist()
-        nodes.unpersist()
-    return (
-        hub.join(auth, "entity")
-        .select("entity", "hub", "auth")
-    )

@@ -743,10 +743,8 @@ def crawl_delta(
     pair is 'changed' (null-safe comparison), matching the oracle's
     key-based presence + IS DISTINCT FROM.
 
-    Scale shape: ONE equi-shuffle full-outer join on the page key. Both
-    crawl snapshots stored bucketed by the key (the triple-store layout,
-    operators/triples.py:133) make it exchange-free; the key is unique
-    per side, so there is no skew to salt."""
+    Scale shape: ONE equi-shuffle full-outer join on the page key; the
+    key is unique per side, so there is no skew to salt."""
     o = old.select(
         F.col(key_col).alias("k"),
         F.col(hash_col).alias("old_hash"),

@@ -131,116 +131,3 @@ def write_triples(
         .parquet(path)
     )
 
-
-def write_triples_bucketed_table(
-    triples: DataFrame, table: str, n_buckets: int = 32
-) -> None:
-    """The triple store: ``write_bucketed_table`` on the ``subj`` key.
-    At 100 TB the triple store is joined against itself (path
-    expansion) and against entity tables keyed by subj every query —
-    pre-bucketing converts those from full shuffles into local
-    sort-merge joins (zero-Exchange subj joins pinned in
-    ``test_plans``). See ``write_bucketed_table`` for the layout and
-    deletion-safety contract."""
-    write_bucketed_table(triples, table, "subj", n_buckets)
-
-
-def _managed_table_info(spark, table: str) -> dict:
-    """Validated catalog info for an unqualified managed-table name:
-    the preamble of the destructive overwrite below — the name rule
-    and the DESCRIBE EXTENDED fetch. Empty when the catalog does not
-    know the table."""
-    import re
-
-    if not re.fullmatch(r"[a-z_][a-z0-9_]*", table):
-        raise ValueError(
-            "bucketed-table operations require an unqualified "
-            f"lowercase table name, got {table!r}"
-        )
-    if not spark.catalog.tableExists(table):
-        return {}
-    return {
-        row.col_name: row.data_type
-        for row in spark.sql(
-            f"DESCRIBE TABLE EXTENDED {table}"
-        ).collect()
-    }
-
-
-def managed_table_location(spark, table: str) -> str:
-    """The warehouse path a managed table named ``table`` lives at in
-    the CURRENT database — the single place the layout rule
-    (``<warehouse>/<tbl>`` vs ``<warehouse>/<db>.db/<tbl>``) is
-    encoded; the bucketed-table writer's orphan cleanup uses it."""
-    warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    db = spark.catalog.currentDatabase()
-    return (
-        f"{warehouse.rstrip('/')}/{table}"
-        if db == "default"
-        else f"{warehouse.rstrip('/')}/{db}.db/{table}"
-    )
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    n_buckets: int = 32,
-) -> None:
-    """Spark-NATIVE bucketed table (``bucketBy(N, bucket_col)
-    .sortBy(bucket_col)`` + ``saveAsTable``): unlike a partition-column
-    layout, the bucket spec lives in the catalog, so every downstream
-    equi-join or aggregation on ``bucket_col`` between tables bucketed
-    with the same N plans with ZERO Exchange on the bucketed sides,
-    and filters on the bucket key push to the scan. This is the
-    parquet twin of the Iceberg ``bucket(N, col)`` table spec
-    (SURVEY.md §7.4). Serving stores built on it: the triple store
-    (``write_triples_bucketed_table``, subj) and the host link graph
-    that ``host_hits_served`` runs HITS over (src).
-
-    Idempotent across SESSIONS, not just runs: a fresh metastore does
-    not know about a previous session's managed-table directory, and
-    ``mode("overwrite")`` then fails with LOCATION_ALREADY_EXISTS — so
-    any orphaned location is removed (via the Hadoop FileSystem API,
-    which also covers non-local warehouses) after the DROP.
-
-    Deletion safety (ADVICE r4 #3): the helper accepts only
-    UNQUALIFIED lowercase table names in the CURRENT database — a
-    qualified ``db.tbl`` would make the guessed ``<warehouse>/<name>``
-    path wrong (the real layout is ``<warehouse>/<db>.db/<tbl>``) and
-    could delete an unrelated directory sharing the name. When the
-    table is still registered, its type and REAL location are
-    resolved from the catalog (``DESCRIBE TABLE EXTENDED``) before the
-    drop: an EXTERNAL table is REFUSED outright — DROP deliberately
-    preserves external data and this helper must never recursively
-    delete a shared location — while a managed table's resolved
-    location is deleted. The warehouse-derived path (current-database
-    aware) is only the fallback for the orphaned-directory case where
-    no catalog entry exists to consult."""
-    from knowledgegraphgenerator_spark.plans.runner import hadoop_fs
-
-    spark = df.sparkSession
-    info = _managed_table_info(spark, table)
-    location = None
-    if info:
-        if info.get("Type", "").upper() == "EXTERNAL":
-            raise ValueError(
-                f"refusing to overwrite EXTERNAL table {table!r}: its "
-                "location may be shared data that DROP TABLE "
-                "deliberately preserves — drop/relocate it explicitly "
-                "or pass a different table name"
-            )
-        location = info.get("Location")
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    if location is None:
-        location = managed_table_location(spark, table)
-    fs, loc = hadoop_fs(spark, location)
-    if fs.exists(loc):
-        fs.delete(loc, True)
-    (
-        df.write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(n_buckets, bucket_col)
-        .sortBy(bucket_col)
-        .saveAsTable(table)
-    )

@@ -949,9 +949,7 @@ def q_kg_entity_degree(spark, sf_dir):
     degree distribution a KG consumer checks first. One shuffle on
     (obj, pred) after the pipeline; gated by the full-pipeline DuckDB
     oracle chain extended with the same aggregation
-    (oracles_kg.kg_entity_degree_oracle_sql). At 100 TB this runs off
-    the bucketed triple table (operators/triples.py:
-    write_triples_bucketed_table) without re-running construction."""
+    (oracles_kg.kg_entity_degree_oracle_sql)."""
     from knowledgegraphgenerator_spark.pipeline import run_pipeline
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text", "lang")
@@ -965,53 +963,15 @@ def q_kg_entity_degree(spark, sf_dir):
 def q_kg_two_hop(spark, sf_dir):
     """KG consumer query #2: two-hop ancestor traversal — the
     narrower_than edge set self-joined on the shared mid node
-    (grandchild → parent → grandparent), distinct. The join key is the
-    triple SUBJECT, so on the bucketed triple tables (bucketBy(N, subj))
-    the probe side plans with zero Exchange (test_plans pins that); here
-    it runs off the in-memory pipeline output and is gated by the
-    full-pipeline oracle + the same self-join in SQL."""
+    (grandchild → parent → grandparent), distinct. It runs off the
+    in-memory pipeline output and is gated by the full-pipeline oracle +
+    the same self-join in SQL."""
     from knowledgegraphgenerator_spark.pipeline import run_pipeline
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text", "lang")
     nt = (
         run_pipeline(docs)
         .triples.where(F.col("pred") == "narrower_than")
-        .select("subj", "obj")
-    )
-    a = nt.select(F.col("subj").alias("descendant"), F.col("obj").alias("mid"))
-    b = nt.select(F.col("subj").alias("mid"), F.col("obj").alias("ancestor"))
-    return (
-        a.join(b, "mid")
-        .select("descendant", "mid", "ancestor")
-        .distinct()
-    )
-
-
-def q_kg_two_hop_served(spark, sf_dir):
-    """Store-then-serve: the pipeline's triples are MATERIALIZED as a
-    Spark-native bucketed table (bucketBy(8, subj) + sortBy, the parquet
-    twin of Iceberg bucket(N, subj)) and the two-hop traversal then runs
-    off the CATALOG table — exactly how a 100 TB consumer serves KG
-    queries without re-running construction. The b side of the self-join
-    keys on subj (the bucket key) and plans with NO Exchange; the a side
-    keys on obj and pays the single remaining shuffle
-    (test_plans.test_two_hop_on_bucketed_table_single_exchange pins
-    both). Values are gated against the same full-pipeline oracle as the
-    in-memory kg_two_hop — store-then-serve must be lossless."""
-    from knowledgegraphgenerator_spark.operators.triples import (
-        write_triples_bucketed_table,
-    )
-    from knowledgegraphgenerator_spark.pipeline import run_pipeline
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text", "lang")
-    result = run_pipeline(docs)
-    write_triples_bucketed_table(
-        result.triples, "kg_triples_served_gate", n_buckets=8
-    )
-    result.close()
-    nt = (
-        spark.table("kg_triples_served_gate")
-        .where(F.col("pred") == "narrower_than")
         .select("subj", "obj")
     )
     a = nt.select(F.col("subj").alias("descendant"), F.col("obj").alias("mid"))
@@ -1045,40 +1005,6 @@ def q_kg_ancestor_closure(spark, sf_dir):
     return ancestor_closure(nt)
 
 
-def q_kg_closure_served(spark, sf_dir):
-    """Store-then-serve for the ITERATIVE consumer op (round 5, TODO r4
-    'possible depth'): triples materialized as the bucketBy(8, subj)
-    catalog table, then the full min-hop ancestor closure runs off the
-    STORED table with ``assume_distinct=True`` — the defensive dedup
-    would insert an Exchange that re-partitions the edges and defeats
-    the bucket layout the per-round hop join uses (single per-round
-    Exchange pinned in test_plans). Gated against the SAME recursive-
-    CTE oracle as the in-memory kg_ancestor_closure: serving the
-    closure off the store must be lossless, which also certifies the
-    stored narrower_than edge set is distinct (a duplicate row would
-    surface as a duplicated closure row and fail the hash)."""
-    from knowledgegraphgenerator_spark.operators.components import (
-        ancestor_closure,
-    )
-    from knowledgegraphgenerator_spark.operators.triples import (
-        write_triples_bucketed_table,
-    )
-    from knowledgegraphgenerator_spark.pipeline import run_pipeline
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text", "lang")
-    result = run_pipeline(docs)
-    write_triples_bucketed_table(
-        result.triples, "kg_triples_closure_gate", n_buckets=8
-    )
-    result.close()
-    nt = (
-        spark.table("kg_triples_closure_gate")
-        .where(F.col("pred") == "narrower_than")
-        .select("subj", "obj")
-    )
-    return ancestor_closure(nt, assume_distinct=True)
-
-
 def q_doc_length_quantiles(spark, sf_dir):
     """Corpus length-distribution check (the first gate a training-data
     pipeline runs before fixing token budgets): per-language doc count +
@@ -1106,9 +1032,9 @@ def q_kg_pagerank(spark, sf_dir):
     dropped): both engines use only nonnegative integer div, so the
     DuckDB oracle (the same 3 iterations unrolled as CTEs) matches
     bit-for-bit — no float-summation-order hazard. Algorithm lives in
-    operators/components.integer_pagerank (shared with the served
-    variant below); each iteration is one equi-join + one aggregation,
-    localCheckpointed so lineage stays bounded at 100 TB node counts."""
+    operators/components.integer_pagerank; each iteration is one
+    equi-join + one aggregation, localCheckpointed so lineage stays
+    bounded at 100 TB node counts."""
     from knowledgegraphgenerator_spark.operators.components import (
         integer_pagerank,
     )
@@ -1121,42 +1047,6 @@ def q_kg_pagerank(spark, sf_dir):
         .select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
     )
     return integer_pagerank(nt)
-
-
-def q_kg_pagerank_served(spark, sf_dir):
-    """Store-then-serve for the POWER-ITERATION consumer op (round-5
-    depth, TODO r5 queue): triples materialized as the bucketBy(8,
-    subj) catalog table, then integer PageRank runs off the STORED
-    table with ``assume_distinct=True`` / ``persist=False`` — the
-    defensive dedup would re-partition the edges and a persist would
-    hide the bucketed scan, either way defeating the bucket layout
-    that lets the per-iteration contrib join and the out-degree
-    aggregation ride shuffle-free on the edge side (exactly TWO
-    Exchanges per iteration, pinned in test_plans). Gated against the
-    SAME unrolled-CTE oracle as the in-memory kg_pagerank: serving the
-    ranks off the store must be bit-identical, which also certifies
-    the stored narrower_than edge projection is distinct (a duplicate
-    edge would shift integer mass and fail the hash)."""
-    from knowledgegraphgenerator_spark.operators.components import (
-        integer_pagerank,
-    )
-    from knowledgegraphgenerator_spark.operators.triples import (
-        write_triples_bucketed_table,
-    )
-    from knowledgegraphgenerator_spark.pipeline import run_pipeline
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text", "lang")
-    result = run_pipeline(docs)
-    write_triples_bucketed_table(
-        result.triples, "kg_triples_pr_gate", n_buckets=8
-    )
-    result.close()
-    nt = (
-        spark.table("kg_triples_pr_gate")
-        .where(F.col("pred") == "narrower_than")
-        .select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
-    )
-    return integer_pagerank(nt, assume_distinct=True, persist=False)
 
 
 def q_benchmark_overlap(spark, sf_dir):
@@ -1343,231 +1233,12 @@ def q_crawl_delta(spark, sf_dir):
     return crawl_delta(old, new, "page_id", "content_hash")
 
 
-def q_host_link_graph(spark, sf_dir):
-    """Web link-graph construction: deterministic HTML synthesized per
-    document (double- AND single-quoted absolute links with
-    case/default-port/www noise, plus a relative link on
-    doc_id % 3 == 0 that extraction must DROP), then
-    href extraction (regexp, zero shuffle) and host-level edge
-    aggregation — the link-structure half of web-scale KG construction
-    (operators/webgraph.py). The oracle mirrors the synthesis and the
-    extraction with DuckDB's regexp_extract_all + the same host
-    normalization."""
-    from knowledgegraphgenerator_spark.operators.webgraph import (
-        extract_links,
-        host_link_graph,
-    )
-
-    return host_link_graph(
-        extract_links(_host_pages(spark, sf_dir), "html", "url")
-    )
-
-
-def _host_pages(spark, sf_dir):
-    """The deterministic page synthesis shared by host_link_graph and
-    host_pagerank (url + html from doc_id residues)."""
-    d = _t(spark, sf_dir, "documents")
-    s = lambda e: F.expr(f"CAST({e} AS STRING)")  # noqa: E731
-    html = F.concat(
-        F.lit('<html><body><p>page</p><a href="https://site'),
-        s("(doc_id * 31) % 7"),
-        F.lit(".example.com/p/"),
-        s("(doc_id * 31) % 211"),
-        F.lit('">a</a><a href="HTTP://WWW.Site'),
-        s("(doc_id + 1) % 7"),
-        F.lit('.Example.COM:80/q">b</a>'),
-        F.when(
-            F.col("doc_id") % 3 == 0, F.lit('<a href="/rel/x">c</a>')
-        ).otherwise(F.lit("")),
-        F.when(
-            F.col("doc_id") % 2 == 0,
-            F.concat(
-                F.lit("<a href='https://site"),
-                s("(doc_id * 17) % 7"),
-                F.lit(".example.com/s'>d</a>"),
-            ),
-        ).otherwise(F.lit("")),
-        F.lit("</body></html>"),
-    )
-    url = F.concat(
-        F.lit("https://site"), s("doc_id % 7"),
-        F.lit(".example.com/p/"), s("doc_id"),
-    )
-    return d.select(url.alias("url"), html.alias("html"))
-
-
-def q_host_pagerank(spark, sf_dir):
-    """Web-graph authority scoring: the extracted host link graph
-    (q_host_link_graph's edges, self-loops included) fed to the SAME
-    integer power iteration as kg_pagerank — construct-then-consume on
-    the WEB graph, not just the term KG. host_link_graph's groupBy
-    output is distinct per (src, dst), so ``assume_distinct=True``
-    skips the defensive dedup Exchange. Oracle: the link-graph CTE
-    chain + the unrolled integer iteration (bit-exact, no floats)."""
-    from knowledgegraphgenerator_spark.operators.components import (
-        integer_pagerank,
-    )
-    from knowledgegraphgenerator_spark.operators.webgraph import (
-        extract_links,
-        host_link_graph,
-    )
-
-    g = host_link_graph(
-        extract_links(_host_pages(spark, sf_dir), "html", "url")
-    )
-    nt = g.select(
-        F.col("src_host").alias("src"), F.col("dst_host").alias("dst")
-    )
-    return integer_pagerank(nt, assume_distinct=True)
-
-
-def q_host_hits(spark, sf_dir):
-    """Integer HITS hubs & authorities over the same extracted host
-    link graph as host_pagerank — the second classic authority score a
-    crawl prioritizer runs on the web graph
-    (operators/components.integer_hits). host_link_graph output is
-    distinct per (src, dst) so ``assume_distinct=True`` skips the
-    defensive dedup Exchange. Oracle: the link-graph CTE chain + the
-    same fixed-k integer iteration unrolled (nonnegative integer
-    division only — bit-exact, no floats)."""
-    from knowledgegraphgenerator_spark.operators.components import (
-        integer_hits,
-    )
-    from knowledgegraphgenerator_spark.operators.webgraph import (
-        extract_links,
-        host_link_graph,
-    )
-
-    g = host_link_graph(
-        extract_links(_host_pages(spark, sf_dir), "html", "url")
-    )
-    nt = g.select(
-        F.col("src_host").alias("src"), F.col("dst_host").alias("dst")
-    )
-    return integer_hits(nt, n_iters=2, assume_distinct=True)
-
-
-def q_host_hits_served(spark, sf_dir):
-    """Store-then-serve for HITS (the host_hits twin of
-    kg_pagerank_served): the extracted host link graph is MATERIALIZED
-    as a bucketBy(8, src) catalog table
-    (operators/triples.write_bucketed_table) and integer HITS runs off
-    the STORED edges with ``assume_distinct=True`` / ``persist=False``
-    so the defensive dedup / persist cannot repartition away the
-    bucket layout the hub-side joins ride. Gated against the SAME
-    unrolled-CTE oracle as host_hits: serving off the store must be
-    bit-identical, which also certifies the stored edge projection is
-    distinct."""
-    from knowledgegraphgenerator_spark.operators.components import (
-        integer_hits,
-    )
-    from knowledgegraphgenerator_spark.operators.triples import (
-        write_bucketed_table,
-    )
-    from knowledgegraphgenerator_spark.operators.webgraph import (
-        extract_links,
-        host_link_graph,
-    )
-
-    g = host_link_graph(
-        extract_links(_host_pages(spark, sf_dir), "html", "url")
-    )
-    write_bucketed_table(
-        g.select(
-            F.col("src_host").alias("src"), F.col("dst_host").alias("dst")
-        ),
-        "host_edges_hits_gate",
-        "src",
-        n_buckets=8,
-    )
-    return integer_hits(
-        spark.table("host_edges_hits_gate"),
-        n_iters=2,
-        assume_distinct=True,
-        persist=False,
-    )
-
-
-# Anchor-text synthesis: deterministic pages whose <a> elements carry
-# multi-word anchor TEXT (surface forms for the target host). The
-# d%2==0 branch uses a single-quoted href with case/port/www noise so
-# both quote styles AND host normalization are exercised; the d%3==0
-# branch is a relative link extraction must DROP.
-_ANCHOR_W1 = ("download", "install", "docs", "blog", "pricing")
-_ANCHOR_W2 = ("spark", "engine", "guide")
-
-
-def _anchor_pages(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
-    s = lambda e: F.expr(f"CAST({e} AS STRING)")  # noqa: E731
-    w1 = F.element_at(
-        F.array(*[F.lit(x) for x in _ANCHOR_W1]),
-        (F.col("doc_id") % 5 + 1).cast("int"),
-    )
-    w2 = F.element_at(
-        F.array(*[F.lit(x) for x in _ANCHOR_W2]),
-        (F.col("doc_id") % 3 + 1).cast("int"),
-    )
-    html = F.concat(
-        F.lit('<html><p>page</p><a href="https://site'),
-        s("(doc_id * 31) % 7"),
-        F.lit(".example.com/p/"),
-        s("(doc_id * 31) % 211"),
-        F.lit('">'),
-        w1,
-        F.lit(" "),
-        w2,
-        F.lit("</a>"),
-        F.when(
-            F.col("doc_id") % 2 == 0,
-            F.concat(
-                F.lit("<a href='HTTPS://WWW.Site"),
-                s("(doc_id * 17) % 7"),
-                F.lit(".Example.COM:443/s'>"),
-                w2,
-                F.lit(" homepage</a>"),
-            ),
-        ).otherwise(F.lit("")),
-        F.when(
-            F.col("doc_id") % 3 == 0,
-            F.lit('<a href="/rel/x">skip me</a>'),
-        ).otherwise(F.lit("")),
-        F.lit("</html>"),
-    )
-    url = F.concat(
-        F.lit("https://site"), s("doc_id % 7"),
-        F.lit(".example.com/p/"), s("doc_id"),
-    )
-    return d.select(url.alias("url"), html.alias("html"))
-
-
-def q_anchor_text_profile(spark, sf_dir):
-    """Per-host anchor-text surface forms: extract each absolute link
-    WITH its anchor text (operators/webgraph.extract_anchors — whole
-    <a> elements, both quote styles, no parser), normalize the target
-    host, tokenize the anchors, and rank the top-3 terms per host
-    (anchor_text_profile — per-key window, WindowGroupLimit-eligible).
-    The oracle mirrors the synthesis, the two-pass element scan, and
-    the host normalization in DuckDB."""
-    from knowledgegraphgenerator_spark.operators.webgraph import (
-        anchor_text_profile,
-        extract_anchors,
-    )
-
-    return anchor_text_profile(
-        extract_anchors(_anchor_pages(spark, sf_dir), "html", "url"),
-        top_k=3,
-    )
-
-
-# Registry ORDER is deliberate: the driver gate reports exactly the
-# FIRST 50 registry entries, so the head carries the queries most likely
-# to change and the tail holds long-green ones.
-# The FULL registry — all entries, count-asserted — is certified by
-# scripts/full_gate.py.
+# Registry ORDER is deliberate: the driver gate reports the FIRST 50
+# registry entries, and with 45 entries every query is inside that
+# window. The head carries the queries most likely to change and the
+# tail holds long-green ones. The FULL registry — all entries,
+# count-asserted — is certified by scripts/full_gate.py.
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "host_hits_served": q_host_hits_served,
-    "host_pagerank": q_host_pagerank,
     "dedup_exact": q_dedup_exact,
     "lsh_candidate_pairs": q_lsh_candidate_pairs,
     "crawl_delta": q_crawl_delta,
@@ -1576,10 +1247,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "benchmark_overlap": q_benchmark_overlap,
     "domain_mixture_rebalance": q_domain_mixture_rebalance,
     "domain_cap_salted": q_domain_cap_salted,
-    "anchor_text_profile": q_anchor_text_profile,
-    "host_hits": q_host_hits,
     "term_cooccurrence": q_term_cooccurrence,
-    "host_link_graph": q_host_link_graph,
     "neardup_pairs_scale": q_neardup_pairs_scale,
     "neardup_components": q_neardup_components,
     "dup_ngram_fraction": q_dup_ngram_fraction,
@@ -1593,10 +1261,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "kg_entity_degree": q_kg_entity_degree,
     "kg_two_hop": q_kg_two_hop,
     "kg_ancestor_closure": q_kg_ancestor_closure,
-    "kg_two_hop_served": q_kg_two_hop_served,
-    "kg_closure_served": q_kg_closure_served,
     "kg_pagerank": q_kg_pagerank,
-    "kg_pagerank_served": q_kg_pagerank_served,
     "docs_at_root": q_docs_at_root,
     "doc_path_coverage": q_doc_path_coverage,
     "stratified_sample": q_stratified_sample,
@@ -1616,8 +1281,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "path_prefix_antijoin": q_path_prefix_antijoin,
     "term_count_threshold": q_term_count_threshold,
     "bigram_count": q_bigram_count,
-    # --- position 51+ (rotating tail, see comment above): stable
-    # queries, certified by scripts/full_gate.py every round
     "substring_dedup": q_substring_dedup,
     "doc_terms_ranked": q_doc_terms_ranked,
     "path_edges": q_path_edges,
@@ -1917,17 +1580,7 @@ ORACLES["kg_ontology"] = kg_ontology_oracle_sql()
 ORACLES["kg_entity_degree"] = kg_entity_degree_oracle_sql()
 ORACLES["kg_two_hop"] = kg_two_hop_oracle_sql()
 ORACLES["kg_ancestor_closure"] = kg_ancestor_closure_oracle_sql()
-# the served variant reads the SAME pipeline triples back from the
-# bucketed catalog table — lossless store-then-serve is exactly what
-# sharing the oracle verifies
-ORACLES["kg_closure_served"] = ORACLES["kg_ancestor_closure"]
-# store-then-serve must be lossless: the bucketed-table variant is gated
-# against the SAME oracle as the in-memory traversal
-ORACLES["kg_two_hop_served"] = kg_two_hop_oracle_sql()
 ORACLES["kg_pagerank"] = kg_pagerank_oracle_sql()
-# store-then-serve must be BIT-identical for the integer power
-# iteration: the bucketed-table variant shares the unrolled-CTE oracle
-ORACLES["kg_pagerank_served"] = kg_pagerank_oracle_sql()
 # decontamination: benchmark = shingles of docs with pmod(doc_id,37)=0,
 # mirrored here with DuckDB's sign-preserving % wrapped to pmod
 ORACLES["benchmark_overlap"] = (
@@ -2067,212 +1720,6 @@ ORACLES["crawl_delta"] = (
     " ELSE 'unchanged' END AS status,"
     " o.old_hash, n.new_hash"
     " FROM o FULL OUTER JOIN n ON o.page_id = n.page_id"
-)
-
-# Web link graph: same deterministic HTML synthesis, DuckDB
-# regexp_extract_all + unnest for the href scan, same absolute-scheme
-# filter and host normalization (lowercase, strip default port and
-# leading www). The CTE chain is shared with the host_pagerank oracle.
-_HOST_EDGES_CTES = (
-    "h AS (SELECT doc_id,"
-    " '<html><body><p>page</p><a href=\"https://site'"
-    " || CAST((doc_id * 31) % 7 AS VARCHAR) || '.example.com/p/'"
-    " || CAST((doc_id * 31) % 211 AS VARCHAR)"
-    " || '\">a</a><a href=\"HTTP://WWW.Site'"
-    " || CAST((doc_id + 1) % 7 AS VARCHAR) || '.Example.COM:80/q\">b</a>'"
-    " || CASE WHEN doc_id % 3 = 0 THEN '<a href=\"/rel/x\">c</a>'"
-    " ELSE '' END"
-    " || CASE WHEN doc_id % 2 = 0 THEN '<a href=''https://site'"
-    " || CAST((doc_id * 17) % 7 AS VARCHAR)"
-    " || '.example.com/s''>d</a>' ELSE '' END"
-    " || '</body></html>' AS html,"
-    " 'https://site' || CAST(doc_id % 7 AS VARCHAR) || '.example.com/p/'"
-    " || CAST(doc_id AS VARCHAR) AS url FROM documents), "
-    "l AS (SELECT url, unnest(list_concat("
-    " regexp_extract_all(html, 'href=\"([^\"]+)\"', 1),"
-    " regexp_extract_all(html, 'href=''([^'']+)''', 1))) AS href"
-    " FROM h), "
-    "f AS (SELECT url, href FROM l"
-    " WHERE regexp_matches(href, '^[Hh][Tt][Tt][Pp][Ss]?://')), "
-    "sp AS (SELECT"
-    " lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1))"
-    " AS s1,"
-    " lower(regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)', 1))"
-    " AS h1,"
-    " lower(regexp_extract(href, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1))"
-    " AS s2,"
-    " lower(regexp_extract(href, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)', 1))"
-    " AS h2 FROM f), "
-    "e AS (SELECT"
-    " regexp_replace(CASE"
-    " WHEN s1 = 'http' THEN regexp_replace(h1, ':80$', '')"
-    " WHEN s1 = 'https' THEN regexp_replace(h1, ':443$', '')"
-    " ELSE h1 END, '^www\\.', '') AS src_host,"
-    " regexp_replace(CASE"
-    " WHEN s2 = 'http' THEN regexp_replace(h2, ':80$', '')"
-    " WHEN s2 = 'https' THEN regexp_replace(h2, ':443$', '')"
-    " ELSE h2 END, '^www\\.', '') AS dst_host FROM sp)"
-)
-ORACLES["host_link_graph"] = (
-    f"WITH {_HOST_EDGES_CTES} "
-    "SELECT src_host, dst_host, CAST(count(*) AS BIGINT) AS n_links"
-    " FROM e WHERE src_host <> '' AND dst_host <> ''"
-    " GROUP BY src_host, dst_host"
-)
-
-
-def _host_pagerank_oracle_sql(iters: int = 3) -> str:
-    """Integer PageRank over the host link graph: the link-graph CTE
-    chain feeding the same unrolled fixed-k iteration as
-    kg_pagerank_oracle_sql (oracles_kg.py:564) — integer micro-units,
-    nonnegative `//` only, bit-exact vs integer_pagerank."""
-    steps = []
-    prev = "pr0"
-    for k in range(1, iters + 1):
-        steps.append(
-            f"c{k} AS ("
-            f" SELECT dst AS entity, sum(pr // outdeg) AS contrib"
-            f" FROM nt JOIN {prev} ON nt.src = {prev}.entity"
-            f" JOIN outdeg USING (src) GROUP BY dst), "
-            f"pr{k} AS MATERIALIZED ("
-            f" SELECT nodes.entity,"
-            f" 150000 // (SELECT n FROM nn)"
-            f" + (85 * coalesce(contrib, 0)) // 100 AS pr"
-            f" FROM nodes LEFT JOIN c{k} USING (entity))"
-        )
-        prev = f"pr{k}"
-    chain = ", ".join(steps)
-    return (
-        f"WITH {_HOST_EDGES_CTES}, "
-        "nt AS MATERIALIZED ("
-        " SELECT DISTINCT src_host AS src, dst_host AS dst FROM e"
-        " WHERE src_host <> '' AND dst_host <> ''), "
-        "nodes AS MATERIALIZED (SELECT DISTINCT entity FROM ("
-        " SELECT src AS entity FROM nt UNION ALL SELECT dst FROM nt)), "
-        "nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM nodes), "
-        "outdeg AS (SELECT src, CAST(count(*) AS BIGINT) AS outdeg"
-        " FROM nt GROUP BY src), "
-        "pr0 AS (SELECT entity, 1000000 // (SELECT n FROM nn) AS pr"
-        " FROM nodes), "
-        f"{chain} "
-        f"SELECT entity, CAST(pr AS BIGINT) AS pr FROM {prev}"
-    )
-
-
-ORACLES["host_pagerank"] = _host_pagerank_oracle_sql()
-
-
-def _host_hits_oracle_sql(iters: int = 2) -> str:
-    """Integer HITS over the host link graph: the link-graph CTE chain
-    + the fixed-k hub/authority iteration unrolled, mirroring
-    operators/components.integer_hits value-for-value (authorities
-    seed uniform; per half-step: join-sum over one edge direction,
-    nodes-complete fill with 0, L1 normalization
-    ``raw * 1000000 // sum(raw)`` — nonnegative integer ops only, so
-    DuckDB `//` == Spark `div` bit-for-bit)."""
-    steps = []
-    prev_auth = "a0"
-    hub = None
-    for k in range(1, iters + 1):
-        hub = f"h{k}"
-        steps.append(
-            f"h{k}r AS (SELECT nt.src AS entity,"
-            f" CAST(sum({prev_auth}.auth) AS BIGINT) AS raw"
-            f" FROM nt JOIN {prev_auth} ON nt.dst = {prev_auth}.entity"
-            f" GROUP BY nt.src), "
-            f"h{k}f AS MATERIALIZED (SELECT nodes.entity,"
-            f" CAST(coalesce(raw, 0) AS BIGINT) AS raw"
-            f" FROM nodes LEFT JOIN h{k}r USING (entity)), "
-            f"h{k} AS MATERIALIZED (SELECT entity,"
-            f" CASE WHEN (SELECT CAST(sum(raw) AS BIGINT) FROM h{k}f) = 0"
-            f" THEN 0 ELSE raw * 1000000"
-            f" // (SELECT CAST(sum(raw) AS BIGINT) FROM h{k}f)"
-            f" END AS hub FROM h{k}f), "
-            f"a{k}r AS (SELECT nt.dst AS entity,"
-            f" CAST(sum(h{k}.hub) AS BIGINT) AS raw"
-            f" FROM nt JOIN h{k} ON nt.src = h{k}.entity"
-            f" GROUP BY nt.dst), "
-            f"a{k}f AS MATERIALIZED (SELECT nodes.entity,"
-            f" CAST(coalesce(raw, 0) AS BIGINT) AS raw"
-            f" FROM nodes LEFT JOIN a{k}r USING (entity)), "
-            f"a{k} AS MATERIALIZED (SELECT entity,"
-            f" CASE WHEN (SELECT CAST(sum(raw) AS BIGINT) FROM a{k}f) = 0"
-            f" THEN 0 ELSE raw * 1000000"
-            f" // (SELECT CAST(sum(raw) AS BIGINT) FROM a{k}f)"
-            f" END AS auth FROM a{k}f)"
-        )
-        prev_auth = f"a{k}"
-    chain = ", ".join(steps)
-    return (
-        f"WITH {_HOST_EDGES_CTES}, "
-        "nt AS MATERIALIZED ("
-        " SELECT DISTINCT src_host AS src, dst_host AS dst FROM e"
-        " WHERE src_host <> '' AND dst_host <> ''), "
-        "nodes AS MATERIALIZED (SELECT DISTINCT entity FROM ("
-        " SELECT src AS entity FROM nt UNION ALL SELECT dst FROM nt)), "
-        "nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM nodes), "
-        "a0 AS (SELECT entity, 1000000 // (SELECT n FROM nn) AS auth"
-        " FROM nodes), "
-        f"{chain} "
-        f"SELECT {hub}.entity, CAST(hub AS BIGINT) AS hub,"
-        f" CAST(auth AS BIGINT) AS auth"
-        f" FROM {hub} JOIN {prev_auth} USING (entity)"
-    )
-
-
-ORACLES["host_hits"] = _host_hits_oracle_sql()
-
-# serving HITS off the bucketed edge store must be bit-identical to the
-# in-memory path
-ORACLES["host_hits_served"] = _host_hits_oracle_sql()
-
-# Anchor-text profile: mirrors _anchor_pages' synthesis, the two-pass
-# whole-<a>-element scan, and the host normalization; DuckDB lists are
-# 1-indexed so the word pick is the same (doc_id % m) + 1.
-_ANCHOR_W1_SQL = "['" + "', '".join(_ANCHOR_W1) + "']"
-_ANCHOR_W2_SQL = "['" + "', '".join(_ANCHOR_W2) + "']"
-ORACLES["anchor_text_profile"] = (
-    "WITH ap AS (SELECT doc_id,"
-    " '<html><p>page</p><a href=\"https://site'"
-    " || CAST((doc_id * 31) % 7 AS VARCHAR) || '.example.com/p/'"
-    " || CAST((doc_id * 31) % 211 AS VARCHAR) || '\">'"
-    f" || ({_ANCHOR_W1_SQL})[CAST(doc_id % 5 + 1 AS INT)] || ' '"
-    f" || ({_ANCHOR_W2_SQL})[CAST(doc_id % 3 + 1 AS INT)] || '</a>'"
-    " || CASE WHEN doc_id % 2 = 0 THEN"
-    " '<a href=''HTTPS://WWW.Site' || CAST((doc_id * 17) % 7 AS VARCHAR)"
-    f" || '.Example.COM:443/s''>'"
-    f" || ({_ANCHOR_W2_SQL})[CAST(doc_id % 3 + 1 AS INT)]"
-    " || ' homepage</a>' ELSE '' END"
-    " || CASE WHEN doc_id % 3 = 0 THEN '<a href=\"/rel/x\">skip me</a>'"
-    " ELSE '' END || '</html>' AS html FROM documents), "
-    "tags AS (SELECT unnest(list_concat("
-    " regexp_extract_all(html, '<a href=\"[^\"]*\"[^>]*>[^<]*</a>'),"
-    " regexp_extract_all(html, '<a href=''[^'']*''[^>]*>[^<]*</a>')))"
-    " AS tag FROM ap), "
-    "la AS (SELECT CASE WHEN regexp_matches(tag, '^<a href=\"')"
-    " THEN regexp_extract(tag, 'href=\"([^\"]*)\"', 1)"
-    " ELSE regexp_extract(tag, 'href=''([^'']*)''', 1) END AS href,"
-    " regexp_extract(tag, '>([^<]*)<', 1) AS anchor FROM tags), "
-    "f AS (SELECT href, anchor FROM la"
-    " WHERE regexp_matches(href, '^[Hh][Tt][Tt][Pp][Ss]?://')), "
-    "hn AS (SELECT"
-    " lower(regexp_extract(href, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1))"
-    " AS s2,"
-    " lower(regexp_extract(href,"
-    " '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)', 1)) AS h2,"
-    " anchor FROM f), "
-    "e AS (SELECT regexp_replace(CASE"
-    " WHEN s2 = 'http' THEN regexp_replace(h2, ':80$', '')"
-    " WHEN s2 = 'https' THEN regexp_replace(h2, ':443$', '')"
-    " ELSE h2 END, '^www\\.', '') AS dst_host, anchor FROM hn), "
-    "terms AS (SELECT dst_host, unnest(string_split(lower(anchor), ' '))"
-    " AS term FROM e WHERE dst_host <> ''), "
-    "cnts AS (SELECT dst_host, term, CAST(count(*) AS BIGINT) AS cnt"
-    " FROM terms WHERE term <> '' GROUP BY dst_host, term), "
-    "ranked AS (SELECT dst_host, CAST(row_number() OVER ("
-    " PARTITION BY dst_host ORDER BY cnt DESC, term) AS BIGINT) AS rnk,"
-    " term, cnt FROM cnts) "
-    "SELECT dst_host, rnk, term, cnt FROM ranked WHERE rnk <= 3"
 )
 
 # Type-7 interpolated quantile in both engines (Spark `percentile`,

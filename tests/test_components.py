@@ -244,3 +244,73 @@ def test_keep_best_per_cluster_unscored_members(spark):
     assert out[1]["n_members"] == 2 and out[1]["kept_id"] == 2
     assert out[10]["n_members"] == 2
     assert out[10]["kept_id"] is None and out[10]["best_score"] is None
+
+
+def _pagerank_reference(edges, n_iters=3):
+    """Plain-Python integer PageRank with the operator's formula:
+    uniform seed ``10^6 // n``, then per iteration
+    ``150000 // n + 85 * sum(pr[src] div outdeg[src]) div 100``."""
+    from collections import Counter, defaultdict
+
+    nodes = sorted({v for e in edges for v in e})
+    n = len(nodes)
+    outdeg = Counter(src for src, _ in edges)
+    pr = {v: 1_000_000 // n for v in nodes}
+    for _ in range(n_iters):
+        contrib = defaultdict(int)
+        for src, dst in edges:
+            contrib[dst] += pr[src] // outdeg[src]
+        pr = {v: 150_000 // n + 85 * contrib[v] // 100 for v in nodes}
+    return pr
+
+
+def test_integer_pagerank_crafted(spark):
+    """Exact integer ranks on a 4-node graph whose a->b edge appears
+    twice: the duplicate counts once. ``n_iters=0`` returns the uniform
+    seed, and the call releases the edge and node caches it made."""
+    from pyspark import StorageLevel
+
+    from knowledgegraphgenerator_spark.operators.components import (
+        integer_pagerank,
+    )
+
+    edges = [("a", "b"), ("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"),
+             ("d", "c")]
+    want = _pagerank_reference(sorted(set(edges)))
+    # counting the duplicate twice would give different ranks
+    assert want != _pagerank_reference(edges)
+    df = spark.createDataFrame(edges, "src string, dst string")
+
+    jsc = spark.sparkContext._jsc.sc()
+
+    def persistent_ids():
+        it = jsc.getPersistentRDDs().keys().iterator()
+        ids = set()
+        while it.hasNext():
+            ids.add(it.next())
+        return ids
+
+    baseline = persistent_ids()
+    got = {r["entity"]: r["pr"] for r in integer_pagerank(df).collect()}
+    assert got == want
+    # the localCheckpoint-ed iterates stay registered as persistent
+    # RDDs; everything else the call persisted must be released
+    rdds = jsc.getPersistentRDDs()
+    left = {
+        i for i in persistent_ids() - baseline
+        if not rdds.apply(i).isLocallyCheckpointed()
+    }
+    assert left == set()
+
+    seed = {
+        r["entity"]: r["pr"]
+        for r in integer_pagerank(df, n_iters=0).collect()
+    }
+    assert seed == {v: 250_000 for v in "abcd"}
+
+    empty = spark.createDataFrame([], "src string, dst string")
+    assert integer_pagerank(empty).count() == 0
+    assert (
+        empty.select("src", "dst").distinct().storageLevel
+        == StorageLevel.NONE
+    )

@@ -1,8 +1,7 @@
 """End-to-end crawl-cycle composition (examples/CRAWL_CYCLE.md): a
 crafted two-cycle crawl drives snapshot collapse → recrawl delta →
-decontamination → near-dup clustering with quality retention → link
-graph → host PageRank, asserting each stage's output against the
-construction."""
+decontamination → near-dup clustering with quality retention,
+asserting each stage's output against the construction."""
 
 from __future__ import annotations
 
@@ -12,7 +11,6 @@ import pyspark.sql.functions as F
 def test_crawl_cycle_composition(spark):
     from knowledgegraphgenerator_spark.operators.components import (
         connected_components,
-        integer_pagerank,
         keep_best_per_cluster,
     )
     from knowledgegraphgenerator_spark.operators.curation import (
@@ -25,10 +23,6 @@ def test_crawl_cycle_composition(spark):
         minhash_wide,
         token_shingles,
         verify_jaccard,
-    )
-    from knowledgegraphgenerator_spark.operators.webgraph import (
-        extract_links,
-        host_link_graph,
     )
 
     # non-repeating shared body: 40 distinct tokens -> 38 distinct
@@ -127,32 +121,3 @@ def test_crawl_cycle_composition(spark):
     ]
     assert kept_url == "https://b.com/4"
 
-    # 5. link graph + authority: b.com receives links from both a.com
-    # pages, so it must outrank a.com (which only self-links)
-    pages = spark.createDataFrame(
-        [
-            ("https://a.com/1",
-             '<a href="https://b.com/x">l</a>'
-             '<a href="https://a.com/2">s</a>'),
-            ("https://a.com/2", '<a href="https://b.com/y">l</a>'),
-            ("https://b.com/4", '<a href="https://b.com/z">s</a>'),
-        ],
-        "url string, html string",
-    )
-    hosts = host_link_graph(extract_links(pages, "html", "url"))
-    edges = {
-        (r["src_host"], r["dst_host"]): r["n_links"]
-        for r in hosts.collect()
-    }
-    assert edges[("a.com", "b.com")] == 2
-    pr = {
-        r["entity"]: r["pr"]
-        for r in integer_pagerank(
-            hosts.select(
-                F.col("src_host").alias("src"),
-                F.col("dst_host").alias("dst"),
-            ),
-            assume_distinct=True,
-        ).collect()
-    }
-    assert pr["b.com"] > pr["a.com"]
