@@ -25,8 +25,6 @@ Coverage map to SURVEY.md §2 (reference file:line cited per query):
   hierarchy stats    term_cooccurrence
   scale sketches     neardup_pairs_scale (xxhash minhash → 16x1 LSH →
                      exact verify; decision-level brute-force oracle);
-                     neardup_components (the same chain → connected
-                     components; recursive-CTE min-label oracle);
                      dup_ngram_fraction (cross-doc duplicated-span
                      diagnostic, integer per-mille)
   KG pipeline        kg_triples, kg_triples_blocked, kg_ontology — FULL
@@ -522,9 +520,7 @@ def q_neardup_pairs_scale(spark, sf_dir):
     )
     # the production verify (crawl_dedup's). NOT persisted: this frame
     # IS the query's result — caching it would make a second timed run a
-    # no-op. (neardup_components / neardup_keep_best persist the same
-    # frame as their INTERMEDIATE — their own CC/survivor work still
-    # runs per action.)
+    # no-op.
     return verify_jaccard(pairs, sh, "doc_id", 8, 10)
 
 
@@ -568,40 +564,6 @@ def q_incremental_neardup(spark, sf_dir):
     )
     return incremental_neardup_pairs_from_parts(
         sh_new, band_new, sh_old, band_old, "doc_id", max_bucket=None
-    )
-
-
-def q_neardup_components(spark, sf_dir):
-    """Near-dup CLUSTERS, not just pairs: the real sketch chain (xxhash64
-    MinHash → 16x1 LSH bands → integer-exact Jaccard verify) feeds
-    large-star/small-star connected components
-    (operators/components.py — Kiveris et al. SOCC'14), giving each doc
-    its dedup-group id (= min doc_id in the group). This puts a DuckDB
-    VALUE oracle on the CC operator itself (previously unit-only): the
-    oracle recomputes the same pairs brute-force and labels them with a
-    recursive-CTE min-label propagation. At 100 TB this is exactly the
-    keep-one-per-cluster step of fuzzy dedup; CC is shuffle-bounded
-    (2 aggs/round) with per-round localCheckpoint lineage cuts."""
-    from knowledgegraphgenerator_spark.operators.components import (
-        connected_components,
-    )
-    from knowledgegraphgenerator_spark.operators.dedup import (
-        lsh_candidate_pairs_from_wide,
-        minhash_wide,
-        token_shingles,
-        verify_jaccard,
-    )
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    sh = token_shingles(docs, "text", "doc_id", n=3).persist()
-    wide = minhash_wide(sh, "doc_id", k=16)
-    pairs = lsh_candidate_pairs_from_wide(
-        wide, "doc_id", rows_per_band=1, k=16, max_bucket=None,
-        compat=(8, 10),
-    )
-    verified = verify_jaccard(pairs, sh, "doc_id", 8, 10).persist()
-    return connected_components(verified, "id_a", "id_b").select(
-        "id", "component"
     )
 
 
@@ -1160,49 +1122,6 @@ def q_latest_crawl(spark, sf_dir):
     )
 
 
-def q_neardup_keep_best(spark, sf_dir):
-    """Retention-policy dedup: the neardup_components sketch chain
-    (xxhash64 MinHash -> 16x1 LSH -> integer-exact Jaccard verify ->
-    large-star/small-star CC) feeds keep_best_per_cluster — each
-    near-dup cluster keeps its HIGHEST-token-count member (ties min
-    doc_id), the RefinedWeb-style 'survivor is the best copy' policy
-    rather than exact_dedup's first-seen keep. Oracle: the same
-    recursive-CTE min-label components joined to token counts with the
-    keep rule as a window. Scale shape: everything banded/blocked as in
-    neardup_components plus one combinable max-over-struct agg
-    (operators/components.py:keep_best_per_cluster)."""
-    from knowledgegraphgenerator_spark.operators.components import (
-        connected_components,
-        keep_best_per_cluster,
-    )
-    from knowledgegraphgenerator_spark.operators.dedup import (
-        lsh_candidate_pairs_from_wide,
-        minhash_wide,
-        token_shingles,
-        verify_jaccard,
-    )
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    sh = token_shingles(docs, "text", "doc_id", n=3).persist()
-    wide = minhash_wide(sh, "doc_id", k=16)
-    pairs = lsh_candidate_pairs_from_wide(
-        wide, "doc_id", rows_per_band=1, k=16, max_bucket=None,
-        compat=(8, 10),
-    )
-    verified = verify_jaccard(pairs, sh, "doc_id", 8, 10).persist()
-    labels = connected_components(verified, "id_a", "id_b")
-    scores = docs.select(
-        F.col("doc_id").alias("id"),
-        F.expr(
-            "CAST(size(filter(split(text, ' '), x -> x != '')) AS BIGINT)"
-        ).alias("n_tokens"),
-    )
-    return keep_best_per_cluster(
-        labels, scores, id_col="id", comp_col="component",
-        score_col="n_tokens",
-    )
-
-
 def q_crawl_delta(spark, sf_dir):
     """Incremental-crawl snapshot diff: two crawl cycles synthesized
     from the documents table (cycle boundaries and the changed-content
@@ -1234,7 +1153,7 @@ def q_crawl_delta(spark, sf_dir):
 
 
 # Registry ORDER is deliberate: the driver gate reports the FIRST 50
-# registry entries, and with 45 entries every query is inside that
+# registry entries, and with 43 entries every query is inside that
 # window. The head carries the queries most likely to change and the
 # tail holds long-green ones. The FULL registry — all entries,
 # count-asserted — is certified by scripts/full_gate.py.
@@ -1243,13 +1162,11 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "lsh_candidate_pairs": q_lsh_candidate_pairs,
     "crawl_delta": q_crawl_delta,
     "latest_crawl": q_latest_crawl,
-    "neardup_keep_best": q_neardup_keep_best,
     "benchmark_overlap": q_benchmark_overlap,
     "domain_mixture_rebalance": q_domain_mixture_rebalance,
     "domain_cap_salted": q_domain_cap_salted,
     "term_cooccurrence": q_term_cooccurrence,
     "neardup_pairs_scale": q_neardup_pairs_scale,
-    "neardup_components": q_neardup_components,
     "dup_ngram_fraction": q_dup_ngram_fraction,
     "dup_span_removal": q_dup_span_removal,
     "dup_span_removal_hot": q_dup_span_removal_hot,
@@ -1614,74 +1531,6 @@ ORACLES["domain_mixture_rebalance"] = (
 )
 ORACLES["doc_path_coverage"] = kg_path_coverage_oracle_sql()
 ORACLES["docs_at_root"] = kg_docs_at_root_oracle_sql()
-
-# Near-dup clusters: brute-force pairs (same SQL as neardup_pairs_scale)
-# labeled by recursive-CTE min-label propagation. In an undirected
-# component the set of nodes reachable from x IS the component, so
-# min(reachable) = the component minimum — the same label
-# large-star/small-star converges to. `edges` is MATERIALIZED: DuckDB
-# 1.0 inlines CTEs, and an inlined CTE referenced from inside a
-# recursive CTE re-evaluates every round.
-ORACLES["neardup_components"] = (
-    f"WITH RECURSIVE sh AS MATERIALIZED ({_SHINGLES_SQL}), "
-    "sizes AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM sh"
-    " GROUP BY doc_id), "
-    "ix AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,"
-    " CAST(count(*) AS BIGINT) AS inter "
-    "FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id "
-    "GROUP BY a.doc_id, b.doc_id), "
-    "pairs AS MATERIALIZED ("
-    "SELECT id_a, id_b FROM ix "
-    "JOIN sizes na ON ix.id_a = na.doc_id "
-    "JOIN sizes nb ON ix.id_b = nb.doc_id "
-    "WHERE inter * 10 >= (na.n + nb.n - inter) * 8), "
-    "edges AS MATERIALIZED ("
-    "SELECT id_a AS src, id_b AS dst FROM pairs "
-    "UNION SELECT id_b, id_a FROM pairs), "
-    "reach(id, comp) AS ("
-    "SELECT src, src FROM edges "
-    "UNION SELECT e.src, r.comp FROM edges e JOIN reach r ON e.dst = r.id) "
-    "SELECT id, min(comp) AS component FROM reach GROUP BY id"
-)
-
-# Retention-policy dedup: the same recursive-CTE component labels joined
-# to whitespace token counts; the keep rule (max n_tokens, ties min id)
-# as a window — Spark's combinable max-over-struct must agree exactly.
-ORACLES["neardup_keep_best"] = (
-    f"WITH RECURSIVE sh AS MATERIALIZED ({_SHINGLES_SQL}), "
-    "sizes AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM sh"
-    " GROUP BY doc_id), "
-    "ix AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,"
-    " CAST(count(*) AS BIGINT) AS inter "
-    "FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id "
-    "GROUP BY a.doc_id, b.doc_id), "
-    "pairs AS MATERIALIZED ("
-    "SELECT id_a, id_b FROM ix "
-    "JOIN sizes na ON ix.id_a = na.doc_id "
-    "JOIN sizes nb ON ix.id_b = nb.doc_id "
-    "WHERE inter * 10 >= (na.n + nb.n - inter) * 8), "
-    "edges AS MATERIALIZED ("
-    "SELECT id_a AS src, id_b AS dst FROM pairs "
-    "UNION SELECT id_b, id_a FROM pairs), "
-    "reach(id, comp) AS ("
-    "SELECT src, src FROM edges "
-    "UNION SELECT e.src, r.comp FROM edges e JOIN reach r ON e.dst = r.id), "
-    "labels AS (SELECT id, min(comp) AS component FROM reach GROUP BY id), "
-    "nt AS (SELECT doc_id AS id,"
-    " CAST(len(list_filter(string_split(text, ' '), x -> x <> ''))"
-    " AS BIGINT) AS n_tokens FROM documents), "
-    "m AS (SELECT l.component, l.id, nt.n_tokens"
-    " FROM labels l JOIN nt USING (id)) "
-    "SELECT CAST(component AS BIGINT) AS component,"
-    " CAST(id AS BIGINT) AS kept_id,"
-    " CAST(n_tokens AS BIGINT) AS best_score,"
-    " CAST(n_members AS BIGINT) AS n_members FROM ("
-    "SELECT component, id, n_tokens,"
-    " row_number() OVER (PARTITION BY component"
-    " ORDER BY n_tokens DESC, id ASC) AS rn,"
-    " count(*) OVER (PARTITION BY component) AS n_members FROM m"
-    ") WHERE rn = 1"
-)
 
 # Recrawl collapse: the oracle constructs the known canonical form of
 # the three synthesized snapshot variants directly (canonicalization is

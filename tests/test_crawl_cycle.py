@@ -1,7 +1,7 @@
 """End-to-end crawl-cycle composition (examples/CRAWL_CYCLE.md): a
 crafted two-cycle crawl drives snapshot collapse → recrawl delta →
-decontamination → near-dup clustering with quality retention,
-asserting each stage's output against the construction."""
+decontamination → near-dup pair verification, asserting each stage's
+output against the construction."""
 
 from __future__ import annotations
 
@@ -9,10 +9,6 @@ import pyspark.sql.functions as F
 
 
 def test_crawl_cycle_composition(spark):
-    from knowledgegraphgenerator_spark.operators.components import (
-        connected_components,
-        keep_best_per_cluster,
-    )
     from knowledgegraphgenerator_spark.operators.curation import (
         crawl_delta,
         drop_contaminated,
@@ -98,26 +94,18 @@ def test_crawl_cycle_composition(spark):
     assert "https://b.com/5" not in kept_urls
     assert len(kept_urls) == 3
 
-    # 4. near-dup clustering with quality retention: /3 and /4 are a
-    # clone family; the KEPT one must be the LONGER /4, not first-seen
+    # 4. near-dup verification: /3 and /4 are a clone pair, and the
+    # only verified pair
     sh = token_shingles(clean, "text", "doc_id", 3)
     pairs = lsh_candidate_pairs_from_wide(
         minhash_wide(sh, "doc_id", k=16), "doc_id", rows_per_band=1, k=16,
         max_bucket=None,
     )
     verified = verify_jaccard(pairs, sh, "doc_id", 7, 10)
-    labels = connected_components(verified, "id_a", "id_b")
-    scores = clean.select(
-        F.col("doc_id").alias("id"),
-        F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
-    )
-    best = keep_best_per_cluster(
-        labels, scores, score_col="n_tokens"
-    ).collect()
-    assert len(best) == 1  # one clone cluster
-    kept_id = best[0]["kept_id"]
-    kept_url = {r["doc_id"]: r["canonical_url"] for r in clean.collect()}[
-        kept_id
-    ]
-    assert kept_url == "https://b.com/4"
+    url_of = {r["doc_id"]: r["canonical_url"] for r in clean.collect()}
+    got = {
+        frozenset((url_of[r["id_a"]], url_of[r["id_b"]]))
+        for r in verified.collect()
+    }
+    assert got == {frozenset(("https://a.com/3", "https://b.com/4"))}
 

@@ -59,8 +59,8 @@ def test_null_and_empty_text(spark):
 def test_degenerate_corpus_new_queries(spark, tmp_path):
     """Round-3 queries on a degenerate 2-doc corpus (below every
     threshold, docs too short for shingles): graph/dedup queries return
-    EMPTY (not crash — the empty-graph guard in kg_pagerank, empty
-    edge-set CC, no shingles), scalar stats still produce rows."""
+    EMPTY (not crash — the empty-graph guard in kg_pagerank, no
+    shingles), scalar stats still produce rows."""
     from knowledgegraphgenerator_spark.queries import QUERIES
 
     sf = str(tmp_path)
@@ -73,8 +73,7 @@ def test_degenerate_corpus_new_queries(spark, tmp_path):
         " n_chars long"
     ).write.parquet(f"{sf}/documents.parquet")
 
-    for name in ("kg_pagerank", "kg_two_hop", "neardup_components",
-                 "dup_ngram_fraction"):
+    for name in ("kg_pagerank", "kg_two_hop", "dup_ngram_fraction"):
         assert QUERIES[name](spark, sf).count() == 0, name
     # runs without error; only fallback tags / root rows exist
     QUERIES["kg_entity_degree"](spark, sf).collect()
