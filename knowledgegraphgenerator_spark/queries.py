@@ -18,21 +18,25 @@ Coverage map to SURVEY.md §2 (reference file:line cited per query):
   dedup (rebuild)    dedup_exact, minhash_signatures, lsh_candidate_pairs,
                      jaccard_pairs
   text analysis      lang_id_heuristic, quality_score,
-                     doc_length_quantiles (exact type-7 percentiles)
-  curation           repetition_signals (Gopher-style token-fraction
-                     repetition cuts), domain_cap (per-source top-K),
-                     stratified_sample (deterministic mod-sampling)
-  hierarchy stats    term_cooccurrence
-  scale sketches     neardup_pairs_scale (xxhash minhash → 16x1 LSH →
-                     exact verify; decision-level brute-force oracle);
+                     doc_length_quantiles (exact type-7 percentiles),
                      dup_ngram_fraction (cross-doc duplicated-span
                      diagnostic, integer per-mille)
-  KG pipeline        kg_triples, kg_triples_blocked, kg_ontology — FULL
+  hierarchy stats    term_cooccurrence, salted_term_stats
+  crawl cycle        canonical_urls, latest_crawl (recrawl collapse),
+                     crawl_delta (snapshot diff), benchmark_overlap
+                     (decontamination)
+  crawl dedup        neardup_pairs_scale (xxhash minhash → 16x1 LSH →
+                     exact verify; decision-level brute-force oracle),
+                     dedup_chain, incremental_neardup — the production
+                     operators of operators/dedup.py
+  KG pipeline        kg_triples, kg_triples_blocked, kg_triples_auto,
+                     kg_ontology, doc_path_coverage, docs_at_root — FULL
                      DuckDB oracles (oracles_kg.py: the whole pipeline
                      incl. recursive-CTE masked matching and the G1/G2
                      optimiser in SQL), value-hash gated at sf0.01
   KG consumption     kg_entity_degree ((obj, pred) degree stats),
                      kg_two_hop (narrower_than self-join traversal),
+                     kg_ancestor_closure (transitive closure),
                      kg_pagerank (integer-arithmetic fixed-k power
                      iteration, bit-exact cross-engine) — all gated by
                      the pipeline oracle chain extended with the same
@@ -597,39 +601,6 @@ def q_dup_ngram_fraction(spark, sf_dir):
     )
 
 
-def q_dup_span_removal(spark, sf_dir):
-    """Curation: corpus-wide duplicated-span REMOVAL (C4-style drop of
-    every non-canonical occurrence of a repeated 3-token span) — the
-    *removal* twin of the dup_ngram_fraction diagnostic. Decision-level
-    output (cleaned text + per-doc bytes removed) is value-gated; the
-    operator docstring (operators/curation.py:remove_duplicate_spans)
-    carries the scale shape (shingle groupBy + equi-join, no all-pairs).
-    """
-    from knowledgegraphgenerator_spark.operators.curation import (
-        remove_duplicate_spans,
-    )
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return remove_duplicate_spans(d, "text", "doc_id", k=3, min_repeats=2)
-
-
-def q_dup_span_removal_hot(spark, sf_dir):
-    """Curation: the HOT-SHINGLE fallback of dup_span_removal (VERDICT
-    r4 #3a) — groupBy(shingle) + join-back instead of the shingle
-    window, so a ~10^9-occurrence boilerplate shingle is collapsed
-    map-side and AQE skew-splits the join instead of serializing one
-    window partition. Row-identical to the default (differential in
-    test_curation) and gated against the SAME DuckDB oracle."""
-    from knowledgegraphgenerator_spark.operators.curation import (
-        remove_duplicate_spans,
-    )
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return remove_duplicate_spans(
-        d, "text", "doc_id", k=3, min_repeats=2, variant="groupby"
-    )
-
-
 def q_lang_id_heuristic(spark, sf_dir):
     """Stop-word-ratio language gate (rebuild text-analysis op)."""
     toks = _tokens(spark, sf_dir)
@@ -668,61 +639,6 @@ def q_quality_score(spark, sf_dir):
             & (F.expr("n_distinct * 1000 div n_tokens") >= 200),
             F.lit("keep"),
         ).otherwise(F.lit("drop")).alias("verdict"),
-    )
-
-
-def q_repetition_signals(spark, sf_dir):
-    """Curation: Gopher-style repetition metrics + keep/drop verdict."""
-    from knowledgegraphgenerator_spark.operators.curation import (
-        repetition_signals,
-    )
-
-    return repetition_signals(_t(spark, sf_dir, "documents"))
-
-
-def q_domain_cap(spark, sf_dir):
-    """Curation: per-source document cap (keep lowest 20 doc_ids)."""
-    from knowledgegraphgenerator_spark.operators.curation import cap_per_key
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "source")
-    return cap_per_key(d, "source", "doc_id", 20)
-
-
-def q_domain_cap_salted(spark, sf_dir):
-    """Curation: the skew-proof salted two-pass form of the per-source
-    cap (VERDICT r4 #3b) — local top-k within (key, salt) bounds any
-    hot domain to n_salts*k survivors before the final rank.
-    Row-identical to the window default (differential in
-    test_curation) and gated against the SAME DuckDB oracle."""
-    from knowledgegraphgenerator_spark.operators.curation import cap_per_key
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "source")
-    return cap_per_key(d, "source", "doc_id", 20, variant="salted")
-
-
-def q_stratified_sample(spark, sf_dir):
-    """Curation: deterministic per-language mod-sampling (downsample the
-    head language, keep more of the tail)."""
-    from knowledgegraphgenerator_spark.operators.curation import (
-        mod_stratified_sample,
-    )
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "lang", "source")
-    return mod_stratified_sample(
-        d, "doc_id", "lang", {"en": 200, "zh": 500}, default_permille=700
-    )
-
-
-def q_chunk_by_tokens(spark, sf_dir):
-    """Curation: token-budget chunking for training shards (40-token
-    windows, 10-token overlap — small enough to split the synthetic
-    10-99-token docs into 1-4 chunks each)."""
-    from knowledgegraphgenerator_spark.operators.curation import (
-        chunk_by_tokens,
-    )
-
-    return chunk_by_tokens(
-        _t(spark, sf_dir, "documents"), max_tokens=40, overlap=10
     )
 
 
@@ -1032,24 +948,6 @@ def q_benchmark_overlap(spark, sf_dir):
     return benchmark_overlap(sh, bench, threshold_permille=200)
 
 
-def q_domain_mixture_rebalance(spark, sf_dir):
-    """Uniform-mixture rebalance over the source/domain axis at a 500‰
-    corpus budget: head domains are clamped to the uniform share, tail
-    domains keep everything. Operator: curation.domain_mixture_rebalance
-    — one domain-key aggregation, broadcast rate join back, corpus never
-    shuffled; keep decision is the overflow-free MINSTD scramble shared
-    with mod_stratified_sample, so the DuckDB oracle reproduces the
-    exact keep set."""
-    from knowledgegraphgenerator_spark.operators.curation import (
-        domain_mixture_rebalance,
-    )
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "source", "lang")
-    return domain_mixture_rebalance(
-        docs, id_col="doc_id", domain_col="source", budget_permille=500
-    ).select("doc_id", "source", "lang")
-
-
 def q_latest_crawl(spark, sf_dir):
     """Recrawl collapse: three crawl snapshots of each page (doc_id div
     3 = the page; the three variants differ only in case, default port,
@@ -1153,7 +1051,7 @@ def q_crawl_delta(spark, sf_dir):
 
 
 # Registry ORDER is deliberate: the driver gate reports the FIRST 50
-# registry entries, and with 43 entries every query is inside that
+# registry entries, and with 35 entries every query is inside that
 # window. The head carries the queries most likely to change and the
 # tail holds long-green ones. The FULL registry — all entries,
 # count-asserted — is certified by scripts/full_gate.py.
@@ -1163,13 +1061,9 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "crawl_delta": q_crawl_delta,
     "latest_crawl": q_latest_crawl,
     "benchmark_overlap": q_benchmark_overlap,
-    "domain_mixture_rebalance": q_domain_mixture_rebalance,
-    "domain_cap_salted": q_domain_cap_salted,
     "term_cooccurrence": q_term_cooccurrence,
     "neardup_pairs_scale": q_neardup_pairs_scale,
     "dup_ngram_fraction": q_dup_ngram_fraction,
-    "dup_span_removal": q_dup_span_removal,
-    "dup_span_removal_hot": q_dup_span_removal_hot,
     "dedup_chain": q_dedup_chain,
     "incremental_neardup": q_incremental_neardup,
     "kg_triples": q_kg_triples,
@@ -1181,13 +1075,9 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "kg_pagerank": q_kg_pagerank,
     "docs_at_root": q_docs_at_root,
     "doc_path_coverage": q_doc_path_coverage,
-    "stratified_sample": q_stratified_sample,
-    "chunk_by_tokens": q_chunk_by_tokens,
     "doc_length_quantiles": q_doc_length_quantiles,
     "salted_term_stats": q_salted_term_stats,
     "lang_id_heuristic": q_lang_id_heuristic,
-    "repetition_signals": q_repetition_signals,
-    "domain_cap": q_domain_cap,
     "kg_ontology": q_kg_ontology,
     "trigram_count": q_trigram_count,
     "dict_merge_priority": q_dict_merge_priority,
@@ -1343,65 +1233,6 @@ ORACLES: dict[str, str] = {
         "SELECT doc_id, hits, n_tokens, CASE WHEN hits * 10 >= n_tokens"
         " THEN 'en_like' ELSE 'other' END AS pred FROM agg"
     ),
-    "repetition_signals": (
-        f"WITH toks AS ({_TOKENS_SQL}), "
-        "uni AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS c"
-        " FROM toks GROUP BY 1, 2), "
-        "tu AS (SELECT doc_id, max(c) AS top_uni_cnt,"
-        " CAST(sum(c) AS BIGINT) AS n_tokens FROM uni GROUP BY 1), "
-        "seq AS (SELECT doc_id, pos, term,"
-        " lead(term, 1) OVER w AS nxt, lead(term, 2) OVER w AS t2,"
-        " lead(term, 3) OVER w AS t3, lead(term, 4) OVER w AS t4"
-        " FROM toks WINDOW w AS (PARTITION BY doc_id ORDER BY pos)), "
-        "bi AS (SELECT doc_id, term, nxt, count(*) AS c FROM seq"
-        " WHERE nxt IS NOT NULL GROUP BY 1, 2, 3), "
-        "tb AS (SELECT doc_id, CAST(max(c) AS BIGINT) AS top_bi_cnt"
-        " FROM bi GROUP BY 1), "
-        "g5 AS (SELECT doc_id, term || chr(2) || nxt || chr(2) || t2"
-        " || chr(2) || t3 || chr(2) || t4 AS g FROM seq"
-        " WHERE t4 IS NOT NULL), "
-        "d5 AS (SELECT doc_id, CAST(count(g) - count(DISTINCT g) AS BIGINT)"
-        " AS dup5_mass FROM g5 GROUP BY 1) "
-        "SELECT tu.doc_id, n_tokens, top_uni_cnt,"
-        " coalesce(top_bi_cnt, 0) AS top_bi_cnt,"
-        " coalesce(dup5_mass, 0) AS dup5_mass,"
-        " CASE WHEN n_tokens >= 15"
-        " AND top_uni_cnt * 1000 // n_tokens < 300"
-        " AND coalesce(top_bi_cnt, 0) * 1000 // n_tokens < 180"
-        " AND coalesce(dup5_mass, 0) * 1000 // n_tokens < 300"
-        " THEN 'keep' ELSE 'drop' END AS verdict "
-        "FROM tu LEFT JOIN tb ON tu.doc_id = tb.doc_id"
-        " LEFT JOIN d5 ON tu.doc_id = d5.doc_id"
-    ),
-    "domain_cap": (
-        "SELECT doc_id, source FROM ("
-        "SELECT doc_id, source, row_number() OVER ("
-        "PARTITION BY source ORDER BY doc_id) AS rn FROM documents"
-        ") WHERE rn <= 20"
-    ),
-    "stratified_sample": (
-        # pmod spelled explicitly (((x % P) + P) % P) so negative ids
-        # agree with Spark's pmod — DuckDB's % is sign-preserving
-        "SELECT doc_id, lang, source FROM documents"
-        " WHERE ((((doc_id % 1000000007) + 1000000007) % 1000000007)"
-        " * 48271) % 1000 < CASE"
-        " WHEN lang = 'en' THEN 200 WHEN lang = 'zh' THEN 500"
-        " ELSE 700 END"
-    ),
-    "chunk_by_tokens": (
-        "WITH t AS (SELECT doc_id,"
-        " list_filter(string_split(text, ' '), x -> x <> '') AS toks"
-        " FROM documents), "
-        "n AS (SELECT doc_id, toks, len(toks) AS n FROM t"
-        " WHERE len(toks) > 0), "
-        "c AS (SELECT doc_id, toks, n, unnest(generate_series(0,"
-        " greatest(1, (n - 10 + 29) // 30) - 1)) AS chunk_id FROM n) "
-        "SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,"
-        " CAST(len(toks[chunk_id * 30 + 1 :"
-        " least(chunk_id * 30 + 40, n)]) AS BIGINT) AS n_chunk_tokens,"
-        " array_to_string(toks[chunk_id * 30 + 1 :"
-        " least(chunk_id * 30 + 40, n)], ' ') AS chunk_text FROM c"
-    ),
     "canonical_urls": (
         "WITH urls AS (SELECT doc_id, CASE"
         " WHEN doc_id % 4 = 0 THEN 'HTTPS://WWW.' || source ||"
@@ -1515,20 +1346,6 @@ ORACLES["benchmark_overlap"] = (
     " ELSE 'keep' END AS verdict"
     " FROM m GROUP BY doc_id"
 )
-# uniform-mixture rebalance: integer rate derivation + the same
-# explicit-pmod MINSTD scramble as the stratified_sample oracle
-ORACLES["domain_mixture_rebalance"] = (
-    "WITH c AS (SELECT source, CAST(count(*) AS BIGINT) AS c"
-    " FROM documents GROUP BY source), "
-    "t AS (SELECT CAST(sum(c) AS BIGINT) AS total,"
-    " CAST(count(*) AS BIGINT) AS d FROM c), "
-    "r AS (SELECT source,"
-    " least(1000, (total * 500 // 1000 // d) * 1000 // c) AS rate"
-    " FROM c, t) "
-    "SELECT doc_id, source, lang FROM documents JOIN r USING (source)"
-    " WHERE ((((doc_id % 1000000007) + 1000000007) % 1000000007)"
-    " * 48271) % 1000 < rate"
-)
 ORACLES["doc_path_coverage"] = kg_path_coverage_oracle_sql()
 ORACLES["docs_at_root"] = kg_docs_at_root_oracle_sql()
 
@@ -1581,51 +1398,6 @@ ORACLES["doc_length_quantiles"] = (
     "round(quantile_cont(n_chars, 0.99), 4) AS p99 "
     "FROM documents GROUP BY lang"
 )
-
-ORACLES["dup_span_removal"] = (
-    # span positions via parallel-unnest zipping (generate_series is not
-    # lateral in DuckDB 1.0); canonical keeper = row_number 1 over
-    # (doc_id, pos), matching Spark's min(struct(doc_id, pos))
-    "WITH toks AS MATERIALIZED ("
-    " SELECT doc_id, string_split(text, ' ') AS s FROM documents), "
-    "spans AS MATERIALIZED ("
-    " SELECT doc_id, unnest(generate_series(0, len(s) - 3)) AS pos,"
-    " unnest(list_transform("
-    "   list_zip(s[1:len(s)-2], s[2:len(s)-1], s[3:]),"
-    "   x -> x[1] || ' ' || x[2] || ' ' || x[3])) AS shingle"
-    " FROM toks WHERE len(s) >= 3), "
-    "marked AS MATERIALIZED ("
-    " SELECT doc_id, pos, count(*) OVER (PARTITION BY shingle) AS occ,"
-    " row_number() OVER (PARTITION BY shingle ORDER BY doc_id, pos) AS rn"
-    " FROM spans), "
-    "dup AS MATERIALIZED ("
-    " SELECT doc_id, pos FROM marked WHERE occ >= 2 AND rn > 1), "
-    "tokpos AS MATERIALIZED ("
-    " SELECT doc_id, unnest(generate_series(1, len(s))) AS p,"
-    " unnest(s) AS tok FROM toks), "
-    "keptagg AS ("
-    " SELECT t.doc_id,"
-    " coalesce(string_agg(t.tok, ' ' ORDER BY t.p), '') AS clean_text,"
-    " CAST(count(t.tok) AS BIGINT) AS nk"
-    " FROM tokpos t LEFT JOIN ("
-    "   SELECT DISTINCT t2.doc_id, t2.p FROM tokpos t2"
-    "   JOIN dup d ON t2.doc_id = d.doc_id"
-    "   AND t2.p BETWEEN d.pos + 1 AND d.pos + 3) r"
-    " ON t.doc_id = r.doc_id AND t.p = r.p"
-    " WHERE r.p IS NULL GROUP BY t.doc_id) "
-    "SELECT toks.doc_id, coalesce(k.clean_text, '') AS clean_text, "
-    "CAST(len(s) - coalesce(k.nk, 0) AS BIGINT) AS tokens_removed, "
-    "CAST(length(array_to_string(s, ' '))"
-    " - length(coalesce(k.clean_text, '')) AS BIGINT) AS bytes_removed "
-    "FROM toks LEFT JOIN keptagg k USING (doc_id)"
-)
-
-# the skew-fallback variants are row-identical to their defaults by
-# construction (differentials in test_curation) and are gated against
-# the SAME oracle SQL — a divergence in either variant fails its own
-# driver row independently
-ORACLES["dup_span_removal_hot"] = ORACLES["dup_span_removal"]
-ORACLES["domain_cap_salted"] = ORACLES["domain_cap"]
 
 ORACLES["dup_ngram_fraction"] = (
     f"WITH sh AS MATERIALIZED ({_SHINGLES_SQL}), "

@@ -14,6 +14,8 @@ Per query: run the Spark DataFrame and the DuckDB oracle SQL on the same
 parquet tables, compare row count, sorted column names, and an
 order-insensitive value hash (columns sorted by name, rows sorted,
 floats rounded once to 9dp) — the same three checks the driver applies.
+Each row also records the Spark side's value hash (``spark_hash``), so
+the reports of two commits can be compared query by query.
 """
 
 from __future__ import annotations
@@ -86,7 +88,7 @@ def main() -> int:
         row: dict = {
             "rows_match": False, "schema_match": False,
             "hash_match": False, "spark_rows": None,
-            "oracle_rows": None, "err": None,
+            "oracle_rows": None, "spark_hash": None, "err": None,
         }
         try:
             sdf = q(spark, args.sf)
@@ -99,10 +101,10 @@ def main() -> int:
             row["oracle_rows"] = len(o_rows)
             row["rows_match"] = len(s_rows) == len(o_rows)
             row["schema_match"] = sorted(s_cols) == sorted(o_cols)
+            row["spark_hash"] = _value_hash(s_cols, s_rows)
             row["hash_match"] = (
                 row["schema_match"]
-                and _value_hash(s_cols, s_rows)
-                == _value_hash(o_cols, o_rows)
+                and row["spark_hash"] == _value_hash(o_cols, o_rows)
             )
         except Exception as e:  # noqa: BLE001 — per-query isolation
             row["err"] = f"{type(e).__name__}: {e}"[:400]

@@ -120,24 +120,6 @@ def test_blocked_linking_join_is_equi_not_theta(spark):
     assert len(replay_nodes) == 1, plan
 
 
-def test_dup_span_removal_plan_shape(spark):
-    """Span removal must stay join-bounded: equi-joins only (no
-    cartesian/nested-loop), and the final doc rebuild is an array
-    filter, not an explode-and-regroup of every token."""
-    df = QUERIES["dup_span_removal"](spark, SF)
-    plan = _explain(df)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    # exactly one explode — the span generation, derived once via the
-    # count-over-window form (the groupBy+join-back form re-derives the
-    # explode per branch: 2 Generate nodes); the token rebuild is a
-    # narrow array filter. explain("formatted") lists each node in the
-    # tree AND the details section — count the numbered detail entries.
-    import re
-
-    assert len(re.findall(r"\(\d+\) Generate", plan)) == 1, plan
-
-
 def test_ancestor_closure_joins_are_equi(spark):
     """Each BFS round of the closure is an equi-join + anti-join — a
     plan with a nested-loop join would be quadratic in |closure|."""
